@@ -94,49 +94,15 @@ def _bit_length_np(m: np.ndarray) -> np.ndarray:
     return w
 
 
-def _pack_streams(vals: np.ndarray, bw: np.ndarray, bn: np.ndarray,
-                  bstart: np.ndarray) -> list[bytes]:
-    """Bit-pack every block of one value stream at its own width, in one
-    vectorized pass per DISTINCT width (mirror of unpack_rows' batching):
-    blocks of equal width share one bit-explosion + one packbits call,
-    with per-block byte padding reproduced by scattering each value's
-    bits to its padded stream offset. Byte-identical to per-block
-    pack() — gated by tests/test_blocks.py equivalence suites."""
-    total_blocks = len(bn)
-    blen = (bn * bw + 7) // 8
-    out_bytes: list = [b""] * total_blocks
-    for w in np.unique(bw):
-        w = int(w)
-        idx = np.nonzero(bw == w)[0]
-        if w == 0:
-            continue  # zero-width blocks stay b""
-        nvals = bn[idx]
-        reps_off = np.concatenate([[0], np.cumsum(nvals)])[:-1]
-        inpos = np.arange(int(nvals.sum())) - np.repeat(reps_off, nvals)
-        vidx = bstart[idx].repeat(nvals) + inpos
-        v = vals[vidx].astype(np.uint64)
-        shifts = np.arange(w, dtype=np.uint64)
-        bits = ((v[:, None] >> shifts) & np.uint64(1)).astype(np.uint8)
-        gblen = blen[idx]
-        gbase_bits = (np.cumsum(gblen) - gblen) * 8
-        vbase = np.repeat(gbase_bits, nvals) + inpos * w
-        out = np.zeros(int(gblen.sum()) * 8, dtype=np.uint8)
-        dst = vbase[:, None] + np.arange(w, dtype=np.int64)
-        out[dst.ravel()] = bits.ravel()
-        packed = np.packbits(out, bitorder="little").tobytes()
-        goff = np.concatenate([[0], np.cumsum(gblen)])
-        for j, i in enumerate(idx):
-            out_bytes[i] = packed[goff[j]:goff[j + 1]]
-    return out_bytes
-
-
 def _pack_streams_buf(vals: np.ndarray, bw: np.ndarray, bn: np.ndarray,
                       bstart: np.ndarray):
-    """_pack_streams, but returning (data, blen): one contiguous uint8
-    buffer holding every block's packed payload in block order, plus
-    per-block byte lengths — ready to wrap as an Arrow BinaryArray with
-    zero per-block Python bytes objects. Payload bytes are identical to
-    _pack_streams / per-block pack()."""
+    """Bit-pack every block of one value stream at its own width, in one
+    vectorized pass per DISTINCT width (mirror of unpack_rows'
+    batching). Returns (data, blen): one contiguous uint8 buffer holding
+    every block's packed payload in block order, plus per-block byte
+    lengths — ready to wrap as an Arrow BinaryArray with zero per-block
+    Python bytes objects. Payload bytes are identical to per-block
+    pack() — gated by tests/test_blocks.py equivalence suites."""
     blen = (bn * bw + 7) // 8
     boff = np.cumsum(blen) - blen
     data = np.zeros(int(blen.sum()), dtype=np.uint8)
@@ -161,7 +127,6 @@ def _pack_streams_buf(vals: np.ndarray, bw: np.ndarray, bn: np.ndarray,
         packed = np.packbits(out, bitorder="little")
         # scatter the group's packed bytes to their block-order offsets
         goff = np.cumsum(gblen) - gblen
-        j_of_src = np.repeat(np.arange(len(idx)), gblen)
         dstb = np.repeat(boff[idx] - goff, gblen) \
             + np.arange(len(packed), dtype=np.int64)
         data[dstb] = packed
@@ -173,11 +138,16 @@ def encode_runs_arrow(doc_ids: np.ndarray, tfs: np.ndarray,
                       run_ends: np.ndarray, term_values,
                       shard: int, block_size: int, avgdl: float,
                       params: BM25Params):
-    """encode_runs, Arrow-native output: returns a pyarrow.RecordBatch
-    in SEGMENTS column order with the packed payloads wrapped as
+    """Encode EVERY (term) posting run of one shard group at once — the
+    vectorized whole-group form of encode_blocks (which remains the
+    one-run reference the equivalence tests pin this against). Inputs
+    are the group's postings sorted by (run, doc_id), run r spanning
+    [run_starts[r], run_ends[r]). Returns a pyarrow.RecordBatch in
+    SEGMENTS column order with the packed payloads wrapped as
     BinaryArrays over one contiguous buffer per stream (no per-block
-    Python bytes). `term_values(run_of_block) -> pa.Array` supplies the
-    term column (callers map dictionary codes through a take)."""
+    Python loop, no per-block bytes). `term_values(run_of_block) ->
+    pa.Array` supplies the term column (callers map dictionary codes
+    through a take)."""
     import pyarrow as pa
 
     B = block_size
@@ -230,62 +200,6 @@ def encode_runs_arrow(doc_ids: np.ndarray, tfs: np.ndarray,
     ], names=["term", "shard", "block_id", "n", "first_doc", "last_doc",
               "max_tf", "min_dl", "gmax", "ids_bw", "tfs_bw", "dls_bw",
               "ids", "tfs", "dls"])
-
-
-def encode_runs(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray,
-                run_starts: np.ndarray, run_ends: np.ndarray,
-                term_of_run: np.ndarray, shard: int, block_size: int,
-                avgdl: float, params: BM25Params) -> dict:
-    """Encode EVERY (term) posting run of one shard group at once —
-    the vectorized whole-group form of encode_blocks (which remains the
-    one-run reference implementation the equivalence tests pin this
-    against). Inputs are the group's postings sorted by (run, doc_id),
-    with run r spanning [run_starts[r], run_ends[r]); term_of_run maps
-    run -> term string. Returns SEGMENTS-schema COLUMNS (numpy arrays /
-    byte lists), avoiding both the per-block Python loop (~65 us of
-    numpy fixed cost per block on real Zipf runs — most blocks are far
-    smaller than block_size) and the row-dict assembly."""
-    B = block_size
-    doc_ids = doc_ids.astype(np.int64, copy=False)
-    tfs = tfs.astype(np.int64, copy=False)
-    dls = dls.astype(np.int64, copy=False)
-    rl = run_ends - run_starts
-    nb = -(-rl // B)
-    total_blocks = int(nb.sum())
-    run_of_block = np.repeat(np.arange(len(rl), dtype=np.int64), nb)
-    first_block_of_run = np.cumsum(nb) - nb
-    within = np.arange(total_blocks, dtype=np.int64) \
-        - first_block_of_run[run_of_block]
-    bstart = run_starts[run_of_block] + within * B
-    bend = np.minimum(bstart + B, run_ends[run_of_block])
-    bn = bend - bstart
-
-    g = tfnorm_np(tfs, dls, avgdl, params)
-    max_tf = np.maximum.reduceat(tfs, bstart)
-    min_dl = np.minimum.reduceat(dls, bstart)
-    gmax = np.maximum.reduceat(g, bstart)
-
-    deltas = np.empty(len(doc_ids), dtype=np.int64)
-    deltas[1:] = doc_ids[1:] - doc_ids[:-1]
-    deltas[bstart] = 0  # block-local delta chain starts at 0
-    tfm1 = tfs - 1      # tf >= 1 always
-    ids_bw = _bit_length_np(np.maximum.reduceat(deltas, bstart))
-    tfs_bw = _bit_length_np(np.maximum.reduceat(tfm1, bstart))
-    dls_bw = _bit_length_np(np.maximum.reduceat(dls, bstart))
-
-    return {
-        "term": term_of_run[run_of_block],
-        "shard": np.full(total_blocks, shard, dtype=np.int64),
-        "block_id": within,
-        "n": bn,
-        "first_doc": doc_ids[bstart],
-        "last_doc": doc_ids[bend - 1],
-        "max_tf": max_tf, "min_dl": min_dl, "gmax": gmax,
-        "ids_bw": ids_bw, "tfs_bw": tfs_bw, "dls_bw": dls_bw,
-        "ids": _pack_streams(deltas, ids_bw, bn, bstart),
-        "tfs": _pack_streams(tfm1, tfs_bw, bn, bstart),
-        "dls": _pack_streams(dls, dls_bw, bn, bstart),
-    }
 
 
 def unpack_rows(bufs, widths: np.ndarray, ns: np.ndarray) -> np.ndarray:
@@ -382,6 +296,29 @@ def decode_term_run(bufs_ids, bufs_tfs, bufs_dls, ids_bw, tfs_bw, dls_bw,
     return doc_ids, tfs, dls
 
 
+def payload_view(arr):
+    """(padded data uint8, offsets int64[n+1]) view of a pyarrow
+    Binary/String array — the per-cell payload bytes without ever
+    materializing Python bytes objects. The data is copied once into a
+    buffer padded with 8 zero bytes so the word-gather decode may read
+    past the last cell. A batch whose cells are all empty (every block
+    zero-width) may carry no values buffer at all."""
+    import pyarrow as pa
+    if arr.null_count:
+        raise ValueError("segment payload column has nulls")
+    large = pa.types.is_large_binary(arr.type) \
+        or pa.types.is_large_string(arr.type)
+    bufs = arr.buffers()
+    off = np.frombuffer(bufs[1],
+                        dtype=np.int64 if large else np.int32)[
+        arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
+    end = int(off[-1])
+    padded = np.zeros(end + 8, dtype=np.uint8)
+    if bufs[2] is not None:
+        padded[:end] = np.frombuffer(bufs[2], dtype=np.uint8)[:end]
+    return padded, off
+
+
 def _view_boff(view, bw: np.ndarray, ns: np.ndarray) -> np.ndarray:
     """Validate an Arrow payload view against the format (every cell's
     length must be exactly ceil(n*w/8) — anything else would decode
@@ -413,6 +350,38 @@ def decode_term_run_views(ids_view, tfs_view, dls_view,
     dls = unpack_rows_view(dls_view[0], _view_boff(dls_view, dls_bw, ns),
                            dls_bw, ns)
     return doc_ids, tfs, dls
+
+
+def decode_blocks_arrow(batch):
+    """SEGMENTS RecordBatch -> RecordBatch(term, doc_id, tf, dl) of every
+    block's postings in block order: decode_block row by row, vectorized
+    over the whole batch (bit-identical output). Payloads decode straight
+    from the BinaryArray buffers; _view_boff rejects any cell whose
+    length disagrees with (n, width). Each block's delta chain restarts
+    at its own first_doc, so blocks need not share a term or be sorted."""
+    import pyarrow as pa
+
+    def ints(name):
+        return batch.column(name).to_numpy(zero_copy_only=False) \
+            .astype(np.int64)
+
+    ns = ints("n")
+
+    def stream(name):
+        view, bw = payload_view(batch.column(name)), ints(name + "_bw")
+        return unpack_rows_view(view[0], _view_boff(view, bw, ns), bw, ns)
+
+    deltas = stream("ids")
+    cs = np.cumsum(deltas)
+    before = np.concatenate([[0], cs])[np.cumsum(ns) - ns]
+    doc_ids = cs + np.repeat(ints("first_doc") - before, ns)
+    block_of = np.repeat(np.arange(len(ns), dtype=np.int64), ns)
+    return pa.RecordBatch.from_arrays(
+        [batch.column("term").take(pa.array(block_of)),
+         pa.array(doc_ids),
+         pa.array((stream("tfs") + 1).astype(np.int32)),
+         pa.array(stream("dls").astype(np.int32))],
+        names=["term", "doc_id", "tf", "dl"])
 
 
 def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

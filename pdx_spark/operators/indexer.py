@@ -9,7 +9,7 @@ Dataflow (all DataFrame; Python only inside Arrow-batched block encoding):
      ├── postings (term, doc_id, tf, dl)  = tokenize+explode+groupBy
      │      ├── term_stats groupBy(term)                      [parquet]
      │      └── + shard = doc_id / docs_per_shard
-     │          -> shuffle by shard -> applyInPandas encode   [parquet]
+     │          -> shuffle by fgroup -> applyInArrow encode   [parquet]
      └── directory = segments groupBy(term, shard)            [parquet]
 
 Skew: sharding is by *doc range*, so a Zipf-head term's postings spread
@@ -31,14 +31,13 @@ import os
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdx_spark import schemas
 from pdx_spark.config import BM25Params, IndexConfig, manifest_params
 from pdx_spark.fs import IndexFS, LocalFS, index_fs, verify_single_rowgroup
-from pdx_spark.functions.blocks import encode_runs
+from pdx_spark.functions.blocks import encode_runs_arrow
 from pdx_spark.operators import corpus as C
 
 MANIFEST = "manifest.json"
@@ -154,6 +153,7 @@ def stat_artifacts_local(fs: IndexFS, seg_dirs: list[str],
     if not fs.is_local:
         return None
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from pdx_spark.functions.quantize import (quantize_down_np,
@@ -177,8 +177,14 @@ def stat_artifacts_local(fs: IndexFS, seg_dirs: list[str],
         if fs.exists(tmp):
             fs.delete(tmp)
         os.makedirs(tmp)
+        # a dictionary only pays where terms repeat: term_stats (and a
+        # directory with one shard per term) stores each term once, and
+        # there PLAIN is smaller than dictionary + indices
+        unique = pc.count_distinct(table["term"]).as_py() == table.num_rows
         pq.write_table(table, os.path.join(tmp, "part-00000.parquet"),
-                       row_group_size=_STATS_ROW_GROUP)
+                       row_group_size=_STATS_ROW_GROUP,
+                       use_dictionary=[c for c in table.column_names
+                                       if c != "term"] if unique else True)
         if fs.exists(final):
             fs.delete(final)
         fs.rename(tmp, final)
@@ -259,60 +265,9 @@ def read_manifest(path: str, fs: IndexFS | None = None) -> dict:
     return json.loads(fs.read_text(IndexFS.join(path, MANIFEST)))
 
 
-def _encode_sorted(doc_ids, tfs, dls, terms_c, uniques, shard,
-                   cfg: IndexConfig, avgdl: float,
-                   params: BM25Params) -> pd.DataFrame:
-    """(term-code, doc_id)-sorted postings of ONE shard -> SEGMENTS
-    frame, via the vectorized whole-group encoder (blocks.encode_runs —
-    byte-identical to per-run encode_blocks, which the block tests pin)."""
-    if len(terms_c) == 0:
-        return pd.DataFrame(columns=[f.name for f in
-                                     schemas.SEGMENTS.fields])
-    change = np.nonzero(terms_c[1:] != terms_c[:-1])[0] + 1
-    starts = np.concatenate([[0], change]).astype(np.int64)
-    ends = np.concatenate([change, [len(terms_c)]]).astype(np.int64)
-    term_of_run = np.asarray(uniques, dtype=object)[terms_c[starts]]
-    cols = encode_runs(doc_ids, tfs, dls, starts, ends, term_of_run,
-                       shard, cfg.block_size, avgdl, params)
-    return pd.DataFrame(cols, columns=[f.name for f in
-                                       schemas.SEGMENTS.fields])
-
-
-def _segment_encoder(cfg: IndexConfig, avgdl: float, params: BM25Params):
-    """applyInPandas body: one shard's postings -> SEGMENTS rows."""
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in
-                                         schemas.SEGMENTS.fields])
-        # group by term without a string sort: factorize (O(n) hash) +
-        # integer lexsort — pandas string sort_values was ~half the
-        # encode cost on Zipf term distributions
-        codes, uniques = pd.factorize(pdf["term"], sort=False)
-        order = np.lexsort((pdf["doc_id"].to_numpy(), codes))
-        terms_c = codes[order]
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)[order]
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)[order]
-        dls = pdf["dl"].to_numpy(dtype=np.int64)[order]
-        shard = int(pdf["shard"].iloc[0])
-        return _encode_sorted(doc_ids, tfs, dls, terms_c, uniques, shard,
-                              cfg, avgdl, params)
-    return fn
-
-
-def _segment_encoder_docs(cfg: IndexConfig, avgdl: float, params: BM25Params):
-    """applyInArrow body over DOC-GROUPED postings (corpus.doc_postings):
-    one shard's (doc_id, dl, terms[], tfs[]) rows -> SEGMENTS rows.
-    Arrow-native end to end: list_flatten + dictionary_encode replace
-    the old pandas object-string chain/factorize (no per-token Python
-    object is ever created), a numpy lexsort orders (term-code, doc),
-    and blocks.encode_runs_arrow emits the packed blocks as one
-    RecordBatch over contiguous binary buffers."""
+def _empty_segments():
     import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from pdx_spark.functions.blocks import encode_runs_arrow
-
-    empty = pa.table(
+    return pa.table(
         {f.name: [] for f in schemas.SEGMENTS.fields},
         schema=pa.schema([
             ("term", pa.string()), ("shard", pa.int64()),
@@ -324,39 +279,101 @@ def _segment_encoder_docs(cfg: IndexConfig, avgdl: float, params: BM25Params):
             ("ids", pa.binary()), ("tfs", pa.binary()),
             ("dls", pa.binary())]))
 
+
+def _encode_postings(terms, doc_ids: np.ndarray, tfs: np.ndarray,
+                     dls: np.ndarray, shard: int, cfg: IndexConfig,
+                     avgdl: float, params: BM25Params):
+    """The encoder core: ONE shard's flat postings (terms: an Arrow
+    string array; doc_ids/tfs/dls: parallel int arrays, any order) ->
+    SEGMENTS pyarrow.Table. dictionary_encode replaces a string sort (no
+    per-token Python object is ever created), a numpy lexsort orders
+    (term-code, doc), and blocks.encode_runs_arrow emits the packed
+    blocks as one RecordBatch over contiguous binary buffers."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if len(terms) == 0:
+        return _empty_segments()
+    denc = pc.dictionary_encode(terms)
+    codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    vocab = denc.dictionary
+    order = np.lexsort((doc_ids, codes))
+    terms_c = codes[order]
+    change = np.nonzero(terms_c[1:] != terms_c[:-1])[0] + 1
+    starts = np.concatenate([[0], change]).astype(np.int64)
+    ends = np.concatenate([change, [len(terms_c)]]).astype(np.int64)
+    code_of_run = terms_c[starts]
+    batch = encode_runs_arrow(
+        doc_ids[order], tfs[order], dls[order], starts, ends,
+        lambda run_of_block: vocab.take(pa.array(code_of_run[run_of_block])),
+        shard, cfg.block_size, avgdl, params)
+    return pa.Table.from_batches([batch])
+
+
+def _segment_encoder_docs(cfg: IndexConfig, avgdl: float, params: BM25Params):
+    """applyInArrow body over DOC-GROUPED postings (corpus.doc_postings),
+    the build's and append's input: one shard's (doc_id, dl, terms[],
+    tfs[]) rows, flattened Arrow-natively -> _encode_postings."""
+    import pyarrow.compute as pc
+
     def fn(tab: "pa.Table") -> "pa.Table":
         if tab.num_rows == 0:
-            return empty
-        shard = tab.column("shard")[0].as_py()
+            return _empty_segments()
         lens = pc.list_value_length(tab.column("terms")).to_numpy() \
             .astype(np.int64)
-        total = int(lens.sum())
-        if total == 0:
-            return empty
-        terms_flat = pc.list_flatten(tab.column("terms")).combine_chunks()
-        tfs = pc.list_flatten(tab.column("tfs")).to_numpy() \
-            .astype(np.int64)
-        doc_ids = np.repeat(tab.column("doc_id").to_numpy()
-                            .astype(np.int64), lens)
-        dls = np.repeat(tab.column("dl").to_numpy().astype(np.int64), lens)
-        denc = pc.dictionary_encode(terms_flat)
-        codes = denc.indices.to_numpy(zero_copy_only=False) \
-            .astype(np.int64)
-        vocab = denc.dictionary
-        order = np.lexsort((doc_ids, codes))
-        terms_c = codes[order]
-        doc_ids, tfs, dls = doc_ids[order], tfs[order], dls[order]
-        change = np.nonzero(terms_c[1:] != terms_c[:-1])[0] + 1
-        starts = np.concatenate([[0], change]).astype(np.int64)
-        ends = np.concatenate([change, [len(terms_c)]]).astype(np.int64)
-        code_of_run = terms_c[starts]
-        batch = encode_runs_arrow(
-            doc_ids, tfs, dls, starts, ends,
-            lambda run_of_block: vocab.take(
-                pa.array(code_of_run[run_of_block])),
-            shard, cfg.block_size, avgdl, params)
-        return pa.Table.from_batches([batch])
+        return _encode_postings(
+            pc.list_flatten(tab.column("terms")).combine_chunks(),
+            np.repeat(tab.column("doc_id").to_numpy(), lens),
+            pc.list_flatten(tab.column("tfs")).to_numpy(),
+            np.repeat(tab.column("dl").to_numpy(), lens),
+            tab.column("shard")[0].as_py(), cfg, avgdl, params)
     return fn
+
+
+def _segment_encoder_postings(cfg: IndexConfig, avgdl: float,
+                              params: BM25Params):
+    """applyInArrow body over FLAT decoded postings (term, doc_id, tf, dl,
+    shard), compaction's input -> _encode_postings."""
+    def fn(tab: "pa.Table") -> "pa.Table":
+        if tab.num_rows == 0:
+            return _empty_segments()
+        return _encode_postings(
+            tab.column("term").combine_chunks(),
+            tab.column("doc_id").to_numpy(), tab.column("tf").to_numpy(),
+            tab.column("dl").to_numpy(), tab.column("shard")[0].as_py(),
+            cfg, avgdl, params)
+    return fn
+
+
+def encode_layout(spark, n_docs: int, cfg: IndexConfig):
+    """(n_encode, fgroup column) of the encode shuffle and the segment
+    write. Encode at ~4 partitions per core: segment files come out small
+    enough that (a) the query-time map-scan gets several task waves
+    (straggler smoothing — one file = one wave is the worst case) and
+    (b) no file approaches the reader's split threshold (map-scan
+    exactness invariant, searcher.py).
+
+    Dense doc_ids (n_docs = the id high-water mark) make shard sizes
+    ANALYTIC (docs_per_shard docs each), so file-group boundaries need
+    no sampling: fgroup = shard // spg gives n_encode equal-width,
+    contiguous shard ranges. A hash repartition on fgroup replaces
+    repartitionByRange(shard), whose range-boundary sampling was a
+    second FULL scan of its input (measured: the encode's input bytes
+    were exactly 2x the cached frame at xbench). HashPartitioning(fgroup)
+    still satisfies the groupBy(fgroup, shard) clustering (subset rule —
+    no second shuffle), and write.partitionBy(fgroup) keeps the property
+    the range partition existed for: every output FILE holds a
+    contiguous shard range, so query-time shard routing (`shard IN
+    (...)`) skips whole files via row-group stats — the physical
+    substrate of the two-phase pruning win (reference: clusters ARE the
+    I/O granularity, ivf_wrapper.hpp:15-38). Boundaries are
+    deterministic, so the layout is reproducible run-to-run."""
+    mult = int(os.environ.get("PDX_ENCODE_FILES_PER_CORE", "4"))
+    n_encode = max(mult * spark.sparkContext.defaultParallelism,
+                   int(spark.conf.get("spark.sql.shuffle.partitions", "8")))
+    n_shards = max(1, -(-n_docs // cfg.docs_per_shard))
+    spg = max(1, -(-n_shards // n_encode))
+    return n_encode, (F.col("shard") / spg).cast("long")
 
 
 class Indexer:
@@ -500,37 +517,8 @@ class Indexer:
                      .withColumn("shard", self.cfg.shard_of_expr()))
 
             enc = _segment_encoder_docs(self.cfg, avgdl, self.params)
-            # encode at ~4 partitions per core: segment files come out
-            # small enough that (a) the query-time map-scan gets several
-            # task waves (straggler smoothing — one file = one wave is the
-            # worst case) and (b) no file approaches the reader's split
-            # threshold (map-scan exactness invariant, searcher.py)
-            mult = int(os.environ.get("PDX_ENCODE_FILES_PER_CORE", "4"))
-            n_encode = max(mult * self.spark.sparkContext.defaultParallelism,
-                           int(self.spark.conf.get(
-                               "spark.sql.shuffle.partitions", "8")))
+            n_encode, fgroup = encode_layout(self.spark, n_docs, self.cfg)
             n_chunks = manifest["n_chunks"]
-            # dense doc_ids make shard sizes ANALYTIC (docs_per_shard
-            # docs each), so file-group boundaries need no sampling:
-            # fgroup = shard // spg gives n_encode equal-width,
-            # contiguous shard ranges. A hash repartition on fgroup
-            # replaces repartitionByRange(shard), whose range-boundary
-            # sampling was a second FULL scan of the postings frame
-            # (measured: the encode's input bytes were exactly 2x the
-            # cached frame — the sampling pass re-read all 4 GB at
-            # xbench). HashPartitioning(fgroup) still satisfies the
-            # groupBy(fgroup, shard) clustering (subset rule — no second
-            # shuffle), and write.partitionBy(fgroup) keeps the property
-            # the range partition existed for: every output FILE holds a
-            # contiguous shard range, so query-time shard routing
-            # (`shard IN (...)`) skips whole files via row-group stats —
-            # the physical substrate of the two-phase pruning win
-            # (reference: clusters ARE the I/O granularity,
-            # ivf_wrapper.hpp:15-38). Boundaries are now deterministic
-            # (no sampling), so the layout is reproducible run-to-run.
-            n_shards = max(1, -(-n_docs // self.cfg.docs_per_shard))
-            spg = max(1, -(-n_shards // n_encode))
-            fgroup = (F.col("shard") / spg).cast("long")
             for chunk in range(n_chunks):
                 key = str(chunk)
                 if manifest["chunks"].get(key, {}).get("status") == "done":
@@ -544,8 +532,11 @@ class Indexer:
                        .applyInArrow(enc, schema=schemas.SEGMENTS))
                 final = self._p(path, "segments", "base", f"chunk-{chunk}")
                 tmp = final + ".tmp"
+                # no sortWithinPartitions here: the planned write sorts
+                # each task's rows by fgroup alone, which would replace
+                # it, so files keep the encoder's per-shard group order
+                # (smaller than term order on topic corpora)
                 (seg.withColumn("fgroup", fgroup)
-                    .sortWithinPartitions("term", "shard", "block_id")
                     .write.option("parquet.block.size", PARQUET_BLOCK_SIZE)
                     .partitionBy("fgroup")
                     .mode("overwrite").parquet(tmp))

@@ -15,13 +15,15 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
      dirs). Idempotent: callers passing batch_id (streaming ingest) get
      exactly-once semantics — a replayed micro-batch with
      batch_id <= manifest.last_batch_id is a no-op.
-  M2 Delete  -> tombstones + EXACT stats: deleted doc_ids recorded in a
-     tombstone parquet (the scorer masks them via the selection-vector
-     channel, analog of tombstone slots, cluster.hpp:107-118); N/sum_dl
-     shrink, and per-term df decrements are computed at delete time by
-     decoding ONLY the affected shards' blocks (doc-range sharding makes
-     that a targeted read) into a negative term_stats delta — idf is
-     exact immediately after delete, not only after compact.
+  M2 Delete  -> tombstones + EXACT stats: the keys resolve against the
+     live docs in one join, so only ids the index holds are tombstoned;
+     their doc_ids land in a tombstone parquet (the scorer masks them
+     via the selection-vector channel, analog of tombstone slots,
+     cluster.hpp:107-118); N/sum_dl shrink, and per-term df decrements
+     are computed at delete time by decoding ONLY the affected shards'
+     blocks (doc-range sharding makes that a targeted read) into a
+     negative term_stats delta — idf is exact immediately after delete,
+     not only after compact.
   M3-M6 Compact:
      compact_targeted() -> the SplitCluster/CompactCluster analog
        (index.hpp:1314-1611, cluster.hpp:260-294): rewrites ONLY shards
@@ -31,6 +33,14 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
        tombstone removal can only shrink true maxima).
      compact() -> full rewrite: merge everything, drop tombstones and
        dead docs, fold stat deltas into the base, reset all delta state.
+       Its new base takes the build's fgroup file layout, and its
+       term_stats/directory come from the new base's segment METADATA
+       (indexer.stat_artifacts_local, as in build stage C) — the output
+       is never decoded again.
+  Both compactions run the build's kernels: one Arrow decode pass
+  (blocks.decode_blocks_arrow, the M8 de-transpose analog,
+  cluster.hpp:165-181) feeds the build's Arrow encoder
+  (indexer._encode_postings).
 """
 
 from __future__ import annotations
@@ -38,8 +48,6 @@ from __future__ import annotations
 import os
 import time
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -48,15 +56,16 @@ from pdx_spark.config import BM25Params, IndexConfig
 from pdx_spark.fs import IndexFS, index_fs, verify_single_rowgroup
 from pdx_spark.operators import corpus as C
 from pdx_spark.operators.indexer import (PARQUET_BLOCK_SIZE,
-                                         _segment_encoder,
                                          _segment_encoder_docs,
-                                         _write_manifest, read_manifest,
-                                         write_directory,
+                                         _segment_encoder_postings,
+                                         _write_manifest, encode_layout,
+                                         read_manifest, write_directory,
                                          write_directory_rows)
 
 
 def _atomic_write(df: DataFrame, final: str, sort_cols: list[str] | None = None,
-                  fs: IndexFS | None = None, segments: bool = False):
+                  fs: IndexFS | None = None, segments: bool = False,
+                  partition_by: str | None = None):
     """tmp-dir -> rename commit protocol (same as the indexer's chunks).
     segments=True also pins the one-row-group-per-file invariant the
     map-scan needs (parquet.block.size >> file size)."""
@@ -67,6 +76,8 @@ def _atomic_write(df: DataFrame, final: str, sort_cols: list[str] | None = None,
     w = w.write.mode("overwrite")
     if segments:
         w = w.option("parquet.block.size", PARQUET_BLOCK_SIZE)
+    if partition_by:
+        w = w.partitionBy(partition_by)
     w.parquet(tmp)
     fs.rename(tmp, final)
 
@@ -347,28 +358,28 @@ class Maintainer:
         the docs and keeps ALL stats exact: N/sum_dl shrink, and per-term
         df decrements (decoded from only the affected shards' blocks) land
         as a negative term_stats delta — post-delete scores are
-        rank-identical to a fresh build over the live corpus."""
+        rank-identical to a fresh build over the live corpus. Keys that
+        match no live doc are ignored: an id the index does not hold
+        (e.g. one at or past next_doc_id) must never be tombstoned, or
+        the doc a later append gives that id would be masked."""
         t0 = time.time()
         m = self.manifest
-        docs = self._docs()
-        if "doc_id" in doc_keys.columns:
-            dead = doc_keys.select("doc_id")
-        else:
-            dead = docs.join(doc_keys, ["conv_id", "turn_idx"], "left_semi") \
-                       .select("doc_id")
+        # ONE join resolves the keys against the live, not yet
+        # tombstoned docs (_docs already drops compacted-away dead ids)
+        live = self._docs()
         old = self._tombstones()
         if old is not None:
-            old = old.select("doc_id")
-        new_dead = dead if old is None else dead.join(old, "doc_id", "left_anti")
-        dd = self._dead_docs()  # ids already compacted away: postings gone
-        if dd is not None:
-            new_dead = new_dead.join(dd, "doc_id", "left_anti")
-        new_dead = new_dead.distinct().persist()
-
-        # exact global stats: N/sum_dl shrink by the newly-dead docs
-        drow = (docs.join(new_dead, "doc_id", "left_semi")
-                .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
-                .collect()[0])
+            live = live.join(old.select("doc_id"), "doc_id", "left_anti")
+        keys = ["doc_id"] if "doc_id" in doc_keys.columns \
+            else ["conv_id", "turn_idx"]
+        new_dead = (live.join(doc_keys.select(*keys), keys, "left_semi")
+                    .select("doc_id", "dl").persist())
+        # ONE aggregate: exact N/sum_dl decrements + the affected shards
+        # (doc-range sharding -> shard id is derivable from doc_id)
+        drow = new_dead.agg(
+            F.count("*").alias("n"), F.sum("dl").alias("s"),
+            F.collect_set((F.col("doc_id") / self.cfg.docs_per_shard)
+                          .cast("long")).alias("shards")).collect()[0]
         n_dead, dl_dead = int(drow["n"]), int(drow["s"] or 0)
         if n_dead == 0:
             new_dead.unpersist()
@@ -377,15 +388,12 @@ class Maintainer:
         n_docs, sum_dl = n_old - n_dead, sum_old - dl_dead
         avgdl = sum_dl / n_docs if n_docs else 0.0
 
-        # exact per-term df: decode ONLY the affected shards (doc-range
-        # sharding -> shard id is derivable from doc_id; parquet min/max
-        # on the sorted shard column prunes row groups)
-        shards = [int(r[0]) for r in new_dead.select(
-            (F.col("doc_id") / self.cfg.docs_per_shard).cast("long")
-            .alias("s")).distinct().collect()]
-        seg = self._segments().filter(F.col("shard").isin(shards))
+        # exact per-term df: decode ONLY the affected shards (parquet
+        # min/max on the shard column prunes files and row groups)
+        seg = self._segments().filter(
+            F.col("shard").isin(sorted(int(x) for x in drow["shards"])))
         posts = _decode_segments_to_postings(seg) \
-            .join(new_dead, "doc_id", "left_semi")
+            .join(new_dead.select("doc_id"), "doc_id", "left_semi")
         dec = (posts.groupBy("term")
                .agg((-F.count("*")).cast("long").alias("df"))
                .withColumn("max_tf", F.lit(0).cast("int"))
@@ -402,9 +410,11 @@ class Maintainer:
         # the LAST COMMITTED state and the stat decrements are never lost
         # (append's staging discipline, applied to delete)
         tomb_dir = f"tombstones-{gen}"
-        merged = new_dead if old is None else old.unionByName(new_dead)
-        _atomic_write(merged.select("doc_id"), self._p(tomb_dir), fs=self.fs)
-        n_tomb = self.spark.read.parquet(self._p(tomb_dir)).count()
+        merged = new_dead.select("doc_id")
+        if old is not None:
+            merged = old.select("doc_id").unionByName(merged)
+        _atomic_write(merged, self._p(tomb_dir), fs=self.fs)
+        n_tomb = int(m.get("tombstones", 0)) + n_dead  # disjoint sets
         new_dead.unpersist()
 
         old_tomb = m.get("tomb_dir", "tombstones") \
@@ -450,13 +460,12 @@ class Maintainer:
         posts = _decode_segments_to_postings(src)
         if tomb is not None:
             posts = posts.join(tomb.select("doc_id"), "doc_id", "left_anti")
-        avgdl = m["avgdl"]
-        enc = _segment_encoder(self.cfg, avgdl, self.params)
+        enc = _segment_encoder_postings(self.cfg, m["avgdl"], self.params)
         gen = int(m.get("gen", 0))
         m["gen"] = gen + 1
         patch = f"segments/patch-{gen}"
         new_seg = (posts.withColumn("shard", self.cfg.shard_of_expr())
-                   .groupBy("shard").applyInPandas(enc, schema=schemas.SEGMENTS))
+                   .groupBy("shard").applyInArrow(enc, schema=schemas.SEGMENTS))
         _atomic_write(new_seg, self._p(patch), ["term", "shard", "block_id"],
                       fs=self.fs, segments=True)
         single_rg = verify_single_rowgroup(self.fs, patch, root=self.path)
@@ -612,6 +621,9 @@ class Maintainer:
         m["gen"] = gen + 1
         tomb = self._tombstones()
 
+        # the encode below must stay this decode's only consumer: any
+        # other action on it (a range sample, a stats pass) decodes the
+        # whole index again
         posts = _decode_segments_to_postings(self._segments())
         if tomb is not None:
             posts = posts.join(tomb.select("doc_id"), "doc_id", "left_anti")
@@ -619,19 +631,20 @@ class Maintainer:
         docs = self._docs()
         if tomb is not None:
             docs = docs.join(tomb.select("doc_id"), "doc_id", "left_anti")
-        drow = docs.agg(F.count("*").alias("n"), F.sum("dl").alias("s")).collect()[0]
-        n_docs, sum_dl = int(drow["n"]), int(drow["s"] or 0)
+        # delete() keeps N/sum_dl exact in the manifest: no docs scan
+        n_docs, sum_dl = self._stats()
         avgdl = sum_dl / n_docs if n_docs else 0.0
 
-        enc = _segment_encoder(self.cfg, avgdl, self.params)
-        n_encode = max(4 * self.spark.sparkContext.defaultParallelism,
-                       int(self.spark.conf.get(
-                           "spark.sql.shuffle.partitions", "8")))
-        # range-partitioned like the build: compacted files hold
-        # contiguous shard ranges so shard routing prunes them at the scan
+        enc = _segment_encoder_postings(self.cfg, avgdl, self.params)
+        # the build's analytic fgroup layout over the id range
+        n_encode, fgroup = encode_layout(self.spark, self._next_doc_id(),
+                                         self.cfg)
         new_seg = (posts.withColumn("shard", self.cfg.shard_of_expr())
-                   .repartitionByRange(n_encode, "shard")
-                   .groupBy("shard").applyInPandas(enc, schema=schemas.SEGMENTS))
+                   .withColumn("fgroup", fgroup)
+                   .repartition(n_encode, "fgroup")
+                   .groupBy("fgroup", "shard")
+                   .applyInArrow(enc, schema=schemas.SEGMENTS)
+                   .withColumn("fgroup", fgroup))
         # every old artifact is deleted only AFTER the manifest commit
         # (a crash in between leaves harmless orphans, never a manifest
         # pointing at missing data)
@@ -646,25 +659,34 @@ class Maintainer:
         if m.get("dead_docs", 0) > 0:
             doomed.append(m.get("dead_dir", "dead_docs"))
         base = f"segments/base-{gen}"
-        _atomic_write(new_seg, self._p(base), ["term", "shard", "block_id"],
-                      fs=self.fs, segments=True)
+        # the sort leads with fgroup so it satisfies the planned write's
+        # fgroup ordering and survives: files stay term-ordered
+        _atomic_write(new_seg, self._p(base),
+                      ["fgroup", "term", "shard", "block_id"], fs=self.fs,
+                      segments=True, partition_by="fgroup")
         single_rg = verify_single_rowgroup(self.fs, base, root=self.path)
 
         # docs: fold deltas + drop dead into a single gen-named dir
         docs_dir = f"docs-{gen}"
         _atomic_write(docs, self._p(docs_dir), fs=self.fs)
 
-        # exact term stats + directory from the rewritten base
-        fresh_seg = (self.spark.read.schema(schemas.SEGMENTS)
-                     .option("recursiveFileLookup", "true")
-                     .parquet(self._p(base)))
-        fresh_posts = _decode_segments_to_postings(fresh_seg)
-        ts = C.term_stats(fresh_posts, n_docs, avgdl, self.params)
+        # exact term stats + directory from the new base's segment
+        # metadata, like build stage C: driver-side under the cap on a
+        # local fs, else the distributed aggregate of the same columns
         ts_base, dir_base = f"term_stats-{gen}", f"directory-{gen}"
-        _atomic_write(ts.coalesce(max(ts.sparkSession.sparkContext
-                                      .defaultParallelism // 2, 1)),
-                      self._p(ts_base), ["term"], fs=self.fs)
-        dq = write_directory(fresh_seg, self._p(dir_base), self.fs)
+        from pdx_spark.operators.indexer import stat_artifacts_local
+        dq = stat_artifacts_local(self.fs, [self._p(base)],
+                                  self._p(ts_base), self._p(dir_base))
+        if dq is None:
+            fresh_seg = (self.spark.read.schema(schemas.SEGMENTS)
+                         .option("recursiveFileLookup", "true")
+                         .parquet(self._p(base)))
+            ts = (fresh_seg.groupBy("term")
+                  .agg(F.sum("n").cast("long").alias("df"),
+                       F.max("max_tf").cast("int").alias("max_tf"),
+                       F.max("gmax").alias("gmax")))
+            _atomic_write(ts, self._p(ts_base), ["term"], fs=self.fs)
+            dq = write_directory(fresh_seg, self._p(dir_base), self.fs)
         doomed += [m.get("ts_base", "term_stats"),
                    m.get("dir_base", "directory")]
 
@@ -709,24 +731,15 @@ class Maintainer:
 
 def _decode_segments_to_postings(seg: DataFrame) -> DataFrame:
     """Explode packed blocks back to (term, doc_id, tf, dl) rows — the M8
-    de-transpose analog (cluster.hpp:165-181)."""
-    from pdx_spark.functions.blocks import decode_block
+    de-transpose analog (cluster.hpp:165-181), one vectorized Arrow
+    decode per batch (blocks.decode_blocks_arrow)."""
+    from pdx_spark.functions.blocks import decode_blocks_arrow
 
     def fn(batches):
-        for pdf in batches:
-            terms, ids, tfs, dls = [], [], [], []
-            for rec in pdf.to_dict("records"):
-                i, t, d = decode_block(rec)
-                terms.extend([rec["term"]] * len(i))
-                ids.append(i); tfs.append(t); dls.append(d)
-            if not ids:
-                yield pd.DataFrame({"term": [], "doc_id": [], "tf": [], "dl": []})
-                continue
-            import numpy as np
-            yield pd.DataFrame({
-                "term": terms,
-                "doc_id": np.concatenate(ids).astype("int64"),
-                "tf": np.concatenate(tfs).astype("int32"),
-                "dl": np.concatenate(dls).astype("int32")})
+        for batch in batches:
+            if batch.num_rows:
+                yield decode_blocks_arrow(batch)
 
-    return seg.mapInPandas(fn, schema="term string, doc_id long, tf int, dl int")
+    return (seg.select("term", "n", "first_doc", "ids_bw", "tfs_bw",
+                       "dls_bw", "ids", "tfs", "dls")
+            .mapInArrow(fn, schema="term string, doc_id long, tf int, dl int"))

@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 from pdx_spark import schemas
 from pdx_spark.config import SEED, BM25Params, IndexConfig
 from pdx_spark.fs import index_fs, verify_single_rowgroup
-from pdx_spark.functions.blocks import decode_term_run
+from pdx_spark.functions.blocks import decode_term_run, payload_view
 from pdx_spark.functions.bm25 import idf_np, tfnorm_col, tfnorm_np
 from pdx_spark.functions.tokenize import tokenize_py
 from pdx_spark.operators.indexer import MANIFEST, read_manifest
@@ -467,28 +467,6 @@ def _shard_scorer(payload: dict, has_aux: bool):
     return fn
 
 
-def _payload_view(arr):
-    """(padded data uint8, offsets int64[n+1]) view of a pyarrow
-    Binary/String array — the per-cell payload bytes without ever
-    materializing Python bytes objects. The data is copied once into a
-    buffer padded with 8 zero bytes so the word-gather decode may read
-    past the last cell."""
-    import pyarrow as pa
-    if arr.null_count:
-        raise ValueError("segment payload column has nulls")
-    large = pa.types.is_large_binary(arr.type) \
-        or pa.types.is_large_string(arr.type)
-    bufs = arr.buffers()
-    off = np.frombuffer(bufs[1],
-                        dtype=np.int64 if large else np.int32)[
-        arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
-    data = np.frombuffer(bufs[2], dtype=np.uint8)
-    end = int(off[-1])
-    padded = np.zeros(end + 8, dtype=np.uint8)
-    padded[:end] = data[:end]
-    return padded, off
-
-
 def _partition_scorer(payload: dict, arrow: bool = False):
     """mapInPandas / mapInArrow body: score a SCAN partition directly —
     no cogroup, no
@@ -671,7 +649,7 @@ def _partition_scorer(payload: dict, arrow: bool = False):
         tab = tab.take(pc.sort_indices(
             tab, sort_keys=[("term", "ascending"),
                             ("first_doc", "ascending")])).combine_chunks()
-        views = tuple(_payload_view(tab.column(c).chunk(0))
+        views = tuple(payload_view(tab.column(c).chunk(0))
                       for c in ("ids", "tfs", "dls"))
         mpdf = tab.drop_columns(["ids", "tfs", "dls"]).to_pandas()
         out = score_partition(mpdf, _views_part_lookup(mpdf, views))

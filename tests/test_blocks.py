@@ -141,103 +141,121 @@ def test_shard_scorer_property(case):
         assert set(must_have) <= set(got), (must_have, got, theta)
 
 
+_SEG_COLS = ("term", "shard", "block_id", "n", "first_doc", "last_doc",
+             "max_tf", "min_dl", "gmax", "ids_bw", "tfs_bw", "dls_bw",
+             "ids", "tfs", "dls")
+
+
+def _random_runs(rng, n_runs, max_len, max_gap, max_tf, max_dl):
+    """Zipf-ish run length mix with strictly increasing doc ids."""
+    runs = []
+    for _ in range(n_runs):
+        rl = int(np.clip(rng.zipf(1.4), 1, max_len))
+        ids = np.cumsum(rng.integers(1, max_gap, rl))
+        runs.append((ids.astype(np.int64),
+                     rng.integers(1, max_tf, rl).astype(np.int64),
+                     rng.integers(1, max_dl, rl).astype(np.int64)))
+    return runs
+
+
+def _reference_blocks(runs, shard, bsz, avgdl, params):
+    ref = []
+    for i, (ids, tfs, dls) in enumerate(runs):
+        ref.extend(encode_blocks(ids, tfs, dls, shard, f"t{i}", bsz, avgdl,
+                                 params))
+    return ref
+
+
+def _assert_blocks_equal(ref, got: dict):
+    """Per-run reference blocks == a SEGMENTS column dict, row by row."""
+    assert len(got["n"]) == len(ref)
+    for k in _SEG_COLS:
+        assert [r[k] for r in ref] == got[k], k
+
+
 @settings(max_examples=25, deadline=None)
 @given(st.integers(min_value=0, max_value=2**31), st.integers(0, 10_000))
 def test_encode_runs_matches_encode_blocks(seed, extra):
-    """The vectorized whole-group encoder (encode_runs) must be
+    """The vectorized whole-group encoder (encode_runs_arrow) must be
     BYTE-identical to the per-run reference (encode_blocks) — same
     metadata, same widths, same packed payloads — across Zipf-ish run
     length mixes, huge deltas/dls, and partial unaligned blocks."""
-    from pdx_spark.config import BM25Params
-    from pdx_spark.functions.blocks import encode_runs
+    import pyarrow as pa
+
+    from pdx_spark.functions.blocks import encode_runs_arrow
 
     rng = np.random.default_rng(seed)
     params, avgdl, bsz = BM25Params(), 37.5, 16
-    n_runs = int(rng.integers(1, 40))
-    runs = []
-    for i in range(n_runs):
-        rl = int(np.clip(rng.zipf(1.4), 1, 200))
-        ids = np.cumsum(rng.integers(1, 1 + extra + int(rng.integers(1, 10**6)), rl))
-        tfs = rng.integers(1, 1000, rl)
-        dls = rng.integers(1, 10**7, rl)
-        runs.append((ids.astype(np.int64), tfs.astype(np.int64),
-                     dls.astype(np.int64)))
-
-    ref = []
-    for i, (ids, tfs, dls) in enumerate(runs):
-        ref.extend(encode_blocks(ids, tfs, dls, 5, f"t{i}", bsz, avgdl,
-                                 params))
+    runs = _random_runs(rng, int(rng.integers(1, 40)), 200,
+                        1 + extra + int(rng.integers(1, 10**6)), 1000, 10**7)
     lens = np.array([len(r[0]) for r in runs], dtype=np.int64)
     ends = np.cumsum(lens)
-    starts = (ends - lens).astype(np.int64)
-    got = encode_runs(
+    vocab = pa.array([f"t{i}" for i in range(len(runs))])
+    got = encode_runs_arrow(
         np.concatenate([r[0] for r in runs]),
         np.concatenate([r[1] for r in runs]),
-        np.concatenate([r[2] for r in runs]),
-        starts, ends,
-        np.array([f"t{i}" for i in range(n_runs)], dtype=object),
-        5, bsz, avgdl, params)
-    assert len(ref) == len(got["n"])
-    for i, r in enumerate(ref):
-        for k in ("term", "shard", "block_id", "n", "first_doc",
-                  "last_doc", "max_tf", "min_dl", "gmax", "ids_bw",
-                  "tfs_bw", "dls_bw", "ids", "tfs", "dls"):
-            v = got[k][i]
-            v = v.item() if hasattr(v, "item") else v
-            assert r[k] == v, (i, k, r[k], v)
+        np.concatenate([r[2] for r in runs]), ends - lens, ends,
+        lambda rob: vocab.take(pa.array(rob)), 5, bsz, avgdl, params)
+    _assert_blocks_equal(_reference_blocks(runs, 5, bsz, avgdl, params),
+                         got.to_pydict())
 
 
 def test_encode_runs_empty_token_group():
-    """A group whose docs have zero tokens encodes to zero blocks."""
-    from pdx_spark.config import BM25Params, IndexConfig
-    from pdx_spark.operators.indexer import _encode_sorted
+    """A group whose docs have zero tokens encodes to zero blocks, through
+    both encoder input adapters."""
+    import pyarrow as pa
 
-    out = _encode_sorted(np.empty(0, np.int64), np.empty(0, np.int64),
-                         np.empty(0, np.int64), np.empty(0, np.int64),
-                         np.empty(0, object), 0, IndexConfig(), 10.0,
-                         BM25Params())
-    assert len(out) == 0
+    from pdx_spark.config import IndexConfig
+    from pdx_spark.operators.indexer import (_segment_encoder_docs,
+                                             _segment_encoder_postings)
+
+    cfg, params = IndexConfig(), BM25Params()
+    docs = pa.table({"doc_id": pa.array([3, 4], pa.int64()),
+                     "dl": pa.array([0, 0], pa.int32()),
+                     "terms": pa.array([[], []], pa.list_(pa.string())),
+                     "tfs": pa.array([[], []], pa.list_(pa.int32())),
+                     "shard": pa.array([0, 0], pa.int64())})
+    out = _segment_encoder_docs(cfg, 10.0, params)(docs)
+    assert out.num_rows == 0 and out.column_names == list(_SEG_COLS)
+    flat = pa.table({"term": pa.array([], pa.string()),
+                     "doc_id": pa.array([], pa.int64()),
+                     "tf": pa.array([], pa.int32()),
+                     "dl": pa.array([], pa.int32()),
+                     "shard": pa.array([], pa.int64())})
+    assert _segment_encoder_postings(cfg, 10.0, params)(flat).num_rows == 0
 
 
 @settings(max_examples=15, deadline=None)
 @given(st.integers(min_value=0, max_value=2**31))
 def test_encode_runs_arrow_matches(seed):
-    """encode_runs_arrow (contiguous-buffer BinaryArray output) must be
-    byte-identical to encode_runs."""
+    """The build's encoder core (indexer._encode_postings: dictionary
+    encode -> lexsort -> encode_runs_arrow) over SHUFFLED flat postings
+    must be byte-identical to per-run encode_blocks — the input order a
+    shuffle or a decode delivers must not matter."""
     import pyarrow as pa
 
-    from pdx_spark.config import BM25Params
-    from pdx_spark.functions.blocks import encode_runs, encode_runs_arrow
+    from pdx_spark.config import IndexConfig
+    from pdx_spark.operators.indexer import _encode_postings
 
     rng = np.random.default_rng(seed)
     params, avgdl, bsz = BM25Params(), 21.5, 16
-    n_runs = int(rng.integers(1, 30))
-    runs = []
-    for i in range(n_runs):
-        rl = int(np.clip(rng.zipf(1.4), 1, 150))
-        ids = np.cumsum(rng.integers(1, 10**5, rl))
-        runs.append((ids.astype(np.int64),
-                     rng.integers(1, 500, rl).astype(np.int64),
-                     rng.integers(1, 10**6, rl).astype(np.int64)))
-    lens = np.array([len(r[0]) for r in runs], dtype=np.int64)
-    ends = np.cumsum(lens)
-    starts = (ends - lens).astype(np.int64)
-    terms = np.array([f"t{i}" for i in range(n_runs)], dtype=object)
-    args = (np.concatenate([r[0] for r in runs]),
-            np.concatenate([r[1] for r in runs]),
-            np.concatenate([r[2] for r in runs]), starts, ends)
-    ref = encode_runs(*args, terms, 9, bsz, avgdl, params)
-    vocab = pa.array([f"t{i}" for i in range(n_runs)])
-    got = encode_runs_arrow(
-        *args, lambda rob: vocab.take(pa.array(rob)), 9, bsz, avgdl,
-        params).to_pydict()
-    n_blocks = len(ref["n"])
-    assert len(got["n"]) == n_blocks
-    for k in ("term", "shard", "block_id", "n", "first_doc", "last_doc",
-              "max_tf", "min_dl", "gmax", "ids_bw", "tfs_bw", "dls_bw",
-              "ids", "tfs", "dls"):
-        refv = [x.item() if hasattr(x, "item") else x for x in ref[k]]
-        assert refv == got[k], k
+    runs = _random_runs(rng, int(rng.integers(1, 30)), 150, 10**5, 500,
+                        10**6)
+    terms = np.concatenate([[f"t{i}"] * len(r[0])
+                            for i, r in enumerate(runs)])
+    cols = [np.concatenate([r[j] for r in runs]) for j in range(3)]
+    perm = rng.permutation(len(terms))
+    got = _encode_postings(
+        pa.array(terms[perm]), cols[0][perm], cols[1][perm], cols[2][perm],
+        9, IndexConfig(block_size=bsz), avgdl, params).to_pydict()
+    ref = _reference_blocks(runs, 9, bsz, avgdl, params)
+    # the core emits runs in dictionary (first-seen) order; compare as
+    # (term, block_id)-keyed rows
+    order = sorted(range(len(got["n"])),
+                   key=lambda i: (got["term"][i], got["block_id"][i]))
+    got = {k: [got[k][i] for i in order] for k in _SEG_COLS}
+    ref.sort(key=lambda r: (r["term"], r["block_id"]))
+    _assert_blocks_equal(ref, got)
 
 
 def _random_blocks(rng, n_blocks):
@@ -290,7 +308,7 @@ def test_decode_term_run_views_matches_bufs():
     import pyarrow as pa
     from pdx_spark.functions.blocks import (decode_term_run,
                                             decode_term_run_views)
-    from pdx_spark.operators.searcher import _payload_view
+    from pdx_spark.functions.blocks import payload_view
     rng = np.random.default_rng(11)
     params, avgdl = BM25Params(), 33.0
     # several term runs over one doc range, concatenated as one
@@ -334,13 +352,107 @@ def test_decode_term_run_views_matches_bufs():
                 arr = pa.array([b"PADCELL"] + cells, type=pa.binary()).slice(1)
             else:
                 arr = pa.array(cells, type=pa.binary())
-            views.append(_payload_view(arr))
+            views.append(payload_view(arr))
         vi, vt, vd = decode_term_run_views(
             views[0], views[1], views[2], as_np["ibw"], as_np["tbw"],
             as_np["dbw"], as_np["n"], as_np["fd"], as_np["ld"])
         assert np.array_equal(vi, want_i), do_slice
         assert np.array_equal(vt, want_t), do_slice
         assert np.array_equal(vd, want_d), do_slice
+
+
+def _segments_batch(blocks, lead_pad: bool = False):
+    """SEGMENTS-schema RecordBatch of encode_blocks rows. lead_pad=True
+    prepends a junk row and slices it off, so every column (payload
+    BinaryArrays included) carries a non-zero Arrow offset."""
+    import pyarrow as pa
+    types = {"term": pa.string(), "shard": pa.int64(), "first_doc": pa.int64(),
+             "last_doc": pa.int64(), "gmax": pa.float64(),
+             "ids": pa.binary(), "tfs": pa.binary(), "dls": pa.binary()}
+    rows = list(blocks)
+    if lead_pad:
+        rows = [dict(rows[0], term="PAD", ids=b"PADCELL", tfs=b"PADCELL",
+                     dls=b"PADCELL")] + rows
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([r[k] for r in rows], types.get(k, pa.int32()))
+         for k in _SEG_COLS], names=list(_SEG_COLS))
+    return batch.slice(1) if lead_pad else batch
+
+
+def _decode_rows_reference(blocks):
+    terms, ids, tfs, dls = [], [], [], []
+    for b in blocks:
+        i, t, d = decode_block(b)
+        terms += [b["term"]] * len(i)
+        ids.append(i); tfs.append(t); dls.append(d)
+    return terms, np.concatenate(ids), np.concatenate(tfs), \
+        np.concatenate(dls)
+
+
+def test_decode_blocks_arrow_matches_decode_block():
+    """decode_blocks_arrow == per-row decode_block on randomized blocks:
+    mixed widths (huge gaps, tf/dl ranges), width-0 streams (all-1 tfs,
+    single-posting blocks, zero dls), unsorted block order, and a sliced
+    batch with a non-zero Arrow offset."""
+    from pdx_spark.functions.blocks import decode_blocks_arrow
+    rng = np.random.default_rng(3)
+    params = BM25Params()
+    for trial in range(12):
+        blocks = []
+        for r in range(int(rng.integers(1, 25))):
+            rl = int(np.clip(rng.zipf(1.3), 1, 90))
+            ids = np.cumsum(rng.integers(1, int(rng.choice([2, 50, 10**9])),
+                                         rl)).astype(np.int64)
+            tfs = np.ones(rl, np.int64) if rng.random() < 0.3 else \
+                rng.integers(1, 1 << int(rng.integers(1, 20)), rl)
+            dls = np.zeros(rl, np.int64) if rng.random() < 0.2 else \
+                rng.integers(1, 1 << int(rng.integers(1, 30)), rl)
+            blocks += encode_blocks(ids, tfs.astype(np.int64), dls, 0,
+                                    f"t{r}", int(rng.choice([1, 8, 16])),
+                                    20.0, params)
+        blocks = [blocks[i] for i in rng.permutation(len(blocks))]
+        terms, ids, tfs, dls = _decode_rows_reference(blocks)
+        for pad in (False, True):
+            got = decode_blocks_arrow(_segments_batch(blocks, pad))
+            assert got.schema.names == ["term", "doc_id", "tf", "dl"]
+            assert got.column("term").to_pylist() == terms, (trial, pad)
+            assert np.array_equal(got.column("doc_id").to_numpy(), ids)
+            assert np.array_equal(got.column("tf").to_numpy(), tfs)
+            assert np.array_equal(got.column("dl").to_numpy(), dls)
+
+
+def test_decode_blocks_arrow_rejects_length_mismatch():
+    """A payload cell whose length disagrees with ceil(n * width / 8)
+    must raise, never decode silently wrong."""
+    import pytest
+
+    from pdx_spark.functions.blocks import decode_blocks_arrow
+    blocks = encode_blocks(np.array([5, 9, 40], np.int64),
+                           np.array([1, 3, 2], np.int64),
+                           np.array([7, 8, 9], np.int64), 0, "t", 16, 8.0,
+                           BM25Params())
+    bad = [dict(blocks[0], tfs=blocks[0]["tfs"] + b"x")]
+    with pytest.raises(ValueError, match="mismatch"):
+        decode_blocks_arrow(_segments_batch(bad))
+
+
+def test_payload_view_all_zero_width_batch():
+    """A batch whose every block is zero-width has only empty payload
+    cells. The Arrow spec allows a None values buffer there; pyarrow 16
+    never produces one (its constructors reject it, and IPC and parquet
+    reads return a 0-byte buffer), so this pins the 0-byte case: the
+    view is all padding and the decode yields the constant values."""
+    from pdx_spark.functions.blocks import decode_blocks_arrow, payload_view
+    blocks = encode_blocks(np.array([11], np.int64), np.array([1], np.int64),
+                           np.array([0], np.int64), 0, "t", 16, 8.0,
+                           BM25Params()) * 3
+    batch = _segments_batch(blocks)
+    data, off = payload_view(batch.column("ids"))
+    assert np.array_equal(off, [0, 0, 0, 0]) and not data.any()
+    got = decode_blocks_arrow(batch)
+    assert got.column("doc_id").to_pylist() == [11, 11, 11]
+    assert got.column("tf").to_pylist() == [1, 1, 1]
+    assert got.column("dl").to_pylist() == [0, 0, 0]
 
 
 def test_topk_merge_pdf_matches_window_semantics():

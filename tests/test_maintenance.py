@@ -300,3 +300,135 @@ def test_minor_stats_compaction_policy(spark, tmp_path, corpus_pdfs):
         assert_rank_identical(collect_topk(res, qid), oracle.topk(qtext, k),
                               f"policy q{qid}")
     res.unpersist()
+
+
+def test_delete_ignores_ids_outside_the_index(spark, tmp_path, corpus_pdfs):
+    """delete() by doc_id tombstones only ids the index holds. An id at
+    next_doc_id is not a doc yet: tombstoning it would mask, forever,
+    the doc the next append gives that id."""
+    full, head, tail = corpus_pdfs
+    path = str(tmp_path / "idx_del_unknown")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    nxt = read_manifest(path)["next_doc_id"]
+    m = Maintainer(spark, path).delete(
+        spark.createDataFrame([(0,), (nxt,)], "doc_id long"))
+    assert m["tombstones"] == 1
+
+    one = tail.iloc[:1].copy()
+    one["conv_id"], one["text"] = "zz-appended", "zzqnovel w0000"
+    Maintainer(spark, path).append(
+        spark.createDataFrame(one, schema=TRANSCRIPTS))
+    res = Searcher.load(spark, path).search_batch([(0, "zzqnovel", 5)])
+    assert [d for d, _ in collect_topk(res, 0)] == [nxt]
+
+
+def _segment_rows(root):
+    """Counter of full SEGMENTS rows (payload bytes included) under root."""
+    import collections
+    import os
+
+    import pyarrow.parquet as pq
+
+    from pdx_spark import schemas
+    cols = [f.name for f in schemas.SEGMENTS.fields]
+    out = collections.Counter()
+    for dirpath, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".parquet"):
+                for r in pq.read_table(os.path.join(dirpath, f),
+                                       columns=cols).to_pylist():
+                    out[tuple(r[c] for c in cols)] += 1
+    return out
+
+
+def _live_postings(path):
+    """{(term, shard): [(doc_id, tf, dl)]} of the live index, decoded
+    row by row with the reference decode_block from every segment dir
+    the manifest references, minus excluded shards and tombstones."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from pdx_spark.functions.blocks import decode_block
+    m = read_manifest(path)
+    tomb = set()
+    if m.get("tombstones", 0):
+        tomb = set(pq.read_table(os.path.join(path, m["tomb_dir"]))
+                   .column("doc_id").to_pylist())
+    runs = {}
+    for d in m["segment_dirs"] + m.get("deltas", []):
+        ex = set(m.get("seg_excludes", {}).get(d, []))
+        for dirpath, _, files in os.walk(os.path.join(path, d)):
+            for f in files:
+                if not f.endswith(".parquet"):
+                    continue
+                for row in pq.read_table(os.path.join(dirpath, f)).to_pylist():
+                    if row["shard"] in ex:
+                        continue
+                    for i, t, dl in zip(*decode_block(row)):
+                        if int(i) not in tomb:
+                            runs.setdefault((row["term"], row["shard"]),
+                                            []).append((int(i), int(t), int(dl)))
+    return runs
+
+
+def _reference_rows(runs, avgdl, shards=None):
+    """What the per-run reference encoder (encode_blocks) makes of
+    live postings — the exact rows compaction must write."""
+    import collections
+
+    import numpy as np
+
+    from pdx_spark.config import BM25Params
+    from pdx_spark.functions.blocks import encode_blocks
+    from pdx_spark.schemas import SEGMENTS
+    cols = [f.name for f in SEGMENTS.fields]
+    out = collections.Counter()
+    for (term, shard), ps in runs.items():
+        if shards is None or shard in shards:
+            a = np.array(sorted(ps), dtype=np.int64)
+            for b in encode_blocks(a[:, 0], a[:, 1], a[:, 2], shard, term,
+                                   CFG.block_size, avgdl, BM25Params()):
+                out[tuple(b[c] for c in cols)] += 1
+    return out
+
+
+def test_compaction_rows_equal_reference_encoding(spark, tmp_path,
+                                                  corpus_pdfs):
+    """compact_targeted()'s patch and compact()'s new base hold exactly
+    the reference encoding of the live postings — the same multiset of
+    SEGMENTS rows, payload bytes included, that the per-row decode and
+    the pandas encoder wrote. compact()'s term_stats df come from the
+    new base's metadata and must count the live postings."""
+    import os
+
+    import pyarrow.parquet as pq
+    full, head, tail = corpus_pdfs
+    path = str(tmp_path / "idx_ref")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    Maintainer(spark, path).append(
+        spark.createDataFrame(tail, schema=TRANSCRIPTS))
+    Maintainer(spark, path).delete(spark.createDataFrame(
+        [(i,) for i in range(3, 400, 41)], "doc_id long"))
+
+    live = _live_postings(path)
+    m = Maintainer(spark, path).compact_targeted()
+    patched = set(m["seg_excludes"]["segments/base"])
+    assert _segment_rows(os.path.join(path, m["segment_dirs"][-1])) == \
+        _reference_rows(live, m["avgdl"], patched)
+
+    h = head.sort_values(["conv_id", "turn_idx"])
+    Maintainer(spark, path).delete(spark.createDataFrame(
+        [(c, int(t)) for c, t in h.iloc[7:300:13][["conv_id", "turn_idx"]]
+         .values], "conv_id string, turn_idx int"))
+    live = _live_postings(path)
+    m = Maintainer(spark, path).compact()
+    assert _segment_rows(os.path.join(path, m["segment_dirs"][0])) == \
+        _reference_rows(live, m["avgdl"])
+    ts = pq.read_table(os.path.join(path, m["ts_base"])).to_pydict()
+    df = {}
+    for (term, _), ps in live.items():
+        df[term] = df.get(term, 0) + len(ps)
+    assert dict(zip(ts["term"], ts["df"])) == df

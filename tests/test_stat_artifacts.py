@@ -72,3 +72,32 @@ def test_stat_artifacts_local_empty_and_cap(tmp_path):
               [dict(term="x", shard=0, n=1, max_tf=1, min_dl=1, gmax=1.0)])
     assert stat_artifacts_local(LocalFS(), [str(seg)], ts, dd,
                                 cap_rows=0) is None  # cap -> fallback
+
+
+def _term_encodings(path):
+    import glob
+    [f] = glob.glob(path + "/*.parquet")
+    md = pq.ParquetFile(f).metadata
+    return set(md.row_group(0).column(0).encodings)
+
+
+def test_stat_artifacts_term_plain_only_when_unique(tmp_path):
+    """`term` is written PLAIN where every value is unique (term_stats
+    always; a directory with one shard per term) — a dictionary there
+    only adds bytes — and keeps its dictionary where terms repeat."""
+    rows = [dict(term=f"t{i:04d}", shard=s, n=1, max_tf=1, min_dl=3,
+                 gmax=0.5) for i in range(300) for s in (0, 1)]
+    cases = {"repeat": rows, "unique": rows[::2]}
+    enc = {}
+    for name, rs in cases.items():
+        seg = tmp_path / name
+        seg.mkdir()
+        _seg_file(str(seg / "a.parquet"), rs)
+        ts, dd = str(tmp_path / f"ts_{name}"), str(tmp_path / f"dir_{name}")
+        stat_artifacts_local(LocalFS(), [str(seg)], ts, dd)
+        enc[name] = (_term_encodings(ts), _term_encodings(dd))
+    dict_encs = {"RLE_DICTIONARY", "PLAIN_DICTIONARY"}
+    for name in cases:
+        assert not enc[name][0] & dict_encs, enc   # term_stats: PLAIN
+    assert not enc["unique"][1] & dict_encs, enc   # one shard per term
+    assert enc["repeat"][1] & dict_encs, enc       # terms repeat
