@@ -97,7 +97,7 @@ def _bit_length_np(m: np.ndarray) -> np.ndarray:
 def _pack_streams_buf(vals: np.ndarray, bw: np.ndarray, bn: np.ndarray,
                       bstart: np.ndarray):
     """Bit-pack every block of one value stream at its own width, in one
-    vectorized pass per DISTINCT width (mirror of unpack_rows'
+    vectorized pass per DISTINCT width (mirror of unpack_rows_view's
     batching). Returns (data, blen): one contiguous uint8 buffer holding
     every block's packed payload in block order, plus per-block byte
     lengths — ready to wrap as an Arrow BinaryArray with zero per-block
@@ -202,42 +202,27 @@ def encode_runs_arrow(doc_ids: np.ndarray, tfs: np.ndarray,
               "ids", "tfs", "dls"])
 
 
-def unpack_rows(bufs, widths: np.ndarray, ns: np.ndarray) -> np.ndarray:
-    """Decode a sequence of packed blocks into ONE concatenated int64
-    array, order preserved.
-
-    Word-gather decode: all buffers are joined once (C-speed), and each
-    width group's values are read as little-endian byte windows gathered
-    straight out of the joined buffer — (w+14)//8 fancy-gathers per
-    group, no unpackbits, no bit matrix, and no per-block calls at all.
-    The previous unpackbits-based path paid numpy's fixed cost once per
-    UNALIGNED block (any run-final partial block), which on real Zipf
-    runs (~2.4 blocks/run) was ~40% of all blocks — measured 2.6 of 10
-    CPU-s on an 800-query batch. Integer arithmetic throughout;
-    bit-identical to per-block unpack() (equivalence-suite pinned)."""
-    ns = ns.astype(np.int64, copy=False)
-    widths = widths.astype(np.int64, copy=False)
-    # per-block byte lengths are fixed by the format: ceil(n*w/8)
-    blen = (ns * widths + 7) >> 3
-    boff = np.cumsum(blen) - blen
-    data = np.frombuffer(
-        b"".join(bufs) + b"\0" * 8, dtype=np.uint8)
-    if len(data) != int(blen.sum()) + 8:
-        raise ValueError("packed payload length mismatch vs (n, width)")
-    return unpack_rows_view(data, boff, widths, ns, bufs)
-
-
 def unpack_rows_view(data: np.ndarray, boff: np.ndarray,
-                     widths: np.ndarray, ns: np.ndarray,
-                     bufs=None) -> np.ndarray:
-    """unpack_rows over an already-contiguous payload view: `data` is a
-    uint8 array holding every block's packed payload (block i at byte
-    offset boff[i], boff need not start at 0), padded with >= 8 zero
-    bytes past the last block. This is the zero-copy path for Arrow
-    BinaryArray columns — (values buffer, offsets) come straight from
-    the record batch, no per-block Python bytes objects exist. `bufs`
-    is only the fallback source for the (unreachable with this format)
-    w > 57 case."""
+                     widths: np.ndarray, ns: np.ndarray) -> np.ndarray:
+    """Decode a sequence of packed blocks into ONE concatenated int64
+    array, order preserved. `data` is a uint8 array holding every
+    block's packed payload (block i at byte offset boff[i], boff need
+    not start at 0), padded with >= 8 zero bytes past the last block —
+    for Arrow BinaryArray columns (values buffer, offsets) come straight
+    from the record batch (payload_view, _view_boff), so no per-block
+    Python bytes objects exist.
+
+    Word-gather decode: each width group's values are read as
+    little-endian byte windows gathered straight out of `data` —
+    (w+14)//8 fancy-gathers per group, no unpackbits, no bit matrix,
+    and no per-block calls at all. The unpackbits-based path it
+    replaced paid numpy's fixed cost once per UNALIGNED block (any
+    run-final partial block), which on real Zipf runs (~2.4
+    blocks/run) was ~40% of all blocks — measured 2.6 of 10 CPU-s on an
+    800-query batch. Integer arithmetic throughout; bit-identical to
+    per-block unpack() (equivalence-suite pinned). A width above 57 (a
+    value window no longer fits one uint64 word) is outside the format
+    and raises: widths are read from files."""
     ns = ns.astype(np.int64, copy=False)
     widths = widths.astype(np.int64, copy=False)
     boff = boff.astype(np.int64, copy=False)
@@ -253,13 +238,8 @@ def unpack_rows_view(data: np.ndarray, boff: np.ndarray,
             for i in sel:
                 out[starts[i]:ends[i]] = 0
             continue
-        if w > 57:  # not reachable with this format's value ranges
-            for i in sel:
-                blen_i = (int(ns[i]) * w + 7) >> 3
-                buf = bufs[i] if bufs is not None else \
-                    data[boff[i]:boff[i] + blen_i].tobytes()
-                out[starts[i]:ends[i]] = unpack(buf, w, int(ns[i]))
-            continue
+        if w > 57:
+            raise ValueError(f"bit width {w} is outside the segment format")
         tot = int(nv.sum())
         within = np.arange(tot, dtype=np.int64) \
             - np.repeat(np.cumsum(nv) - nv, nv)
@@ -273,27 +253,6 @@ def unpack_rows_view(data: np.ndarray, boff: np.ndarray,
         dst = np.repeat(starts[sel], nv) + within
         out[dst] = vals
     return out
-
-
-def decode_term_run(bufs_ids, bufs_tfs, bufs_dls, ids_bw, tfs_bw, dls_bw,
-                    ns, first_doc, last_doc):
-    """Decode one (term, shard) run of blocks (block_id order) into
-    (doc_ids, tfs, dls) concatenated across the blocks — the batched
-    equivalent of decode_block row-by-row, bit-identical output.
-
-    Per-block delta chains restart at each block's first_doc; after
-    concatenation the chain is stitched by patching each block's leading
-    delta (0 by construction) to first_doc[i] - last_doc[i-1], so ONE
-    cumsum reproduces every block's absolute ids."""
-    deltas = unpack_rows(bufs_ids, ids_bw, ns)
-    starts = np.cumsum(ns) - ns
-    patch = first_doc.astype(np.int64, copy=True)
-    patch[1:] -= last_doc[:-1]
-    deltas[starts] += patch
-    doc_ids = np.cumsum(deltas)
-    tfs = unpack_rows(bufs_tfs, tfs_bw, ns) + 1
-    dls = unpack_rows(bufs_dls, dls_bw, ns)
-    return doc_ids, tfs, dls
 
 
 def payload_view(arr):
@@ -333,10 +292,16 @@ def _view_boff(view, bw: np.ndarray, ns: np.ndarray) -> np.ndarray:
 def decode_term_run_views(ids_view, tfs_view, dls_view,
                           ids_bw, tfs_bw, dls_bw,
                           ns, first_doc, last_doc):
-    """decode_term_run over Arrow payload views: each *_view is a
-    (data uint8 padded, cell offsets int64[n+1]) pair straight from a
-    BinaryArray's (values, offsets) buffers — no Python bytes objects
-    anywhere. Same stitch, bit-identical output."""
+    """Decode a (term, first_doc)-sorted run of blocks into (doc_ids,
+    tfs, dls) concatenated across the blocks — decode_block row by row,
+    bit-identical output. Each *_view is a (data uint8 padded, cell
+    offsets int64[n+1]) pair straight from a BinaryArray's (values,
+    offsets) buffers — no Python bytes objects anywhere.
+
+    Per-block delta chains restart at each block's first_doc; after
+    concatenation the chain is stitched by patching each block's leading
+    delta (0 by construction) to first_doc[i] - last_doc[i-1], so ONE
+    cumsum reproduces every block's absolute ids."""
     deltas = unpack_rows_view(ids_view[0], _view_boff(ids_view, ids_bw, ns),
                               ids_bw, ns)
     ns = ns.astype(np.int64, copy=False)

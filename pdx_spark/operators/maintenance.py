@@ -258,7 +258,7 @@ class Maintainer:
         def _seg_dir_job():
             # delta segment: blocks store (tf, dl); pruning bounds are
             # recomputed from (max_tf, min_dl) at query time, so avgdl
-            # drift cannot over-prune (see searcher._shard_scorer).
+            # drift cannot over-prune (see searcher._arrow_scorer).
             # After the write, BOTH stat deltas (term_stats, directory)
             # derive from the delta segment's metadata columns — driver-
             # side via _stat_deltas_local on a local fs (zero Spark

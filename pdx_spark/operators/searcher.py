@@ -19,24 +19,29 @@ Mirrors the reference's pruned scan (PDXearch::Search,
      each shard to only its own queries (work = Σ_q |shards_q|, not
      |shards| × Q). Scans are SHUFFLE-FREE: segment files hold complete
      shards (the encode shuffle wrote them that way), so the scorer
-     runs as mapInPandas directly on the parquet scan with routing in
-     the closure (_partition_scorer; the cogroup channel remains for
-     predicate masks and routing above _ROUTING_CAP). When θ cannot
+     runs as mapInArrow directly on the parquet scan with routing and
+     small masks in the closure. One Arrow scoring body
+     (_arrow_scorer) serves every channel: the map scan, a per-shard
+     groupBy when files may hold several row groups, and the cogroup
+     channel for masks and routing above _ROUTING_CAP. When θ cannot
      prune (uniform corpora — every shard's bound beats θ), the
      planner detects it from the main-pair ratio and runs ONE unrouted
-     pass instead, discarding the seed results (their shards are
-     rescored; a union would duplicate rows). Inside a shard the
+     pass instead that skips each query's seed shards (anti-routing),
+     so the seed results are reused, never rescored. Inside a shard the
      scorer builds a per-doc upper-bound array from block metadata
      alone (range-add/cumsum), masks docs below θ, skips terms with no
      surviving candidate, decodes each term ONCE PER PARTITION (all of
-     the partition's shards in one batched unpack, sliced per shard by
-     searchsorted), and scores with one vectorized add per (query,
-     term) in float64 (numpy is our SIMD; scalar_computers.hpp:19-44's
-     role). Exactness: every term with a candidate is decoded fully,
-     so candidate scores are complete; pruned docs provably score < θ.
-  5. Global merge: per-partition per-query top-k -> window top-k per
-     query (Spark's TakeOrderedAndProject-equivalent, executor-side),
-     then a final Σk-row collect. Tie-break (score desc, doc_id asc).
+     the partition's shards in one batched unpack straight from the
+     Arrow payload buffers, sliced per shard by searchsorted), and
+     scores with one vectorized add per (query, term) in float64 (numpy
+     is our SIMD; scalar_computers.hpp:19-44's role). Exactness: every
+     term with a candidate is decoded fully, so candidate scores are
+     complete; pruned docs provably score < θ.
+  5. Global merge: per-partition per-query top-k, collected and merged
+     on the driver (bounded: n_segment_files x Σk rows). Above
+     _MERGE_LOCAL_CAP, or when the scan ran per shard, a window top-k
+     per query runs Spark-side instead. Tie-break (score desc, doc_id
+     asc).
 
 Queries run as a batch (one pass scores all queries of the batch —
 amortizes job overhead, SURVEY §7.4). A batch is a handful of bounded
@@ -49,18 +54,19 @@ block bytes through Arrow/numpy) — see BENCH.md's bandwidth ceiling.
 
 from __future__ import annotations
 
-import os
 import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pdx_spark import schemas
 from pdx_spark.config import SEED, BM25Params, IndexConfig
 from pdx_spark.fs import index_fs, verify_single_rowgroup
-from pdx_spark.functions.blocks import decode_term_run, payload_view
+from pdx_spark.functions.blocks import decode_term_run_views, payload_view
 from pdx_spark.functions.bm25 import idf_np, tfnorm_col, tfnorm_np
 from pdx_spark.functions.tokenize import tokenize_py
 from pdx_spark.operators.indexer import MANIFEST, read_manifest
@@ -85,12 +91,7 @@ _PLAN_SLICE_CAP = 2_000_000
 
 # max rows the driver-side global top-k merge may collect (bounded by
 # n_segment_files x Σk); above this the window merge runs Spark-side
-_MERGE_LOCAL_CAP = int(os.environ.get("PDX_MERGE_LOCAL_CAP", 4_000_000))
-
-# map-scan runs as mapInArrow (payloads decoded from Arrow buffers, no
-# per-cell Python bytes objects); "0" falls back to mapInPandas — the
-# A/B escape hatch, results identical either way
-_ARROW_SCAN = os.environ.get("PDX_ARROW_SCAN", "1") != "0"
+_MERGE_LOCAL_CAP = 4_000_000
 
 # adaptive-planner feedback: after this many consecutive unrouted
 # fallbacks (θ pruned nothing), skip the seed phase; re-probe two-phase
@@ -102,7 +103,7 @@ _BYPASS_REPROBE = 10
 _BYPASS_REPROBE_SECS = 300.0
 
 # cogroup side-channel row kinds (one aux frame carries both because
-# applyInPandas cogroups exactly two frames); aux rows are
+# cogroup pairs exactly two frames); aux rows are
 # (shard long, kind int, id long, p int)
 _KIND_MASK = 0   # (shard, kind=0, id=doc_id, p): selection-vector row
 _KIND_QUERY = 1  # (shard, kind=1, id=query_id): per-shard query routing
@@ -119,9 +120,7 @@ _KIND_QUERY = 1  # (shard, kind=1, id=query_id): per-shard query routing
 # 2 MiB, interleaved A/B), and a byte cap below parallelism is exactly
 # what breaks N->4N query scaling. At 100 TB the byte cap is never the
 # binding term — defaultParallelism is.
-_ROUTED_TASK_BYTES = int(os.environ.get("PDX_ROUTED_TASK_BYTES",
-                                        2 * 1024 * 1024))
-
+_ROUTED_TASK_BYTES = 2 * 1024 * 1024
 
 
 def _in_list(col: str, values) -> "F.Column":
@@ -219,142 +218,114 @@ def _term_shard_filter(term_shards: dict[str, set],
     return F.expr("(" + " OR ".join(parts) + ")")
 
 
-def _shard_scorer(payload: dict, has_aux: bool):
-    """Build the per-shard scoring function.
+def _results_table(q, d, s) -> pa.Table:
+    return pa.table({"query_id": pa.array(q, pa.int32()),
+                     "doc_id": pa.array(d, pa.int64()),
+                     "score": pa.array(s, pa.float64())})
 
-    payload: {queries: [(qid, [terms sorted], k, theta|None)],
-              idf: {term: float}, avgdl, k1, b, docs_per_shard,
-              assigned: bool, has_mask: bool}
-    has_aux: scorer receives a second cogrouped frame of
-             (shard, kind, id, p) rows — kind=0 mask rows (p=1
-             allowed-by-predicate, p=0 tombstoned/denied; the
-             selection-vector analog of
-             db_mock/predicate_evaluator.hpp:9-31), kind=1 query
-             routing rows (this shard scores only those query ids).
+
+def _topk_per_query(q: np.ndarray, d: np.ndarray, s: np.ndarray,
+                    kmap: dict):
+    """Sort (query, doc, score) rows by (query, score desc, doc asc) —
+    the exact window order of _global_topk — and keep each query's
+    first kmap[query] rows. The one top-k cut behind the per-partition
+    scorer output and the driver merge."""
+    if not len(q):
+        return q, d, s
+    order = np.lexsort((d, -s, q))
+    q, d, s = q[order], d[order], s[order]
+    keep = np.zeros(len(q), dtype=bool)
+    starts = np.concatenate(
+        [[0], np.nonzero(q[1:] != q[:-1])[0] + 1, [len(q)]])
+    for i in range(len(starts) - 1):
+        a, b = int(starts[i]), int(starts[i + 1])
+        keep[a:min(b, a + kmap.get(int(q[a]), 0))] = True
+    return q[keep], d[keep], s[keep]
+
+
+def _arrow_scorer(spec: dict):
+    """Build the one scoring body, score(tab, routing, anti, mask), over
+    a pa.Table of SEGMENTS rows -> pa.Table(query_id, doc_id, score):
+    the per-query top-k of the table's rows. Every scan channel calls
+    it through a thin adapter (_map_scorer, the groupBy("shard") lambda
+    in Searcher._map_scan, _cogroup_scorer); only how rows and routing
+    arrive differs.
+
+    spec: {queries: [(qid, [terms sorted], k, theta|None)],
+           idf: {term: float}, avgdl, k1, b, docs_per_shard,
+           require_all: bool, min_match: int}
+    routing: shard -> set(query_id) to score (None = every query scans
+             every shard).
+    anti: shard -> set(query_id) to SKIP — already scored in the seed
+          phase, so the unrouted fallback reuses seed results instead
+          of rescoring seed shards (bounded: <= seed_shards x Q pairs).
+    mask: {mode, ids sorted int64[], p int8[]} selection vector (the
+          analog of db_mock/predicate_evaluator.hpp:9-31): p=1 allowed
+          by the predicate, p=0 tombstoned/denied. mode is None (no
+          predicate), "allow" (mask rows are the passing docs, low
+          selectivity) or "deny" (mask rows are the failing docs, high
+          selectivity) — the F3 selectivity-adaptive branch.
     """
-    queries = payload["queries"]
-    idf = payload["idf"]
-    avgdl = payload["avgdl"]
-    params = BM25Params(k1=payload["k1"], b=payload["b"])
-    width = payload["docs_per_shard"]
-    assigned = payload["assigned"]
-    has_mask = payload["has_mask"]
-    # closure-carried small mask ({mode, ids sorted, p}) — the scan-fused
-    # selection vector; aux mask rows take precedence when both exist
-    cmask = payload.get("mask")
+    queries = spec["queries"]
+    idf = spec["idf"]
+    avgdl = spec["avgdl"]
+    params = BM25Params(k1=spec["k1"], b=spec["b"])
+    width = spec["docs_per_shard"]
     # match-count semantics: require_all (AND) demands every query
     # term; min_match m demands >= m distinct terms (OR is m=1). Exact
     # per shard (doc-range sharding keeps all of a doc's postings in
     # one shard); callers drop queries that cannot reach m upfront.
-    require_all = payload.get("require_all", False)
-    min_match = int(payload.get("min_match", 1))
+    require_all = spec["require_all"]
+    min_match = spec["min_match"]
     count_matches = require_all or min_match > 1
-    # predicate_mode: None (no predicate), "allow" (mask rows are the
-    # passing docs, low selectivity) or "deny" (mask rows are the failing
-    # docs, high selectivity) — the F3 selectivity-adaptive branch.
-    predicate_mode = payload.get("predicate_mode")
-    out_cols = ["query_id", "doc_id", "score"]
-    empty_out = pd.DataFrame({"query_id": pd.Series([], dtype="int32"),
-                              "doc_id": pd.Series([], dtype="int64"),
-                              "score": pd.Series([], dtype="float64")})
+    all_qids = {q for q, _, _, _ in queries}
+    kmap = {q: k for q, _, k, _ in queries}
 
-    def score_shard(seg_pdf: pd.DataFrame, aux_pdf: pd.DataFrame | None,
-                    assigned_override=None, part_lookup=None):
-        if len(seg_pdf) == 0:
-            return empty_out
-        shard = int(seg_pdf["shard"].iloc[0])
-        base = shard * width
+    def shard_allow(base: int, mask: dict | None):
+        """Doc-level allow/block vector for one shard, sliced out of the
+        sorted mask; None when nothing is masked."""
+        if mask is None:
+            return None
+        lo, hi = np.searchsorted(mask["ids"], [base, base + width])
+        ids, p = mask["ids"][lo:hi] - base, mask["p"][lo:hi]
+        if mask["mode"] == "allow":
+            allow = np.zeros(width, dtype=bool)
+            allow[ids[p == 1]] = True
+        elif len(ids):  # "deny" predicate and/or tombstones: all-pass base
+            allow = np.ones(width, dtype=bool)
+        else:
+            return None
+        allow[ids[p == 0]] = False
+        return allow
 
-        assigned_ids = assigned_override
-        mask_ids = mask_p = None
-        if aux_pdf is not None and len(aux_pdf):
-            kind = aux_pdf["kind"].to_numpy()
-            if assigned:
-                assigned_ids = set(
-                    aux_pdf["id"].to_numpy()[kind == _KIND_QUERY].tolist())
-            if has_mask:
-                msel = kind == _KIND_MASK
-                mask_ids = aux_pdf["id"].to_numpy(dtype=np.int64)[msel]
-                mask_p = aux_pdf["p"].to_numpy()[msel]
-        if assigned and not assigned_ids:
-            return empty_out  # no query routed to this shard
-        if has_mask and mask_ids is None and cmask is not None:
-            # slice this shard's window out of the sorted closure mask
-            lo = np.searchsorted(cmask["ids"], base)
-            hi = np.searchsorted(cmask["ids"], base + width)
-            mask_ids = cmask["ids"][lo:hi]
-            mask_p = cmask["p"][lo:hi]
-
-        # doc-level allow/block mask for this shard (selection-vector analog)
-        allow = None
-        if has_mask and (predicate_mode == "allow"
-                         or (mask_ids is not None and len(mask_ids))):
-            if predicate_mode == "allow":
-                allow = np.zeros(width, dtype=bool)
-                if mask_ids is not None:
-                    allow[mask_ids[mask_p == 1] - base] = True
-            else:  # "deny" predicate and/or tombstones: baseline all-pass
-                allow = np.ones(width, dtype=bool)
-            if mask_ids is not None:
-                allow[mask_ids[mask_p == 0] - base] = False
-
-        # group block rows by term (term -> row indices, block_id order)
-        seg_pdf = seg_pdf.sort_values(["term", "block_id"], kind="mergesort")
-        terms_arr = seg_pdf["term"].to_numpy()
-        first = seg_pdf["first_doc"].to_numpy(dtype=np.int64) - base
-        last = seg_pdf["last_doc"].to_numpy(dtype=np.int64) - base
-        # avgdl-drift-safe per-block upper bound (monotone in tf up, dl
-        # down) — valid after appends shift avgdl, unlike stored gmax
-        gub = tfnorm_np(seg_pdf["max_tf"].to_numpy(dtype=np.int64),
-                        seg_pdf["min_dl"].to_numpy(dtype=np.int64),
-                        avgdl, params)
+    def score_shard(terms_arr, first, last, gub, base, qids, allow,
+                    part_lookup, out):
+        """Score one shard's rows ((term, first_doc)-sorted; first/last
+        base-relative) for the queries in qids (None = all), appending
+        each query's shard top-k to out = (q, d, s) lists."""
         change = np.nonzero(terms_arr[1:] != terms_arr[:-1])[0] + 1
         starts = np.concatenate([[0], change])
         ends = np.concatenate([change, [len(terms_arr)]])
         term_rows = {str(terms_arr[s]): (s, e) for s, e in zip(starts, ends)}
 
-        # per-TERM decode cache: (positions, g) concatenated across the
-        # term's blocks, decoded at most once for the whole query batch.
-        # Scoring is then ONE fancy-index add per (query, term) — the
-        # per-(query, term, block) Python loop was the CPU hot spot (and
-        # its memory churn was what broke N->4N scaling on shared hosts).
-        cols_box: list = [None]
+        # per-TERM decode cache: (positions, g) for this shard, sliced
+        # out of the partition-level decode at most once for the whole
+        # query batch. Scoring is then ONE fancy-index add per (query,
+        # term) — the per-(query, term, block) Python loop was the CPU
+        # hot spot (and its memory churn was what broke N->4N scaling on
+        # shared hosts).
         decoded_terms: dict[str, tuple] = {}
 
         def term_arrays(t: str):
             hit = decoded_terms.get(t)
             if hit is None:
-                if part_lookup is not None:
-                    # partition-level decode (one pass per term across
-                    # ALL the partition's shards) + slice: the term's
-                    # absolute ids are ascending, so this shard's run is
-                    # a contiguous [base, base+width) window
-                    ids_abs, g_all = part_lookup(t)
-                    lo = np.searchsorted(ids_abs, base)
-                    hi = np.searchsorted(ids_abs, base + width)
-                    hit = (ids_abs[lo:hi] - base, g_all[lo:hi])
-                else:
-                    if cols_box[0] is None:
-                        cols_box[0] = (
-                            seg_pdf["n"].to_numpy(np.int64),
-                            seg_pdf["ids_bw"].to_numpy(np.int64),
-                            seg_pdf["tfs_bw"].to_numpy(np.int64),
-                            seg_pdf["dls_bw"].to_numpy(np.int64),
-                            seg_pdf["ids"].to_numpy(),
-                            seg_pdf["tfs"].to_numpy(),
-                            seg_pdf["dls"].to_numpy())
-                    n_a, ibw, tbw, dbw, ib, tb, db = cols_box[0]
-                    s, e = term_rows[t]
-                    # first/last are already base-relative; the delta-
-                    # chain stitch only uses their differences plus the
-                    # leading absolute start, so the decoded ids come
-                    # out base-relative too (== pos) — bit-identical to
-                    # a per-block decode loop, one unpack pass per
-                    # (term, bit-width) instead of per block
-                    pos, tfs, dls = decode_term_run(
-                        ib[s:e], tb[s:e], db[s:e], ibw[s:e], tbw[s:e],
-                        dbw[s:e], n_a[s:e], first[s:e], last[s:e])
-                    hit = (pos, tfnorm_np(tfs, dls, avgdl, params))
+                # the term's absolute ids are ascending across the
+                # partition, so this shard's run is a contiguous
+                # [base, base+width) window
+                ids_abs, g_all = part_lookup(t)
+                lo = np.searchsorted(ids_abs, base)
+                hi = np.searchsorted(ids_abs, base + width)
+                hit = (ids_abs[lo:hi] - base, g_all[lo:hi])
                 decoded_terms[t] = hit
             return hit
 
@@ -362,9 +333,9 @@ def _shard_scorer(payload: dict, has_aux: bool):
         diff = np.zeros(width + 1, dtype=np.float64)  # reused ub builder
         nmatch = np.zeros(width, dtype=np.int32) if count_matches else None
 
-        out_q, out_d, out_s = [], [], []
+        out_q, out_d, out_s = out
         for qid, qterms, k, theta in queries:
-            if assigned_ids is not None and qid not in assigned_ids:
+            if qids is not None and qid not in qids:
                 continue
             present = [t for t in qterms if t in term_rows]
             if not present:
@@ -450,87 +421,64 @@ def _shard_scorer(payload: dict, has_aux: bool):
             out_d.append(top.astype(np.int64) + base)
             out_s.append(vals[order])
 
-        if not out_q:
-            return empty_out
-        return pd.DataFrame({
-            "query_id": pd.Series(np.concatenate(out_q), dtype="int32"),
-            "doc_id": pd.Series(np.concatenate(out_d), dtype="int64"),
-            "score": pd.Series(np.concatenate(out_s), dtype="float64")})
+    def score(tab: pa.Table, routing: dict | None = None,
+              anti: dict | None = None, mask: dict | None = None):
+        if tab.num_rows == 0:
+            return _results_table([], [], [])
+        # the (large, binary) payload columns never become Python bytes
+        # objects: the table is sorted in C++ and the scorer decodes
+        # straight from the BinaryArray buffers. Arrow string sort is
+        # byte-lexicographic == Python str order for these ASCII tokens;
+        # (term, first_doc) is unique per row, so the order is
+        # deterministic
+        tab = tab.take(pc.sort_indices(
+            tab, sort_keys=[("term", "ascending"),
+                            ("first_doc", "ascending")])).combine_chunks()
+        views = tuple(payload_view(tab.column(c).chunk(0))
+                      for c in ("ids", "tfs", "dls"))
 
-    if has_aux:
-        def fn(key, seg_pdf, aux_pdf):  # cogrouped variant
-            return score_shard(seg_pdf, aux_pdf)
-    else:
-        def fn(seg_pdf):
-            return score_shard(seg_pdf, None)
-    fn.score_shard = score_shard
-    return fn
+        def col(c):
+            return tab.column(c).to_numpy()
 
+        terms, shard = col("term"), col("shard").astype(np.int64)
+        first_doc, last_doc = col("first_doc"), col("last_doc")
+        # avgdl-drift-safe per-block upper bound (monotone in tf up, dl
+        # down) — valid after appends shift avgdl, unlike stored gmax
+        gub = tfnorm_np(col("max_tf").astype(np.int64),
+                        col("min_dl").astype(np.int64), avgdl, params)
 
-def _partition_scorer(payload: dict, arrow: bool = False):
-    """mapInPandas / mapInArrow body: score a SCAN partition directly —
-    no cogroup, no
-    shuffle of the (large, binary) segment frame. Query->shard routing
-    rides the closure (payload["routing"]: shard -> set(query_id), or
-    None = every query scans every shard).
-
-    Correctness under partition fragmentation: a document's postings for
-    all terms live in ONE segment generation (docs are immutable; appends
-    mint new ids) and one generation's (shard) rows live in one file (the
-    encode shuffle wrote them together), so any doc's full score is
-    computed within a single fragment. A shard split across fragments
-    (base + delta dirs) yields per-fragment top-k lists whose union is a
-    superset of the true shard top-k — exact after the global window
-    merge. Files must not be split mid-ROW-GROUP by the reader: segment
-    files hold exactly one row group (writer-verified, manifest
-    `seg_single_rg`), and Spark assigns a parquet row group to the one
-    byte-range split containing its midpoint — so even a file larger
-    than maxPartitionBytes yields one real fragment plus empty phantom
-    splits, never a torn shard. load() checks the flag."""
-    routing = payload.get("routing")
-    # anti_routing: shard -> set(query_id) to SKIP (already scored in the
-    # seed phase) — lets the unrouted fallback reuse seed results instead
-    # of rescoring seed shards (bounded: <= seed_shards x Q pairs)
-    anti = payload.get("anti_routing")
-    all_qids = {q for q, _, _, _ in payload["queries"]}
-    kmap = {q: k for q, _, k, _ in payload["queries"]}
-    base_fn = _shard_scorer(dict(payload, assigned=False), has_aux=False)
-    score_shard = base_fn.score_shard
-    avgdl_, params_ = payload["avgdl"], BM25Params(
-        k1=payload["k1"], b=payload["b"])
-
-    def _finish_lookup(terms_np, decoded, n_a):
-        """Shared tail of the partition-level decode cache: term index
-        over the (term, first_doc)-sorted rows + global value slices."""
-        chg = np.nonzero(terms_np[1:] != terms_np[:-1])[0] + 1
-        st = np.concatenate([[0], chg])
-        en = np.concatenate([chg, [len(terms_np)]])
-        ids_all, tfs_all, dls_all = decoded
-        vend = np.cumsum(n_a)
-        return ({str(terms_np[s]): (s, e) for s, e in zip(st, en)},
-                ids_all,
-                tfnorm_np(tfs_all, dls_all, avgdl_, params_),
-                vend - n_a, vend)
-
-    def _make_part_lookup(build_box):
-        """term -> (absolute doc ids, tfnorm g) for the whole partition,
-        decoded lazily ONCE for all terms. The delta-chain stitch is
-        exact ACROSS term runs (the cumsum through the end of any block
-        equals its last_doc, so the next run-leading block's patch
-        first_doc[i] - last_doc[i-1] lands it at its absolute
-        first_doc — the same int64 arithmetic per block as per-run
-        decode calls, bit-identical). Paying unpack_rows' fixed cost
-        3x per PARTITION instead of 3x per (term, partition) was
-        measured at 4.0 of 5.1 CPU-s on a 200-query batch."""
-        box: list = [None]
+        # term -> (absolute doc ids, tfnorm g) for the whole partition,
+        # decoded lazily ONCE for all terms. The delta-chain stitch is
+        # exact ACROSS term runs (the cumsum through the end of any block
+        # equals its last_doc, so the next run-leading block's patch
+        # first_doc[i] - last_doc[i-1] lands it at its absolute
+        # first_doc — the same int64 arithmetic per block as per-run
+        # decode calls, bit-identical). Paying the unpack's fixed cost
+        # 3x per PARTITION instead of 3x per (term, partition) was
+        # measured at 4.0 of 5.1 CPU-s on a 200-query batch.
+        box: list = []
         pcache: dict[str, tuple] = {}
+
+        def decode_all():
+            n_a = col("n").astype(np.int64)
+            ids_all, tfs_all, dls_all = decode_term_run_views(
+                *views, col("ids_bw").astype(np.int64),
+                col("tfs_bw").astype(np.int64),
+                col("dls_bw").astype(np.int64), n_a, first_doc, last_doc)
+            chg = np.nonzero(terms[1:] != terms[:-1])[0] + 1
+            st = np.concatenate([[0], chg])
+            en = np.concatenate([chg, [len(terms)]])
+            vend = np.cumsum(n_a)
+            return ({str(terms[s]): (s, e) for s, e in zip(st, en)},
+                    ids_all, tfnorm_np(tfs_all, dls_all, avgdl, params),
+                    vend - n_a, vend)
 
         def part_lookup(t: str):
             hit = pcache.get(t)
             if hit is None:
-                if box[0] is None:
-                    box[0] = build_box()
-                (tidx, ids_all, g_all, vstart, vend) = box[0]
+                if not box:
+                    box.append(decode_all())
+                tidx, ids_all, g_all, vstart, vend = box[0]
                 se = tidx.get(t)
                 if se is None:
                     hit = (np.empty(0, dtype=np.int64), np.empty(0))
@@ -541,121 +489,83 @@ def _partition_scorer(payload: dict, arrow: bool = False):
                 pcache[t] = hit
             return hit
 
-        return part_lookup
-
-    def _pandas_part_lookup(pdf):
-        def build_box():
-            ps = pdf.sort_values(["term", "first_doc"], kind="mergesort")
-            n_a = ps["n"].to_numpy(np.int64)
-            decoded = decode_term_run(
-                ps["ids"].to_numpy(), ps["tfs"].to_numpy(),
-                ps["dls"].to_numpy(),
-                ps["ids_bw"].to_numpy(np.int64),
-                ps["tfs_bw"].to_numpy(np.int64),
-                ps["dls_bw"].to_numpy(np.int64),
-                n_a,
-                ps["first_doc"].to_numpy(np.int64),
-                ps["last_doc"].to_numpy(np.int64))
-            return _finish_lookup(ps["term"].to_numpy(), decoded, n_a)
-        return _make_part_lookup(build_box)
-
-    def _views_part_lookup(mpdf, views):
-        """Arrow-mode lookup: mpdf is ALREADY (term, first_doc)-sorted
-        (the table was sorted before the payload views were taken, so
-        view cell order == mpdf row order) and payloads decode straight
-        from the BinaryArray buffers — no Python bytes objects."""
-        def build_box():
-            n_a = mpdf["n"].to_numpy(np.int64)
-            from pdx_spark.functions.blocks import decode_term_run_views
-            decoded = decode_term_run_views(
-                views[0], views[1], views[2],
-                mpdf["ids_bw"].to_numpy(np.int64),
-                mpdf["tfs_bw"].to_numpy(np.int64),
-                mpdf["dls_bw"].to_numpy(np.int64),
-                n_a,
-                mpdf["first_doc"].to_numpy(np.int64),
-                mpdf["last_doc"].to_numpy(np.int64))
-            return _finish_lookup(mpdf["term"].to_numpy(), decoded, n_a)
-        return _make_part_lookup(build_box)
-
-    def score_partition(pdf, part_lookup):
-        parts = []
-        for _, grp in pdf.groupby("shard", sort=False):
-            sh = int(grp["shard"].iloc[0])
+        out: tuple[list, list, list] = ([], [], [])
+        by_shard = np.argsort(shard, kind="stable")  # keeps row order
+        cuts = np.nonzero(np.diff(shard[by_shard]))[0] + 1
+        for rows in np.split(by_shard, cuts):
+            sh = int(shard[rows[0]])
+            qids = None
             if routing is not None:
                 qids = routing.get(sh)
                 if not qids:
                     continue
-                out = score_shard(grp, None, assigned_override=qids,
-                                  part_lookup=part_lookup)
             elif anti is not None and sh in anti:
                 qids = all_qids - anti[sh]
                 if not qids:
                     continue
-                out = score_shard(grp, None, assigned_override=qids,
-                                  part_lookup=part_lookup)
-            else:
-                out = score_shard(grp, None, part_lookup=part_lookup)
-            if len(out):
-                parts.append(out)
-        if not parts:
-            return None
+            base = sh * width
+            score_shard(terms[rows], first_doc[rows] - base,
+                        last_doc[rows] - base, gub[rows], base, qids,
+                        shard_allow(base, mask), part_lookup, out)
+        if not out[0]:
+            return _results_table([], [], [])
         # per-PARTITION top-k per query: cuts merge input from
         # (shards x Q x k) to (partitions x Q x k) rows — the downstream
         # merge (driver or window) then sorts thousands, not millions
-        allp = parts[0] if len(parts) == 1 else pd.concat(parts,
-                                                          ignore_index=True)
-        q = allp["query_id"].to_numpy()
-        d = allp["doc_id"].to_numpy()
-        sc = allp["score"].to_numpy()
-        order = np.lexsort((d, -sc, q))  # by query, score desc, doc asc
-        qs, ds, scs = q[order], d[order], sc[order]
-        keep = np.zeros(len(qs), dtype=bool)
-        starts = np.concatenate(
-            [[0], np.nonzero(qs[1:] != qs[:-1])[0] + 1, [len(qs)]])
-        for i in range(len(starts) - 1):
-            s, e = starts[i], starts[i + 1]
-            keep[s:min(e, s + kmap.get(int(qs[s]), 10))] = True
-        return pd.DataFrame({"query_id": pd.Series(qs[keep], dtype="int32"),
-                             "doc_id": pd.Series(ds[keep], dtype="int64"),
-                             "score": pd.Series(scs[keep], dtype="float64")})
+        return _results_table(*_topk_per_query(
+            *(np.concatenate(c) for c in out), kmap))
 
-    if not arrow:
-        def fn(batches):
-            pdfs = [p for p in batches if len(p)]
-            if not pdfs:
-                return
-            pdf = pdfs[0] if len(pdfs) == 1 \
-                else pd.concat(pdfs, ignore_index=True)
-            out = score_partition(pdf, _pandas_part_lookup(pdf))
-            if out is not None:
-                yield out
-        return fn
+    return score
+
+
+def _map_scorer(spec: dict, routing=None, anti=None, mask=None):
+    """mapInArrow adapter: score a SCAN partition directly — no shuffle
+    of the (large, binary) segment frame; routing, anti-routing and the
+    mask ride the closure.
+
+    Correctness under partition fragmentation: a document's postings for
+    all terms live in ONE segment generation (docs are immutable; appends
+    mint new ids) and one generation's (shard) rows live in one file (the
+    encode shuffle wrote them together), so any doc's full score is
+    computed within a single fragment. A shard split across fragments
+    (base + delta dirs) yields per-fragment top-k lists whose union is a
+    superset of the true shard top-k — exact after the global merge.
+    Files must not be split mid-ROW-GROUP by the reader: segment files
+    hold exactly one row group (writer-verified, manifest
+    `seg_single_rg`), and Spark assigns a parquet row group to the one
+    byte-range split containing its midpoint — so even a file larger
+    than maxPartitionBytes yields one real fragment plus empty phantom
+    splits, never a torn shard. load() checks the flag."""
+    score = _arrow_scorer(spec)
 
     def fn(batches):
-        """mapInArrow body: the (large, binary) payload columns never
-        become pandas bytes objects — the table is sorted in C++ and the
-        scorer decodes straight from the BinaryArray buffers; only the
-        slim metadata columns cross into pandas."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
         bl = [b for b in batches if b.num_rows]
-        if not bl:
-            return
-        tab = pa.Table.from_batches(bl)
-        # Arrow string sort is byte-lexicographic == Python str order
-        # for these ASCII tokens; (term, first_doc) is unique per row,
-        # so the order is deterministic
-        tab = tab.take(pc.sort_indices(
-            tab, sort_keys=[("term", "ascending"),
-                            ("first_doc", "ascending")])).combine_chunks()
-        views = tuple(payload_view(tab.column(c).chunk(0))
-                      for c in ("ids", "tfs", "dls"))
-        mpdf = tab.drop_columns(["ids", "tfs", "dls"]).to_pandas()
-        out = score_partition(mpdf, _views_part_lookup(mpdf, views))
-        if out is not None and len(out):
-            yield pa.RecordBatch.from_pandas(out, preserve_index=False)
+        if bl:
+            out = score(pa.Table.from_batches(bl), routing, anti, mask)
+            yield from out.to_batches()
+    return fn
 
+
+def _cogroup_scorer(spec: dict, mode: str | None, routed: bool):
+    """cogroup(aux.groupBy("shard")).applyInArrow adapter, for masks and
+    routing too large for the closure. One shard's aux rows
+    (shard, kind, id, p) become the closure form: kind=0 rows the mask
+    (`mode` is its predicate mode), kind=1 rows the shard's query
+    routing. With `routed`, a shard without kind=1 rows scores
+    nothing."""
+    score = _arrow_scorer(spec)
+
+    def fn(key, seg_tab, aux_tab):
+        sh = int(key[0].as_py())
+        kind = aux_tab.column("kind").to_numpy()
+        ids = aux_tab.column("id").to_numpy().astype(np.int64)
+        p = aux_tab.column("p").to_numpy().astype(np.int8)
+        routing = {sh: set(ids[kind == _KIND_QUERY].tolist())} \
+            if routed else None
+        m = kind == _KIND_MASK
+        order = np.argsort(ids[m], kind="stable")
+        mask = {"mode": mode, "ids": ids[m][order], "p": p[m][order]}
+        return score(seg_tab, routing, None, mask)
     return fn
 
 
@@ -804,9 +714,9 @@ class Searcher:
         Returns True only when the invariant is PROVEN — via the manifest
         flag writers record after verifying their own output, or by
         re-reading footers here (pyarrow locally, parquet-hadoop on any
-        other scheme). A violating file returns False and search falls
-        back to the cogroup scan, which groups by shard explicitly and
-        is exact under any file layout."""
+        other scheme). A violating file returns False and the closure
+        scorer runs under groupBy("shard") instead of on the scan
+        partitions, which is exact under any file layout."""
         if self.manifest.get("seg_single_rg") is True:
             return True
         return all(
@@ -980,8 +890,7 @@ class Searcher:
         # min_should_match generalizes both: OR is m=1, AND is m=n. m
         # counts matched distinct query terms; a query whose
         # corpus-present term count falls below m can match nothing.
-        self._require_all = bool(require_all_terms)
-        self._min_match = max(int(min_should_match), 1)
+        min_match = max(int(min_should_match), 1)
         if require_all_terms:
             live = [(q, ts, k) for q, ts, k in parsed
                     if all(t in idf for t in ts)]
@@ -989,22 +898,29 @@ class Searcher:
             live = [(q, [t for t in ts if t in idf], k)
                     for q, ts, k in parsed]
         live = [(q, ts, k) for q, ts, k in live
-                if len(ts) >= self._min_match and ts]
+                if len(ts) >= min_match and ts]
         if not live:
             self.last_plan = {"mode": "empty"}  # every term OOV/dead
             return empty
         all_terms = sorted({t for _, ts, _ in live for t in ts})
+        # per-batch scoring options travel in the scan spec, never on the
+        # (possibly shared) Searcher
+        spec = {"idf": idf, "avgdl": self.avgdl, "k1": self.params.k1,
+                "b": self.params.b,
+                "docs_per_shard": self.cfg.docs_per_shard,
+                "require_all": bool(require_all_terms),
+                "min_match": min_match}
 
         seg = self.segments().filter(_in_list("term", all_terms))
         mask_df, pred_mode = self._mask_df(predicate)
         closure_mask = None
-        if mask_df is not None and self._map_scan_ok:
+        if mask_df is not None:
             closure_mask = self._collect_small_mask(mask_df, pred_mode)
             if closure_mask is not None:
                 # small mask rides the scorer closure: every branch below
-                # keeps the shuffle-free map scan + driver planning, the
-                # plans a filtered batch used to forfeit (cogroup +
-                # groupBy-shuffle of the term-filtered segment rows)
+                # keeps the closure scan + driver planning, the plans a
+                # filtered batch used to forfeit (cogroup + groupBy-
+                # shuffle of the term-filtered segment rows)
                 mask_df = None
 
         n_shards_total = -(-self.n_docs // self.cfg.docs_per_shard)
@@ -1040,286 +956,304 @@ class Searcher:
                               "big_batch": big_batch,
                               "unrouted_bypass": bypass,
                               "mask_in_closure": closure_mask is not None}
-            qspec = [(q, ts, k, None) for q, ts, k in live]
+            qspec = dict(spec, queries=[(q, ts, k, None)
+                                        for q, ts, k in live])
             if mask_df is None:
-                res = self._map_scan(seg, qspec, idf, mask=closure_mask)
-                if self._map_scan_ok and self._merge_bound_ok(live):
+                res = self._map_scan(seg, qspec, mask=closure_mask)
+                if self._merge_bound_ok(live):
                     # per-partition top-k collected and merged on the
                     # driver: one stage, no exchange/window, free count
                     return self._merge_topk_local(res, live)
             else:
-                res = self._scan(seg, qspec, idf, mask_df, pred_mode)
+                res = self._scan(seg, qspec, mask_df, pred_mode)
             return self._global_topk(res, live)
 
-        # ---- plan (S2/S3 analog): per-(query, shard) upper bounds from
-        # the directory slice of the query terms. DRIVER-PLANNED on local
-        # indexes (pyarrow slice + numpy — the directory is metadata, the
-        # reference ranks it in-process, searcher.hpp:181-215; saves two
-        # Spark jobs of serial latency per batch); DISTRIBUTED (ub_df)
-        # on remote indexes, oversized slices, or masked batches.
-        _t0 = time.time()
-        ub_df = q_ub = None
-        plan_terms = self._plan_slice(all_terms) if mask_df is None else None
-        if plan_terms is not None:
-            q_ub = {}
-            potential = 0
-            for q, ts, _k in live:
-                shs, contribs = [], []
-                feas = None  # AND: shards where EVERY term has postings
-                for t in ts:
-                    sh_t, g_t = plan_terms[t]
-                    if require_all_terms:
-                        feas = sh_t if feas is None else np.intersect1d(
-                            feas, sh_t, assume_unique=True)
-                    if len(sh_t):
-                        shs.append(sh_t)
-                        contribs.append(idf[t] * g_t)
-                if not shs:
-                    continue
-                sh = np.concatenate(shs)
-                contrib = np.concatenate(contribs)
-                ush, inv = np.unique(sh, return_inverse=True)
-                ub = np.zeros(len(ush))
-                np.add.at(ub, inv, contrib)
-                if require_all_terms:
-                    # conjunctive routing: only the intersection can
-                    # match all terms — the textbook AND shard prune
-                    # (the scorer's per-shard gate makes this a pure
-                    # work-saver, never a correctness dependency)
-                    keep = np.isin(ush, feas, assume_unique=True)
-                    ush, ub = ush[keep], ub[keep]
-                    if not len(ush):
-                        continue
-                q_ub[int(q)] = (ush, ub)
-                potential += len(ush)
-            if potential > _ROUTING_CAP:
-                q_ub = None  # routing would not fit the driver anyway
-
-        if q_ub is not None:
-            seed_set = set()
-            for q, (ush, ub) in q_ub.items():
-                order = np.lexsort((ush, -ub))[:seed_shards]
-                seed_set.update((q, int(ush[i])) for i in order)
-            tm["plan_ub"] = round(time.time() - _t0, 3)
-        else:
-            qt_rows = [(int(q), t, float(idf[t]))
-                       for q, ts, _ in live for t in ts]
-            qterms = _pdf_df(self.spark, {
-                "query_id": pd.Series([r[0] for r in qt_rows], dtype="int32"),
-                "term": pd.Series([r[1] for r in qt_rows], dtype=object),
-                "idf": pd.Series([r[2] for r in qt_rows], dtype="float64")},
-                "query_id int, term string, idf double")
-            if self._dir_df is None:
-                bounds = self.directory().select(
-                    "term", "shard", "max_tf", "min_dl")
-                if self.manifest.get("dir_deltas"):
-                    # base + append-delta rows can repeat a (term, shard)
-                    # key; collapse to one admissible bound so ub isn't
-                    # inflated. (Delta-free indexes skip this shuffle.)
-                    bounds = (bounds.groupBy("term", "shard")
-                              .agg(F.max("max_tf").alias("max_tf"),
-                                   F.min("min_dl").alias("min_dl")))
-                # warm-Searcher cache: later batches plan against the
-                # executor-cached (deduped, dequantized) directory instead
-                # of re-reading + re-merging parquet per batch
-                self._dir_df = bounds.persist()
-            bounds = self._dir_df.filter(_in_list("term", all_terms))
-            ub_df = (bounds
-                     .join(F.broadcast(qterms), "term")
-                     .withColumn("contrib", F.col("idf") * tfnorm_col(
-                         F.col("max_tf"), F.col("min_dl"),
-                         F.lit(float(self.avgdl)), self.params))
-                     .groupBy("query_id", "shard")
-                     .agg(F.sum("contrib").alias("ub"))
-                     .filter(F.col("ub") > 0)
-                     .persist())
-
-            # seed selection distributed: each query's most promising
-            # shards; only the tiny (<= seed_shards x Q) pair set is
-            # collected.
-            wseed = Window.partitionBy("query_id").orderBy(F.desc("ub"),
-                                                           F.asc("shard"))
-            seed_pairs = (ub_df.withColumn("_rn", F.row_number().over(wseed))
-                          .filter(F.col("_rn") <= seed_shards)
-                          .select("query_id", "shard").collect())
-            tm["plan_ub"] = round(time.time() - _t0, 3)
-            seed_set = {(int(r["query_id"]), int(r["shard"]))
-                        for r in seed_pairs}
-        seed_routing: dict[int, set] = {}
-        for q, sh in seed_set:
-            seed_routing.setdefault(sh, set()).add(q)
-        _seed_ts: dict[str, set] = {}
-        _qterms = {q: ts for q, ts, _ in live}
-        for q, sh in seed_set:
-            for t in _qterms[q]:
-                _seed_ts.setdefault(t, set()).add(sh)
-        _seed_expr = _term_shard_filter(_seed_ts, seed_routing)
-        seed_seg = seg.filter(_seed_expr) if _seed_expr is not None \
-            else seg.filter(_shard_filter(seed_routing))
-        qspec0 = [(q, ts, k, None) for q, ts, k in live]
-        if mask_df is None:
-            seed_res = self._map_scan(seed_seg, qspec0, idf,
-                                      routing=seed_routing,
-                                      mask=closure_mask)
-        else:
-            seed_asg = self.spark.createDataFrame(
-                sorted(seed_set), "query_id int, shard long")
-            seed_res = self._scan(seed_seg, qspec0, idf, mask_df, pred_mode,
-                                  asg_df=seed_asg)
-
-        # ---- seed top-k + θ in ONE job: collect the per-query top-k over
-        # the seed shards (bounded: <= Σk rows). θ (the k-th seed score,
-        # searcher.hpp:82-91's threshold role) falls out driver-side, and
-        # the rows themselves are REUSED as the seed contribution to the
-        # final merge — the seed scan is never thrown away or re-run.
-        _t0 = time.time()
-        if mask_df is None and self._map_scan_ok \
-                and self._merge_bound_ok(live):
-            # bounded per-partition top-k -> one collect stage, driver
-            # merge (no exchange/window job in the seed phase)
-            seed_pdf = self._topk_merge_pdf([seed_res.toPandas()], live)
-        else:
-            seed_pdf = self._global_topk(seed_res, live).toPandas()
-        tm["seed_scan"] = round(time.time() - _t0, 3)
-        seed_rows = list(zip(seed_pdf["query_id"].astype(int),
-                             seed_pdf["doc_id"].astype(int),
-                             seed_pdf["score"].astype(float)))
-        n_seed_hits: dict[int, int] = {}
-        worst: dict[int, float] = {}
-        for q, _, s in seed_rows:
-            n_seed_hits[q] = n_seed_hits.get(q, 0) + 1
-            worst[q] = min(worst.get(q, s), s)
-        theta = {q: worst[q] for q, _, k in live
-                 if n_seed_hits.get(q, 0) >= k}
-        seed_df = _pdf_df(self.spark, {
-            "query_id": pd.Series([r[0] for r in seed_rows], dtype="int32"),
-            "doc_id": pd.Series([r[1] for r in seed_rows], dtype="int64"),
-            "score": pd.Series([r[2] for r in seed_rows], dtype="float64")},
-            schemas.RESULTS)
-
-        # ---- main scan over (query, shard) pairs that can still beat θ.
-        # Driver-planned: the survivor set falls out of the in-memory ub
-        # vectors (zero Spark jobs). Distributed: ONE bounded collect
-        # (limit CAP+1) both sizes the survivor set and fetches the
-        # routing when it is small. At most CAP+1 rows ever reach the
-        # driver; if the limit is hit, routing goes through the cogroup
-        # channel (or the unrouted pass) instead.
-        main_asg = None
-        if q_ub is not None:
-            pairs = []
-            for q, (ush, ub) in q_ub.items():
-                th = theta.get(q)
-                keep = ush if th is None else \
-                    ush[ub >= th - _THETA_GUARD * abs(th)]
-                pairs.extend((q, int(x)) for x in keep)
-            n_main = len(pairs)
-            tm["routing_peek"] = 0.0
-        else:
-            theta_df = _pdf_df(self.spark, {
-                "query_id": pd.Series([q for q in theta], dtype="int32"),
-                "theta": pd.Series([theta[q] for q in theta],
-                                   dtype="float64")},
-                "query_id int, theta double")
-            main_asg = (ub_df.join(F.broadcast(theta_df), "query_id", "left")
-                        .filter(F.col("theta").isNull()
-                                | (F.col("ub") >= F.col("theta")
-                                   - F.lit(_THETA_GUARD)
-                                   * F.abs(F.col("theta"))))
-                        .select("query_id", "shard")).persist()
+        # ub_df / main_asg are cached per batch and released on every
+        # path, exceptions included
+        ub_df = main_asg = None
+        try:
+            # ---- plan (S2/S3 analog): per-(query, shard) upper bounds
+            # from the directory slice of the query terms. DRIVER-PLANNED
+            # on local indexes (pyarrow slice + numpy — the directory is
+            # metadata, the reference ranks it in-process,
+            # searcher.hpp:181-215; saves two Spark jobs of serial
+            # latency per batch); DISTRIBUTED (ub_df) on remote indexes,
+            # oversized slices, or masked batches.
             _t0 = time.time()
-            peek = main_asg.limit(_ROUTING_CAP + 1).collect()
-            tm["routing_peek"] = round(time.time() - _t0, 3)
-            n_main = len(peek)  # == true count unless the limit was hit
-            if n_main <= _ROUTING_CAP:
-                pairs = [(int(r["query_id"]), int(r["shard"]))
-                         for r in peek]
-        qspec1 = [(q, ts, k, theta.get(q)) for q, ts, k in live]
-
-        if mask_df is None and n_main > 0.5 * len(live) * n_shards_total:
-            # Pruning is ineffective (uniform shards: bounds beat θ almost
-            # everywhere) — per-pair routing would ship ~Q x shards pairs
-            # to save nothing. Run ONE unrouted pass with per-query θ
-            # (classic WAND with a warmed heap), SKIPPING the seed pairs
-            # in the scorer (anti-routing, <= seed_shards x Q entries in
-            # the closure): the collected seed top-k supplies those
-            # shards' contribution, so no (query, doc) is scored twice
-            # and the seed work is reused, not discarded.
-            self.last_plan = {"mode": "unrouted", "n_main": n_main,
-                              "n_shards": n_shards_total,
-                              "n_queries": len(live),
-                              "mask_in_closure": closure_mask is not None}
-            self._unrouted_streak += 1
-            self._unrouted_min_live = min(
-                self._unrouted_min_live or (1 << 30), len(live))
-            res = self._map_scan(seg, qspec1, idf, anti_routing=seed_routing,
-                                 mask=closure_mask)
-            if self._map_scan_ok and self._merge_bound_ok(live):
-                out = self._merge_topk_local(res, live, extra_pdf=seed_pdf)
-            else:
-                out = self._global_topk(seed_df.unionByName(res), live)
-        elif mask_df is None and n_main <= _ROUTING_CAP:
-            routing: dict[int, set] = {}
-            for q, sh in pairs:
-                if (q, sh) not in seed_set:  # seed shards already scored
-                    routing.setdefault(sh, set()).add(q)
-            self.last_plan = {"mode": "routed", "n_main": n_main,
-                              "n_main_shards": len(routing),
-                              "n_shards": n_shards_total,
-                              "n_queries": len(live),
-                              "mask_in_closure": closure_mask is not None}
-            self._unrouted_streak = 0
-            self._unrouted_min_live = None
-            if routing:
-                qterms_of = {q: ts for q, ts, _ in live}
-                term_shards: dict[str, set] = {}
-                for q, sh in pairs:
-                    if (q, sh) in seed_set:
+            q_ub = None
+            plan_terms = self._plan_slice(all_terms) \
+                if mask_df is None else None
+            if plan_terms is not None:
+                q_ub = {}
+                potential = 0
+                for q, ts, _k in live:
+                    shs, contribs = [], []
+                    feas = None  # AND: shards where EVERY term has postings
+                    for t in ts:
+                        sh_t, g_t = plan_terms[t]
+                        if require_all_terms:
+                            feas = sh_t if feas is None else \
+                                np.intersect1d(feas, sh_t, assume_unique=True)
+                        if len(sh_t):
+                            shs.append(sh_t)
+                            contribs.append(idf[t] * g_t)
+                    if not shs:
                         continue
-                    for t in qterms_of[q]:
-                        term_shards.setdefault(t, set()).add(sh)
-                tf_expr = _term_shard_filter(term_shards, routing)
-                main_seg = seg.filter(tf_expr) if tf_expr is not None \
-                    else seg.filter(_shard_filter(routing))
-                main_res = self._map_scan(main_seg, qspec1, idf,
-                                          routing=routing,
+                    sh = np.concatenate(shs)
+                    contrib = np.concatenate(contribs)
+                    ush, inv = np.unique(sh, return_inverse=True)
+                    ub = np.zeros(len(ush))
+                    np.add.at(ub, inv, contrib)
+                    if require_all_terms:
+                        # conjunctive routing: only the intersection can
+                        # match all terms — the textbook AND shard prune
+                        # (the scorer's per-shard gate makes this a pure
+                        # work-saver, never a correctness dependency)
+                        keep = np.isin(ush, feas, assume_unique=True)
+                        ush, ub = ush[keep], ub[keep]
+                        if not len(ush):
+                            continue
+                    q_ub[int(q)] = (ush, ub)
+                    potential += len(ush)
+                if potential > _ROUTING_CAP:
+                    q_ub = None  # routing would not fit the driver anyway
+
+            if q_ub is not None:
+                seed_set = set()
+                for q, (ush, ub) in q_ub.items():
+                    order = np.lexsort((ush, -ub))[:seed_shards]
+                    seed_set.update((q, int(ush[i])) for i in order)
+                tm["plan_ub"] = round(time.time() - _t0, 3)
+            else:
+                qt_rows = [(int(q), t, float(idf[t]))
+                           for q, ts, _ in live for t in ts]
+                qterms = _pdf_df(self.spark, {
+                    "query_id": pd.Series([r[0] for r in qt_rows],
+                                          dtype="int32"),
+                    "term": pd.Series([r[1] for r in qt_rows], dtype=object),
+                    "idf": pd.Series([r[2] for r in qt_rows],
+                                     dtype="float64")},
+                    "query_id int, term string, idf double")
+                if self._dir_df is None:
+                    bounds = self.directory().select(
+                        "term", "shard", "max_tf", "min_dl")
+                    if self.manifest.get("dir_deltas"):
+                        # base + append-delta rows can repeat a (term,
+                        # shard) key; collapse to one admissible bound so
+                        # ub isn't inflated. (Delta-free indexes skip this
+                        # shuffle.)
+                        bounds = (bounds.groupBy("term", "shard")
+                                  .agg(F.max("max_tf").alias("max_tf"),
+                                       F.min("min_dl").alias("min_dl")))
+                    # warm-Searcher cache: later batches plan against the
+                    # executor-cached (deduped, dequantized) directory
+                    # instead of re-reading + re-merging parquet per batch
+                    self._dir_df = bounds.persist()
+                bounds = self._dir_df.filter(_in_list("term", all_terms))
+                ub_df = (bounds
+                         .join(F.broadcast(qterms), "term")
+                         .withColumn("contrib", F.col("idf") * tfnorm_col(
+                             F.col("max_tf"), F.col("min_dl"),
+                             F.lit(float(self.avgdl)), self.params))
+                         .groupBy("query_id", "shard")
+                         .agg(F.sum("contrib").alias("ub"))
+                         .filter(F.col("ub") > 0)
+                         .persist())
+
+                # seed selection distributed: each query's most promising
+                # shards; only the tiny (<= seed_shards x Q) pair set is
+                # collected.
+                wseed = Window.partitionBy("query_id").orderBy(
+                    F.desc("ub"), F.asc("shard"))
+                seed_pairs = (ub_df
+                              .withColumn("_rn", F.row_number().over(wseed))
+                              .filter(F.col("_rn") <= seed_shards)
+                              .select("query_id", "shard").collect())
+                tm["plan_ub"] = round(time.time() - _t0, 3)
+                seed_set = {(int(r["query_id"]), int(r["shard"]))
+                            for r in seed_pairs}
+            seed_routing: dict[int, set] = {}
+            for q, sh in seed_set:
+                seed_routing.setdefault(sh, set()).add(q)
+            _seed_ts: dict[str, set] = {}
+            _qterms = {q: ts for q, ts, _ in live}
+            for q, sh in seed_set:
+                for t in _qterms[q]:
+                    _seed_ts.setdefault(t, set()).add(sh)
+            _seed_expr = _term_shard_filter(_seed_ts, seed_routing)
+            seed_seg = seg.filter(_seed_expr) if _seed_expr is not None \
+                else seg.filter(_shard_filter(seed_routing))
+            qspec0 = dict(spec, queries=[(q, ts, k, None)
+                                         for q, ts, k in live])
+            if mask_df is None:
+                seed_res = self._map_scan(seed_seg, qspec0,
+                                          routing=seed_routing,
                                           mask=closure_mask)
-                if self._map_scan_ok and self._merge_bound_ok(live):
-                    out = self._merge_topk_local(main_res, live,
+            else:
+                seed_asg = self.spark.createDataFrame(
+                    sorted(seed_set), "query_id int, shard long")
+                seed_res = self._scan(seed_seg, qspec0, mask_df, pred_mode,
+                                      asg_df=seed_asg)
+
+            # ---- seed top-k + θ in ONE job: collect the per-query top-k
+            # over the seed shards (bounded: <= Σk rows). θ (the k-th seed
+            # score, searcher.hpp:82-91's threshold role) falls out
+            # driver-side, and the rows themselves are REUSED as the seed
+            # contribution to the final merge — the seed scan is never
+            # thrown away or re-run.
+            _t0 = time.time()
+            if mask_df is None and self._merge_bound_ok(live):
+                # bounded per-partition top-k -> one collect stage, driver
+                # merge (no exchange/window job in the seed phase)
+                seed_pdf = self._topk_merge_pdf([seed_res.toPandas()], live)
+            else:
+                seed_pdf = self._global_topk(seed_res, live).toPandas()
+            tm["seed_scan"] = round(time.time() - _t0, 3)
+            seed_rows = list(zip(seed_pdf["query_id"].astype(int),
+                                 seed_pdf["doc_id"].astype(int),
+                                 seed_pdf["score"].astype(float)))
+            n_seed_hits: dict[int, int] = {}
+            worst: dict[int, float] = {}
+            for q, _, s in seed_rows:
+                n_seed_hits[q] = n_seed_hits.get(q, 0) + 1
+                worst[q] = min(worst.get(q, s), s)
+            theta = {q: worst[q] for q, _, k in live
+                     if n_seed_hits.get(q, 0) >= k}
+            seed_df = _pdf_df(self.spark, {
+                "query_id": pd.Series([r[0] for r in seed_rows],
+                                      dtype="int32"),
+                "doc_id": pd.Series([r[1] for r in seed_rows],
+                                    dtype="int64"),
+                "score": pd.Series([r[2] for r in seed_rows],
+                                   dtype="float64")},
+                schemas.RESULTS)
+
+            # ---- main scan over (query, shard) pairs that can still beat
+            # θ. Driver-planned: the survivor set falls out of the
+            # in-memory ub vectors (zero Spark jobs). Distributed: ONE
+            # bounded collect (limit CAP+1) both sizes the survivor set and
+            # fetches the routing when it is small. At most CAP+1 rows ever
+            # reach the driver; if the limit is hit, routing goes through
+            # the cogroup channel (or the unrouted pass) instead.
+            if q_ub is not None:
+                pairs = []
+                for q, (ush, ub) in q_ub.items():
+                    th = theta.get(q)
+                    keep = ush if th is None else \
+                        ush[ub >= th - _THETA_GUARD * abs(th)]
+                    pairs.extend((q, int(x)) for x in keep)
+                n_main = len(pairs)
+                tm["routing_peek"] = 0.0
+            else:
+                theta_df = _pdf_df(self.spark, {
+                    "query_id": pd.Series([q for q in theta], dtype="int32"),
+                    "theta": pd.Series([theta[q] for q in theta],
+                                       dtype="float64")},
+                    "query_id int, theta double")
+                main_asg = (ub_df
+                            .join(F.broadcast(theta_df), "query_id", "left")
+                            .filter(F.col("theta").isNull()
+                                    | (F.col("ub") >= F.col("theta")
+                                       - F.lit(_THETA_GUARD)
+                                       * F.abs(F.col("theta"))))
+                            .select("query_id", "shard")).persist()
+                _t0 = time.time()
+                peek = main_asg.limit(_ROUTING_CAP + 1).collect()
+                tm["routing_peek"] = round(time.time() - _t0, 3)
+                n_main = len(peek)  # == true count unless the limit was hit
+                if n_main <= _ROUTING_CAP:
+                    pairs = [(int(r["query_id"]), int(r["shard"]))
+                             for r in peek]
+            qspec1 = dict(spec, queries=[(q, ts, k, theta.get(q))
+                                         for q, ts, k in live])
+
+            if mask_df is None and n_main > 0.5 * len(live) * n_shards_total:
+                # Pruning is ineffective (uniform shards: bounds beat θ
+                # almost everywhere) — per-pair routing would ship ~Q x
+                # shards pairs to save nothing. Run ONE unrouted pass with
+                # per-query θ (classic WAND with a warmed heap), SKIPPING
+                # the seed pairs in the scorer (anti-routing, <= seed_shards
+                # x Q entries in the closure): the collected seed top-k
+                # supplies those shards' contribution, so no (query, doc)
+                # is scored twice and the seed work is reused, not
+                # discarded.
+                self.last_plan = {"mode": "unrouted", "n_main": n_main,
+                                  "n_shards": n_shards_total,
+                                  "n_queries": len(live),
+                                  "mask_in_closure": closure_mask is not None}
+                self._unrouted_streak += 1
+                self._unrouted_min_live = min(
+                    self._unrouted_min_live or (1 << 30), len(live))
+                res = self._map_scan(seg, qspec1, anti_routing=seed_routing,
+                                     mask=closure_mask)
+                if self._merge_bound_ok(live):
+                    out = self._merge_topk_local(res, live,
                                                  extra_pdf=seed_pdf)
                 else:
-                    out = self._global_topk(
-                        seed_df.unionByName(main_res), live)
+                    out = self._global_topk(seed_df.unionByName(res), live)
+            elif mask_df is None and n_main <= _ROUTING_CAP:
+                routing: dict[int, set] = {}
+                for q, sh in pairs:
+                    if (q, sh) not in seed_set:  # seed shards already scored
+                        routing.setdefault(sh, set()).add(q)
+                self.last_plan = {"mode": "routed", "n_main": n_main,
+                                  "n_main_shards": len(routing),
+                                  "n_shards": n_shards_total,
+                                  "n_queries": len(live),
+                                  "mask_in_closure": closure_mask is not None}
+                self._unrouted_streak = 0
+                self._unrouted_min_live = None
+                if routing:
+                    qterms_of = {q: ts for q, ts, _ in live}
+                    term_shards: dict[str, set] = {}
+                    for q, sh in pairs:
+                        if (q, sh) in seed_set:
+                            continue
+                        for t in qterms_of[q]:
+                            term_shards.setdefault(t, set()).add(sh)
+                    tf_expr = _term_shard_filter(term_shards, routing)
+                    main_seg = seg.filter(tf_expr) if tf_expr is not None \
+                        else seg.filter(_shard_filter(routing))
+                    main_res = self._map_scan(main_seg, qspec1,
+                                              routing=routing,
+                                              mask=closure_mask)
+                    if self._merge_bound_ok(live):
+                        out = self._merge_topk_local(main_res, live,
+                                                     extra_pdf=seed_pdf)
+                    else:
+                        out = self._global_topk(
+                            seed_df.unionByName(main_res), live)
+                else:
+                    # every surviving pair was a seed pair: the collected
+                    # seed top-k IS the answer — zero further jobs
+                    out = seed_df
             else:
-                # every surviving pair was a seed pair: the collected
-                # seed top-k IS the answer — zero further jobs
-                out = seed_df
-        else:
-            # mask present, or routing too large for the driver: ship
-            # routing through the cogroup channel (never collected)
-            self.last_plan = {"mode": "cogroup", "n_main": n_main,
-                              "n_shards": n_shards_total,
-                              "n_queries": len(live)}
-            self._unrouted_streak = 0
-            self._unrouted_min_live = None
-            seed_asg = self.spark.createDataFrame(
-                sorted(seed_set), "query_id int, shard long")
-            main_routed = main_asg.join(seed_asg, ["query_id", "shard"],
-                                        "left_anti")
-            main_seg = seg.join(
-                F.broadcast(main_routed.select("shard").distinct()),
-                "shard", "left_semi")
-            main_res = self._scan(main_seg, qspec1, idf, mask_df, pred_mode,
-                                  asg_df=main_routed)
-            out = self._materialize(
-                self._global_topk(seed_df.unionByName(main_res), live))
+                # mask present, or routing too large for the driver: ship
+                # routing through the cogroup channel (never collected)
+                self.last_plan = {"mode": "cogroup", "n_main": n_main,
+                                  "n_shards": n_shards_total,
+                                  "n_queries": len(live)}
+                self._unrouted_streak = 0
+                self._unrouted_min_live = None
+                seed_asg = self.spark.createDataFrame(
+                    sorted(seed_set), "query_id int, shard long")
+                main_routed = main_asg.join(
+                    seed_asg, ["query_id", "shard"], "left_anti")
+                main_seg = seg.join(
+                    F.broadcast(main_routed.select("shard").distinct()),
+                    "shard", "left_semi")
+                main_res = self._scan(main_seg, qspec1, mask_df, pred_mode,
+                                      asg_df=main_routed)
+                out = self._materialize(
+                    self._global_topk(seed_df.unionByName(main_res), live))
 
-        if ub_df is not None:
-            ub_df.unpersist()
-        if main_asg is not None:
-            main_asg.unpersist()
-        self.last_plan["timings"] = tm
-        self.last_plan["driver_planned"] = q_ub is not None
-        return out
+            self.last_plan["timings"] = tm
+            self.last_plan["driver_planned"] = q_ub is not None
+            return out
+        finally:
+            for cached in (ub_df, main_asg):
+                if cached is not None:
+                    cached.unpersist()
 
     def _plan_slice(self, terms: list[str]) -> dict | None:
         """term -> (shards int64[], admissible tfnorm bound float64[])
@@ -1545,72 +1479,25 @@ class Searcher:
             F.col("doc_id").cast("long").alias("id"),
             F.col("p").cast("int").alias("p")), mode
 
-    def _aux(self, mask_df: DataFrame | None,
-             asg_df: DataFrame | None) -> DataFrame | None:
-        """Union mask rows + query-routing rows into the one cogroup-side
-        frame (applyInPandas cogroups exactly two frames)."""
-        parts = []
-        if mask_df is not None:
-            parts.append(mask_df)
-        if asg_df is not None:
-            parts.append(asg_df.select(
-                F.col("shard").cast("long").alias("shard"),
-                F.lit(_KIND_QUERY).alias("kind"),
-                F.col("query_id").cast("long").alias("id"),
-                F.lit(0).alias("p")))
-        if not parts:
-            return None
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return df
-
-    def _map_scan(self, seg: DataFrame, qspec, idf: dict[str, float],
+    def _map_scan(self, seg: DataFrame, spec: dict,
                   routing: dict[int, set] | None = None,
                   anti_routing: dict[int, set] | None = None,
                   mask: dict | None = None) -> DataFrame:
-        """Shuffle-free scan: the scorer runs as mapInPandas directly on
-        the parquet scan partitions (see _partition_scorer for why this
-        is exact). A SMALL predicate/tombstone mask rides the scorer
-        closure (`mask`, from _collect_small_mask) — the scan-fused
-        selection vector; large masks go through the cogroup channel
-        instead (search_batch keeps mask_df non-None in that case).
-        Exactness requires the one-row-group-per-file invariant
-        (_verify_scan_granularity); when it is unproven, the scan
-        degrades to the always-exact cogroup channel (closure masks are
-        never adopted in that state — see search_batch's gate)."""
+        """Closure scan: routing, anti-routing and a SMALL predicate/
+        tombstone mask (`mask`, from _collect_small_mask — the scan-fused
+        selection vector) ride the scorer closure; large masks go through
+        the cogroup channel instead (search_batch keeps mask_df non-None
+        in that case). The scorer runs as mapInArrow directly on the
+        parquet scan partitions, shuffle-free (see _map_scorer for why
+        this is exact). Exactness requires the one-row-group-per-file
+        invariant (_verify_scan_granularity); when it is unproven, the
+        same closure scorer runs per shard under groupBy("shard")."""
         if not self._map_scan_ok:
-            assert mask is None, "closure mask requires the map scan"
-            asg_df = None
-            if routing is not None:
-                asg_df = self.spark.createDataFrame(
-                    sorted((q, sh) for sh, qs in routing.items()
-                           for q in qs), "query_id int, shard long")
-                seg = seg.filter(_shard_filter(routing))
-            if anti_routing is not None:
-                # distributed complement: (all scanned shards x queries)
-                # minus the anti pairs — never collected to the driver
-                all_q = {int(q) for q, _, _, _ in qspec}
-                anti_df = self.spark.createDataFrame(
-                    sorted((q, int(sh)) for sh, qs in anti_routing.items()
-                           for q in qs), "query_id int, shard long")
-                q_df = self.spark.createDataFrame(
-                    [(q,) for q in sorted(all_q)], "query_id int")
-                asg_df = (seg.select("shard").distinct()
-                          .crossJoin(F.broadcast(q_df))
-                          .join(anti_df, ["query_id", "shard"], "left_anti"))
-            return self._scan(seg, qspec, idf, None, None, asg_df=asg_df)
-        payload = {"queries": qspec, "idf": idf,
-                   "avgdl": self.avgdl, "k1": self.params.k1,
-                   "b": self.params.b,
-                   "docs_per_shard": self.cfg.docs_per_shard,
-                   "predicate_mode": None if mask is None else mask["mode"],
-                   "assigned": False, "has_mask": mask is not None,
-                   "mask": mask,
-                   "routing": routing, "anti_routing": anti_routing,
-                   "require_all": bool(getattr(self, "_require_all", False)),
-                   "min_match": int(getattr(self, "_min_match", 1))}
-        fn = _partition_scorer(payload, arrow=_ARROW_SCAN)
+            # one shard's rows per call: exact under any file layout
+            score = _arrow_scorer(spec)
+            return seg.groupBy("shard").applyInArrow(
+                lambda tab: score(tab, routing, anti_routing, mask),
+                schema=schemas.RESULTS)
         if routing is not None:
             # routed scans touch few shards; every python task costs a
             # fixed ~0.2-0.3 CPU-s (Arrow runner round-trip) REGARDLESS
@@ -1621,30 +1508,28 @@ class Searcher:
             # shuffle — scan partitions merge). Unrouted/exhaustive
             # scans keep full scan parallelism.
             seg = seg.coalesce(self._routed_task_count(len(routing)))
-        if _ARROW_SCAN:
-            return seg.mapInArrow(fn, schema=schemas.RESULTS)
-        return seg.mapInPandas(fn, schema=schemas.RESULTS)
+        return seg.mapInArrow(_map_scorer(spec, routing, anti_routing, mask),
+                              schema=schemas.RESULTS)
 
-    def _scan(self, seg: DataFrame, qspec, idf: dict[str, float],
-              mask_df: DataFrame | None, predicate_mode: str | None,
+    def _scan(self, seg: DataFrame, spec: dict, mask_df: DataFrame | None,
+              predicate_mode: str | None,
               asg_df: DataFrame | None = None) -> DataFrame:
-        payload = {"queries": qspec, "idf": idf,
-                   "avgdl": self.avgdl, "k1": self.params.k1,
-                   "b": self.params.b,
-                   "docs_per_shard": self.cfg.docs_per_shard,
-                   "predicate_mode": predicate_mode,
-                   "assigned": asg_df is not None,
-                   "has_mask": mask_df is not None,
-                   "require_all": bool(getattr(self, "_require_all", False)),
-                   "min_match": int(getattr(self, "_min_match", 1))}
-        aux = self._aux(mask_df, asg_df)
-        if aux is not None:
-            fn = _shard_scorer(payload, has_aux=True)
-            return (seg.groupBy("shard")
-                    .cogroup(aux.groupBy("shard"))
-                    .applyInPandas(fn, schema=schemas.RESULTS))
-        fn = _shard_scorer(payload, has_aux=False)
-        return seg.groupBy("shard").applyInPandas(fn, schema=schemas.RESULTS)
+        """Cogroup scan for masks or routing too large for the closure:
+        mask rows (mask_df) and query-routing rows (asg_df) travel as one
+        aux frame of (shard, kind, id, p) rows — cogroup pairs exactly two
+        frames — and are never collected to the driver."""
+        aux = [] if mask_df is None else [mask_df]
+        if asg_df is not None:
+            aux.append(asg_df.select(
+                F.col("shard").cast("long").alias("shard"),
+                F.lit(_KIND_QUERY).alias("kind"),
+                F.col("query_id").cast("long").alias("id"),
+                F.lit(0).alias("p")))
+        aux_df = aux[0] if len(aux) == 1 else aux[0].unionByName(aux[1])
+        fn = _cogroup_scorer(spec, predicate_mode, routed=asg_df is not None)
+        return (seg.groupBy("shard")
+                .cogroup(aux_df.groupBy("shard"))
+                .applyInArrow(fn, schema=schemas.RESULTS))
 
     def _merge_bound_ok(self, live) -> bool:
         """May the global top-k merge run driver-side? The map-scan
@@ -1652,8 +1537,11 @@ class Searcher:
         per-query top-k), so the collect is bounded by
         n_segment_files x Σk rows (coalesced scans only shrink it).
         Driver work stays bounded-with-distributed-fallback: above the
-        cap (or when the file count is unknown) the window merge runs
-        Spark-side, unchanged."""
+        cap, when the file count is unknown, or when the scan runs per
+        shard (map scan unproven: one top-k per SHARD, not per file) the
+        window merge runs Spark-side, unchanged."""
+        if not self._map_scan_ok:
+            return False
         n_files = self._segment_file_count()
         if n_files <= 0:
             return False
@@ -1662,30 +1550,18 @@ class Searcher:
 
     @staticmethod
     def _topk_merge_pdf(pdfs: list[pd.DataFrame], live) -> pd.DataFrame:
-        """numpy global top-k merge of per-partition top-k frames: sort
-        by (query, score desc, doc asc) — the exact window order of
-        _global_topk — and keep each query's first k rows. Same
-        tie-break, same rows; only WHERE the merge runs differs."""
+        """Driver-side global top-k merge of per-partition top-k frames
+        (_topk_per_query): the same tie-break and rows as _global_topk's
+        window; only WHERE the merge runs differs."""
         pdf = pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs,
                                                        ignore_index=True)
-        if not len(pdf):
-            return pdf
-        q = pdf["query_id"].to_numpy()
-        d = pdf["doc_id"].to_numpy()
-        s = pdf["score"].to_numpy()
-        order = np.lexsort((d, -s, q))
-        q, d, s = q[order], d[order], s[order]
-        kmap = {int(qq): int(k) for qq, _, k in live}
-        keep = np.zeros(len(q), dtype=bool)
-        starts = np.concatenate(
-            [[0], np.nonzero(q[1:] != q[:-1])[0] + 1, [len(q)]])
-        for i in range(len(starts) - 1):
-            a, b = int(starts[i]), int(starts[i + 1])
-            keep[a:min(b, a + kmap.get(int(q[a]), 0))] = True
+        q, d, s = _topk_per_query(
+            pdf["query_id"].to_numpy(), pdf["doc_id"].to_numpy(),
+            pdf["score"].to_numpy(), {int(q): int(k) for q, _, k in live})
         return pd.DataFrame({
-            "query_id": pd.Series(q[keep], dtype="int32"),
-            "doc_id": pd.Series(d[keep], dtype="int64"),
-            "score": pd.Series(s[keep], dtype="float64")})
+            "query_id": pd.Series(q, dtype="int32"),
+            "doc_id": pd.Series(d, dtype="int64"),
+            "score": pd.Series(s, dtype="float64")})
 
     def _merge_topk_local(self, res: DataFrame, live,
                           extra_pdf: pd.DataFrame | None = None

@@ -93,14 +93,16 @@ def test_shard_scorer_property(case):
     EXACT BM25 score, rows are the per-shard top-k of the candidate set,
     and no doc with true score > θ (i.e. a doc that could enter the
     global top-k) is ever pruned — the exactness invariant behind
-    rank-identity."""
+    rank-identity. The cogroup adapter, fed the equivalent aux rows
+    (one query-routing row, no mask rows), returns the identical
+    table."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     from pdx_spark.config import BM25Params
     from pdx_spark.functions.blocks import encode_blocks
     from pdx_spark.functions.bm25 import tfnorm_np
-    from pdx_spark.operators.searcher import _shard_scorer
+    from pdx_spark.operators.searcher import _arrow_scorer, _cogroup_scorer
 
     postings, dls, q_terms, theta, k = case
     params, avgdl, n_docs = BM25Params(), 10.0, 1000
@@ -113,13 +115,20 @@ def test_shard_scorer_property(case):
         tfs = np.array([tf for _, tf in ps], dtype=np.int64)
         dl = np.array([dls[d] for d, _ in ps], dtype=np.int64)
         rows.extend(encode_blocks(ids, tfs, dl, 0, t, 8, avgdl, params))
-    seg = pd.DataFrame(rows)
+    seg = pa.Table.from_batches([_segments_batch(rows)])
 
-    payload = {"queries": [(0, q_terms, k, theta)], "idf": idf,
-               "avgdl": avgdl, "k1": params.k1, "b": params.b,
-               "docs_per_shard": 64, "assigned": False, "has_mask": False,
-               "predicate_mode": None}
-    out = _shard_scorer(payload, has_aux=False)(seg)
+    spec = {"queries": [(0, q_terms, k, theta)], "idf": idf,
+            "avgdl": avgdl, "k1": params.k1, "b": params.b,
+            "docs_per_shard": 64, "require_all": False, "min_match": 1}
+    out_tab = _arrow_scorer(spec)(seg)
+    aux = pa.table({"shard": pa.array([0], pa.int64()),
+                    "kind": pa.array([1], pa.int32()),
+                    "id": pa.array([0], pa.int64()),
+                    "p": pa.array([0], pa.int32())})
+    cog = _cogroup_scorer(spec, None, routed=True)(
+        (pa.scalar(0, pa.int64()),), seg, aux)
+    assert cog.equals(out_tab)
+    out = out_tab.to_pandas()
 
     # naive truth
     truth = {}
@@ -275,40 +284,65 @@ def _random_blocks(rng, n_blocks):
             np.array(ns, np.int64), np.concatenate(vals))
 
 
+def _unpack_view(bufs, widths, ns):
+    """unpack_rows_view over the Arrow payload view of per-block bufs."""
+    import pyarrow as pa
+
+    from pdx_spark.functions.blocks import (_view_boff, payload_view,
+                                            unpack_rows_view)
+    view = payload_view(pa.array(list(bufs), type=pa.binary()))
+    return unpack_rows_view(view[0], _view_boff(view, widths, ns),
+                            widths, ns)
+
+
 def test_unpack_rows_matches_per_block_unpack():
-    """Word-gather unpack_rows == per-block unpack() on mixed widths,
-    including unaligned partial blocks and zero-width blocks."""
-    from pdx_spark.functions.blocks import unpack_rows
+    """Word-gather unpack_rows_view == per-block unpack() on mixed
+    widths, including unaligned partial blocks and zero-width blocks."""
     rng = np.random.default_rng(7)
     for trial in range(20):
         bufs, widths, ns, want = _random_blocks(rng, int(rng.integers(1, 60)))
-        got = unpack_rows(bufs, widths, ns)
+        got = _unpack_view(bufs, widths, ns)
         assert np.array_equal(got, want), trial
     # empty input
-    assert len(unpack_rows(np.array([], dtype=object),
-                           np.array([], np.int64),
-                           np.array([], np.int64))) == 0
+    assert len(_unpack_view(np.array([], dtype=object),
+                            np.array([], np.int64),
+                            np.array([], np.int64))) == 0
 
 
 def test_unpack_rows_rejects_length_mismatch():
-    from pdx_spark.functions.blocks import unpack_rows
+    """Every cell's length is checked, not only the total: one stray
+    byte, and one byte shifted between two cells (same total), both
+    raise."""
+    import pytest
     bufs = np.array([pack(np.array([3, 1], np.int64), 4) + b"x"],
                     dtype=object)  # one stray byte
-    try:
-        unpack_rows(bufs, np.array([4], np.int64), np.array([2], np.int64))
-    except ValueError:
-        return
-    raise AssertionError("length mismatch not detected")
+    with pytest.raises(ValueError):
+        _unpack_view(bufs, np.array([4], np.int64), np.array([2], np.int64))
+    a = pack(np.array([3, 1, 2], np.int64), 8)
+    b = pack(np.array([5, 6, 7], np.int64), 8)
+    skewed = np.array([a + b[:1], b[1:]], dtype=object)
+    with pytest.raises(ValueError):
+        _unpack_view(skewed, np.array([8, 8], np.int64),
+                     np.array([3, 3], np.int64))
+
+
+def test_unpack_rows_rejects_width_above_57():
+    """A width whose value window cannot fit one uint64 word is outside
+    the format: it raises instead of decoding."""
+    import pytest
+    n, w = 2, 60
+    bufs = np.array([bytes((n * w + 7) // 8)], dtype=object)
+    with pytest.raises(ValueError, match="bit width"):
+        _unpack_view(bufs, np.array([w], np.int64), np.array([n], np.int64))
 
 
 def test_decode_term_run_views_matches_bufs():
     """Arrow-view decode (BinaryArray buffers, incl. a SLICED array with
-    offset != 0) is bit-identical to the bytes-object path, and the
-    cross-run stitch matches per-run decode_term_run calls."""
+    offset != 0) over several term runs at once reproduces every run's
+    ids, tfs and dls (the cross-run stitch)."""
     import pyarrow as pa
-    from pdx_spark.functions.blocks import (decode_term_run,
-                                            decode_term_run_views)
-    from pdx_spark.functions.blocks import payload_view
+    from pdx_spark.functions.blocks import (decode_term_run_views,
+                                            payload_view)
     rng = np.random.default_rng(11)
     params, avgdl = BM25Params(), 33.0
     # several term runs over one doc range, concatenated as one
@@ -332,18 +366,12 @@ def test_decode_term_run_views_matches_bufs():
             rows["ld"].append(b["last_doc"])
     as_np = {k: np.array(v, dtype=object if k in ("ids", "tfs", "dls")
                          else np.int64) for k, v in rows.items()}
-    # bytes path over ALL runs at once (the cross-run stitch)
-    gi, gt, gd = decode_term_run(
-        as_np["ids"], as_np["tfs"], as_np["dls"], as_np["ibw"],
-        as_np["tbw"], as_np["dbw"], as_np["n"], as_np["fd"], as_np["ld"])
-    # equals per-run decode concatenated
+    # ground truth: every run's postings concatenated
     want_i = np.concatenate([r[0] for r in per_run])
     want_t = np.concatenate([r[1] for r in per_run])
     want_d = np.concatenate([r[2] for r in per_run])
-    assert np.array_equal(gi, want_i)
-    assert np.array_equal(gt, want_t)
-    assert np.array_equal(gd, want_d)
-    # Arrow-view path, including a sliced array (offset != 0)
+    # Arrow-view path over ALL runs at once, including a sliced array
+    # (offset != 0)
     for do_slice in (False, True):
         views = []
         for k in ("ids", "tfs", "dls"):

@@ -71,8 +71,8 @@ def test_small_mask_rides_map_scan(searcher, tiny_oracle, doc_meta):
     """A small predicate mask ships in the scorer closure (scan-fused
     selection vector, reference searcher.hpp:284-372) so the filtered
     batch keeps the shuffle-free map scan — and the answers stay
-    rank-identical to the cogroup channel's (forced by disabling the
-    closure adoption via the map-scan gate)."""
+    rank-identical to the cogroup channel's (forced by a routing cap
+    too small for the mask to ride the closure)."""
     pred = "role = 'assistant'"
     allowed = _allowed(doc_meta, lambda role, tool, ts: role == "assistant")
     res = searcher.search_batch(QUERIES, predicate=pred).persist()
@@ -83,10 +83,15 @@ def test_small_mask_rides_map_scan(searcher, tiny_oracle, doc_meta):
         want = tiny_oracle.topk(qtext, k, allowed=allowed)
         assert_rank_identical(collect_topk(res, qid), want, f"closure q{qid}")
     res.unpersist()
-    # cogroup twin: forbid the map scan, same rows
+    # cogroup twin: a cap of 2 keeps the mask out of the closure
+    from pdx_spark.operators import searcher as S
     s2 = Searcher.load(searcher.spark, searcher.path)
-    s2._map_scan_ok = False
-    a = s2.search_batch(QUERIES, predicate=pred).collect()
+    old_cap = S._ROUTING_CAP
+    S._ROUTING_CAP = 2
+    try:
+        a = s2.search_batch(QUERIES, predicate=pred).collect()
+    finally:
+        S._ROUTING_CAP = old_cap
     assert s2.last_plan.get("mask_in_closure") in (None, False)
     b = searcher.search_batch(QUERIES, predicate=pred).collect()
     key = lambda r: (r["query_id"], r["doc_id"], round(r["score"], 9))

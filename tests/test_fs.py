@@ -210,7 +210,8 @@ def test_multi_rowgroup_file_falls_back_to_cogroup(spark, tiny_pdf, tiny_oracle,
                                                    tmp_path):
     """Physically violate the one-row-group-per-file invariant on one
     segment file: load must detect it (footer walk), disable the
-    map-scan, and the cogroup scan must stay rank-identical."""
+    map-scan, and the per-shard grouped scan must stay rank-identical —
+    with a closure predicate mask too."""
     import pyarrow.parquet as pq
     import shutil
 
@@ -255,6 +256,16 @@ def test_multi_rowgroup_file_falls_back_to_cogroup(spark, tiny_pdf, tiny_oracle,
     for qid, qtext, k in QUERIES:
         assert_rank_identical(collect_topk(res, qid),
                               tiny_oracle.topk(qtext, k), f"cog2 q{qid}")
+    res.unpersist()
+    # a small predicate mask rides the closure of the grouped scan
+    pdf = tiny_pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    allowed = {int(i) for i in pdf.index[pdf["role"] == "assistant"]}
+    res = s.search_batch(QUERIES, predicate="role = 'assistant'").persist()
+    assert s.last_plan.get("mask_in_closure") is True, s.last_plan
+    for qid, qtext, k in QUERIES:
+        assert_rank_identical(collect_topk(res, qid),
+                              tiny_oracle.topk(qtext, k, allowed=allowed),
+                              f"cog pred q{qid}")
     res.unpersist()
 
 
