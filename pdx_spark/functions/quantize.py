@@ -15,13 +15,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _affine(lo, hi) -> tuple[float, float]:
+    """-> (base, scale): base = min, scale = 255/(max-min) (0 if flat)."""
+    lo, hi = float(lo), float(hi)
+    return lo, 255.0 / (hi - lo) if hi > lo else 0.0
+
+
 def compute_params(df: DataFrame, col: str) -> tuple[float, float]:
-    """-> (base, scale): base = min, scale = 255/(max-min) (0 if flat).
-    One agg — the OpenMP min/max reduction analog (scalar.hpp:60-74)."""
+    """-> (base, scale) of one column (_affine of its min and max). One
+    agg — the OpenMP min/max reduction analog (scalar.hpp:60-74)."""
     row = df.agg(F.min(col).alias("lo"), F.max(col).alias("hi")).collect()[0]
-    lo, hi = float(row["lo"]), float(row["hi"])
-    scale = 255.0 / (hi - lo) if hi > lo else 0.0
-    return lo, scale
+    return _affine(row["lo"], row["hi"])
+
+
+# directory params of an empty segment set (and of a dir the manifest
+# records none for): every bound dequantizes to 0
+ZERO_PARAMS = {"tf_base": 0.0, "tf_scale": 0.0,
+               "dl_base": 0.0, "dl_scale": 0.0}
+
+
+def dir_quant_params(tf_lo, tf_hi, dl_lo, dl_hi) -> dict:
+    """The directory's affine params, recorded under
+    manifest["dir_quant"][<dir>], from the extrema of its max_tf and
+    min_dl columns (None extrema = empty set)."""
+    if tf_hi is None:
+        return dict(ZERO_PARAMS)
+    tf_base, tf_scale = _affine(tf_lo, tf_hi)
+    dl_base, dl_scale = _affine(dl_lo, dl_hi)
+    return {"tf_base": tf_base, "tf_scale": tf_scale,
+            "dl_base": dl_base, "dl_scale": dl_scale}
 
 
 def quantize_col(col, base: float, scale: float):

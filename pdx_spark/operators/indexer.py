@@ -1,22 +1,25 @@
 """Index build pipeline (the analog of PDXIndex::BuildIndex,
 /root/reference/include/pdx/index.hpp:335-403).
 
-Dataflow (all DataFrame; Python only inside Arrow-batched block encoding):
+Dataflow (all DataFrame; Python only inside Arrow-batched tokenize and
+block encoding):
 
   transcripts ->(assign_doc_ids)-> corpus+doc_id
-     ├── docs side table (metadata + dl + text_hash)          [parquet]
-     ├── corpus stats agg (N, avgdl)                          [manifest]
-     ├── postings (term, doc_id, tf, dl)  = tokenize+explode+groupBy
-     │      ├── term_stats groupBy(term)                      [parquet]
-     │      └── + shard = doc_id / docs_per_shard
-     │          -> shuffle by fgroup -> applyInArrow encode   [parquet]
-     └── directory = segments groupBy(term, shard)            [parquet]
+     └── doc_postings (doc_id, dl, metadata, terms[], tfs[])  [cached]
+            ├── docs side table (metadata + dl + text_hash)   [parquet]
+            ├── corpus stats agg (N, sum_dl -> avgdl)         [manifest]
+            └── + shard = doc_id / docs_per_shard
+                -> shuffle by fgroup -> applyInArrow encode   [parquet]
+                   └── stat_artifacts over the written blocks'
+                       metadata (term, shard, n, max_tf, min_dl, gmax)
+                          ├── term_stats                      [parquet]
+                          └── directory (u8-quantized bounds) [parquet]
 
 Skew: sharding is by *doc range*, so a Zipf-head term's postings spread
 across all shards instead of hammering one reducer — the hot-term
 analog of the reference's balanced cluster capacities (cluster.hpp:22).
-The only groupBy keyed on raw term is term_stats, which is safe because
-Spark plans a map-side partial count before the shuffle.
+No groupBy is keyed on raw postings: term_stats folds per-(term, shard)
+block aggregates, so a head term contributes one row per shard.
 
 Resumability (north rule): segments build is split into `n_chunks`
 doc-range chunks; each chunk commits atomically (tmp dir -> rename) and
@@ -38,6 +41,9 @@ from pdx_spark import schemas
 from pdx_spark.config import BM25Params, IndexConfig, manifest_params
 from pdx_spark.fs import IndexFS, LocalFS, index_fs, verify_single_rowgroup
 from pdx_spark.functions.blocks import encode_runs_arrow
+from pdx_spark.functions.quantize import (dir_quant_params, quantize_down_col,
+                                          quantize_down_np, quantize_up_col,
+                                          quantize_up_np)
 from pdx_spark.operators import corpus as C
 
 MANIFEST = "manifest.json"
@@ -46,20 +52,6 @@ MANIFEST = "manifest.json"
 # (fs.verify_single_rowgroup): files are tens of MB, so a 1 GiB parquet
 # row-group target guarantees the writer never splits one mid-file.
 PARQUET_BLOCK_SIZE = str(1 << 30)
-
-
-def write_directory(seg: DataFrame, final: str,
-                    fs: IndexFS | None = None) -> dict:
-    """Aggregate segment block rows to per-(term, shard) directory rows
-    with u8-quantized bound metadata (see schemas.DIRECTORY); atomic
-    tmp -> rename commit. Returns the affine quantization params to
-    record under manifest["dir_quant"][<dir>]."""
-    rows = (seg.groupBy("term", "shard")
-            .agg(F.count("*").cast("int").alias("n_blocks"),
-                 F.sum("n").cast("long").alias("n_postings"),
-                 F.max("max_tf").cast("int").alias("max_tf"),
-                 F.min("min_dl").cast("int").alias("min_dl")))
-    return write_directory_rows(rows, final, fs)
 
 
 def write_directory_rows(rows: DataFrame, final: str,
@@ -76,28 +68,9 @@ def write_directory_rows(rows: DataFrame, final: str,
     params agg with a precomputed (tf_lo, tf_hi, dl_lo, dl_hi) tuple
     (None values = empty set), saving one Spark job when the caller's
     cache-materializing action already produced the extrema."""
-    from pdx_spark.functions.quantize import (quantize_down_col,
-                                              quantize_up_col)
     if not cached:
         rows = rows.persist()
-    if bounds is None:
-        pr = rows.agg(F.min("max_tf").alias("tf_lo"),
-                      F.max("max_tf").alias("tf_hi"),
-                      F.min("min_dl").alias("dl_lo"),
-                      F.max("min_dl").alias("dl_hi")).collect()[0]
-        bounds = (pr["tf_lo"], pr["tf_hi"], pr["dl_lo"], pr["dl_hi"])
-    if bounds[1] is None:  # empty segment set
-        params = {"tf_base": 0.0, "tf_scale": 0.0,
-                  "dl_base": 0.0, "dl_scale": 0.0}
-    else:
-        tf_lo, tf_hi = float(bounds[0]), float(bounds[1])
-        dl_lo, dl_hi = float(bounds[2]), float(bounds[3])
-        params = {
-            "tf_base": tf_lo,
-            "tf_scale": 255.0 / (tf_hi - tf_lo) if tf_hi > tf_lo else 0.0,
-            "dl_base": dl_lo,
-            "dl_scale": 255.0 / (dl_hi - dl_lo) if dl_hi > dl_lo else 0.0,
-        }
+    params = dir_quant_params(*(bounds or _dir_bounds(rows)))
     q = rows.select(
         "term", "shard", "n_blocks", "n_postings",
         quantize_up_col(F.col("max_tf"), params["tf_base"],
@@ -118,17 +91,23 @@ def write_directory_rows(rows: DataFrame, final: str,
     return params
 
 
-# row cap for the driver-side stats fast path (build stage C and append
-# deltas): segment-metadata frames at most this many BLOCK rows are read
-# back with pyarrow and their term_stats/directory artifacts are
-# computed + written driver-side — zero Spark jobs instead of a scan,
-# two aggs and two write jobs of fixed latency each. Above the cap, or
-# on a remote fs, the distributed path runs (bounded-driver-work-with-
-# distributed-fallback, the searcher's _plan_slice discipline). 4M
-# block rows ≈ a few seconds of pandas groupby — bench-scale indexes
-# and delta appends are far below it; a 100 TB base is far above.
-_STATS_LOCAL_CAP_ROWS = int(os.environ.get(
-    "PDX_STATS_LOCAL_CAP_ROWS", 4_000_000))
+def _dir_bounds(rows: DataFrame) -> tuple:
+    """(tf_lo, tf_hi, dl_lo, dl_hi) of directory rows in one agg job;
+    all None for an empty set."""
+    return tuple(rows.agg(F.min("max_tf"), F.max("max_tf"),
+                          F.min("min_dl"), F.max("min_dl")).collect()[0])
+
+
+# row cap for the driver-side half of stat_artifacts: segment-metadata
+# sets of at most this many BLOCK rows are read back with pyarrow and
+# their term_stats/directory artifacts are computed + written driver-
+# side — zero Spark jobs instead of a scan, two aggs and two write jobs
+# of fixed latency each. Above the cap, or on a remote fs, the Spark
+# half runs (bounded-driver-work-with-distributed-fallback, the
+# searcher's _plan_slice discipline). 4M block rows ≈ a few seconds of
+# pandas groupby — bench-scale indexes and delta appends are far below
+# it; a 100 TB base is far above.
+_STATS_LOCAL_CAP_ROWS = 4_000_000
 
 # row-group size for driver-written stat artifacts: term-sorted row
 # groups this size give the pyarrow planner (_plan_slice, _idf_lookup)
@@ -137,34 +116,82 @@ _STATS_LOCAL_CAP_ROWS = int(os.environ.get(
 _STATS_ROW_GROUP = 16384
 
 
-def stat_artifacts_local(fs: IndexFS, seg_dirs: list[str],
-                         ts_final: str | None, dir_final: str,
-                         cap_rows: int | None = None) -> dict | None:
-    """Driver-side term_stats + directory from written segment METADATA
-    (pyarrow column-pruned read — payload bytes never touched): the
-    same segments-are-the-source-of-truth derivation as the distributed
-    stage C / append-delta path, so every value is identical (df = Σ
-    block n, bounds = min/max over blocks, gmax = the encoder's own
-    doubles). Writes term-sorted parquet with _STATS_ROW_GROUP row
-    groups via tmp -> rename. Returns the directory affine params, or
-    None when the fast path does not apply (remote fs, or more block
-    rows than cap_rows). ts_final=None skips term_stats (resume with
-    ts_done)."""
+def stat_artifacts(spark, fs: IndexFS, seg_dirs: list[str], ts_final: str,
+                   dir_final: str) -> dict:
+    """term_stats + directory (2-level routing, L0 analog; u8-quantized
+    bound metadata — the SQ8 half, scalar.hpp:60-106) of the WRITTEN
+    segments in `seg_dirs`, derived from their block metadata columns
+    (term, shard, n, max_tf, min_dl, gmax) — payload bytes are never
+    read: df = Σ block n per term, term max_tf/gmax = max over blocks
+    (the same doubles the encoder computed at the same avgdl), and
+    directory rows = per-(term, shard) block aggregates with ceil/floor
+    u8 bounds. The one derivation behind build stage C, append's delta
+    artifacts and compact()'s new base. Each artifact lands via tmp ->
+    rename. Returns the directory's affine params.
+
+    The input picks the half: stat_artifacts_local on a local fs up to
+    _STATS_LOCAL_CAP_ROWS block rows, else one Spark aggregate of the
+    same columns. Both write equal rows and params."""
+    params = stat_artifacts_local(fs, seg_dirs, ts_final, dir_final)
+    if params is not None:
+        return params
+    seg = (spark.read.schema(schemas.SEGMENTS)
+           .option("recursiveFileLookup", "true").parquet(*seg_dirs))
+    base = (seg.groupBy("term", "shard")
+            .agg(F.count("*").cast("int").alias("n_blocks"),
+                 F.sum("n").cast("long").alias("n_postings"),
+                 F.max("max_tf").cast("int").alias("max_tf"),
+                 F.min("min_dl").cast("int").alias("min_dl"),
+                 F.max("gmax").alias("gmax"))
+            .persist())
+    try:
+        # materialize the shared partial agg ONCE (one scan of the
+        # segment metadata columns); the materializing action IS the
+        # directory's quantization-bounds agg. The two artifacts then
+        # write from executor cache as CONCURRENT jobs: they are
+        # independent, and sequentially each paid its own fixed job
+        # latency on top of the other's.
+        bounds = _dir_bounds(base)
+        from concurrent.futures import ThreadPoolExecutor
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            f_dir = pool.submit(
+                write_directory_rows,
+                base.select("term", "shard", "n_blocks", "n_postings",
+                            "max_tf", "min_dl"),
+                dir_final, fs, cached=True, bounds=bounds)
+            ts = (base.groupBy("term")
+                  .agg(F.sum("n_postings").cast("long").alias("df"),
+                       F.max("max_tf").cast("int").alias("max_tf"),
+                       F.max("gmax").alias("gmax")))
+            tmp = ts_final + ".tmp"
+            ts.sort("term").write.mode("overwrite").parquet(tmp)
+            if fs.exists(ts_final):
+                fs.delete(ts_final)
+            fs.rename(tmp, ts_final)
+            return f_dir.result()
+    finally:
+        base.unpersist()
+
+
+def stat_artifacts_local(fs: IndexFS, seg_dirs: list[str], ts_final: str,
+                         dir_final: str) -> dict | None:
+    """stat_artifacts' driver half: a pyarrow column-pruned read of the
+    segment metadata, pandas groupbys, and term-sorted parquet with
+    _STATS_ROW_GROUP row groups. Returns the directory's affine params,
+    or None when it does not apply (remote fs, or more block rows than
+    _STATS_LOCAL_CAP_ROWS)."""
     if not fs.is_local:
         return None
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from pdx_spark.functions.quantize import (quantize_down_np,
-                                              quantize_up_np)
-    cap = _STATS_LOCAL_CAP_ROWS if cap_rows is None else cap_rows
     files, total_rows = [], 0
     for d in seg_dirs:
         for f, _ in fs.parquet_files(d):
             files.append(f)
             total_rows += pq.ParquetFile(f).metadata.num_rows
-            if total_rows > cap:
+            if total_rows > _STATS_LOCAL_CAP_ROWS:
                 return None
     cols = ["term", "shard", "n", "max_tf", "min_dl", "gmax"]
     tab = pa.concat_tables([pq.read_table(f, columns=cols)
@@ -194,28 +221,19 @@ def stat_artifacts_local(fs: IndexFS, seg_dirs: list[str],
         max_tf=("max_tf", "max"), min_dl=("min_dl", "min"),
         gmax=("gmax", "max"))
 
-    if ts_final is not None:
-        gt = gd.groupby("term", sort=True, as_index=False).agg(
-            df=("n_postings", "sum"), max_tf=("max_tf", "max"),
-            gmax=("gmax", "max"))
-        ts = pa.table({
-            "term": pa.array(gt["term"], pa.string()),
-            "df": pa.array(gt["df"].to_numpy().astype(np.int64)),
-            "max_tf": pa.array(gt["max_tf"].to_numpy().astype(np.int32)),
-            "gmax": pa.array(gt["gmax"].to_numpy().astype(np.float64))})
-        _write_pa(ts, ts_final)
+    gt = gd.groupby("term", sort=True, as_index=False).agg(
+        df=("n_postings", "sum"), max_tf=("max_tf", "max"),
+        gmax=("gmax", "max"))
+    ts = pa.table({
+        "term": pa.array(gt["term"], pa.string()),
+        "df": pa.array(gt["df"].to_numpy().astype(np.int64)),
+        "max_tf": pa.array(gt["max_tf"].to_numpy().astype(np.int32)),
+        "gmax": pa.array(gt["gmax"].to_numpy().astype(np.float64))})
+    _write_pa(ts, ts_final)
 
-    if len(gd) == 0:
-        params = {"tf_base": 0.0, "tf_scale": 0.0,
-                  "dl_base": 0.0, "dl_scale": 0.0}
-    else:
-        tf_lo, tf_hi = float(gd["max_tf"].min()), float(gd["max_tf"].max())
-        dl_lo, dl_hi = float(gd["min_dl"].min()), float(gd["min_dl"].max())
-        params = {
-            "tf_base": tf_lo,
-            "tf_scale": 255.0 / (tf_hi - tf_lo) if tf_hi > tf_lo else 0.0,
-            "dl_base": dl_lo,
-            "dl_scale": 255.0 / (dl_hi - dl_lo) if dl_hi > dl_lo else 0.0}
+    params = dir_quant_params(*(
+        (gd["max_tf"].min(), gd["max_tf"].max(),
+         gd["min_dl"].min(), gd["min_dl"].max()) if len(gd) else [None] * 4))
     dirt = pa.table({
         "term": pa.array(gd["term"], pa.string()),
         "shard": pa.array(gd["shard"].to_numpy().astype(np.int64)),
@@ -426,8 +444,8 @@ class Indexer:
             timings["assign_ids"] = round(time.time() - tt, 2)
 
             # one tokenize pass feeds docs (metadata rides through the
-            # Arrow UDF), term_stats AND the encoder. Nothing holding the
-            # raw `text` column is ever persisted/checkpointed: the only
+            # Arrow UDF), the corpus stats AND the encoder. Nothing holding
+            # the raw `text` column is ever persisted/checkpointed: the only
             # materialized intermediate is dp (doc metadata + term/tf
             # arrays), so executor storage carries index-shaped data,
             # not a second copy of the corpus (round-3 judge, Wrong #1).
@@ -495,7 +513,7 @@ class Indexer:
                 timings["docs_write"] = docs_future.result()
                 manifest.update(stage="segments", n_docs=n_docs,
                                 avgdl=avgdl, sum_dl=sum_dl,
-                                next_doc_id=n_docs, ts_done=False)
+                                next_doc_id=n_docs)
                 manifest["lineage"].append(
                     {"stage": "docs+stats", "rows": n_docs,
                      "sec": round(time.time() - t0, 2), "timings": timings})
@@ -563,119 +581,21 @@ class Indexer:
             manifest["stage"] = "directory"
             _write_manifest(path, manifest, fs=fs)
 
-        # ---- stage C: term_stats + directory (2-level routing, L0
-        # analog; u8-quantized bound metadata — the SQ8 half,
-        # scalar.hpp:60-106). Both artifacts derive EXACTLY from the
-        # written segment block rows (df = sum of block posting counts,
-        # term max_tf/gmax = max over block max_tf/gmax — same doubles
-        # the encoder computed at the same avgdl), so one scan of the
-        # compact segment output replaces what used to be a second full
-        # pass over the fat postings frame (term_stats was measured
-        # re-reading all 4 GB of cached postings at xbench; the segment
-        # blocks are ~0.6 GB). Shared per-(term, shard) partial agg
-        # feeds both; crash between segments and here re-runs this
-        # stage from the durable segments (ts_done gates the rewrite). ----
+        # ---- stage C: term_stats + directory from the written segment
+        # block rows (stat_artifacts). One scan of the compact segment
+        # metadata replaces what used to be a second full pass over the
+        # fat postings frame (term_stats was measured re-reading all
+        # 4 GB of cached postings at xbench; the segment blocks are
+        # ~0.6 GB). A crash between segments and here re-runs this stage
+        # from the durable segments. ----
         if manifest["stage"] == "directory":
             td = time.time()
-            need_ts0 = (not manifest.get("ts_done")
-                        or not fs.exists(self._p(path, "term_stats")))
-            params = stat_artifacts_local(
-                fs, [self._p(path, "segments", "base")],
-                self._p(path, "term_stats") if need_ts0 else None,
-                self._p(path, "directory"))
-            if params is not None:
-                if need_ts0:
-                    manifest["ts_done"] = True
-                    manifest["lineage"].append(
-                        {"stage": "term_stats", "timings": {
-                            "term_stats": 0.0, "driver_side": True}})
-                manifest.setdefault("dir_quant", {})["directory"] = params
-                manifest["lineage"].append(
-                    {"stage": "directory", "timings": {
-                        "directory": round(time.time() - td, 2),
-                        "driver_side": True}})
-                fs.delete(self._p(path, "postings_tmp"))
-                cached = getattr(self, "_posts_cache", None)
-                if cached is not None:
-                    cached.unpersist()
-                    self._posts_cache = None
-                manifest["stage"] = "complete"
-                manifest["lineage"].append(
-                    {"stage": "build_complete",
-                     "sec": round(time.time() - t0, 2)})
-                _write_manifest(path, manifest, fs=fs)
-                if pool is not None:
-                    pool.shutdown(wait=True)
-                return manifest
-            seg = (self.spark.read.schema(schemas.SEGMENTS)
-                   .option("recursiveFileLookup", "true")
-                   .parquet(self._p(path, "segments", "base")))
-            base = (seg.groupBy("term", "shard")
-                    .agg(F.count("*").cast("int").alias("n_blocks"),
-                         F.sum("n").cast("long").alias("n_postings"),
-                         F.max("max_tf").cast("int").alias("max_tf"),
-                         F.min("min_dl").cast("int").alias("min_dl"),
-                         F.max("gmax").alias("gmax"))
-                    .persist())
-            # materialize the shared partial agg ONCE (one scan of the
-            # compact segment metadata columns), then the two artifacts
-            # it feeds — term_stats and the directory — write from
-            # executor cache as CONCURRENT driver-thread jobs: they are
-            # independent, and sequentially each paid its own fixed job
-            # latency on top of the other's. Manifest writes stay in the
-            # main thread, after both joins. The materializing action IS
-            # the directory's quantization-params agg (one job serves
-            # both purposes).
-            pr = base.agg(F.min("max_tf").alias("tf_lo"),
-                          F.max("max_tf").alias("tf_hi"),
-                          F.min("min_dl").alias("dl_lo"),
-                          F.max("min_dl").alias("dl_hi")).collect()[0]
-            qbounds = (pr["tf_lo"], pr["tf_hi"], pr["dl_lo"], pr["dl_hi"])
-            ts_timing: dict = {}
-            need_ts = (not manifest.get("ts_done")
-                       or not fs.exists(self._p(path, "term_stats")))
-
-            def _write_ts():
-                tt = time.time()
-                self.spark.sparkContext.setJobDescription(
-                    "build: term_stats write")
-                ts = (base.groupBy("term")
-                      .agg(F.sum("n_postings").cast("long").alias("df"),
-                           F.max("max_tf").cast("int").alias("max_tf"),
-                           F.max("gmax").alias("gmax"))
-                      .select("term", "df", "max_tf", "gmax"))
-                tmp_ts = self._p(path, "term_stats") + ".tmp"
-                ts.sort("term").write.mode("overwrite").parquet(tmp_ts)
-                if fs.exists(self._p(path, "term_stats")):
-                    fs.delete(self._p(path, "term_stats"))
-                fs.rename(tmp_ts, self._p(path, "term_stats"))
-                return round(time.time() - tt, 2)
-
-            def _write_dir():
-                self.spark.sparkContext.setJobDescription(
-                    "build: directory write")
-                return write_directory_rows(
-                    base.select("term", "shard", "n_blocks", "n_postings",
-                                "max_tf", "min_dl"),
-                    self._p(path, "directory"), fs, cached=True,
-                    bounds=qbounds)
-
-            if pool is None:
-                from concurrent.futures import ThreadPoolExecutor
-                pool = ThreadPoolExecutor(max_workers=2)
-            f_dir = pool.submit(_write_dir)
-            if need_ts:
-                ts_timing["term_stats"] = _write_ts()
-            params = f_dir.result()
-            if need_ts:
-                manifest["ts_done"] = True
-                manifest["lineage"].append(
-                    {"stage": "term_stats", "timings": dict(ts_timing)})
-            base.unpersist()
-            manifest.setdefault("dir_quant", {})["directory"] = params
+            manifest.setdefault("dir_quant", {})["directory"] = stat_artifacts(
+                self.spark, fs, [self._p(path, "segments", "base")],
+                self._p(path, "term_stats"), self._p(path, "directory"))
             manifest["lineage"].append(
-                {"stage": "directory",
-                 "timings": {"directory": round(time.time() - td, 2)}})
+                {"stage": "stat_artifacts",
+                 "timings": {"stat_artifacts": round(time.time() - td, 2)}})
             fs.delete(self._p(path, "postings_tmp"))
             cached = getattr(self, "_posts_cache", None)
             if cached is not None:

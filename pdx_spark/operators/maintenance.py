@@ -6,6 +6,7 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
   M1 Append  -> delta artifacts, O(delta) work: new docs get fresh dense
      doc_ids past the current max; their postings become a new delta
      segment dir; per-term stats and directory rows for the delta are
+     derived from that segment's metadata (indexer.stat_artifacts) and
      written as DELTA parquet dirs merged at read (never a rewrite of the
      base term_stats/directory — the round-1 scale-killer). Global stats
      (N, sum_dl -> avgdl) update incrementally from the batch aggregate.
@@ -35,7 +36,7 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
        dead docs, fold stat deltas into the base, reset all delta state.
        Its new base takes the build's fgroup file layout, and its
        term_stats/directory come from the new base's segment METADATA
-       (indexer.stat_artifacts_local, as in build stage C) — the output
+       (indexer.stat_artifacts, as in build stage C) — the output
        is never decoded again.
   Both compactions run the build's kernels: one Arrow decode pass
   (blocks.decode_blocks_arrow, the M8 de-transpose analog,
@@ -45,8 +46,9 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
 
 from __future__ import annotations
 
-import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -59,7 +61,7 @@ from pdx_spark.operators.indexer import (PARQUET_BLOCK_SIZE,
                                          _segment_encoder_docs,
                                          _segment_encoder_postings,
                                          _write_manifest, encode_layout,
-                                         read_manifest, write_directory,
+                                         read_manifest, stat_artifacts,
                                          write_directory_rows)
 
 
@@ -163,32 +165,15 @@ class Maintainer:
         row = self._docs_raw().agg(F.max("doc_id")).collect()[0][0]
         return int(row) + 1 if row is not None else 0
 
-    def _stat_deltas_local(self, delta_name: str, ts_final: str,
-                           dir_final: str) -> dict | None:
-        """Driver-side term_stats + directory deltas, derived from the
-        just-written delta segment's METADATA columns (pyarrow read —
-        the same segments-are-the-source-of-truth derivation the full
-        build uses): df = Σ block n per term, max_tf/gmax = max over
-        blocks, directory rows = per-(term, shard) block aggregates
-        with the standard ceil/floor u8 quantization. Byte-equal values
-        to the distributed path (the encoder computed gmax with the
-        identical tfnorm at the identical avgdl). Returns the directory
-        affine params, or None when the fast path does not apply
-        (remote fs / delta over the indexer's _STATS_LOCAL_CAP_ROWS) —
-        caller falls back to Spark. Shared with build stage C
-        (indexer.stat_artifacts_local)."""
-        from pdx_spark.operators.indexer import stat_artifacts_local
-        return stat_artifacts_local(
-            self.fs, [self._p(delta_name)], self._p(ts_final),
-            self._p(dir_final))
-
     def _assign_append_ids(self, transcripts: DataFrame,
                            next_id: int) -> DataFrame:
         """Dense doc_id assignment for an append batch: rank of
-        (conv_id, turn_idx) + next_id. corpus.assign_doc_ids supplies
-        both regimes — the bounded driver-side rank + broadcast join
-        for delta-sized batches (PDX_ASSIGN_IDS_LOCAL_CAP) and the
-        range-partition scale path above the cap."""
+        (conv_id, turn_idx) + next_id, with the build's corpus.
+        assign_doc_ids. Up to PDX_ASSIGN_IDS_LOCAL_CAP keys it ranks on
+        the driver and broadcast-joins the ids back — per conversation
+        when every turn_idx run is provably dense from 0, else per
+        turn; above the cap it runs the range-partition path with
+        num_partitions = the default parallelism (at least 8)."""
         with_ids = C.assign_doc_ids(
             transcripts,
             num_partitions=max(
@@ -212,128 +197,105 @@ class Maintainer:
         m["gen"] = gen + 1
         next_id = self._next_doc_id()  # O(1) manifest read, never a scan
 
-        tt = time.time()
-        # appends are delta-sized by design, so caching the input batch
-        # is bounded by the delta — and assign_doc_ids otherwise scans
-        # the caller's frame three times (range-boundary sampling, the
-        # slim checkpoint, and the id join-back), which for the common
-        # filtered-view input means three passes over the SOURCE. One
-        # materialization, then cache reads. (The full build never
-        # caches its input — corpus-sized; this is the delta exception.)
-        transcripts = transcripts.persist()
-        with_ids = self._assign_append_ids(transcripts, next_id)
-        # same single-text-pass shape as Indexer.build: metadata rides
-        # through the Arrow tokenize, only the (text-free) postings frame
-        # is ever cached
-        meta = with_ids.withColumn(
-            "text_hash", F.xxhash64(F.coalesce(F.col("text"), F.lit(""))))
-        dp = C.doc_postings(meta, extra_cols=C.DOC_META_COLS).persist()
-        # delta stats straight off the cached postings — no write-then-
-        # re-read round trip (the batch is materialized exactly once)
-        drow = dp.agg(F.count("*").alias("n"),
-                      F.sum("dl").alias("s")).collect()[0]
-        n_new, dl_new = int(drow["n"]), int(drow["s"] or 0)
-        n_old, sum_old = self._stats()
-        n_docs, sum_dl = n_old + n_new, sum_old + dl_new
-        avgdl = sum_dl / n_docs if n_docs else 0.0
-        timings["tokenize+stats"] = round(time.time() - tt, 2)
-
-        # 1-4) the four delta artifacts are INDEPENDENT given the cached
-        # dp (the directory delta additionally depends on the delta
-        # segment): run them as concurrent driver-thread jobs instead of
-        # serially paying four jobs' fixed latency on a delta-sized
-        # batch (append wall time is job-count-bound, not data-bound).
-        # Staging discipline unchanged: every artifact still lands via
-        # tmp -> rename and is unreferenced until the single manifest
-        # commit below, which happens in this thread after all joins.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _docs_job():
-            tt = time.time()
-            self.spark.sparkContext.setJobDescription("append: docs delta")
-            new_docs = dp.select(*[f.name for f in schemas.DOCS.fields])
-            _atomic_write(new_docs, self._p(docs_delta), fs=self.fs)
-            return round(time.time() - tt, 2)
-
-        def _seg_dir_job():
-            # delta segment: blocks store (tf, dl); pruning bounds are
-            # recomputed from (max_tf, min_dl) at query time, so avgdl
-            # drift cannot over-prune (see searcher._arrow_scorer).
-            # After the write, BOTH stat deltas (term_stats, directory)
-            # derive from the delta segment's metadata columns — driver-
-            # side via _stat_deltas_local on a local fs (zero Spark
-            # jobs), else the directory falls back to the distributed
-            # write from the cached frame and term_stats runs in its
-            # own thread (_ts_job). The directory delta is quantized
-            # with its OWN affine params — delta values can exceed the
-            # base range.
-            tt = time.time()
-            self.spark.sparkContext.setJobDescription("append: delta segment")
-            posts = (dp.select("doc_id", "dl", "terms", "tfs")
-                     .withColumn("shard", self.cfg.shard_of_expr()))
-            enc = _segment_encoder_docs(self.cfg, avgdl, self.params)
-            seg = (posts.groupBy("shard")
-                   .applyInArrow(enc, schema=schemas.SEGMENTS).persist())
-            _atomic_write(seg, self._p(delta_name),
-                          ["term", "shard", "block_id"],
-                          fs=self.fs, segments=True)
-            rg = verify_single_rowgroup(self.fs, delta_name, root=self.path)
-            t_seg = round(time.time() - tt, 2)
-            tt = time.time()
-            dq_ = self._stat_deltas_local(delta_name, ts_delta, dir_delta)
-            stats_local = dq_ is not None
-            if not stats_local:
-                self.spark.sparkContext.setJobDescription(
-                    "append: directory delta")
-                dq_ = write_directory(seg, self._p(dir_delta), self.fs)
-            seg.unpersist()
-            return rg, dq_, stats_local, t_seg, round(time.time() - tt, 2)
-
-        def _ts_job():
-            tt = time.time()
-            self.spark.sparkContext.setJobDescription("append: term_stats delta")
-            delta_ts = C.term_stats_from_doc_postings(
-                dp.select("doc_id", "dl", "terms", "tfs"), avgdl,
-                self.params) \
-                .select("term", F.col("df").cast("long").alias("df"),
-                        F.col("max_tf").cast("int").alias("max_tf"), "gmax")
-            _atomic_write(delta_ts, self._p(ts_delta), ["term"], fs=self.fs)
-            return round(time.time() - tt, 2)
-
         docs_delta = f"docs_delta-{gen}"
         delta_name = f"deltas/delta-{gen}"
         ts_delta = f"term_stats_delta-{gen}"
         dir_delta = f"directory_delta-{gen}"
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_docs = pool.submit(_docs_job)
-            f_seg = pool.submit(_seg_dir_job)
-            # on a remote fs the driver fast path never applies — keep
-            # the distributed term_stats delta fully parallel there
-            f_ts = None if self.fs.is_local else pool.submit(_ts_job)
-            timings["docs"] = f_docs.result()
-            (single_rg, dq, stats_local, timings["segments"],
-             timings["directory"]) = f_seg.result()
-            if f_ts is not None:
-                timings["term_stats"] = f_ts.result()
-            elif not stats_local:
-                # local fs but delta over the byte cap: rare — run the
-                # distributed term_stats now
-                timings["term_stats"] = _ts_job()
-
-        # 4b) positional delta (only for positions-enabled indexes):
-        # same O(delta) discipline, merged at read by phrase_topk
-        pos_delta = None
-        if m.get("positions_dirs"):
+        # every frame cached below is released on every path, a failed
+        # step included
+        with ExitStack() as cached:
             tt = time.time()
-            from pdx_spark.operators.phrase import write_positions
-            pos_delta = f"positions_delta-{gen}"
-            write_positions(with_ids, self._p(pos_delta))
-            timings["positions"] = round(time.time() - tt, 2)
+            # appends are delta-sized by design, so caching the input
+            # batch is bounded by the delta — and assign_doc_ids
+            # otherwise reads the caller's frame at least twice (a key
+            # aggregate or range sample, then the id join-back), which
+            # for the common filtered-view input means repeated passes
+            # over the SOURCE. One materialization, then cache reads.
+            # (The full build never caches its input — corpus-sized;
+            # this is the delta exception.)
+            transcripts = transcripts.persist()
+            cached.callback(transcripts.unpersist)
+            with_ids = self._assign_append_ids(transcripts, next_id)
+            # same single-text-pass shape as Indexer.build: metadata
+            # rides through the Arrow tokenize, only the (text-free)
+            # postings frame is ever cached
+            meta = with_ids.withColumn(
+                "text_hash",
+                F.xxhash64(F.coalesce(F.col("text"), F.lit(""))))
+            dp = C.doc_postings(meta, extra_cols=C.DOC_META_COLS).persist()
+            cached.callback(dp.unpersist)
+            # delta stats straight off the cached postings — no write-
+            # then-re-read round trip (the batch is materialized once)
+            drow = dp.agg(F.count("*").alias("n"),
+                          F.sum("dl").alias("s")).collect()[0]
+            n_new, dl_new = int(drow["n"]), int(drow["s"] or 0)
+            n_old, sum_old = self._stats()
+            n_docs, sum_dl = n_old + n_new, sum_old + dl_new
+            avgdl = sum_dl / n_docs if n_docs else 0.0
+            timings["tokenize+stats"] = round(time.time() - tt, 2)
 
-        dp.unpersist()
-        transcripts.unpersist()
+            # the docs delta and the delta segment are independent given
+            # the cached dp: they run as concurrent driver-thread jobs
+            # instead of serially paying each job's fixed latency on a
+            # delta-sized batch (append wall time is job-count-bound,
+            # not data-bound). Every artifact lands via tmp -> rename and
+            # is unreferenced until the single manifest commit below,
+            # which happens in this thread after both joins.
+            def _docs_job():
+                tt = time.time()
+                self.spark.sparkContext.setJobDescription(
+                    "append: docs delta")
+                new_docs = dp.select(*[f.name for f in schemas.DOCS.fields])
+                _atomic_write(new_docs, self._p(docs_delta), fs=self.fs)
+                return round(time.time() - tt, 2)
 
-        # 5) manifest commit — the single atomic visibility point
+            def _seg_job():
+                # delta segment: blocks store (tf, dl); pruning bounds
+                # are recomputed from (max_tf, min_dl) at query time, so
+                # avgdl drift cannot over-prune (see
+                # searcher._arrow_scorer). The term_stats and directory
+                # deltas then derive from the written delta segment's
+                # metadata (stat_artifacts, as for a build). The
+                # directory delta is quantized with its OWN affine
+                # params — delta values can exceed the base range.
+                tt = time.time()
+                self.spark.sparkContext.setJobDescription(
+                    "append: delta segment")
+                posts = (dp.select("doc_id", "dl", "terms", "tfs")
+                         .withColumn("shard", self.cfg.shard_of_expr()))
+                enc = _segment_encoder_docs(self.cfg, avgdl, self.params)
+                seg = posts.groupBy("shard").applyInArrow(
+                    enc, schema=schemas.SEGMENTS)
+                _atomic_write(seg, self._p(delta_name),
+                              ["term", "shard", "block_id"],
+                              fs=self.fs, segments=True)
+                rg = verify_single_rowgroup(self.fs, delta_name,
+                                            root=self.path)
+                t_seg = round(time.time() - tt, 2)
+                tt = time.time()
+                dq_ = stat_artifacts(self.spark, self.fs,
+                                     [self._p(delta_name)],
+                                     self._p(ts_delta), self._p(dir_delta))
+                return rg, dq_, t_seg, round(time.time() - tt, 2)
+
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                f_docs = pool.submit(_docs_job)
+                f_seg = pool.submit(_seg_job)
+                timings["docs"] = f_docs.result()
+                (single_rg, dq, timings["segments"],
+                 timings["stat_artifacts"]) = f_seg.result()
+
+            # positional delta (only for positions-enabled indexes):
+            # same O(delta) discipline, merged at read by phrase_topk
+            pos_delta = None
+            if m.get("positions_dirs"):
+                tt = time.time()
+                from pdx_spark.operators.phrase import write_positions
+                pos_delta = f"positions_delta-{gen}"
+                write_positions(with_ids, self._p(pos_delta))
+                timings["positions"] = round(time.time() - tt, 2)
+
+        # manifest commit — the single atomic visibility point
         m.setdefault("deltas", []).append(delta_name)
         m.setdefault("docs_dirs", ["docs"]).append(docs_delta)
         m.setdefault("ts_deltas", []).append(ts_delta)
@@ -539,12 +501,12 @@ class Maintainer:
 
         dir_deltas = m.get("dir_deltas", [])
         if len(dir_deltas) > 1:
-            from pdx_spark.functions.quantize import dequantize_col
+            from pdx_spark.functions.quantize import (ZERO_PARAMS,
+                                                      dequantize_col)
             dq = m.get("dir_quant", {})
             df = None
             for d in dir_deltas:
-                p = dq.get(d, {"tf_base": 0.0, "tf_scale": 0.0,
-                               "dl_base": 0.0, "dl_scale": 0.0})
+                p = dq.get(d, ZERO_PARAMS)
                 part = (self.spark.read.schema(schemas.DIRECTORY)
                         .parquet(self._p(d))
                         .select("term", "shard", "n_blocks", "n_postings",
@@ -671,22 +633,10 @@ class Maintainer:
         _atomic_write(docs, self._p(docs_dir), fs=self.fs)
 
         # exact term stats + directory from the new base's segment
-        # metadata, like build stage C: driver-side under the cap on a
-        # local fs, else the distributed aggregate of the same columns
+        # metadata, as in build stage C
         ts_base, dir_base = f"term_stats-{gen}", f"directory-{gen}"
-        from pdx_spark.operators.indexer import stat_artifacts_local
-        dq = stat_artifacts_local(self.fs, [self._p(base)],
-                                  self._p(ts_base), self._p(dir_base))
-        if dq is None:
-            fresh_seg = (self.spark.read.schema(schemas.SEGMENTS)
-                         .option("recursiveFileLookup", "true")
-                         .parquet(self._p(base)))
-            ts = (fresh_seg.groupBy("term")
-                  .agg(F.sum("n").cast("long").alias("df"),
-                       F.max("max_tf").cast("int").alias("max_tf"),
-                       F.max("gmax").alias("gmax")))
-            _atomic_write(ts, self._p(ts_base), ["term"], fs=self.fs)
-            dq = write_directory(fresh_seg, self._p(dir_base), self.fs)
+        dq = stat_artifacts(self.spark, self.fs, [self._p(base)],
+                            self._p(ts_base), self._p(dir_base))
         doomed += [m.get("ts_base", "term_stats"),
                    m.get("dir_base", "directory")]
 

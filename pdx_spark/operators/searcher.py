@@ -806,12 +806,11 @@ class Searcher:
         (manifest["dir_quant"]). Ceil/floor quantization makes the
         dequantized pair stale-high/stale-low => the bound computed from
         it is admissible (never under-estimates a true score)."""
-        from pdx_spark.functions.quantize import dequantize_col
+        from pdx_spark.functions.quantize import ZERO_PARAMS, dequantize_col
         dq = self.manifest.get("dir_quant", {})
 
         def read_one(d: str) -> DataFrame:
-            p = dq.get(d, {"tf_base": 0.0, "tf_scale": 0.0,
-                           "dl_base": 0.0, "dl_scale": 0.0})
+            p = dq.get(d, ZERO_PARAMS)
             part = self.spark.read.schema(schemas.DIRECTORY).parquet(
                 self.fs.join(self.path, d))
             return part.select(
@@ -1275,15 +1274,13 @@ class Searcher:
         if missing:
             import pyarrow.dataset as ds
 
-            from pdx_spark.functions.quantize import dequantize_np
+            from pdx_spark.functions.quantize import ZERO_PARAMS, dequantize_np
             dq = self.manifest.get("dir_quant", {})
-            zero = {"tf_base": 0.0, "tf_scale": 0.0,
-                    "dl_base": 0.0, "dl_scale": 0.0}
             dirs = [self.manifest.get("dir_base", "directory")] \
                 + self.manifest.get("dir_deltas", [])
             frames, total = [], 0
             for d in dirs:
-                p = dq.get(d, zero)
+                p = dq.get(d, ZERO_PARAMS)
                 dset = ds.dataset(self.fs.join(self.path, d),
                                   format="parquet")
                 tab = dset.to_table(

@@ -1,10 +1,10 @@
 """Filesystem seam + crash-safety + format-gate tests (round-3 fixes).
 
 Covers:
-  - build/load/append/search round-trip through a `file:` URI, i.e. the
-    HadoopFS (py4j) implementation of the seam — the code path an
-    hdfs:/s3a: deployment takes (reference has no analog: utils.hpp
-    reads local files only; our unit is a cluster).
+  - build/load/append/delete/compact/search round-trip through a
+    `file:` URI, i.e. the HadoopFS (py4j) implementation of the seam —
+    the code path an hdfs:/s3a: deployment takes (reference has no
+    analog: utils.hpp reads local files only; our unit is a cluster).
   - crash injection: full compact / delete killed between artifact
     write and manifest commit must leave a loadable, CORRECT index
     (commit-then-delete discipline; gen-named artifacts).
@@ -42,9 +42,10 @@ def _oracle(pdf, drop_ids=()):
 
 
 def test_file_uri_roundtrip(spark, tiny_pdf, tmp_path):
-    """Build + load + append + query entirely through a file: URI — the
-    HadoopFS seam (manifest via FSDataOutputStream, renames via
-    FileSystem.rename, row-group verification via parquet-hadoop)."""
+    """Build + load + append + delete + compact + query entirely through
+    a file: URI — the HadoopFS seam (manifest via FSDataOutputStream,
+    renames via FileSystem.rename, row-group verification via
+    parquet-hadoop)."""
     from pdx_spark.fs import HadoopFS, index_fs
 
     n = len(tiny_pdf)
@@ -83,6 +84,24 @@ def test_file_uri_roundtrip(spark, tiny_pdf, tmp_path):
     for qid, qtext, k in QUERIES:
         assert_rank_identical(collect_topk(res, qid), ora2.topk(qtext, k),
                               f"uri-append q{qid}")
+    res.unpersist()
+
+    # delete + full compact through the same seam: compact() derives its
+    # term_stats/directory with the Spark half of stat_artifacts here
+    dead = [d for d, _ in s2.search("w0000", k=4)]
+    Maintainer(spark, uri).delete(spark.createDataFrame(
+        [(int(d),) for d in dead], "doc_id long"))
+    m = Maintainer(spark, uri).compact()
+    assert m["tombstones"] == 0 and m["dir_base"] in m["dir_quant"]
+    s3 = Searcher.load(spark, uri)
+    ora3 = _oracle(tiny_pdf, drop_ids=dead)
+    assert s3.n_docs == ora3.n_docs
+    assert math.isclose(s3.avgdl, ora3.avgdl, rel_tol=1e-12)
+    res = s3.search_batch(QUERIES, two_phase_min_shards=2, force_two_phase=True).persist()
+    for qid, qtext, k in QUERIES:
+        got = collect_topk(res, qid)
+        assert not set(dead) & {d for d, _ in got}
+        assert_rank_identical(got, ora3.topk(qtext, k), f"uri-compact q{qid}")
     res.unpersist()
 
 

@@ -120,7 +120,6 @@ def test_resume_equals_fresh(spark, tmp_path, corpus_pdfs):
     m["stage"] = "segments"
     # also simulate dying before the (stage-B-overlapped) term_stats
     # write landed: resume must rewrite the artifact
-    m["ts_done"] = False
     shutil.rmtree(os.path.join(broken, "term_stats"))
     for c in ["1", "2"]:
         m["chunks"].pop(c, None)
@@ -321,6 +320,30 @@ def test_delete_ignores_ids_outside_the_index(spark, tmp_path, corpus_pdfs):
         spark.createDataFrame(one, schema=TRANSCRIPTS))
     res = Searcher.load(spark, path).search_batch([(0, "zzqnovel", 5)])
     assert [d for d, _ in collect_topk(res, 0)] == [nxt]
+
+
+def test_failed_append_releases_cached_frames(spark, tmp_path, corpus_pdfs,
+                                              monkeypatch):
+    """An append that fails after its input batch and postings are
+    cached leaves no cached frame behind, and commits nothing."""
+    from pdx_spark.operators import indexer
+
+    full, head, tail = corpus_pdfs
+    path = str(tmp_path / "idx_append_fail")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    before_m = read_manifest(path)
+    batch = spark.createDataFrame(tail, schema=TRANSCRIPTS)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+
+    def boom(*a, **k):
+        raise RuntimeError("stats failed")
+    monkeypatch.setattr(indexer, "stat_artifacts_local", boom)
+    with pytest.raises(RuntimeError, match="stats failed"):
+        Maintainer(spark, path).append(batch)
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+    assert read_manifest(path) == before_m
 
 
 def _segment_rows(root):

@@ -1,16 +1,22 @@
-"""Driver-side stat-artifact writer (indexer.stat_artifacts_local):
-values must equal the distributed derivation — df = Σ block n per
-term, bounds = min/max over blocks, ceil/floor u8 quantization — and
-edge cases (empty input, cap exceeded) must behave. Pure
-pyarrow/pandas, no Spark session."""
+"""Stat artifacts (indexer.stat_artifacts): the driver half
+(stat_artifacts_local) must compute df = Σ block n per term, bounds =
+min/max over blocks and ceil/floor u8 quantization, and handle empty
+input and the row cap; the Spark half must write the same term_stats
+rows, directory rows and params after build, append and compact()."""
+
+import os
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from pdx_spark import schemas
+from pdx_spark.config import IndexConfig
 from pdx_spark.fs import LocalFS
 from pdx_spark.functions.quantize import dequantize_np
-from pdx_spark.operators.indexer import stat_artifacts_local
+from pdx_spark.operators import indexer
+from pdx_spark.operators.indexer import Indexer, stat_artifacts_local
+from pdx_spark.operators.maintenance import Maintainer
 
 
 def _seg_file(path, rows):
@@ -58,7 +64,7 @@ def test_stat_artifacts_local_values(tmp_path):
     assert (dn <= np.array([4, 30, 40]) + 1e-9).all()
 
 
-def test_stat_artifacts_local_empty_and_cap(tmp_path):
+def test_stat_artifacts_local_empty_and_cap(tmp_path, monkeypatch):
     seg = tmp_path / "seg"
     seg.mkdir()
     ts, dd = str(tmp_path / "ts"), str(tmp_path / "dir")
@@ -70,8 +76,9 @@ def test_stat_artifacts_local_empty_and_cap(tmp_path):
 
     _seg_file(str(seg / "a.parquet"),
               [dict(term="x", shard=0, n=1, max_tf=1, min_dl=1, gmax=1.0)])
-    assert stat_artifacts_local(LocalFS(), [str(seg)], ts, dd,
-                                cap_rows=0) is None  # cap -> fallback
+    monkeypatch.setattr(indexer, "_STATS_LOCAL_CAP_ROWS", 0)
+    assert stat_artifacts_local(LocalFS(), [str(seg)], ts,
+                                dd) is None  # cap -> fallback
 
 
 def _term_encodings(path):
@@ -101,3 +108,63 @@ def test_stat_artifacts_term_plain_only_when_unique(tmp_path):
         assert not enc[name][0] & dict_encs, enc   # term_stats: PLAIN
     assert not enc["unique"][1] & dict_encs, enc   # one shard per term
     assert enc["repeat"][1] & dict_encs, enc       # terms repeat
+
+
+def _artifacts(path, ts_dir, dir_dir, m):
+    """Sorted term_stats rows, sorted directory rows and the directory's
+    dir_quant params, as committed under `path`."""
+    def rows(d, schema):
+        cols = [f.name for f in schema.fields]
+        tab = pq.read_table(os.path.join(path, d), columns=cols)
+        return sorted(zip(*(tab.column(c).to_pylist() for c in cols)))
+    return (rows(ts_dir, schemas.TERM_STATS),
+            rows(dir_dir, schemas.DIRECTORY),
+            m["dir_quant"][dir_dir])
+
+
+def _stat_cycle(spark, tiny_pdf, path):
+    """Build, append and compact(); the artifacts after each step."""
+    from pdx_spark.schemas import TRANSCRIPTS
+
+    n = len(tiny_pdf)
+    head, tail = tiny_pdf.iloc[: n - 40], tiny_pdf.iloc[n - 40:]
+    cfg = IndexConfig(block_size=16, docs_per_shard=64)
+    m = Indexer(spark, cfg=cfg).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    out = {"build": _artifacts(path, "term_stats", "directory", m)}
+    m = Maintainer(spark, path).append(
+        spark.createDataFrame(tail, schema=TRANSCRIPTS))
+    out["append"] = _artifacts(path, m["ts_deltas"][-1],
+                               m["dir_deltas"][-1], m)
+    m = Maintainer(spark, path).compact()
+    out["compact"] = _artifacts(path, m["ts_base"], m["dir_base"], m)
+    return out
+
+
+def test_driver_and_spark_halves_agree(spark, tiny_pdf, tmp_path,
+                                       monkeypatch):
+    """The same build -> append -> compact() run twice: once as usual
+    (driver half on a local fs) and once with _STATS_LOCAL_CAP_ROWS = 0
+    (the Spark half). Each step commits equal term_stats rows, directory
+    rows and dir_quant params."""
+    halves = []
+    real = indexer.stat_artifacts_local
+
+    def spy(*a, **kw):
+        params = real(*a, **kw)
+        halves.append("driver" if params is not None else "spark")
+        return params
+
+    monkeypatch.setattr(indexer, "stat_artifacts_local", spy)
+    local = _stat_cycle(spark, tiny_pdf, str(tmp_path / "local"))
+    assert halves == ["driver"] * 3
+    monkeypatch.setattr(indexer, "_STATS_LOCAL_CAP_ROWS", 0)
+    dist = _stat_cycle(spark, tiny_pdf, str(tmp_path / "spark"))
+    assert halves == ["driver"] * 3 + ["spark"] * 3
+    for step in ("build", "append", "compact"):
+        ts_l, dir_l, q_l = local[step]
+        ts_d, dir_d, q_d = dist[step]
+        assert ts_l and dir_l, step
+        assert ts_l == ts_d, step
+        assert dir_l == dir_d, step
+        assert q_l == q_d, step
