@@ -6,14 +6,18 @@ Mirrors the reference's pruned scan (PDXearch::Search,
   1. Query prep on the driver: tokenize, fetch idf of query terms from
      the term_stats parquet (filter pushdown on the sorted `term`
      column) — analog of rotate-the-query (searcher.hpp:602-613).
-  2. Spark-side plan: the directory slice of the query terms joins a
-     broadcast (query, term, idf) frame and aggregates to per-
-     (query, shard) upper bounds — the "rank clusters by promise" step
-     (searcher.hpp:181-215) as a DataFrame, never collected.
+  2. Driver-side plan: the directory slice of the query terms is read
+     on the driver (Searcher._meta_rows: pyarrow on a local fs, one
+     Spark scan collected as Arrow on any other scheme) and summed in
+     numpy to per-(query, shard) upper bounds — the "rank clusters by
+     promise" step, in-process as in the reference
+     (searcher.hpp:181-215). A batch whose slice or (query, shard)
+     bound count exceeds _PLAN_SLICE_CAP runs exhaustive instead
+     (rank-identical), which bounds driver memory.
   3. Seed scan ("Start", searcher.hpp:218-281): each query's most
-     promising `seed_shards` shards are scored exactly. Driver traffic
-     is bounded: the seed routing (≤ seed_shards × Q pairs) and the
-     k-th best seed score per query (θ, Q floats) — never candidates.
+     promising `seed_shards` shards are scored exactly; the driver
+     collects the k-th best seed score per query (θ, Q floats) and the
+     seed top-k (≤ Σk rows) — never candidates.
   4. Main scan ("Warmup/Prune", searcher.hpp:376-540): per-(query,
      shard) assignments where the upper bound can still beat θ route
      each shard to only its own queries (work = Σ_q |shards_q|, not
@@ -45,7 +49,8 @@ Mirrors the reference's pruned scan (PDXearch::Search,
 
 Queries run as a batch (one pass scores all queries of the batch —
 amortizes job overhead, SURVEY §7.4). A batch is a handful of bounded
-jobs: idf lookup, plan + seed scan (→ θ), main scan + merge — the
+jobs: seed scan (→ θ), main scan + merge; idf lookup and planning read
+metadata on the driver and are cached per term on a warm Searcher — the
 serial fraction is job scheduling plus Q-sized collects, which is what
 makes query throughput scale with executors (north rule ≥0.8 N→4N).
 The remaining single-box limit is memory bandwidth (the scan streams
@@ -67,7 +72,7 @@ from pdx_spark import schemas
 from pdx_spark.config import SEED, BM25Params, IndexConfig
 from pdx_spark.fs import index_fs, verify_single_rowgroup
 from pdx_spark.functions.blocks import decode_term_run_views, payload_view
-from pdx_spark.functions.bm25 import idf_np, tfnorm_col, tfnorm_np
+from pdx_spark.functions.bm25 import idf_np, tfnorm_np
 from pdx_spark.functions.tokenize import tokenize_py
 from pdx_spark.operators.indexer import MANIFEST, read_manifest
 
@@ -77,16 +82,16 @@ _THETA_GUARD = 1e-9  # float-monotonicity guard on upper-bound comparisons
 def _pdf_df(spark, data: dict, schema) -> DataFrame:
     """createDataFrame via pandas — takes the Arrow fast path instead of
     per-row JVM conversion (matters at thousands of driver-side rows:
-    query-term frames, seed top-k, result materialization — all part of
+    routing pairs, seed top-k, result materialization — all part of
     the per-batch FIXED cost that bounds scaling)."""
     return spark.createDataFrame(pd.DataFrame(data), schema=schema)
 
-# max (query, shard) routing pairs shipped via the scorer closure; above
-# this the cogroup channel carries routing (never collected to the driver)
+# max (query, shard) routing pairs or mask rows shipped via the scorer
+# closure; above this the cogroup channel carries them
 _ROUTING_CAP = 200_000
 
-# max directory rows the driver-side planner will read per batch; above
-# this (or on a remote fs) planning runs distributed via ub_df
+# max directory rows, and max (query, shard) upper bounds, the driver
+# planner holds for one batch; a batch above either runs exhaustive
 _PLAN_SLICE_CAP = 2_000_000
 
 # max rows the driver-side global top-k merge may collect (bounded by
@@ -180,8 +185,7 @@ def _shard_filter(shards) -> "F.Column":
 _TERM_FILTER_MAX_RUNS = 512
 
 
-def _term_shard_filter(term_shards: dict[str, set],
-                       routing: dict[int, set]) -> "F.Column | None":
+def _term_shard_filter(term_shards: dict[str, set]) -> "F.Column | None":
     """Row-precise JVM filter for the routed main scan:
     OR_t (term = t AND shard IN ranges_t). The union-of-shards filter
     alone is self-defeating on batches whose queries route to DIFFERENT
@@ -216,6 +220,20 @@ def _term_shard_filter(term_shards: dict[str, set],
         assert t.isascii() and t.isalnum(), t
         parts.append(f"(term = '{t}' AND {_shard_sql(runs)})")
     return F.expr("(" + " OR ".join(parts) + ")")
+
+
+def _route(pairs, qterms: dict) -> tuple[dict[int, set], "F.Column"]:
+    """(query, shard) pairs -> (shard -> query set routing, the segment
+    row filter selecting those pairs' term rows: _term_shard_filter, or
+    the union-of-shards filter above its disjunct budget)."""
+    routing: dict[int, set] = {}
+    term_shards: dict[str, set] = {}
+    for q, sh in pairs:
+        routing.setdefault(sh, set()).add(q)
+        for t in qterms[q]:
+            term_shards.setdefault(t, set()).add(sh)
+    expr = _term_shard_filter(term_shards)
+    return routing, expr if expr is not None else _shard_filter(routing)
 
 
 def _results_table(q, d, s) -> pa.Table:
@@ -595,15 +613,9 @@ class Searcher:
         self._sel_sample = None  # cached docs sample for selectivity est.
         self._last_sel_frac: float | None = None  # last predicate pass-rate
         self._idf_cache: dict[str, float] = {}  # term -> idf (load-time N)
-        # warm two-phase planning: the deduplicated, dequantized directory
-        # frame persists on first use so later batches plan from executor
-        # cache instead of re-reading (and re-merging) the directory
-        # parquet every time
-        self._dir_df: DataFrame | None = None
-        # driver-side planning cache: term -> (shards, admissible tfnorm
-        # bound) from the directory parquet (see _plan_slice)
+        # planning cache: term -> (shards, admissible tfnorm bound) from
+        # the directory parquet (see _plan_slice)
         self._plan_cache: dict[str, tuple] = {}
-        self._plan_disabled = False
         # outcome feedback for the adaptive planner: consecutive batches
         # whose θ could not prune (unrouted fallback) — after
         # _UNROUTED_BYPASS of them, skip the seed phase entirely and
@@ -728,6 +740,20 @@ class Searcher:
     def load(cls, spark, path: str) -> "Searcher":
         return cls(spark, path)
 
+    def close(self) -> None:
+        """Release the frames this Searcher persisted (the docs sample
+        behind predicate selectivity estimates). The Searcher stays
+        usable; a later predicate batch persists a fresh sample."""
+        if self._sel_sample is not None:
+            self._sel_sample[0].unpersist()
+            self._sel_sample = None
+
+    def __enter__(self) -> "Searcher":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
     # -- lazy frames (merged views over base + maintenance deltas) ----------
     def segments(self) -> DataFrame:
         # one lazy frame per Searcher: a Searcher is a snapshot of one
@@ -780,9 +806,9 @@ class Searcher:
     def term_stats(self) -> DataFrame:
         """Base ∪ append/delete deltas, merged at read: df sums (delete
         deltas are negative), bounds take max (stale-high = admissible).
-        The per-query idf lookup filters on `term` FIRST, so parquet
-        row-group pruning applies to every delta file before the merge
-        agg touches anything."""
+        A caller that filters on `term` gets parquet row-group pruning on
+        every delta file before the merge agg. (Query serving reads the
+        same dirs through _meta_rows instead.)"""
         base = self.spark.read.schema(schemas.TERM_STATS).parquet(
             self.fs.join(self.path,
                          self.manifest.get("ts_base", "term_stats")))
@@ -799,31 +825,6 @@ class Searcher:
                      F.max("max_tf").alias("max_tf"),
                      F.max("gmax").alias("gmax"))
                 .filter(F.col("df") > 0))
-
-    def directory(self) -> DataFrame:
-        """Base ∪ append deltas, with u8 bound metadata dequantized back
-        to (max_tf, min_dl) doubles using each dir's own affine params
-        (manifest["dir_quant"]). Ceil/floor quantization makes the
-        dequantized pair stale-high/stale-low => the bound computed from
-        it is admissible (never under-estimates a true score)."""
-        from pdx_spark.functions.quantize import ZERO_PARAMS, dequantize_col
-        dq = self.manifest.get("dir_quant", {})
-
-        def read_one(d: str) -> DataFrame:
-            p = dq.get(d, ZERO_PARAMS)
-            part = self.spark.read.schema(schemas.DIRECTORY).parquet(
-                self.fs.join(self.path, d))
-            return part.select(
-                "term", "shard", "n_blocks", "n_postings",
-                dequantize_col(F.col("max_tf_q"), p["tf_base"],
-                               p["tf_scale"]).alias("max_tf"),
-                dequantize_col(F.col("min_dl_q"), p["dl_base"],
-                               p["dl_scale"]).alias("min_dl"))
-
-        df = read_one(self.manifest.get("dir_base", "directory"))
-        for d in self.manifest.get("dir_deltas", []):
-            df = df.unionByName(read_one(d))
-        return df
 
     def tombstones(self) -> DataFrame | None:
         # generation-named tombstone dir, resolved THROUGH the manifest
@@ -860,9 +861,12 @@ class Searcher:
         exact=True forces the exhaustive blocked scan (nprobe=0 analog,
         searcher.hpp:614-616). Otherwise, when the index has enough
         shards for shard-skipping to pay for a second job, the θ-seeded
-        two-phase scan runs: planning, candidate routing, and the result
-        merge all stay Spark-side; the driver sees only the k-th seed
-        score per query (θ) and the final Σk rows. Results are
+        two-phase scan runs: the driver plans it from the directory
+        slice of the query terms (_upper_bounds), a seed scan yields θ
+        (the k-th seed score per query), and a main scan covers the
+        (query, shard) pairs whose bound can still beat θ. A batch whose
+        plan exceeds _PLAN_SLICE_CAP runs exhaustive and last_plan
+        records the cap and the observed count. Results are
         rank-identical either way; only the work differs. The adaptive
         choice mirrors the reference's selectivity-adaptive scan
         branches (searcher.hpp:321-345)."""
@@ -917,9 +921,9 @@ class Searcher:
             closure_mask = self._collect_small_mask(mask_df, pred_mode)
             if closure_mask is not None:
                 # small mask rides the scorer closure: every branch below
-                # keeps the closure scan + driver planning, the plans a
-                # filtered batch used to forfeit (cogroup + groupBy-
-                # shuffle of the term-filtered segment rows)
+                # keeps the closure map scan, the plans a filtered batch
+                # used to forfeit (cogroup + groupBy-shuffle of the
+                # term-filtered segment rows)
                 mask_df = None
 
         n_shards_total = -(-self.n_docs // self.cfg.docs_per_shard)
@@ -946,15 +950,23 @@ class Searcher:
                 self._bypassed += 1
                 if self._bypass_started is None:
                     self._bypass_started = time.monotonic()
-        if exact or (not force_two_phase
-                     and (n_shards_total < max(two_phase_min_shards,
-                                               4 * seed_shards)
-                          or big_batch or bypass)):
+        q_ub = plan_cap = None
+        if not exact and (force_two_phase or not (
+                n_shards_total < max(two_phase_min_shards, 4 * seed_shards)
+                or big_batch or bypass)):
+            _t0 = time.time()
+            q_ub, plan_cap = self._upper_bounds(live, all_terms, idf,
+                                                require_all_terms)
+            tm["plan_ub"] = round(time.time() - _t0, 3)
+        if q_ub is None:
             self.last_plan = {"mode": "exhaustive",
                               "n_shards": n_shards_total,
                               "big_batch": big_batch,
                               "unrouted_bypass": bypass,
-                              "mask_in_closure": closure_mask is not None}
+                              "mask_in_closure": closure_mask is not None,
+                              "timings": tm}
+            if plan_cap is not None:
+                self.last_plan["plan_cap"] = plan_cap
             qspec = dict(spec, queries=[(q, ts, k, None)
                                         for q, ts, k in live])
             if mask_df is None:
@@ -967,343 +979,241 @@ class Searcher:
                 res = self._scan(seg, qspec, mask_df, pred_mode)
             return self._global_topk(res, live)
 
-        # ub_df / main_asg are cached per batch and released on every
-        # path, exceptions included
-        ub_df = main_asg = None
-        try:
-            # ---- plan (S2/S3 analog): per-(query, shard) upper bounds
-            # from the directory slice of the query terms. DRIVER-PLANNED
-            # on local indexes (pyarrow slice + numpy — the directory is
-            # metadata, the reference ranks it in-process,
-            # searcher.hpp:181-215; saves two Spark jobs of serial
-            # latency per batch); DISTRIBUTED (ub_df) on remote indexes,
-            # oversized slices, or masked batches.
-            _t0 = time.time()
-            q_ub = None
-            plan_terms = self._plan_slice(all_terms) \
-                if mask_df is None else None
-            if plan_terms is not None:
-                q_ub = {}
-                potential = 0
-                for q, ts, _k in live:
-                    shs, contribs = [], []
-                    feas = None  # AND: shards where EVERY term has postings
-                    for t in ts:
-                        sh_t, g_t = plan_terms[t]
-                        if require_all_terms:
-                            feas = sh_t if feas is None else \
-                                np.intersect1d(feas, sh_t, assume_unique=True)
-                        if len(sh_t):
-                            shs.append(sh_t)
-                            contribs.append(idf[t] * g_t)
-                    if not shs:
-                        continue
-                    sh = np.concatenate(shs)
-                    contrib = np.concatenate(contribs)
-                    ush, inv = np.unique(sh, return_inverse=True)
-                    ub = np.zeros(len(ush))
-                    np.add.at(ub, inv, contrib)
-                    if require_all_terms:
-                        # conjunctive routing: only the intersection can
-                        # match all terms — the textbook AND shard prune
-                        # (the scorer's per-shard gate makes this a pure
-                        # work-saver, never a correctness dependency)
-                        keep = np.isin(ush, feas, assume_unique=True)
-                        ush, ub = ush[keep], ub[keep]
-                        if not len(ush):
-                            continue
-                    q_ub[int(q)] = (ush, ub)
-                    potential += len(ush)
-                if potential > _ROUTING_CAP:
-                    q_ub = None  # routing would not fit the driver anyway
+        seed_set = set()
+        for q, (ush, ub) in q_ub.items():
+            order = np.lexsort((ush, -ub))[:seed_shards]
+            seed_set.update((q, int(ush[i])) for i in order)
+        qterms = {q: ts for q, ts, _ in live}
+        seed_routing, seed_filter = _route(seed_set, qterms)
+        qspec0 = dict(spec, queries=[(q, ts, k, None)
+                                     for q, ts, k in live])
+        if mask_df is None:
+            seed_res = self._map_scan(seg.filter(seed_filter), qspec0,
+                                      routing=seed_routing,
+                                      mask=closure_mask)
+        else:
+            seed_res = self._scan(seg.filter(seed_filter), qspec0, mask_df,
+                                  pred_mode, asg_df=self._pairs_df(seed_set))
 
-            if q_ub is not None:
-                seed_set = set()
-                for q, (ush, ub) in q_ub.items():
-                    order = np.lexsort((ush, -ub))[:seed_shards]
-                    seed_set.update((q, int(ush[i])) for i in order)
-                tm["plan_ub"] = round(time.time() - _t0, 3)
-            else:
-                qt_rows = [(int(q), t, float(idf[t]))
-                           for q, ts, _ in live for t in ts]
-                qterms = _pdf_df(self.spark, {
-                    "query_id": pd.Series([r[0] for r in qt_rows],
-                                          dtype="int32"),
-                    "term": pd.Series([r[1] for r in qt_rows], dtype=object),
-                    "idf": pd.Series([r[2] for r in qt_rows],
-                                     dtype="float64")},
-                    "query_id int, term string, idf double")
-                if self._dir_df is None:
-                    bounds = self.directory().select(
-                        "term", "shard", "max_tf", "min_dl")
-                    if self.manifest.get("dir_deltas"):
-                        # base + append-delta rows can repeat a (term,
-                        # shard) key; collapse to one admissible bound so
-                        # ub isn't inflated. (Delta-free indexes skip this
-                        # shuffle.)
-                        bounds = (bounds.groupBy("term", "shard")
-                                  .agg(F.max("max_tf").alias("max_tf"),
-                                       F.min("min_dl").alias("min_dl")))
-                    # warm-Searcher cache: later batches plan against the
-                    # executor-cached (deduped, dequantized) directory
-                    # instead of re-reading + re-merging parquet per batch
-                    self._dir_df = bounds.persist()
-                bounds = self._dir_df.filter(_in_list("term", all_terms))
-                ub_df = (bounds
-                         .join(F.broadcast(qterms), "term")
-                         .withColumn("contrib", F.col("idf") * tfnorm_col(
-                             F.col("max_tf"), F.col("min_dl"),
-                             F.lit(float(self.avgdl)), self.params))
-                         .groupBy("query_id", "shard")
-                         .agg(F.sum("contrib").alias("ub"))
-                         .filter(F.col("ub") > 0)
-                         .persist())
+        # ---- seed top-k + θ in ONE job: collect the per-query top-k
+        # over the seed shards (bounded: <= Σk rows). θ (the k-th seed
+        # score, searcher.hpp:82-91's threshold role) falls out
+        # driver-side, and the rows themselves are REUSED as the seed
+        # contribution to the final merge — the seed scan is never
+        # thrown away or re-run.
+        _t0 = time.time()
+        if mask_df is None and self._merge_bound_ok(live):
+            # bounded per-partition top-k -> one collect stage, driver
+            # merge (no exchange/window job in the seed phase)
+            seed_pdf = self._topk_merge_pdf([seed_res.toPandas()], live)
+        else:
+            seed_pdf = self._global_topk(seed_res, live).toPandas()
+        tm["seed_scan"] = round(time.time() - _t0, 3)
+        seed_rows = list(zip(seed_pdf["query_id"].astype(int),
+                             seed_pdf["doc_id"].astype(int),
+                             seed_pdf["score"].astype(float)))
+        n_seed_hits: dict[int, int] = {}
+        worst: dict[int, float] = {}
+        for q, _, s in seed_rows:
+            n_seed_hits[q] = n_seed_hits.get(q, 0) + 1
+            worst[q] = min(worst.get(q, s), s)
+        theta = {q: worst[q] for q, _, k in live
+                 if n_seed_hits.get(q, 0) >= k}
+        seed_df = _pdf_df(self.spark, {
+            "query_id": pd.Series([r[0] for r in seed_rows],
+                                  dtype="int32"),
+            "doc_id": pd.Series([r[1] for r in seed_rows],
+                                dtype="int64"),
+            "score": pd.Series([r[2] for r in seed_rows],
+                               dtype="float64")},
+            schemas.RESULTS)
 
-                # seed selection distributed: each query's most promising
-                # shards; only the tiny (<= seed_shards x Q) pair set is
-                # collected.
-                wseed = Window.partitionBy("query_id").orderBy(
-                    F.desc("ub"), F.asc("shard"))
-                seed_pairs = (ub_df
-                              .withColumn("_rn", F.row_number().over(wseed))
-                              .filter(F.col("_rn") <= seed_shards)
-                              .select("query_id", "shard").collect())
-                tm["plan_ub"] = round(time.time() - _t0, 3)
-                seed_set = {(int(r["query_id"]), int(r["shard"]))
-                            for r in seed_pairs}
-            seed_routing: dict[int, set] = {}
-            for q, sh in seed_set:
-                seed_routing.setdefault(sh, set()).add(q)
-            _seed_ts: dict[str, set] = {}
-            _qterms = {q: ts for q, ts, _ in live}
-            for q, sh in seed_set:
-                for t in _qterms[q]:
-                    _seed_ts.setdefault(t, set()).add(sh)
-            _seed_expr = _term_shard_filter(_seed_ts, seed_routing)
-            seed_seg = seg.filter(_seed_expr) if _seed_expr is not None \
-                else seg.filter(_shard_filter(seed_routing))
-            qspec0 = dict(spec, queries=[(q, ts, k, None)
-                                         for q, ts, k in live])
-            if mask_df is None:
-                seed_res = self._map_scan(seed_seg, qspec0,
-                                          routing=seed_routing,
-                                          mask=closure_mask)
-            else:
-                seed_asg = self.spark.createDataFrame(
-                    sorted(seed_set), "query_id int, shard long")
-                seed_res = self._scan(seed_seg, qspec0, mask_df, pred_mode,
-                                      asg_df=seed_asg)
+        # ---- main scan over the (query, shard) pairs that can still
+        # beat θ: they fall out of the in-memory ub vectors (zero jobs)
+        pairs = []
+        for q, (ush, ub) in q_ub.items():
+            th = theta.get(q)
+            keep = ush if th is None else \
+                ush[ub >= th - _THETA_GUARD * abs(th)]
+            pairs.extend((q, int(x)) for x in keep)
+        n_main = len(pairs)
+        qspec1 = dict(spec, queries=[(q, ts, k, theta.get(q))
+                                     for q, ts, k in live])
 
-            # ---- seed top-k + θ in ONE job: collect the per-query top-k
-            # over the seed shards (bounded: <= Σk rows). θ (the k-th seed
-            # score, searcher.hpp:82-91's threshold role) falls out
-            # driver-side, and the rows themselves are REUSED as the seed
-            # contribution to the final merge — the seed scan is never
-            # thrown away or re-run.
-            _t0 = time.time()
-            if mask_df is None and self._merge_bound_ok(live):
-                # bounded per-partition top-k -> one collect stage, driver
-                # merge (no exchange/window job in the seed phase)
-                seed_pdf = self._topk_merge_pdf([seed_res.toPandas()], live)
-            else:
-                seed_pdf = self._global_topk(seed_res, live).toPandas()
-            tm["seed_scan"] = round(time.time() - _t0, 3)
-            seed_rows = list(zip(seed_pdf["query_id"].astype(int),
-                                 seed_pdf["doc_id"].astype(int),
-                                 seed_pdf["score"].astype(float)))
-            n_seed_hits: dict[int, int] = {}
-            worst: dict[int, float] = {}
-            for q, _, s in seed_rows:
-                n_seed_hits[q] = n_seed_hits.get(q, 0) + 1
-                worst[q] = min(worst.get(q, s), s)
-            theta = {q: worst[q] for q, _, k in live
-                     if n_seed_hits.get(q, 0) >= k}
-            seed_df = _pdf_df(self.spark, {
-                "query_id": pd.Series([r[0] for r in seed_rows],
-                                      dtype="int32"),
-                "doc_id": pd.Series([r[1] for r in seed_rows],
-                                    dtype="int64"),
-                "score": pd.Series([r[2] for r in seed_rows],
-                                   dtype="float64")},
-                schemas.RESULTS)
+        if mask_df is None and n_main > 0.5 * len(live) * n_shards_total:
+            # Pruning is ineffective (uniform shards: bounds beat θ
+            # almost everywhere) — per-pair routing would ship ~Q x
+            # shards pairs to save nothing. Run ONE unrouted pass with
+            # per-query θ (classic WAND with a warmed heap), SKIPPING
+            # the seed pairs in the scorer (anti-routing, <= seed_shards
+            # x Q entries in the closure): the collected seed top-k
+            # supplies those shards' contribution, so no (query, doc)
+            # is scored twice and the seed work is reused, not
+            # discarded.
+            self.last_plan = {"mode": "unrouted", "n_main": n_main,
+                              "n_shards": n_shards_total,
+                              "n_queries": len(live),
+                              "mask_in_closure": closure_mask is not None,
+                              "timings": tm}
+            self._unrouted_streak += 1
+            self._unrouted_min_live = min(
+                self._unrouted_min_live or (1 << 30), len(live))
+            res = self._map_scan(seg, qspec1, anti_routing=seed_routing,
+                                 mask=closure_mask)
+            if self._merge_bound_ok(live):
+                return self._merge_topk_local(res, live, extra_pdf=seed_pdf)
+            return self._global_topk(seed_df.unionByName(res), live)
 
-            # ---- main scan over (query, shard) pairs that can still beat
-            # θ. Driver-planned: the survivor set falls out of the
-            # in-memory ub vectors (zero Spark jobs). Distributed: ONE
-            # bounded collect (limit CAP+1) both sizes the survivor set and
-            # fetches the routing when it is small. At most CAP+1 rows ever
-            # reach the driver; if the limit is hit, routing goes through
-            # the cogroup channel (or the unrouted pass) instead.
-            if q_ub is not None:
-                pairs = []
-                for q, (ush, ub) in q_ub.items():
-                    th = theta.get(q)
-                    keep = ush if th is None else \
-                        ush[ub >= th - _THETA_GUARD * abs(th)]
-                    pairs.extend((q, int(x)) for x in keep)
-                n_main = len(pairs)
-                tm["routing_peek"] = 0.0
-            else:
-                theta_df = _pdf_df(self.spark, {
-                    "query_id": pd.Series([q for q in theta], dtype="int32"),
-                    "theta": pd.Series([theta[q] for q in theta],
-                                       dtype="float64")},
-                    "query_id int, theta double")
-                main_asg = (ub_df
-                            .join(F.broadcast(theta_df), "query_id", "left")
-                            .filter(F.col("theta").isNull()
-                                    | (F.col("ub") >= F.col("theta")
-                                       - F.lit(_THETA_GUARD)
-                                       * F.abs(F.col("theta"))))
-                            .select("query_id", "shard")).persist()
-                _t0 = time.time()
-                peek = main_asg.limit(_ROUTING_CAP + 1).collect()
-                tm["routing_peek"] = round(time.time() - _t0, 3)
-                n_main = len(peek)  # == true count unless the limit was hit
-                if n_main <= _ROUTING_CAP:
-                    pairs = [(int(r["query_id"]), int(r["shard"]))
-                             for r in peek]
-            qspec1 = dict(spec, queries=[(q, ts, k, theta.get(q))
-                                         for q, ts, k in live])
+        main_pairs = [p for p in pairs if p not in seed_set]
+        routing, main_filter = _route(main_pairs, qterms)
+        # a large mask, or routing too large for the closure, rides the
+        # cogroup channel as aux rows built from the driver's pair list
+        cogroup = mask_df is not None or n_main > _ROUTING_CAP
+        self.last_plan = {"mode": "cogroup" if cogroup else "routed",
+                          "n_main": n_main,
+                          "n_main_shards": len(routing),
+                          "n_shards": n_shards_total,
+                          "n_queries": len(live),
+                          "mask_in_closure": closure_mask is not None,
+                          "timings": tm}
+        self._unrouted_streak = 0
+        self._unrouted_min_live = None
+        if not routing:
+            # every surviving pair was a seed pair: the collected seed
+            # top-k IS the answer — zero further jobs
+            return seed_df
+        main_seg = seg.filter(main_filter)
+        if cogroup:
+            main_res = self._scan(main_seg, qspec1, mask_df, pred_mode,
+                                  asg_df=self._pairs_df(main_pairs))
+            return self._materialize(
+                self._global_topk(seed_df.unionByName(main_res), live))
+        main_res = self._map_scan(main_seg, qspec1, routing=routing,
+                                  mask=closure_mask)
+        if self._merge_bound_ok(live):
+            return self._merge_topk_local(main_res, live, extra_pdf=seed_pdf)
+        return self._global_topk(seed_df.unionByName(main_res), live)
 
-            if mask_df is None and n_main > 0.5 * len(live) * n_shards_total:
-                # Pruning is ineffective (uniform shards: bounds beat θ
-                # almost everywhere) — per-pair routing would ship ~Q x
-                # shards pairs to save nothing. Run ONE unrouted pass with
-                # per-query θ (classic WAND with a warmed heap), SKIPPING
-                # the seed pairs in the scorer (anti-routing, <= seed_shards
-                # x Q entries in the closure): the collected seed top-k
-                # supplies those shards' contribution, so no (query, doc)
-                # is scored twice and the seed work is reused, not
-                # discarded.
-                self.last_plan = {"mode": "unrouted", "n_main": n_main,
-                                  "n_shards": n_shards_total,
-                                  "n_queries": len(live),
-                                  "mask_in_closure": closure_mask is not None}
-                self._unrouted_streak += 1
-                self._unrouted_min_live = min(
-                    self._unrouted_min_live or (1 << 30), len(live))
-                res = self._map_scan(seg, qspec1, anti_routing=seed_routing,
-                                     mask=closure_mask)
-                if self._merge_bound_ok(live):
-                    out = self._merge_topk_local(res, live,
-                                                 extra_pdf=seed_pdf)
-                else:
-                    out = self._global_topk(seed_df.unionByName(res), live)
-            elif mask_df is None and n_main <= _ROUTING_CAP:
-                routing: dict[int, set] = {}
-                for q, sh in pairs:
-                    if (q, sh) not in seed_set:  # seed shards already scored
-                        routing.setdefault(sh, set()).add(q)
-                self.last_plan = {"mode": "routed", "n_main": n_main,
-                                  "n_main_shards": len(routing),
-                                  "n_shards": n_shards_total,
-                                  "n_queries": len(live),
-                                  "mask_in_closure": closure_mask is not None}
-                self._unrouted_streak = 0
-                self._unrouted_min_live = None
-                if routing:
-                    qterms_of = {q: ts for q, ts, _ in live}
-                    term_shards: dict[str, set] = {}
-                    for q, sh in pairs:
-                        if (q, sh) in seed_set:
-                            continue
-                        for t in qterms_of[q]:
-                            term_shards.setdefault(t, set()).add(sh)
-                    tf_expr = _term_shard_filter(term_shards, routing)
-                    main_seg = seg.filter(tf_expr) if tf_expr is not None \
-                        else seg.filter(_shard_filter(routing))
-                    main_res = self._map_scan(main_seg, qspec1,
-                                              routing=routing,
-                                              mask=closure_mask)
-                    if self._merge_bound_ok(live):
-                        out = self._merge_topk_local(main_res, live,
-                                                     extra_pdf=seed_pdf)
-                    else:
-                        out = self._global_topk(
-                            seed_df.unionByName(main_res), live)
-                else:
-                    # every surviving pair was a seed pair: the collected
-                    # seed top-k IS the answer — zero further jobs
-                    out = seed_df
-            else:
-                # mask present, or routing too large for the driver: ship
-                # routing through the cogroup channel (never collected)
-                self.last_plan = {"mode": "cogroup", "n_main": n_main,
-                                  "n_shards": n_shards_total,
-                                  "n_queries": len(live)}
-                self._unrouted_streak = 0
-                self._unrouted_min_live = None
-                seed_asg = self.spark.createDataFrame(
-                    sorted(seed_set), "query_id int, shard long")
-                main_routed = main_asg.join(
-                    seed_asg, ["query_id", "shard"], "left_anti")
-                main_seg = seg.join(
-                    F.broadcast(main_routed.select("shard").distinct()),
-                    "shard", "left_semi")
-                main_res = self._scan(main_seg, qspec1, mask_df, pred_mode,
-                                      asg_df=main_routed)
-                out = self._materialize(
-                    self._global_topk(seed_df.unionByName(main_res), live))
+    def _upper_bounds(self, live, terms: list[str], idf: dict,
+                      require_all: bool):
+        """The plan (S2/S3 analog): per query, the shards holding any of
+        its terms with their summed admissible bounds, from the
+        directory slice of the batch's terms. -> ({query: (shards
+        int64[], ub float64[])}, None), or (None, {cap, limit, observed
+        count}) when the slice or the (query, shard) bound count exceeds
+        _PLAN_SLICE_CAP — that batch runs exhaustive."""
+        plan_terms, n_slice = self._plan_slice(terms)
+        if plan_terms is None:
+            return None, {"cap": "_PLAN_SLICE_CAP", "limit": _PLAN_SLICE_CAP,
+                          "slice_rows": n_slice}
+        q_ub, n_pairs = {}, 0
+        for q, ts, _k in live:
+            shs, contribs = [], []
+            feas = None  # AND: shards where EVERY term has postings
+            for t in ts:
+                sh_t, g_t = plan_terms[t]
+                if require_all:
+                    feas = sh_t if feas is None else \
+                        np.intersect1d(feas, sh_t, assume_unique=True)
+                if len(sh_t):
+                    shs.append(sh_t)
+                    contribs.append(idf[t] * g_t)
+            if not shs:
+                continue
+            ush, inv = np.unique(np.concatenate(shs), return_inverse=True)
+            ub = np.zeros(len(ush))
+            np.add.at(ub, inv, np.concatenate(contribs))
+            if require_all:
+                # conjunctive routing: only the intersection can match
+                # all terms — the textbook AND shard prune (the scorer's
+                # per-shard gate makes this a pure work-saver, never a
+                # correctness dependency)
+                keep = np.isin(ush, feas, assume_unique=True)
+                ush, ub = ush[keep], ub[keep]
+                if not len(ush):
+                    continue
+            n_pairs += len(ush)
+            if n_pairs <= _PLAN_SLICE_CAP:  # past the cap, only count
+                q_ub[int(q)] = (ush, ub)
+        if n_pairs > _PLAN_SLICE_CAP:
+            return None, {"cap": "_PLAN_SLICE_CAP", "limit": _PLAN_SLICE_CAP,
+                          "ub_pairs": n_pairs}
+        return q_ub, None
 
-            self.last_plan["timings"] = tm
-            self.last_plan["driver_planned"] = q_ub is not None
-            return out
-        finally:
-            for cached in (ub_df, main_asg):
-                if cached is not None:
-                    cached.unpersist()
-
-    def _plan_slice(self, terms: list[str]) -> dict | None:
-        """term -> (shards int64[], admissible tfnorm bound float64[])
-        for the query terms, read DRIVER-SIDE from the directory parquet
-        via pyarrow (term-filtered; the directory is range-partitioned
-        by term, so footers prune the read to the queried row groups).
-
-        This is the reference's actual shape — the cluster directory is
-        metadata, orders of magnitude smaller than the index
-        (searcher.hpp:181-215 ranks it in-process) — and it removes two
-        Spark jobs of serial latency from every two-phase batch (the
-        ub_df plan job and the routing peek). Bounded: returns None (→
-        distributed ub_df planning) on a remote fs or when the slice
-        exceeds _PLAN_SLICE_CAP rows. Cached per term on the warm
-        Searcher, like idf."""
-        if self._plan_disabled or not self.fs.is_local:
-            return None
-        missing = [t for t in terms if t not in self._plan_cache]
-        if missing:
+    def _meta_rows(self, dirs: list[str], schema, columns: list[str], *,
+                   terms: list[str] | None = None,
+                   term_range: tuple[str, str] | None = None) -> pa.Table:
+        """The driver-side reader of the term-sorted metadata dirs
+        (term_stats or directory, base + deltas): the `columns` of the
+        rows whose term is in `terms`, or in [lo, hi) = `term_range`,
+        plus `dir`, the row's index into `dirs`. pyarrow on a local fs
+        (footer stats prune the read to the matching row groups), else
+        one Spark scan of the same filter collected as Arrow."""
+        if self.fs.is_local:
             import pyarrow.dataset as ds
+            t = ds.field("term")
+            filt = t.isin(terms) if terms is not None else \
+                (t >= term_range[0]) & (t < term_range[1])
+            tabs = []
+            for i, d in enumerate(dirs):
+                tab = ds.dataset(self.fs.join(self.path, d),
+                                 format="parquet").to_table(columns=columns,
+                                                            filter=filt)
+                tabs.append(tab.append_column(
+                    "dir", pa.array(np.full(tab.num_rows, i, np.int32))))
+            return pa.concat_tables(tabs, promote_options="permissive")
+        cond = _in_list("term", terms) if terms is not None else \
+            (F.col("term") >= term_range[0]) & (F.col("term") < term_range[1])
+        df = None
+        for i, d in enumerate(dirs):
+            part = (self.spark.read.schema(schema)
+                    .parquet(self.fs.join(self.path, d)).filter(cond)
+                    .select(*columns, F.lit(i).cast("int").alias("dir")))
+            df = part if df is None else df.unionByName(part)
+        return df.toArrow()
 
-            from pdx_spark.functions.quantize import ZERO_PARAMS, dequantize_np
+    def _plan_slice(self, terms: list[str]) -> tuple[dict | None, int]:
+        """-> (term -> (shards int64[], admissible tfnorm bound
+        float64[]), slice rows) for the query terms, from the directory
+        (base + deltas) through _meta_rows. The u8 bounds dequantize
+        with each dir's own affine params (manifest["dir_quant"]);
+        ceil/floor quantization keeps them admissible.
+
+        The directory is metadata, orders of magnitude smaller than the
+        index, so the plan is ranked in-process as in the reference
+        (searcher.hpp:181-215). Cached per term on the warm Searcher,
+        like idf. The slice counts the cached rows of the batch's terms
+        plus the rows read for the rest; above _PLAN_SLICE_CAP the plan
+        is None and nothing new is cached."""
+        from pdx_spark.functions.quantize import ZERO_PARAMS, dequantize_np
+        missing = [t for t in terms if t not in self._plan_cache]
+        n_slice = sum(len(self._plan_cache[t][0]) for t in terms
+                      if t in self._plan_cache)
+        dirs = [self.manifest.get("dir_base", "directory")] \
+            + self.manifest.get("dir_deltas", [])
+        tab = self._meta_rows(
+            dirs, schemas.DIRECTORY, ["term", "shard", "max_tf_q", "min_dl_q"],
+            terms=missing) if missing else None
+        n_slice += 0 if tab is None else tab.num_rows
+        if n_slice > _PLAN_SLICE_CAP:
+            return None, n_slice  # hot terms x huge index
+        if missing:
             dq = self.manifest.get("dir_quant", {})
-            dirs = [self.manifest.get("dir_base", "directory")] \
-                + self.manifest.get("dir_deltas", [])
-            frames, total = [], 0
-            for d in dirs:
-                p = dq.get(d, ZERO_PARAMS)
-                dset = ds.dataset(self.fs.join(self.path, d),
-                                  format="parquet")
-                tab = dset.to_table(
-                    columns=["term", "shard", "max_tf_q", "min_dl_q"],
-                    filter=ds.field("term").isin(missing))
-                total += tab.num_rows
-                if total > _PLAN_SLICE_CAP:
-                    self._plan_disabled = True  # hot terms x huge index
-                    return None
-                pdf = tab.to_pandas()
-                pdf["max_tf"] = dequantize_np(
-                    pdf["max_tf_q"].to_numpy(), p["tf_base"], p["tf_scale"])
-                pdf["min_dl"] = dequantize_np(
-                    pdf["min_dl_q"].to_numpy(), p["dl_base"], p["dl_scale"])
-                frames.append(pdf[["term", "shard", "max_tf", "min_dl"]])
-            allp = frames[0] if len(frames) == 1 else pd.concat(
-                frames, ignore_index=True)
+            pdf = tab.to_pandas()
+            which = pdf["dir"].to_numpy()
+            tf_q, dl_q = pdf["max_tf_q"].to_numpy(), pdf["min_dl_q"].to_numpy()
+            max_tf, min_dl = np.empty(len(pdf)), np.empty(len(pdf))
+            for i, d in enumerate(dirs):
+                p, m = dq.get(d, ZERO_PARAMS), which == i
+                max_tf[m] = dequantize_np(tf_q[m], p["tf_base"], p["tf_scale"])
+                min_dl[m] = dequantize_np(dl_q[m], p["dl_base"], p["dl_scale"])
+            pdf["max_tf"], pdf["min_dl"] = max_tf, min_dl
             if len(dirs) > 1:
                 # delta dirs can repeat a (term, shard) key; collapse to
-                # one admissible bound (same as the ub_df dedup)
-                allp = allp.groupby(["term", "shard"], as_index=False) \
+                # one admissible bound so ub isn't inflated
+                pdf = pdf.groupby(["term", "shard"], as_index=False) \
                     .agg(max_tf=("max_tf", "max"), min_dl=("min_dl", "min"))
-            for t, grp in allp.groupby("term", sort=False):
+            for t, grp in pdf.groupby("term", sort=False):
                 g = tfnorm_np(grp["max_tf"].to_numpy(),
                               grp["min_dl"].to_numpy(),
                               self.avgdl, self.params)
@@ -1312,43 +1222,37 @@ class Searcher:
             for t in missing:  # absent terms cache as empty
                 self._plan_cache.setdefault(
                     t, (np.empty(0, dtype=np.int64), np.empty(0)))
-        return {t: self._plan_cache[t] for t in terms}
+        return {t: self._plan_cache[t] for t in terms}, n_slice
+
+    def _live_df(self, **where) -> dict[str, int]:
+        """term -> df summed over term_stats base + deltas (delete
+        deltas are negative) for the live terms (df > 0) matching
+        `where` (_meta_rows' terms / term_range)."""
+        dirs = [self.manifest.get("ts_base", "term_stats")] \
+            + self.manifest.get("ts_deltas", [])
+        tab = self._meta_rows(dirs, schemas.TERM_STATS, ["term", "df"],
+                              **where)
+        df_by_term: dict[str, int] = {}
+        for t, c in zip(tab["term"].to_pylist(), tab["df"].to_pylist()):
+            df_by_term[t] = df_by_term.get(t, 0) + int(c)
+        return {t: c for t, c in df_by_term.items() if c > 0}
 
     def expand_prefix(self, prefix: str, cap: int = 64) -> list[str]:
-        """Vocabulary terms starting with `prefix`, for prefix/wildcard
-        queries (`search_batch([(0, " ".join(terms), k)])` then scores
-        the expansion as a BM25 OR — Lucene's scoring-BooleanQuery
-        rewrite). term_stats is written term-sorted, so on a local index
-        the expansion is a pyarrow RANGE read ([prefix, prefix+1) in
-        byte order) pruned by row-group stats — a metadata lookup, not a
-        vocabulary scan; remote indexes use the Spark merged view with
-        the same range predicate. Raises if the expansion exceeds `cap`
-        (an unanchored prefix on a web vocabulary is a user error, not
-        a silent 10^6-term query)."""
+        """Live vocabulary terms starting with `prefix`, for prefix/
+        wildcard queries (`search_batch([(0, " ".join(terms), k)])` then
+        scores the expansion as a BM25 OR — Lucene's scoring-BooleanQuery
+        rewrite). term_stats is written term-sorted, so the expansion is
+        a RANGE read ([prefix, prefix+1) in byte order) pruned by
+        row-group stats — a metadata lookup, not a vocabulary scan.
+        Terms whose summed df is <= 0 (every holding doc deleted) are
+        not returned. Raises if the expansion exceeds `cap` (an
+        unanchored prefix on a web vocabulary is a user error, not a
+        silent 10^6-term query)."""
         if not prefix or not (prefix.isascii() and prefix.isalnum()):
             raise ValueError(f"prefix must be a token prefix: {prefix!r}")
         prefix = prefix.lower()
         hi = prefix[:-1] + chr(ord(prefix[-1]) + 1)
-        dirs = [self.manifest.get("ts_base", "term_stats")] \
-            + self.manifest.get("ts_deltas", [])
-        terms: set[str] = set()
-        if self.fs.is_local:
-            import pyarrow.dataset as ds
-            for d in dirs:
-                dset = ds.dataset(self.fs.join(self.path, d),
-                                  format="parquet")
-                tab = dset.to_table(
-                    columns=["term"],
-                    filter=(ds.field("term") >= prefix)
-                    & (ds.field("term") < hi))
-                terms.update(tab["term"].to_pylist())
-                if len(terms) > cap:
-                    break
-        else:
-            rows = (self.term_stats()
-                    .filter((F.col("term") >= prefix) & (F.col("term") < hi))
-                    .select("term").limit(cap + 1).collect())
-            terms = {r["term"] for r in rows}
+        terms = self._live_df(term_range=(prefix, hi))
         if len(terms) > cap:
             raise ValueError(
                 f"prefix {prefix!r} expands to > {cap} terms; "
@@ -1357,40 +1261,25 @@ class Searcher:
 
     def _idf_lookup(self, terms: list[str]) -> dict[str, float]:
         """term -> idf for the query terms, from term_stats (base +
-        deltas). Driver-cached per Searcher (N is load-time fixed, so idf
-        is too). Cold terms resolve via a pyarrow footer-pruned read on
-        local indexes — a millisecond metadata lookup instead of a Spark
-        job — falling back to the Spark merged view elsewhere. OOV terms
-        are cached as absent (df<=0) so repeats skip the lookup too."""
+        deltas) through _meta_rows. Driver-cached per Searcher (N is
+        load-time fixed, so idf is too). OOV and dead terms are cached
+        as absent (df<=0) so repeats skip the lookup too."""
         missing = [t for t in terms if t not in self._idf_cache]
         if missing:
-            dirs = [self.manifest.get("ts_base", "term_stats")] \
-                + self.manifest.get("ts_deltas", [])
-            df_by_term: dict[str, int] = {}
-            if self.fs.is_local:
-                import pyarrow.dataset as ds
-                for d in dirs:
-                    dset = ds.dataset(self.fs.join(self.path, d),
-                                      format="parquet")
-                    tab = dset.to_table(
-                        columns=["term", "df"],
-                        filter=ds.field("term").isin(missing))
-                    for t, c in zip(tab["term"].to_pylist(),
-                                    tab["df"].to_pylist()):
-                        df_by_term[t] = df_by_term.get(t, 0) + int(c)
-            else:
-                rows = (self.term_stats()
-                        .filter(_in_list("term", missing))
-                        .select("term", "df").collect())
-                for r in rows:
-                    df_by_term[r["term"]] = int(r["df"])
+            df_by_term = self._live_df(terms=missing)
             for t in missing:
                 d = df_by_term.get(t, 0)
                 self._idf_cache[t] = (
                     float(idf_np(d, self.n_docs)) if d > 0 else float("nan"))
-        out = {t: v for t in terms
-               if not np.isnan(v := self._idf_cache[t])}
-        return out
+        return {t: v for t in terms if not np.isnan(v := self._idf_cache[t])}
+
+    def _pairs_df(self, pairs) -> DataFrame:
+        """Driver (query, shard) pairs -> the asg_df frame of _scan."""
+        qs, shs = zip(*pairs) if pairs else ((), ())
+        return _pdf_df(self.spark, {
+            "query_id": pd.Series(qs, dtype="int32"),
+            "shard": pd.Series(shs, dtype="int64")},
+            "query_id int, shard long")
 
     def _materialize(self, df: DataFrame) -> DataFrame:
         pdf = df.toPandas()  # Arrow both ways; <= sum(k) rows by construction
@@ -1422,7 +1311,9 @@ class Searcher:
         (searcher.hpp:284-372) rather than running a separate routing
         pass, and a selective predicate or a short tombstone list is
         exactly that case — forcing it through cogroup forfeits the
-        shuffle-free map-scan and the driver-side planner. Returns
+        shuffle-free map-scan and the unrouted pass (both need the mask
+        in the closure). Every batch plans on the driver either way;
+        this cap only picks the channel the mask travels in. Returns
         {mode, ids sorted int64[], p int8[]} when the mask has at most
         _ROUTING_CAP rows, else None (cogroup carries it). The sample-
         based selectivity estimate skips the bounded peek when the mask
@@ -1512,9 +1403,9 @@ class Searcher:
               predicate_mode: str | None,
               asg_df: DataFrame | None = None) -> DataFrame:
         """Cogroup scan for masks or routing too large for the closure:
-        mask rows (mask_df) and query-routing rows (asg_df) travel as one
-        aux frame of (shard, kind, id, p) rows — cogroup pairs exactly two
-        frames — and are never collected to the driver."""
+        mask rows (mask_df, never collected to the driver) and the
+        driver's query-routing pairs (asg_df) travel as one aux frame of
+        (shard, kind, id, p) rows — cogroup pairs exactly two frames."""
         aux = [] if mask_df is None else [mask_df]
         if asg_df is not None:
             aux.append(asg_df.select(

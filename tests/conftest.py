@@ -8,10 +8,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pdx_spark.config import get_spark  # noqa: E402
 
 
+def _test_cores() -> int:
+    """PDX_TEST_CORES if set, else SPARK_GRAFT_CPUS (the host's core
+    count as the Tier-1 command exports it), else the usable cores."""
+    env = os.environ.get("PDX_TEST_CORES") or os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cores=int(os.environ.get("PDX_TEST_CORES", "8")),
-                  app="pdx_spark_tests")
+    s = get_spark(cores=_test_cores(), app="pdx_spark_tests")
     yield s
     s.stop()
 

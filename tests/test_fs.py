@@ -12,6 +12,8 @@ Covers:
     silently produce empty results.
   - map-scan granularity: a segment file with >1 row group flips the
     engine to the cogroup scan and results stay rank-identical.
+  - driver planning on a URI: the same index loaded as a path and as a
+    file:// URI plans every pruned batch on the driver.
 """
 
 import json
@@ -104,6 +106,57 @@ def test_file_uri_roundtrip(spark, tiny_pdf, tmp_path):
         assert_rank_identical(got, ora3.topk(qtext, k), f"uri-compact q{qid}")
     res.unpersist()
 
+
+
+def _rows(df):
+    return sorted((r["query_id"], r["doc_id"], round(r["score"], 9))
+                  for r in df.collect())
+
+
+def test_uri_index_plans_on_the_driver(spark, tiny_pdf, tiny_oracle, tmp_path,
+                                       monkeypatch):
+    """One index loaded as a plain path and as a file:// URI. Both plan
+    every pruned batch on the driver: a warm two-phase batch on the URI
+    Searcher runs at most the seed and main scan jobs and returns the
+    local Searcher's rows. A predicate batch whose mask exceeds
+    _ROUTING_CAP routes through the cogroup channel from the driver's
+    (query, shard) pairs and matches the oracle."""
+    from pdx_spark.operators import searcher as S
+
+    path = str(tmp_path / "idx_plan")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(tiny_pdf, schema=TRANSCRIPTS), path)
+    local = Searcher.load(spark, path)
+    uri = Searcher.load(spark, "file://" + path)
+    assert not uri.fs.is_local
+    kw = dict(force_two_phase=True, two_phase_min_shards=2)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        return len(tracker.getJobIdsForGroup(None))
+
+    uri.search_batch(QUERIES, **kw).collect()  # warms idf + plan caches
+    n0 = jobs()
+    got = uri.search_batch(QUERIES, **kw)
+    assert jobs() - n0 <= 2, "planning a URI batch launched Spark jobs"
+    assert uri.last_plan["mode"] in ("routed", "unrouted"), uri.last_plan
+    want = local.search_batch(QUERIES, **kw)
+    assert local.last_plan["mode"] == uri.last_plan["mode"]
+    assert _rows(got) == _rows(want)
+
+    pdf = tiny_pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    allowed = {int(i) for i in pdf.index[pdf["role"] == "assistant"]}
+    monkeypatch.setattr(S, "_ROUTING_CAP", 2)
+    res = uri.search_batch(QUERIES, predicate="role = 'assistant'", **kw)
+    assert uri.last_plan["mode"] == "cogroup", uri.last_plan
+    res = res.persist()
+    for qid, qtext, k in QUERIES:
+        assert_rank_identical(collect_topk(res, qid),
+                              tiny_oracle.topk(qtext, k, allowed=allowed),
+                              f"uri cogroup q{qid}")
+    res.unpersist()
+    uri.close()
+    local.close()
 
 def test_compact_crash_before_commit_is_harmless(spark, tiny_pdf, tmp_path,
                                                  monkeypatch):

@@ -103,6 +103,29 @@ def test_delete_then_absent_and_compact(spark, tmp_path, corpus_pdfs):
     res.unpersist()
 
 
+def test_expand_prefix_drops_fully_deleted_terms(spark, tmp_path,
+                                                 corpus_pdfs):
+    """A term whose only holding doc is deleted leaves prefix expansion
+    at once: df is summed over term_stats base and delete deltas and
+    terms at <= 0 are dropped, on a local path and a file:// URI alike."""
+    full, head, tail = corpus_pdfs
+    path = str(tmp_path / "idx_prefix_del")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    hits = Searcher.load(spark, path).search("needle000000", k=5)
+    assert len(hits) == 1
+    Maintainer(spark, path).delete(spark.createDataFrame(
+        [(int(hits[0][0]),)], "doc_id long"))
+
+    h = head.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    live = _oracle_for(h.drop(index=int(hits[0][0])))
+    want = sorted(t for t in live.df if t.startswith("needle"))
+    assert want and "needle000000" not in want
+    for p in (path, "file://" + path):
+        s = Searcher.load(spark, p)
+        assert s.expand_prefix("needle000000") == [], p
+        assert s.expand_prefix("needle") == want, p
+
 def test_resume_equals_fresh(spark, tmp_path, corpus_pdfs):
     """Kill a build after chunk 0 of 3; resume; verify identical segment
     content vs an uninterrupted build (P1/P2 + north-rule checkpoint)."""

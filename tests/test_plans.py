@@ -53,8 +53,8 @@ def test_choose_filter_mode(spark, searcher):
 def test_pruning_routes_selective_queries_at_high_shard_count(
         spark, tiny_pdf, tiny_oracle, tmp_path):
     """At > 64 shards the planner must still PRUNE for selective queries
-    (no exhaustive fallback exists at any shard count — planning is
-    distributed): rare-term queries route to a small fraction of shards,
+    (only a batch whose plan exceeds _PLAN_SLICE_CAP runs exhaustive):
+    rare-term queries route to a small fraction of shards,
     and results stay rank-identical. Uniform hot batches instead pick
     the unrouted pass. last_plan is the observability hook."""
     from pdx_spark.config import IndexConfig
@@ -97,8 +97,8 @@ def test_search_batch_is_lazy_and_directory_cache_warms(spark, tiny_index):
     """Round-3 judge task 4/10, amended by the round-6 driver-side
     merge: a batch costs a BOUNDED number of Spark jobs (the scan's one
     collect — merge and count add none), and a warm Searcher reuses its
-    cached directory across two-phase batches instead of re-reading
-    parquet. (Until r6 this asserted plan-time laziness; the driver
+    per-term directory slice across two-phase batches instead of
+    re-reading parquet. (Until r6 this asserted plan-time laziness; the driver
     merge deliberately runs the bounded collect at call time — the
     docstring's 'materialized, <= Σk rows' contract — trading laziness
     for one fewer exchange+window stage per batch.)"""
@@ -122,11 +122,11 @@ def test_search_batch_is_lazy_and_directory_cache_warms(spark, tiny_index):
     # per scan wave; a regression would show as >= 2 more here)
     assert jobs() - n0 <= 3, "count() re-ran the scan"
 
-    # two-phase on a LOCAL index plans driver-side (pyarrow directory
-    # slice, zero Spark planning jobs); the slice caches per term
+    # two-phase plans driver-side (pyarrow directory slice, zero Spark
+    # planning jobs); the slice caches per term
     s.search_batch([(0, "w2500", 5)], force_two_phase=True,
                    two_phase_min_shards=2).collect()
-    assert s.last_plan["driver_planned"] is True
+    assert s.last_plan["mode"] == "routed", s.last_plan
     assert "w2500" in s._plan_cache
     n1 = jobs()
     r2 = s.search_batch([(1, "w2500", 5)], force_two_phase=True,
@@ -137,29 +137,72 @@ def test_search_batch_is_lazy_and_directory_cache_warms(spark, tiny_index):
     assert jobs() - n1 <= 2, "planning launched extra Spark jobs"
     r2.collect()
 
-    # a SMALL mask no longer forfeits driver planning: it rides the
-    # scorer closure and the batch keeps the pyarrow plan + map scan
+    # a SMALL mask rides the scorer closure and the batch keeps the
+    # routed map scan
     s.search_batch([(0, "w2500", 5)], predicate="role = 'user'",
                    force_two_phase=True, two_phase_min_shards=2).collect()
-    assert s.last_plan["driver_planned"] is True
+    assert s.last_plan["mode"] == "routed", s.last_plan
     assert s.last_plan.get("mask_in_closure") is True
 
-    # a mask ABOVE the closure cap takes the distributed plan: the
-    # dequantized directory frame persists and is reused across batches
+    # a mask ABOVE the closure cap takes the cogroup channel, still
+    # planned on the driver from the warm per-term cache: a warm batch
+    # runs the selectivity count, the seed scan and the main scan only
     import pdx_spark.operators.searcher as S
     old_cap = S._ROUTING_CAP
     S._ROUTING_CAP = 2
     try:
         s.search_batch([(0, "w2500", 5)], predicate="role = 'user'",
                        force_two_phase=True, two_phase_min_shards=2).collect()
-        assert s.last_plan["driver_planned"] is False
-        d1 = s._dir_df
-        assert d1 is not None and d1.is_cached
-        s.search_batch([(1, "w2600", 5)], predicate="role = 'user'",
+        assert s.last_plan["mode"] == "cogroup", s.last_plan
+        n2 = jobs()
+        s.search_batch([(1, "w2500", 5)], predicate="role = 'user'",
                        force_two_phase=True, two_phase_min_shards=2).collect()
-        assert s._dir_df is d1, "directory cache was rebuilt"
+        assert s.last_plan["mode"] == "cogroup", s.last_plan
+        # measured 8 at local[4] and local[8] (selectivity count, seed
+        # cogroup scan and its window merge; every surviving pair is a
+        # seed pair); the distributed planner this replaced ran 23
+        assert jobs() - n2 <= 8, "cogroup batch re-planned"
     finally:
         S._ROUTING_CAP = old_cap
+
+
+def test_plan_slice_cap_is_per_batch(spark, tiny_index, tiny_oracle,
+                                     monkeypatch):
+    """A batch whose directory slice, or (query, shard) bound count,
+    exceeds _PLAN_SLICE_CAP runs exhaustive and last_plan names the cap
+    with the observed count; the next batch under the cap on the same
+    Searcher plans two-phase again. Results are rank-identical."""
+    import pdx_spark.operators.searcher as S
+    from tests.test_engine import assert_rank_identical, collect_topk
+
+    s = Searcher.load(spark, tiny_index)
+    kw = dict(force_two_phase=True, two_phase_min_shards=2)
+    queries = [(0, "w0003", 10), (1, "w0003", 10)]
+    n_shards = len(s._plan_slice(["w0003"])[0]["w0003"][0])
+    assert n_shards > 1
+    cap = S._PLAN_SLICE_CAP
+
+    def run(limit):
+        monkeypatch.setattr(S, "_PLAN_SLICE_CAP", limit)
+        res = s.search_batch(queries, **kw).persist()
+        for qid, qtext, k in queries:
+            assert_rank_identical(collect_topk(res, qid),
+                                  tiny_oracle.topk(qtext, k), f"q{qid}")
+        res.unpersist()
+        return s.last_plan
+
+    plan = run(0)  # the slice alone is over the cap
+    assert plan["mode"] == "exhaustive", plan
+    assert plan["plan_cap"] == {"cap": "_PLAN_SLICE_CAP", "limit": 0,
+                                "slice_rows": n_shards}
+    # the slice fits, the two queries' bounds do not
+    plan = run(n_shards)
+    assert plan["mode"] == "exhaustive", plan
+    assert plan["plan_cap"] == {"cap": "_PLAN_SLICE_CAP", "limit": n_shards,
+                                "ub_pairs": 2 * n_shards}
+    plan = run(cap)
+    assert plan["mode"] in ("routed", "unrouted"), plan
+    assert "plan_cap" not in plan
 
 
 def test_two_phase_pruning_wins_on_topic_clustered_corpus(spark, tmp_path):

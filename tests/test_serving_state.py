@@ -42,14 +42,22 @@ def test_concurrent_batches_keep_their_options(spark, tiny_index):
 
 
 def test_failed_batch_releases_cached_frames(spark, tiny_index, monkeypatch):
-    """A batch that fails after ub_df is persisted leaves no cached frame
-    behind: the persistent RDDs are those of the warm-up batch (the warm
-    directory and selectivity-sample caches stay, by design)."""
-    monkeypatch.setattr(S, "_ROUTING_CAP", 2)  # mask + routing via ub_df
+    """A cogroup batch that fails mid-scan leaves no cached frame
+    behind: the persistent RDDs are those of the warm-up batch (the
+    selectivity-sample cache stays, by design, until close())."""
+    monkeypatch.setattr(S, "_ROUTING_CAP", 2)  # mask + routing via cogroup
     s = Searcher.load(spark, tiny_index)
     kw = dict(predicate="role = 'assistant'", **PRUNED)
+    tracker = spark.sparkContext.statusTracker()
     s.search_batch(QUERIES[:5], **kw).collect()
-    assert s.last_plan["driver_planned"] is False  # planned via ub_df
+    n0 = len(tracker.getJobIdsForGroup(None))
+    s.search_batch(QUERIES[:5], **kw).collect()
+    assert s.last_plan["mode"] == "cogroup", s.last_plan
+    # warm: planning runs on the driver and adds no Spark job. Measured
+    # 12 jobs at local[4] and local[8] (selectivity count, seed and main
+    # cogroup scans with their window merges); the distributed planner
+    # this replaced ran 24
+    assert len(tracker.getJobIdsForGroup(None)) - n0 <= 12
     jsc = spark.sparkContext._jsc
     warm = set(jsc.getPersistentRDDs().keys())
 
@@ -59,3 +67,20 @@ def test_failed_batch_releases_cached_frames(spark, tiny_index, monkeypatch):
     with pytest.raises(RuntimeError, match="scan failed"):
         s.search_batch(QUERIES[:5], **kw)
     assert set(jsc.getPersistentRDDs().keys()) <= warm
+
+
+def test_close_releases_persisted_frames(spark, tiny_index):
+    """After a predicate batch, close() (here through the context
+    manager) leaves no persistent RDD from that Searcher."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with Searcher.load(spark, tiny_index) as s:
+        s.search_batch(QUERIES[:5], predicate="role = 'assistant'",
+                       **PRUNED).collect()
+        sample = s._sel_sample[0]
+        assert sample.is_cached
+    assert s._sel_sample is None and not sample.is_cached
+    # an earlier Searcher over the same index may have cached the same
+    # docs plan; Spark shares one entry, so the set can only shrink
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+    s.close()  # idempotent
