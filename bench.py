@@ -26,8 +26,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pdx_spark.config import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 N_QUERIES = int(os.environ.get("PDX_BENCH_QUERIES", "200"))
 N_AMORTIZED = int(os.environ.get("PDX_BENCH_QUERIES_BIG", "800"))
 

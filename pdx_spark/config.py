@@ -67,15 +67,30 @@ def manifest_params(bm25: BM25Params, cfg: IndexConfig) -> dict:
             "token_pattern": TOKEN_PATTERN}
 
 
+def default_cores() -> int:
+    """SPARK_GRAFT_CPUS if set, else the cores this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def default_driver_mem(ram_bytes: int | None = None) -> str:
+    """PDX_SPARK_DRIVER_MEM if set, else a quarter of `ram_bytes` (the
+    host's RAM) clamped to 1-8 GiB."""
+    ram = ram_bytes or os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return os.environ.get("PDX_SPARK_DRIVER_MEM") \
+        or f"{max(1, min(8, int(ram / (1 << 30) // 4)))}g"
+
+
 def get_spark(cores: int | None = None, app: str = "pdx_spark",
               shuffle_partitions: int | None = None):
-    """Session factory used by tests/bench. local[N] in the sandbox; on a
+    """Session factory used by tests/bench: local[cores] (default
+    default_cores()) with default_driver_mem() of driver memory. On a
     real cluster callers pass their own session — nothing here assumes
     local mode except the master default."""
     from pyspark.sql import SparkSession
 
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
@@ -84,7 +99,7 @@ def get_spark(cores: int | None = None, app: str = "pdx_spark",
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("PDX_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

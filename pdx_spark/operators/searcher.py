@@ -21,10 +21,17 @@ Mirrors the reference's pruned scan (PDXearch::Search,
   4. Main scan ("Warmup/Prune", searcher.hpp:376-540): per-(query,
      shard) assignments where the upper bound can still beat θ route
      each shard to only its own queries (work = Σ_q |shards_q|, not
-     |shards| × Q). Scans are SHUFFLE-FREE: segment files hold complete
-     shards (the encode shuffle wrote them that way), so the scorer
-     runs as mapInArrow directly on the parquet scan with routing and
-     small masks in the closure. One Arrow scoring body
+     |shards| × Q). Routing reaches the JVM as data: the batch's term
+     set and the routed shard set are InSet predicates (_in_list,
+     _id_set), so every batch runs the same generated code — one fixed
+     kernel fed a positions array, as searcher.hpp:104-117 — and the
+     shard set still skips segment files at parquet row-group stats.
+     The scorer makes the row-precise (term, shard) cut before it
+     decodes any payload. Scans are SHUFFLE-FREE:
+     segment files hold complete shards (the encode shuffle wrote
+     them that way), so the scorer runs as mapInArrow directly on
+     the parquet scan with routing and small masks in the closure.
+     One Arrow scoring body
      (_arrow_scorer) serves every channel: the map scan, a per-shard
      groupBy when files may hold several row groups, and the cogroup
      channel for masks and routing above _ROUTING_CAP. When θ cannot
@@ -59,12 +66,14 @@ block bytes through Arrow/numpy) — see BENCH.md's bandwidth ceiling.
 
 from __future__ import annotations
 
+import functools
 import time
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -128,112 +137,77 @@ _KIND_QUERY = 1  # (shard, kind=1, id=query_id): per-shard query routing
 _ROUTED_TASK_BYTES = 2 * 1024 * 1024
 
 
-def _in_list(col: str, values) -> "F.Column":
-    """One-round-trip IN predicate over a python string list.
+# Catalyst keeps IN lists of <= inSetConversionThreshold (10) values as
+# `In`, inlining long literals into generated Java (new classes per id
+# set); longer lists become `InSet`, whose hash set the generated code
+# takes by reference. Sets are padded with _SET_PAD never-held values;
+# a shard set is split into _SET_RUNS runs (see _id_set).
+_SET_PAD = 11
+_SET_RUNS = 8
 
-    `Column.isin(*values)` builds one JVM literal per element — one py4j
-    round-trip each (measured: a 3,200-query batch carries ~2,900
-    distinct terms and spent 8-10 s of DRIVER-SERIAL time just building
-    the filter — pure fixed cost that does not shrink with executors).
-    Emitting a single SQL IN list is one parse call; Catalyst still
-    converts it to the same InSet. Values are tokenizer output
-    ([a-z0-9]+), but escape defensively anyway."""
-    if not values:
-        return F.lit(False)
+
+def _in_list(col: str, values) -> "F.Column":
+    """IN predicate over a python string list as ONE SQL parse call
+    (`Column.isin` pays a py4j round trip per value: 8-10 s of driver
+    time for a 2,900-term batch), padded to plan as InSet. Values are
+    tokenizer output ([a-z0-9]+), so '#i' pads never match; escape
+    defensively anyway."""
+    vals = [*values, *(f"#{i}" for i in range(_SET_PAD))]
     esc = ",".join("'" + str(v).replace("\\", "\\\\").replace("'", "\\'")
-                   + "'" for v in values)
+                   + "'" for v in vals)
     return F.expr(f"{col} IN ({esc})")
 
 
-def _shard_ranges(shards) -> list[list[int]]:
-    """Sorted shard ids compressed into contiguous [lo, hi] runs."""
-    runs: list[list[int]] = []
-    for sh in sorted(int(x) for x in shards):
-        if runs and sh == runs[-1][1] + 1:
-            runs[-1][1] = sh
-        else:
-            runs.append([sh, sh])
-    return runs
+def _id_set(col: str, ids) -> "F.Column":
+    """`col IN ids` over int64 ids (shards) as data, not SQL text: every
+    id set reaches the JVM in one byte buffer (a constant number of
+    py4j calls), padded to plan as InSet. Parquet checks an `In` against
+    row-group stats by its values' [min, max] only, so the ids are cut
+    at their _SET_RUNS - 1 widest gaps into runs, each an InSet padded
+    below every shard AND one padded above (the conjunction's envelope
+    is the run's own), OR-ed in a fixed shape: stats skip the segment
+    files between runs unopened (files hold contiguous shard ranges),
+    shard dictionaries those inside a run holding no routed shard."""
+    from pyspark.sql.classic.column import Column
+    sc = SparkContext._active_spark_context
+    jvm = sc._jvm
+    ids = np.unique(np.fromiter((int(i) for i in ids), np.int64))
+    gaps = np.diff(ids)
+    cuts = np.sort(np.argsort(-gaps, kind="stable")[:_SET_RUNS - 1]) + 1
+    runs = np.split(ids, cuts[gaps[cuts - 1] > 1])
+    runs += [ids[:0]] * (_SET_RUNS - len(runs))
+    # pads differ per run: Catalyst folds repeated disjuncts, which
+    # would make the plan's shape follow the run count
+    pad = np.arange(1, _SET_PAD + 1)
+    sets = [np.concatenate([r, p]) for i, r in enumerate(runs)
+            for p in (-pad - _SET_PAD * i, pad + _SET_PAD * i + (1 << 62))]
+    vals = np.concatenate(sets).astype(">i8")
+    arr = sc._gateway.new_array(jvm.long, len(vals))
+    jvm.java.nio.ByteBuffer.wrap(bytearray(vals.tobytes())) \
+        .asLongBuffer().get(arr)
+    boxed = jvm.java.util.Arrays.stream(arr).boxed().toArray()
+    # composed on the JVM Columns: pyspark's Column operators cost ~10
+    # py4j round trips each (call-site capture), these one
+    jc, ends = F.col(col)._jc, np.cumsum([len(x) for x in sets]).tolist()
+    ins = [jc.isin(boxed[a:b]) for a, b in zip([0] + ends[:-1], ends)]
+    return Column(functools.reduce(
+        lambda a, b: getattr(a, "or")(b),
+        (getattr(lo, "and")(hi) for lo, hi in zip(ins[::2], ins[1::2]))))
 
 
-def _shard_sql(runs: list[list[int]]) -> str:
-    if not runs:
-        return "false"
-    return "(" + " OR ".join(
-        f"shard = {a}" if a == b else f"shard BETWEEN {a} AND {b}"
-        for a, b in runs) + ")"
-
-
-def _shard_filter(shards) -> "F.Column":
-    """Predicate selecting a shard set, compressed into contiguous
-    BETWEEN-ranges. Two reasons over a plain isin: (1) Spark only pushes
-    IN lists below spark.sql.parquet.pushdown.inFilterThreshold (10!) to
-    the parquet reader — above that the filter runs post-scan and the
-    routed scan silently reads EVERY file; range predicates push down
-    regardless, and segment files hold contiguous shard ranges (the
-    range-partitioned encode), so pushed ranges skip whole files via
-    row-group stats. (2) at 10^12-doc scale a routing's shard list can
-    be 10^5 ids — a handful of BETWEEN runs is a constant-size plan.
-    Built as ONE SQL string -> one py4j round trip (Column-composition
-    is one driver round trip per operator — measured seconds per batch
-    at a few hundred disjuncts)."""
-    return F.expr(_shard_sql(_shard_ranges(shards)))
-
-
-# disjunct budget for the per-term row filter; above this the plan falls
-# back to the (coarser) union-of-shards filter to keep codegen bounded
-_TERM_FILTER_MAX_RUNS = 512
-
-
-def _term_shard_filter(term_shards: dict[str, set]) -> "F.Column | None":
-    """Row-precise JVM filter for the routed main scan:
-    OR_t (term = t AND shard IN ranges_t). The union-of-shards filter
-    alone is self-defeating on batches whose queries route to DIFFERENT
-    shard sets (16 queries x 16 disjoint topics = the union covers the
-    whole corpus): every query term's rows in every unioned shard cross
-    the Arrow boundary only to be dropped by the per-query routing in
-    the scorer. This predicate drops them in the JVM scan instead —
-    rows shipped to python shrink from |union| x |terms| to
-    Σ_t |shards_t| — and it composes with row-group pruning (term and
-    shard stats both evaluated per file). Returns None when the
-    disjunct budget is exceeded (fall back to the union filter).
-
-    Implementation: the run budget is counted BEFORE any expression is
-    built (pure python), and the predicate is ONE SQL string parsed by
-    one F.expr call. The original Column-composition paid ~4 py4j
-    driver round trips per term and, worse, paid them even on batches
-    that would bail to None — ~3s of untimed driver-serial latency per
-    200-query forced-two-phase batch (the round-4 bench regression)."""
-    per_term: list[tuple[str, list[list[int]]]] = []
-    total_runs = 0
-    for t, shards in term_shards.items():
-        runs = _shard_ranges(shards)
-        total_runs += len(runs)
-        if total_runs > _TERM_FILTER_MAX_RUNS:
-            return None
-        per_term.append((t, runs))
-    if not per_term:
-        return F.lit(False)
-    parts = []
-    for t, runs in per_term:
-        # tokens are [a-z0-9]+ runs (tokenize.py) — assert, don't trust
-        assert t.isascii() and t.isalnum(), t
-        parts.append(f"(term = '{t}' AND {_shard_sql(runs)})")
-    return F.expr("(" + " OR ".join(parts) + ")")
-
-
-def _route(pairs, qterms: dict) -> tuple[dict[int, set], "F.Column"]:
-    """(query, shard) pairs -> (shard -> query set routing, the segment
-    row filter selecting those pairs' term rows: _term_shard_filter, or
-    the union-of-shards filter above its disjunct budget)."""
+def _route(pairs) -> dict[int, set]:
+    """(query, shard) pairs -> shard -> query set routing."""
     routing: dict[int, set] = {}
-    term_shards: dict[str, set] = {}
     for q, sh in pairs:
         routing.setdefault(sh, set()).add(q)
-        for t in qterms[q]:
-            term_shards.setdefault(t, set()).add(sh)
-    expr = _term_shard_filter(term_shards)
-    return routing, expr if expr is not None else _shard_filter(routing)
+    return routing
+
+
+def _term_runs(terms: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(starts, ends) of the equal-term runs of a term-sorted array."""
+    change = np.nonzero(terms[1:] != terms[:-1])[0] + 1
+    return (np.concatenate([[0], change]),
+            np.concatenate([change, [len(terms)]]))
 
 
 def _results_table(q, d, s) -> pa.Table:
@@ -297,6 +271,7 @@ def _arrow_scorer(spec: dict):
     min_match = spec["min_match"]
     count_matches = require_all or min_match > 1
     all_qids = {q for q, _, _, _ in queries}
+    terms_of = {q: ts for q, ts, _, _ in queries}
     kmap = {q: k for q, _, k, _ in queries}
 
     def shard_allow(base: int, mask: dict | None):
@@ -321,10 +296,8 @@ def _arrow_scorer(spec: dict):
         """Score one shard's rows ((term, first_doc)-sorted; first/last
         base-relative) for the queries in qids (None = all), appending
         each query's shard top-k to out = (q, d, s) lists."""
-        change = np.nonzero(terms_arr[1:] != terms_arr[:-1])[0] + 1
-        starts = np.concatenate([[0], change])
-        ends = np.concatenate([change, [len(terms_arr)]])
-        term_rows = {str(terms_arr[s]): (s, e) for s, e in zip(starts, ends)}
+        term_rows = {str(terms_arr[s]): (s, e)
+                     for s, e in zip(*_term_runs(terms_arr))}
 
         # per-TERM decode cache: (positions, g) for this shard, sliced
         # out of the partition-level decode at most once for the whole
@@ -439,6 +412,21 @@ def _arrow_scorer(spec: dict):
             out_d.append(top.astype(np.int64) + base)
             out_s.append(vals[order])
 
+    def routed_rows(terms, shard, routing: dict) -> pa.Array:
+        """Mask over term-sorted (term, shard) rows: True where a query
+        routed to the row's shard holds the row's term."""
+        need: dict[str, list] = {}
+        for sh in np.unique(shard).tolist():
+            for t in set().union(*(terms_of[q]
+                                   for q in routing.get(sh, ()))):
+                need.setdefault(t, []).append(sh)
+        keep = np.zeros(len(terms), dtype=bool)
+        for s, e in zip(*_term_runs(terms)):
+            shs = need.get(str(terms[s]))
+            if shs:
+                keep[s:e] = np.isin(shard[s:e], shs)
+        return pa.array(keep)
+
     def score(tab: pa.Table, routing: dict | None = None,
               anti: dict | None = None, mask: dict | None = None):
         if tab.num_rows == 0:
@@ -449,9 +437,19 @@ def _arrow_scorer(spec: dict):
         # byte-lexicographic == Python str order for these ASCII tokens;
         # (term, first_doc) is unique per row, so the order is
         # deterministic
-        tab = tab.take(pc.sort_indices(
-            tab, sort_keys=[("term", "ascending"),
-                            ("first_doc", "ascending")])).combine_chunks()
+        order = pc.sort_indices(tab, sort_keys=[("term", "ascending"),
+                                                ("first_doc", "ascending")])
+        if routing is not None:
+            # the row-precise routing cut, before any payload is copied
+            # or decoded: the JVM scan filters on the batch's term set
+            # and the routed shard set only, so a shard also carries the
+            # terms of queries routed elsewhere
+            order = order.filter(routed_rows(
+                tab.column("term").take(order).to_numpy(),
+                tab.column("shard").take(order).to_numpy(), routing))
+            if not len(order):
+                return _results_table([], [], [])
+        tab = tab.take(order).combine_chunks()
         views = tuple(payload_view(tab.column(c).chunk(0))
                       for c in ("ids", "tfs", "dls"))
 
@@ -483,11 +481,9 @@ def _arrow_scorer(spec: dict):
                 *views, col("ids_bw").astype(np.int64),
                 col("tfs_bw").astype(np.int64),
                 col("dls_bw").astype(np.int64), n_a, first_doc, last_doc)
-            chg = np.nonzero(terms[1:] != terms[:-1])[0] + 1
-            st = np.concatenate([[0], chg])
-            en = np.concatenate([chg, [len(terms)]])
             vend = np.cumsum(n_a)
-            return ({str(terms[s]): (s, e) for s, e in zip(st, en)},
+            return ({str(terms[s]): (s, e)
+                     for s, e in zip(*_term_runs(terms))},
                     ids_all, tfnorm_np(tfs_all, dls_all, avgdl, params),
                     vend - n_a, vend)
 
@@ -514,9 +510,7 @@ def _arrow_scorer(spec: dict):
             sh = int(shard[rows[0]])
             qids = None
             if routing is not None:
-                qids = routing.get(sh)
-                if not qids:
-                    continue
+                qids = routing[sh]  # the routing cut kept routed shards only
             elif anti is not None and sh in anti:
                 qids = all_qids - anti[sh]
                 if not qids:
@@ -877,10 +871,9 @@ class Searcher:
             terms = sorted(set(tokenize_py(qtext)))
             parsed.append((int(qid), terms, int(k)))
         all_terms = sorted({t for _, ts, _ in parsed for t in ts})
-        empty = self.spark.createDataFrame([], schemas.RESULTS)
         if not all_terms:
             self.last_plan = {"mode": "empty"}
-            return empty
+            return self._results_df()
 
         idf = self._idf_lookup(all_terms)
         tm["idf"] = round(time.time() - _t0, 3)
@@ -904,7 +897,7 @@ class Searcher:
                 if len(ts) >= min_match and ts]
         if not live:
             self.last_plan = {"mode": "empty"}  # every term OOV/dead
-            return empty
+            return self._results_df()
         all_terms = sorted({t for _, ts, _ in live for t in ts})
         # per-batch scoring options travel in the scan spec, never on the
         # (possibly shared) Searcher
@@ -983,17 +976,16 @@ class Searcher:
         for q, (ush, ub) in q_ub.items():
             order = np.lexsort((ush, -ub))[:seed_shards]
             seed_set.update((q, int(ush[i])) for i in order)
-        qterms = {q: ts for q, ts, _ in live}
-        seed_routing, seed_filter = _route(seed_set, qterms)
+        seed_routing = _route(seed_set)
+        seed_seg = seg.filter(_id_set("shard", seed_routing))
         qspec0 = dict(spec, queries=[(q, ts, k, None)
                                      for q, ts, k in live])
         if mask_df is None:
-            seed_res = self._map_scan(seg.filter(seed_filter), qspec0,
-                                      routing=seed_routing,
+            seed_res = self._map_scan(seed_seg, qspec0, routing=seed_routing,
                                       mask=closure_mask)
         else:
-            seed_res = self._scan(seg.filter(seed_filter), qspec0, mask_df,
-                                  pred_mode, asg_df=self._pairs_df(seed_set))
+            seed_res = self._scan(seed_seg, qspec0, mask_df, pred_mode,
+                                  asg_df=self._pairs_df(seed_set))
 
         # ---- seed top-k + θ in ONE job: collect the per-query top-k
         # over the seed shards (bounded: <= Σk rows). θ (the k-th seed
@@ -1009,24 +1001,9 @@ class Searcher:
         else:
             seed_pdf = self._global_topk(seed_res, live).toPandas()
         tm["seed_scan"] = round(time.time() - _t0, 3)
-        seed_rows = list(zip(seed_pdf["query_id"].astype(int),
-                             seed_pdf["doc_id"].astype(int),
-                             seed_pdf["score"].astype(float)))
-        n_seed_hits: dict[int, int] = {}
-        worst: dict[int, float] = {}
-        for q, _, s in seed_rows:
-            n_seed_hits[q] = n_seed_hits.get(q, 0) + 1
-            worst[q] = min(worst.get(q, s), s)
-        theta = {q: worst[q] for q, _, k in live
-                 if n_seed_hits.get(q, 0) >= k}
-        seed_df = _pdf_df(self.spark, {
-            "query_id": pd.Series([r[0] for r in seed_rows],
-                                  dtype="int32"),
-            "doc_id": pd.Series([r[1] for r in seed_rows],
-                                dtype="int64"),
-            "score": pd.Series([r[2] for r in seed_rows],
-                               dtype="float64")},
-            schemas.RESULTS)
+        seed = seed_pdf.groupby("query_id")["score"].agg(["size", "min"])
+        theta = {q: float(seed.at[q, "min"]) for q, _, k in live
+                 if q in seed.index and seed.at[q, "size"] >= k}
 
         # ---- main scan over the (query, shard) pairs that can still
         # beat θ: they fall out of the in-memory ub vectors (zero jobs)
@@ -1062,10 +1039,11 @@ class Searcher:
                                  mask=closure_mask)
             if self._merge_bound_ok(live):
                 return self._merge_topk_local(res, live, extra_pdf=seed_pdf)
-            return self._global_topk(seed_df.unionByName(res), live)
+            return self._global_topk(
+                self._results_df(seed_pdf).unionByName(res), live)
 
         main_pairs = [p for p in pairs if p not in seed_set]
-        routing, main_filter = _route(main_pairs, qterms)
+        routing = _route(main_pairs)
         # a large mask, or routing too large for the closure, rides the
         # cogroup channel as aux rows built from the driver's pair list
         cogroup = mask_df is not None or n_main > _ROUTING_CAP
@@ -1081,18 +1059,20 @@ class Searcher:
         if not routing:
             # every surviving pair was a seed pair: the collected seed
             # top-k IS the answer — zero further jobs
-            return seed_df
-        main_seg = seg.filter(main_filter)
+            return self._results_df(seed_pdf)
+        main_seg = seg.filter(_id_set("shard", routing))
         if cogroup:
             main_res = self._scan(main_seg, qspec1, mask_df, pred_mode,
                                   asg_df=self._pairs_df(main_pairs))
-            return self._materialize(
-                self._global_topk(seed_df.unionByName(main_res), live))
+            return self._results_df(self._global_topk(
+                self._results_df(seed_pdf).unionByName(main_res),
+                live).toPandas())
         main_res = self._map_scan(main_seg, qspec1, routing=routing,
                                   mask=closure_mask)
         if self._merge_bound_ok(live):
             return self._merge_topk_local(main_res, live, extra_pdf=seed_pdf)
-        return self._global_topk(seed_df.unionByName(main_res), live)
+        return self._global_topk(
+            self._results_df(seed_pdf).unionByName(main_res), live)
 
     def _upper_bounds(self, live, terms: list[str], idf: dict,
                       require_all: bool):
@@ -1281,10 +1261,12 @@ class Searcher:
             "shard": pd.Series(shs, dtype="int64")},
             "query_id int, shard long")
 
-    def _materialize(self, df: DataFrame) -> DataFrame:
-        pdf = df.toPandas()  # Arrow both ways; <= sum(k) rows by construction
-        return self.spark.createDataFrame(pdf, schema=schemas.RESULTS) \
-            if len(pdf) else self.spark.createDataFrame([], schemas.RESULTS)
+    def _results_df(self, pdf: pd.DataFrame | None = None) -> DataFrame:
+        """A local RESULTS frame of pdf's rows (Arrow; <= Σk rows by
+        construction) — no rows without pdf."""
+        if pdf is None or not len(pdf):
+            return self.spark.createDataFrame([], schemas.RESULTS)
+        return self.spark.createDataFrame(pdf, schema=schemas.RESULTS)
 
     # -- internals -----------------------------------------------------------
     def _filter_mode(self, predicate: str) -> str:
@@ -1375,7 +1357,10 @@ class Searcher:
         tombstone mask (`mask`, from _collect_small_mask — the scan-fused
         selection vector) ride the scorer closure; large masks go through
         the cogroup channel instead (search_batch keeps mask_df non-None
-        in that case). The scorer runs as mapInArrow directly on the
+        in that case). A routed `seg` arrives filtered to the batch's
+        term and routed shard sets only (_id_set); the scorer drops the
+        rows of terms no query routed to their shard needs before it
+        decodes anything. The scorer runs as mapInArrow directly on the
         parquet scan partitions, shuffle-free (see _map_scorer for why
         this is exact). Exactness requires the one-row-group-per-file
         invariant (_verify_scan_granularity); when it is unproven, the
@@ -1461,10 +1446,7 @@ class Searcher:
         parts = [res.toPandas()]
         if extra_pdf is not None and len(extra_pdf):
             parts.append(extra_pdf)
-        merged = self._topk_merge_pdf(parts, live)
-        if not len(merged):
-            return self.spark.createDataFrame([], schemas.RESULTS)
-        return self.spark.createDataFrame(merged, schema=schemas.RESULTS)
+        return self._results_df(self._topk_merge_pdf(parts, live))
 
     def _global_topk(self, res: DataFrame, live) -> DataFrame:
         kdf = _pdf_df(self.spark, {

@@ -5,14 +5,14 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pdx_spark.config import get_spark  # noqa: E402
+from pdx_spark.config import default_cores, get_spark  # noqa: E402
 
 
 def _test_cores() -> int:
-    """PDX_TEST_CORES if set, else SPARK_GRAFT_CPUS (the host's core
-    count as the Tier-1 command exports it), else the usable cores."""
-    env = os.environ.get("PDX_TEST_CORES") or os.environ.get("SPARK_GRAFT_CPUS")
-    return int(env) if env else len(os.sched_getaffinity(0))
+    """PDX_TEST_CORES if set, else default_cores() (SPARK_GRAFT_CPUS,
+    which the Tier-1 command exports, else the usable cores)."""
+    env = os.environ.get("PDX_TEST_CORES")
+    return int(env) if env else default_cores()
 
 
 @pytest.fixture(scope="session")

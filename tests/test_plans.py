@@ -205,25 +205,41 @@ def test_plan_slice_cap_is_per_batch(spark, tiny_index, tiny_oracle,
     assert "plan_cap" not in plan
 
 
-def test_two_phase_pruning_wins_on_topic_clustered_corpus(spark, tmp_path):
+def _topic_index(spark, path, **layout):
+    """The topic-clustered fixture (600 conversations, 16 topics) built
+    at `path` -> (its Searcher, an oracle keyed by dense doc_id)."""
+    from pdx_spark.config import IndexConfig
+    from pdx_spark.operators.indexer import Indexer
+    from pdx_spark.oracle import BM25Oracle
+    from pdx_spark.schemas import TRANSCRIPTS
+    from pdx_spark.sources.fixtures import make_topic_transcripts_pdf
+
+    pdf = make_topic_transcripts_pdf(600, n_topics=16)
+    Indexer(spark, cfg=IndexConfig(block_size=32, **layout)).build(
+        spark.createDataFrame(pdf, schema=TRANSCRIPTS), path)
+    texts = pdf.sort_values(["conv_id", "turn_idx"])["text"]
+    return (Searcher.load(spark, path),
+            BM25Oracle(dict(enumerate(texts))))
+
+
+@pytest.fixture(scope="module")
+def topic(spark, tmp_path_factory):
+    """The topic fixture at 64 docs per shard (>= 64 shards), written
+    as several segment files of 8 shards each."""
+    return _topic_index(spark, str(tmp_path_factory.mktemp("topic") / "idx"),
+                        docs_per_shard=64, shards_per_task=8)
+
+
+def test_two_phase_pruning_wins_on_topic_clustered_corpus(topic):
     """Round-3 judge, Missing #4: a corpus whose term occurrences are
     doc-range-clustered must make the θ-seeded two-phase scan ROUTE (not
     fall back), prune >50% of (query, shard) pairs, stay rank-identical
     to the exhaustive scan — and the segment files must be shard-range
     clustered so the routing's shard filter can skip whole files."""
-    from pdx_spark.config import IndexConfig
-    from pdx_spark.operators.indexer import Indexer
-    from pdx_spark.sources.fixtures import (make_topic_transcripts_pdf,
-                                            topic_query_terms)
-    from pdx_spark.schemas import TRANSCRIPTS
+    from pdx_spark.sources.fixtures import topic_query_terms
 
-    pdf = make_topic_transcripts_pdf(600, n_topics=16)
-    df = spark.createDataFrame(pdf, schema=TRANSCRIPTS)
-    path = str(tmp_path / "topic_idx")
-    Indexer(spark, cfg=IndexConfig(block_size=32, docs_per_shard=64)) \
-        .build(df, path)
-    s = Searcher.load(spark, path)
-
+    s, _ = topic
+    path = s.path
     queries = [(i, t, 10)
                for i, t in enumerate(topic_query_terms(16, per_topic=1)[:8])]
     res = s.search_batch(queries, force_two_phase=True,
@@ -280,3 +296,89 @@ def test_routed_task_count_is_byte_aware(searcher):
         assert searcher._routed_task_count(10_000) == par
     finally:
         searcher._seg_bytes = total
+
+
+def test_warm_routed_batches_compile_nothing(spark, topic):
+    """Routing reaches the JVM scan as data: the batch's terms and its
+    routed shards are InSet predicates (padded past Catalyst's In -> InSet
+    threshold), so every routed batch runs the same generated code. After
+    one warm-up pass of 1-, 16- and 48-query batches, the same sizes with
+    different queries compile no class (Spark's CodegenMetrics count is
+    unchanged) and still match the oracle."""
+    from pdx_spark.sources.fixtures import topic_query_terms
+
+    s, oracle = topic
+    assert -(-s.n_docs // s.cfg.docs_per_shard) >= 64
+    per = 4
+    terms = topic_query_terms(16, per_topic=per)
+
+    def queries(n, off):
+        """n signature/exclusive-term queries, each of one topic (the
+        perfbench topic mix); `off` shifts topics and shapes (query 0
+        has 1 term at off=0, 3 terms at off=1)."""
+        out = []
+        for q in range(n):
+            t = (3 * q + 7 * off) % 16
+            sig, ex = terms[t * per], terms[t * per + 1: t * per + per]
+            shape = [[sig], [ex[off % 3]], [sig, ex[(q + off) % 3]],
+                     [ex[0], ex[2]], [sig, *ex[1:]]][(q + 4 * off) % 5]
+            out.append((q, " ".join(shape), [10, 1, 50][(q + off) % 3]))
+        return out
+
+    codegen = spark.sparkContext._jvm \
+        .org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles():
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
+    def run(off):
+        out = []
+        for n in (1, 16, 48):
+            qs = queries(n, off)
+            rows = s.search_batch(qs, force_two_phase=True).collect()
+            out.append((qs, rows, dict(s.last_plan)))
+        return out
+
+    warm = run(0)
+    before = compiles()
+    second = run(1)
+    assert compiles() == before
+    for qs, rows, plan in warm + second:
+        assert plan["mode"] == "routed", plan
+        for qid, text, k in qs:
+            got = sorted(((r["doc_id"], r["score"]) for r in rows
+                          if r["query_id"] == qid),
+                         key=lambda x: (-x[1], x[0]))
+            want = oracle.topk(text, k)
+            assert [d for d, _ in got] == [d for d, _ in want], (qid, text)
+            assert all(abs(a - b) <= 1e-9 * max(1.0, abs(b))
+                       for (_, a), (_, b) in zip(got, want)), (qid, text)
+
+
+def test_routed_scan_skips_segment_files(topic):
+    """The routed shard set pushes down to parquet (an `In` predicate
+    evaluated against row-group stats): scanning shards that all live in
+    one segment file reads that file's rows only. The scan node's
+    numOutputRows counts rows before the Filter, so it shows what the
+    reader actually read."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from pdx_spark.operators.searcher import _id_set
+
+    s, _ = topic
+    files = glob.glob(s.path + "/segments/base/**/*.parquet", recursive=True)
+    assert len(files) > 2
+    rows = {f: pq.read_metadata(f).num_rows for f in files}
+    f = files[len(files) // 2]
+    shards = sorted(set(pq.read_table(f, columns=["shard"])["shard"]
+                        .to_pylist()))[:2]
+    df = s.segments().filter(_id_set("shard", shards))
+    got = df.collect()
+    assert got and {r["shard"] for r in got} == set(shards)
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    (scan,) = [n for n in map(leaves.apply, range(leaves.size()))
+               if "FileSourceScan" in n.getClass().getSimpleName()]
+    read = scan.metrics().apply("numOutputRows").value()
+    assert read == rows[f] < sum(rows.values()), (read, rows[f])

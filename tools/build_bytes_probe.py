@@ -7,7 +7,7 @@ run/cpu seconds — plus the on-disk size of every index artifact. This
 is the "attack the build with bytes, not benchmarks" feedback loop: a
 change only counts if this probe shows the bytes moved.
 
-Usage: python tools/build_bytes_probe.py [--scale bench] [--cores 8]
+Usage: python tools/build_bytes_probe.py [--scale bench] [--cores N]
        [--label baseline]
 Prints one JSON line `BYTES {...}`.
 """
@@ -22,6 +22,8 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+
+from pdx_spark.config import default_cores  # noqa: E402
 
 
 def _conf(spark, key: str) -> str:
@@ -45,7 +47,7 @@ def dir_bytes(path: str) -> int:
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--scale", default="bench")
-    ap.add_argument("--cores", type=int, default=8)
+    ap.add_argument("--cores", type=int, default=default_cores())
     ap.add_argument("--label", default="")
     ap.add_argument("--index", default="/tmp/pdx_bytes_probe_idx")
     args = ap.parse_args()

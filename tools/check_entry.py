@@ -47,8 +47,8 @@ def main():
     from pdx_spark.config import get_spark
 
     only = set(sys.argv[1:])
-    spark = get_spark(cores=int(os.environ.get("PDX_TEST_CORES", "16")),
-                      app="check_entry")
+    cores = os.environ.get("PDX_TEST_CORES")
+    spark = get_spark(cores=int(cores) if cores else None, app="check_entry")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(SF_DIR, f"{t}.parquet")

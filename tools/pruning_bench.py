@@ -35,6 +35,8 @@ import time
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from pdx_spark.config import default_cores  # noqa: E402
+
 
 def main():
     ap = argparse.ArgumentParser()
@@ -44,7 +46,7 @@ def main():
     ap.add_argument("--queries", type=int, default=16)
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=default_cores())
     ap.add_argument("--query-cores", type=int, default=None)
     ap.add_argument("--reuse-index", action="store_true",
                     help="skip fixture+build if the index already exists")

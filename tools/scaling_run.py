@@ -22,8 +22,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import run_leg  # noqa: E402
+from pdx_spark.config import default_cores  # noqa: E402
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 LOW = max(CPUS // 4, 1)
 
 
