@@ -16,25 +16,35 @@ Mirrors the reference's pruned scan (PDXearch::Search,
      (rank-identical), which bounds driver memory.
   3. Seed scan ("Start", searcher.hpp:218-281): each query's most
      promising `seed_shards` shards are scored exactly; the driver
-     collects the k-th best seed score per query (θ, Q floats) and the
+     keeps the k-th best seed score per query (θ, Q floats) and the
      seed top-k (≤ Σk rows) — never candidates.
   4. Main scan ("Warmup/Prune", searcher.hpp:376-540): per-(query,
      shard) assignments where the upper bound can still beat θ route
      each shard to only its own queries (work = Σ_q |shards_q|, not
-     |shards| × Q). Routing reaches the JVM as data: the batch's term
-     set and the routed shard set are InSet predicates (_in_list,
-     _id_set), so every batch runs the same generated code — one fixed
-     kernel fed a positions array, as searcher.hpp:104-117 — and the
-     shard set still skips segment files at parquet row-group stats.
-     The scorer makes the row-precise (term, shard) cut before it
-     decodes any payload. Scans are SHUFFLE-FREE:
+     |shards| × Q). A routed scan (seed or main) whose estimated byte
+     slice fits one routed-scan task (_ROUTED_TASK_BYTES, the byte
+     term of _routed_task_count) is scored IN THE DRIVER, as the
+     reference runs Warmup and Prune in the query's own thread: the
+     routed shards' rows of the batch's terms come through the one
+     driver-side reader (_meta_rows: pyarrow with term and shard
+     filters on a local fs, one Spark scan collected as Arrow on any
+     other scheme) and all of them score in one table — a shard's rows
+     together, exact under any file layout. A larger routed scan runs
+     on Spark. Routing reaches the JVM as data: the batch's term set
+     and the routed shard set are InSet predicates (_in_list, _id_set),
+     so every batch runs the same generated code — one fixed kernel
+     fed a positions array, as searcher.hpp:104-117 — and the shard set
+     still skips segment files at parquet row-group stats. Either way
+     the scorer makes the row-precise (term, shard) cut before it
+     decodes any payload. Spark scans are SHUFFLE-FREE:
      segment files hold complete shards (the encode shuffle wrote
      them that way), so the scorer runs as mapInArrow directly on
      the parquet scan with routing and small masks in the closure.
      One Arrow scoring body
-     (_arrow_scorer) serves every channel: the map scan, a per-shard
-     groupBy when files may hold several row groups, and the cogroup
-     channel for masks and routing above _ROUTING_CAP. When θ cannot
+     (_arrow_scorer) serves every channel: the driver scan, the map
+     scan, a per-shard groupBy when files may hold several row groups,
+     and the cogroup channel for masks and routing above _ROUTING_CAP.
+     When θ cannot
      prune (uniform corpora — every shard's bound beats θ), the
      planner detects it from the main-pair ratio and runs ONE unrouted
      pass instead that skips each query's seed shards (anti-routing),
@@ -48,25 +58,30 @@ Mirrors the reference's pruned scan (PDXearch::Search,
      is our SIMD; scalar_computers.hpp:19-44's role). Exactness: every
      term with a candidate is decoded fully, so candidate scores are
      complete; pruned docs provably score < θ.
-  5. Global merge: per-partition per-query top-k, collected and merged
-     on the driver (bounded: n_segment_files x Σk rows). Above
+  5. Global merge: per-partition (or driver-scan) per-query top-k,
+     merged on the driver (bounded: n_segment_files x Σk rows). Above
      _MERGE_LOCAL_CAP, or when the scan ran per shard, a window top-k
      per query runs Spark-side instead. Tie-break (score desc, doc_id
      asc).
 
 Queries run as a batch (one pass scores all queries of the batch —
-amortizes job overhead, SURVEY §7.4). A batch is a handful of bounded
-jobs: seed scan (→ θ), main scan + merge; idf lookup and planning read
-metadata on the driver and are cached per term on a warm Searcher — the
-serial fraction is job scheduling plus Q-sized collects, which is what
-makes query throughput scale with executors (north rule ≥0.8 N→4N).
-The remaining single-box limit is memory bandwidth (the scan streams
-block bytes through Arrow/numpy) — see BENCH.md's bandwidth ceiling.
+amortizes job overhead, SURVEY §7.4). A batch is at most a handful of
+bounded jobs: seed scan (→ θ), main scan + merge; a routed scan whose
+slice fits one task runs none, so a selective warm batch launches no
+Spark job at all. idf lookup and planning read metadata on the driver
+and are cached per term on a warm Searcher — the serial fraction is job
+scheduling plus Q-sized collects, which is what makes query throughput
+scale with executors (north rule ≥0.8 N→4N); driver-scored scans are
+bounded by _ROUTED_TASK_BYTES each. The remaining single-box limit is
+memory bandwidth (the scan streams block bytes through Arrow/numpy) —
+see BENCH.md's bandwidth ceiling.
 """
 
 from __future__ import annotations
 
 import functools
+import operator
+import threading
 import time
 
 import numpy as np
@@ -133,7 +148,9 @@ _KIND_QUERY = 1  # (shard, kind=1, id=query_id): per-shard query routing
 # forced-two-phase seed scan ran 6 tasks on 32 cores (0.89 s; 0.41 s at
 # 2 MiB, interleaved A/B), and a byte cap below parallelism is exactly
 # what breaks N->4N query scaling. At 100 TB the byte cap is never the
-# binding term — defaultParallelism is.
+# binding term — defaultParallelism is. A routed slice of at most this
+# many bytes (one task's worth) is scored in the driver instead, which
+# also saves the Spark job around the task (_scan_site).
 _ROUTED_TASK_BYTES = 2 * 1024 * 1024
 
 
@@ -632,6 +649,10 @@ class Searcher:
         self.last_plan: dict = {}
         self._map_scan_ok = self._verify_scan_granularity()
         self._seg_bytes: int | None = None  # lazy, see _segment_bytes
+        # per-dir readers (see _source), built once under the lock by
+        # whichever concurrent batch needs them first
+        self._sources: dict[str, object] = {}
+        self._lock = threading.Lock()
 
     def _manifest_fingerprint(self) -> str:
         """Cheap generation token for the on-disk manifest (a small JSON
@@ -664,49 +685,75 @@ class Searcher:
             return True
         return False
 
+    def _seg_dirs(self) -> list[str]:
+        return self.manifest["segment_dirs"] + self.manifest.get("deltas", [])
+
+    def _n_shards(self) -> int:
+        """Shard ids span doc ids [0, next_doc_id): deletes lower n_docs
+        but never the id space, so the shard count comes from the
+        id-allocation high-water mark (n_docs on manifests without
+        one)."""
+        n_ids = int(self.manifest.get("next_doc_id", self.n_docs))
+        return max(1, -(-n_ids // self.cfg.docs_per_shard))
+
     def _segment_bytes(self) -> int:
         """Total on-disk bytes of the segment files (base + deltas),
         listed once per Searcher through the fs seam. Used only to SIZE
-        routed-scan tasks (never for correctness); a listing failure
-        caches 0, which disables the byte cap."""
-        if self._seg_bytes is None:
-            try:
-                files = [
-                    sz for d in self.manifest["segment_dirs"]
-                    + self.manifest.get("deltas", [])
-                    for _, sz in self.fs.parquet_files(
-                        self.fs.join(self.path, d))]
-                self._seg_bytes = sum(files)
-                self._seg_files = len(files)
-            except Exception:
-                self._seg_bytes = 0
-                self._seg_files = 0
-        return self._seg_bytes
+        routed scans (never for correctness); a listing failure caches
+        0, which disables the byte cap and the driver scan."""
+        with self._lock:
+            if self._seg_bytes is None:
+                try:
+                    files = [sz for d in self._seg_dirs()
+                             for _, sz in self.fs.parquet_files(
+                                 self.fs.join(self.path, d))]
+                    self._seg_bytes = sum(files)
+                    self._seg_files = len(files)
+                except Exception:
+                    self._seg_bytes = 0
+                    self._seg_files = 0
+            return self._seg_bytes
 
     def _segment_file_count(self) -> int:
         self._segment_bytes()
         return self._seg_files
 
+    def _routed_bytes(self, n_routed_shards: int) -> int:
+        """Estimated on-disk bytes of a routed scan: the routed shard
+        fraction of the total segment bytes. Shards are near-uniform by
+        construction (dense doc_ids, fixed docs_per_shard). 0 when the
+        listing failed."""
+        n = self._n_shards()
+        return int(self._segment_bytes() * min(n_routed_shards, n) / n)
+
     def _routed_task_count(self, n_routed_shards: int) -> int:
-        """Task count for a routed scan: at most one task per routed
-        shard, never more than defaultParallelism, and never more tasks
-        than the routed BYTE slice justifies (each python task has a
-        fixed ~0.2 CPU-s cost, so a few-MB routed slice should run as
+        """Task count for a routed scan on Spark: at most one task per
+        routed shard, never more than defaultParallelism, and never more
+        tasks than the routed BYTE slice justifies (each python task has
+        a fixed ~0.2 CPU-s cost, so a few-MB routed slice should run as
         1-2 tasks even on a 32-core box — the round-5 pruning bench
         measured the task overhead alone flipping the routed path from
-        a CPU win to a 2x CPU loss on a 28 MB index). Routed bytes are
-        estimated as the routed shard fraction of the total segment
-        bytes; shards are near-uniform by construction (dense doc_ids,
-        fixed docs_per_shard)."""
-        n_shards_total = max(1, -(-self.n_docs // self.cfg.docs_per_shard))
+        a CPU win to a 2x CPU loss on a 28 MB index). A slice that
+        fits ONE task by bytes never gets here: _scan_site scores it in
+        the driver, which saves the task and the job around it too."""
         n = max(1, min(self.spark.sparkContext.defaultParallelism,
                        n_routed_shards))
-        total = self._segment_bytes()
-        if total > 0:
-            routed = total * min(n_routed_shards, n_shards_total) \
-                / n_shards_total
-            n = min(n, max(1, -(-int(routed) // _ROUTED_TASK_BYTES)))
+        routed = self._routed_bytes(n_routed_shards)
+        if routed > 0:
+            n = min(n, -(-routed // max(1, _ROUTED_TASK_BYTES)))
         return n
+
+    def _scan_site(self, n_routed_shards: int, closure: bool) -> dict:
+        """Where a routed scan runs, with the byte estimate next to its
+        cap (as last_plan's plan_cap does): a closure scan whose routed
+        slice fits one routed-scan task by bytes runs in the driver,
+        every other one (a larger slice, an unknown size, the cogroup
+        channel) on Spark."""
+        routed = self._routed_bytes(n_routed_shards)
+        driver = closure and 0 < routed <= _ROUTED_TASK_BYTES
+        return {"ran": "driver" if driver else "spark",
+                "cap": "_ROUTED_TASK_BYTES", "limit": _ROUTED_TASK_BYTES,
+                "routed_bytes": routed}
 
     def _verify_scan_granularity(self) -> bool:
         """The shuffle-free map-scan is exact only if the reader never
@@ -725,10 +772,8 @@ class Searcher:
         partitions, which is exact under any file layout."""
         if self.manifest.get("seg_single_rg") is True:
             return True
-        return all(
-            verify_single_rowgroup(self.fs, d, root=self.path)
-            for d in self.manifest["segment_dirs"]
-            + self.manifest.get("deltas", []))
+        return all(verify_single_rowgroup(self.fs, d, root=self.path)
+                   for d in self._seg_dirs())
 
     @classmethod
     def load(cls, spark, path: str) -> "Searcher":
@@ -757,8 +802,7 @@ class Searcher:
         # a real planning cost
         if getattr(self, "_seg_frame", None) is None:
             excl = self.manifest.get("seg_excludes", {})
-            dirs = self.manifest["segment_dirs"] \
-                + self.manifest.get("deltas", [])
+            dirs = self._seg_dirs()
             if not any(excl.get(d) for d in dirs):
                 # one multi-path scan instead of a Union of per-dir
                 # scans: same rows, but a single scan node — smaller
@@ -907,7 +951,10 @@ class Searcher:
                 "require_all": bool(require_all_terms),
                 "min_match": min_match}
 
-        seg = self.segments().filter(_in_list("term", all_terms))
+        # the term-filtered segment frame, built only by the batches that
+        # scan on Spark (a driver-scored batch touches no JVM plan)
+        seg = functools.cache(
+            lambda: self.segments().filter(_in_list("term", all_terms)))
         mask_df, pred_mode = self._mask_df(predicate)
         closure_mask = None
         if mask_df is not None:
@@ -919,7 +966,7 @@ class Searcher:
                 # term-filtered segment rows)
                 mask_df = None
 
-        n_shards_total = -(-self.n_docs // self.cfg.docs_per_shard)
+        n_shards_total = self._n_shards()
         # exhaustive when pruning cannot pay: too few shards for skipping
         # to matter, or the BATCH is so large that the seed phase alone
         # would touch ~every shard (Q x seed_shards >= shards means the
@@ -963,13 +1010,13 @@ class Searcher:
             qspec = dict(spec, queries=[(q, ts, k, None)
                                         for q, ts, k in live])
             if mask_df is None:
-                res = self._map_scan(seg, qspec, mask=closure_mask)
+                res = self._map_scan(seg(), qspec, mask=closure_mask)
                 if self._merge_bound_ok(live):
                     # per-partition top-k collected and merged on the
                     # driver: one stage, no exchange/window, free count
                     return self._merge_topk_local(res, live)
             else:
-                res = self._scan(seg, qspec, mask_df, pred_mode)
+                res = self._scan(seg(), qspec, mask_df, pred_mode)
             return self._global_topk(res, live)
 
         seed_set = set()
@@ -977,29 +1024,46 @@ class Searcher:
             order = np.lexsort((ush, -ub))[:seed_shards]
             seed_set.update((q, int(ush[i])) for i in order)
         seed_routing = _route(seed_set)
-        seed_seg = seg.filter(_id_set("shard", seed_routing))
         qspec0 = dict(spec, queries=[(q, ts, k, None)
                                      for q, ts, k in live])
-        if mask_df is None:
-            seed_res = self._map_scan(seed_seg, qspec0, routing=seed_routing,
-                                      mask=closure_mask)
-        else:
-            seed_res = self._scan(seed_seg, qspec0, mask_df, pred_mode,
-                                  asg_df=self._pairs_df(seed_set))
+        seed_site = self._scan_site(len(seed_routing), mask_df is None)
 
-        # ---- seed top-k + θ in ONE job: collect the per-query top-k
-        # over the seed shards (bounded: <= Σk rows). θ (the k-th seed
-        # score, searcher.hpp:82-91's threshold role) falls out
-        # driver-side, and the rows themselves are REUSED as the seed
-        # contribution to the final merge — the seed scan is never
-        # thrown away or re-run.
+        def routed_topk(site, qspec, routing, pairs, cogroup, extra=None):
+            """One routed scan (seed or main) -> its per-query top-k,
+            merged with `extra` (the seed top-k), on the driver: scored
+            there (site from _scan_site), or by the closure map-scan, or
+            by the cogroup channel with `pairs` as its routing rows."""
+            if site["ran"] == "driver":
+                parts = [self._driver_scan(all_terms, qspec, routing,
+                                           closure_mask)]
+            else:
+                rseg = seg().filter(_id_set("shard", routing))
+                if cogroup:
+                    res = self._scan(rseg, qspec, mask_df, pred_mode,
+                                     asg_df=self._pairs_df(pairs))
+                else:
+                    res = self._map_scan(rseg, qspec, routing=routing,
+                                         mask=closure_mask)
+                if cogroup or not self._merge_bound_ok(live):
+                    if extra is not None:
+                        res = self._results_df(extra).unionByName(res)
+                    return self._global_topk(res, live).toPandas()
+                # bounded per-partition top-k -> one collect stage,
+                # driver merge (no exchange/window job)
+                parts = [res.toPandas()]
+            if extra is not None:
+                parts.append(extra)
+            return self._topk_merge_pdf(parts, live)
+
+        # ---- seed top-k + θ: the per-query top-k over the seed shards
+        # (bounded: <= Σk rows) lands on the driver, from the driver scan
+        # or ONE Spark job. θ (the k-th seed score, searcher.hpp:82-91's
+        # threshold role) falls out driver-side, and the rows themselves
+        # are REUSED as the seed contribution to the final merge — the
+        # seed scan is never thrown away or re-run.
         _t0 = time.time()
-        if mask_df is None and self._merge_bound_ok(live):
-            # bounded per-partition top-k -> one collect stage, driver
-            # merge (no exchange/window job in the seed phase)
-            seed_pdf = self._topk_merge_pdf([seed_res.toPandas()], live)
-        else:
-            seed_pdf = self._global_topk(seed_res, live).toPandas()
+        seed_pdf = routed_topk(seed_site, qspec0, seed_routing, seed_set,
+                               cogroup=mask_df is not None)
         tm["seed_scan"] = round(time.time() - _t0, 3)
         seed = seed_pdf.groupby("query_id")["score"].agg(["size", "min"])
         theta = {q: float(seed.at[q, "min"]) for q, _, k in live
@@ -1031,11 +1095,13 @@ class Searcher:
                               "n_shards": n_shards_total,
                               "n_queries": len(live),
                               "mask_in_closure": closure_mask is not None,
+                              "seed_scan": seed_site,
+                              "main_scan": {"ran": "spark"},
                               "timings": tm}
             self._unrouted_streak += 1
             self._unrouted_min_live = min(
                 self._unrouted_min_live or (1 << 30), len(live))
-            res = self._map_scan(seg, qspec1, anti_routing=seed_routing,
+            res = self._map_scan(seg(), qspec1, anti_routing=seed_routing,
                                  mask=closure_mask)
             if self._merge_bound_ok(live):
                 return self._merge_topk_local(res, live, extra_pdf=seed_pdf)
@@ -1047,12 +1113,16 @@ class Searcher:
         # a large mask, or routing too large for the closure, rides the
         # cogroup channel as aux rows built from the driver's pair list
         cogroup = mask_df is not None or n_main > _ROUTING_CAP
+        main_site = self._scan_site(len(routing), not cogroup) \
+            if routing else None
         self.last_plan = {"mode": "cogroup" if cogroup else "routed",
                           "n_main": n_main,
                           "n_main_shards": len(routing),
                           "n_shards": n_shards_total,
                           "n_queries": len(live),
                           "mask_in_closure": closure_mask is not None,
+                          "seed_scan": seed_site,
+                          "main_scan": main_site,
                           "timings": tm}
         self._unrouted_streak = 0
         self._unrouted_min_live = None
@@ -1060,19 +1130,8 @@ class Searcher:
             # every surviving pair was a seed pair: the collected seed
             # top-k IS the answer — zero further jobs
             return self._results_df(seed_pdf)
-        main_seg = seg.filter(_id_set("shard", routing))
-        if cogroup:
-            main_res = self._scan(main_seg, qspec1, mask_df, pred_mode,
-                                  asg_df=self._pairs_df(main_pairs))
-            return self._results_df(self._global_topk(
-                self._results_df(seed_pdf).unionByName(main_res),
-                live).toPandas())
-        main_res = self._map_scan(main_seg, qspec1, routing=routing,
-                                  mask=closure_mask)
-        if self._merge_bound_ok(live):
-            return self._merge_topk_local(main_res, live, extra_pdf=seed_pdf)
-        return self._global_topk(
-            self._results_df(seed_pdf).unionByName(main_res), live)
+        return self._results_df(routed_topk(
+            main_site, qspec1, routing, main_pairs, cogroup, extra=seed_pdf))
 
     def _upper_bounds(self, live, terms: list[str], idf: dict,
                       require_all: bool):
@@ -1120,37 +1179,85 @@ class Searcher:
                           "ub_pairs": n_pairs}
         return q_ub, None
 
+    def _source(self, d: str, schema):
+        """The reader of index dir `d`: a pyarrow dataset on a local fs,
+        else a Spark frame. Built once per Searcher — a Searcher is one
+        manifest snapshot — so no batch lists files again."""
+        with self._lock:
+            src = self._sources.get(d)
+            if src is None:
+                path = self.fs.join(self.path, d)
+                if self.fs.is_local:
+                    import pyarrow.dataset as ds
+                    src = ds.dataset(path, format="parquet")
+                else:
+                    src = (self.spark.read.schema(schema)
+                           .option("recursiveFileLookup", "true")
+                           .parquet(path))
+                self._sources[d] = src
+            return src
+
     def _meta_rows(self, dirs: list[str], schema, columns: list[str], *,
                    terms: list[str] | None = None,
-                   term_range: tuple[str, str] | None = None) -> pa.Table:
-        """The driver-side reader of the term-sorted metadata dirs
-        (term_stats or directory, base + deltas): the `columns` of the
-        rows whose term is in `terms`, or in [lo, hi) = `term_range`,
-        plus `dir`, the row's index into `dirs`. pyarrow on a local fs
-        (footer stats prune the read to the matching row groups), else
-        one Spark scan of the same filter collected as Arrow."""
+                   term_range: tuple[str, str] | None = None,
+                   shards: list[int] | None = None) -> pa.Table:
+        """The driver-side reader of the term-sorted dirs (term_stats,
+        directory or segments; base + deltas): the `columns` of the rows
+        whose term is in `terms`, or in [lo, hi) = `term_range`, and
+        whose shard is in `shards` when given, plus `dir`, the row's
+        index into `dirs`. A dir's seg_excludes shards are dropped, as
+        in segments(). pyarrow on a local fs, else one Spark scan of the
+        same filter collected as Arrow. pyarrow tests ranges, not `isin`,
+        against row-group stats, so the terms add their [min, max]
+        envelope and the shards become an OR of their contiguous runs:
+        stats skip the row groups, and so the files, that hold none."""
+        excl = self.manifest.get("seg_excludes", {})
         if self.fs.is_local:
             import pyarrow.dataset as ds
-            t = ds.field("term")
-            filt = t.isin(terms) if terms is not None else \
+            t, sh = ds.field("term"), ds.field("shard")
+            filt = t.isin(terms) & (t >= min(terms)) & (t <= max(terms)) \
+                if terms is not None else \
                 (t >= term_range[0]) & (t < term_range[1])
+            if shards is not None:
+                ids = np.unique(np.asarray(shards, dtype=np.int64))
+                runs = np.split(ids, np.flatnonzero(np.diff(ids) > 1) + 1)
+                filt = filt & functools.reduce(operator.or_, (
+                    (sh >= int(r[0])) & (sh <= int(r[-1])) for r in runs))
             tabs = []
             for i, d in enumerate(dirs):
-                tab = ds.dataset(self.fs.join(self.path, d),
-                                 format="parquet").to_table(columns=columns,
-                                                            filter=filt)
+                f = filt & ~sh.isin(excl[d]) if excl.get(d) else filt
+                tab = self._source(d, schema).to_table(columns=columns,
+                                                       filter=f)
                 tabs.append(tab.append_column(
                     "dir", pa.array(np.full(tab.num_rows, i, np.int32))))
             return pa.concat_tables(tabs, promote_options="permissive")
         cond = _in_list("term", terms) if terms is not None else \
             (F.col("term") >= term_range[0]) & (F.col("term") < term_range[1])
+        if shards is not None:
+            cond = cond & _id_set("shard", shards)
         df = None
         for i, d in enumerate(dirs):
-            part = (self.spark.read.schema(schema)
-                    .parquet(self.fs.join(self.path, d)).filter(cond)
-                    .select(*columns, F.lit(i).cast("int").alias("dir")))
+            part = self._source(d, schema).filter(cond)
+            if excl.get(d):
+                part = part.filter(~F.col("shard").isin(
+                    [int(x) for x in excl[d]]))
+            part = part.select(*columns, F.lit(i).cast("int").alias("dir"))
             df = part if df is None else df.unionByName(part)
         return df.toArrow()
+
+    def _driver_scan(self, terms: list[str], spec: dict,
+                     routing: dict[int, set],
+                     mask: dict | None) -> pd.DataFrame:
+        """A routed closure scan scored in the driver: the routed
+        shards' segment rows of the batch's terms, read through
+        _meta_rows, score in ONE table with the same _arrow_scorer —
+        all of a shard's rows together, the groupBy("shard") semantics,
+        exact under any row-group layout. -> the per-query top-k of the
+        routed shards (RESULTS columns)."""
+        tab = self._meta_rows(self._seg_dirs(), schemas.SEGMENTS,
+                              schemas.SEGMENTS.fieldNames(), terms=terms,
+                              shards=list(routing))
+        return _arrow_scorer(spec)(tab, routing, None, mask).to_pandas()
 
     def _plan_slice(self, terms: list[str]) -> tuple[dict | None, int]:
         """-> (term -> (shards int64[], admissible tfnorm bound
@@ -1353,18 +1460,22 @@ class Searcher:
                   routing: dict[int, set] | None = None,
                   anti_routing: dict[int, set] | None = None,
                   mask: dict | None = None) -> DataFrame:
-        """Closure scan: routing, anti-routing and a SMALL predicate/
-        tombstone mask (`mask`, from _collect_small_mask — the scan-fused
-        selection vector) ride the scorer closure; large masks go through
-        the cogroup channel instead (search_batch keeps mask_df non-None
-        in that case). A routed `seg` arrives filtered to the batch's
-        term and routed shard sets only (_id_set); the scorer drops the
-        rows of terms no query routed to their shard needs before it
-        decodes anything. The scorer runs as mapInArrow directly on the
-        parquet scan partitions, shuffle-free (see _map_scorer for why
-        this is exact). Exactness requires the one-row-group-per-file
-        invariant (_verify_scan_granularity); when it is unproven, the
-        same closure scorer runs per shard under groupBy("shard")."""
+        """Closure scan on Spark: routing, anti-routing and a SMALL
+        predicate/tombstone mask (`mask`, from _collect_small_mask — the
+        scan-fused selection vector) ride the scorer closure; large masks
+        go through the cogroup channel instead (search_batch keeps
+        mask_df non-None in that case). Exhaustive and unrouted scans
+        always come here; a routed scan only when its byte slice is
+        larger than one routed-scan task (_scan_site; a smaller one is
+        scored in the driver by _driver_scan). A routed `seg` arrives
+        filtered to the batch's term and routed shard sets only
+        (_id_set); the scorer drops the rows of terms no query routed to
+        their shard needs before it decodes anything. The scorer runs as
+        mapInArrow directly on the parquet scan partitions, shuffle-free
+        (see _map_scorer for why this is exact). Exactness requires the
+        one-row-group-per-file invariant (_verify_scan_granularity); when
+        it is unproven, the same closure scorer runs per shard under
+        groupBy("shard")."""
         if not self._map_scan_ok:
             # one shard's rows per call: exact under any file layout
             score = _arrow_scorer(spec)

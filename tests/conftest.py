@@ -51,3 +51,30 @@ def tiny_index(spark, tiny_df, tmp_path_factory):
     cfg = IndexConfig(block_size=16, docs_per_shard=64)
     Indexer(spark, cfg=cfg).build(tiny_df, path, n_chunks=2)
     return path
+
+
+def _topic_index(spark, path, **layout):
+    """The topic-clustered fixture (600 conversations, 16 topics) built
+    at `path` -> (its Searcher, an oracle keyed by dense doc_id)."""
+    from pdx_spark.config import IndexConfig
+    from pdx_spark.operators.indexer import Indexer
+    from pdx_spark.operators.searcher import Searcher
+    from pdx_spark.oracle import BM25Oracle
+    from pdx_spark.schemas import TRANSCRIPTS
+    from pdx_spark.sources.fixtures import make_topic_transcripts_pdf
+
+    pdf = make_topic_transcripts_pdf(600, n_topics=16)
+    Indexer(spark, cfg=IndexConfig(block_size=32, **layout)).build(
+        spark.createDataFrame(pdf, schema=TRANSCRIPTS), path)
+    texts = pdf.sort_values(["conv_id", "turn_idx"])["text"]
+    return (Searcher.load(spark, path),
+            BM25Oracle(dict(enumerate(texts))))
+
+
+@pytest.fixture(scope="session")
+def topic(spark, tmp_path_factory):
+    """The topic fixture at 64 docs per shard (>= 64 shards), written
+    as several segment files of 8 shards each. Shared and read-only:
+    a test that changes the index works on a copy of `topic[0].path`."""
+    return _topic_index(spark, str(tmp_path_factory.mktemp("topic") / "idx"),
+                        docs_per_shard=64, shards_per_task=8)

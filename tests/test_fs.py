@@ -120,8 +120,10 @@ def test_uri_index_plans_on_the_driver(spark, tiny_pdf, tiny_oracle, tmp_path,
     Searcher runs at most the seed and main scan jobs and returns the
     local Searcher's rows. A predicate batch whose mask exceeds
     _ROUTING_CAP routes through the cogroup channel from the driver's
-    (query, shard) pairs and matches the oracle."""
+    (query, shard) pairs and matches the oracle. The bound at 0 keeps
+    every routed scan on Spark."""
     from pdx_spark.operators import searcher as S
+    monkeypatch.setattr(S, "_ROUTED_TASK_BYTES", 0)
 
     path = str(tmp_path / "idx_plan")
     Indexer(spark, cfg=CFG).build(

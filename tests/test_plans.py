@@ -93,7 +93,8 @@ def test_pruning_routes_selective_queries_at_high_shard_count(
     assert s.last_plan["mode"] in ("unrouted", "routed")
 
 
-def test_search_batch_is_lazy_and_directory_cache_warms(spark, tiny_index):
+def test_search_batch_is_lazy_and_directory_cache_warms(spark, tiny_index,
+                                                        monkeypatch):
     """Round-3 judge task 4/10, amended by the round-6 driver-side
     merge: a batch costs a BOUNDED number of Spark jobs (the scan's one
     collect — merge and count add none), and a warm Searcher reuses its
@@ -101,7 +102,10 @@ def test_search_batch_is_lazy_and_directory_cache_warms(spark, tiny_index):
     re-reading parquet. (Until r6 this asserted plan-time laziness; the driver
     merge deliberately runs the bounded collect at call time — the
     docstring's 'materialized, <= Σk rows' contract — trading laziness
-    for one fewer exchange+window stage per batch.)"""
+    for one fewer exchange+window stage per batch.) The bound at 0 keeps
+    every routed scan on Spark, whose job counts this test bounds."""
+    import pdx_spark.operators.searcher as S
+    monkeypatch.setattr(S, "_ROUTED_TASK_BYTES", 0)
     s = Searcher.load(spark, tiny_index)
     s.search("w0001")  # warm idf cache + JIT
 
@@ -147,7 +151,6 @@ def test_search_batch_is_lazy_and_directory_cache_warms(spark, tiny_index):
     # a mask ABOVE the closure cap takes the cogroup channel, still
     # planned on the driver from the warm per-term cache: a warm batch
     # runs the selectivity count, the seed scan and the main scan only
-    import pdx_spark.operators.searcher as S
     old_cap = S._ROUTING_CAP
     S._ROUTING_CAP = 2
     try:
@@ -203,31 +206,6 @@ def test_plan_slice_cap_is_per_batch(spark, tiny_index, tiny_oracle,
     plan = run(cap)
     assert plan["mode"] in ("routed", "unrouted"), plan
     assert "plan_cap" not in plan
-
-
-def _topic_index(spark, path, **layout):
-    """The topic-clustered fixture (600 conversations, 16 topics) built
-    at `path` -> (its Searcher, an oracle keyed by dense doc_id)."""
-    from pdx_spark.config import IndexConfig
-    from pdx_spark.operators.indexer import Indexer
-    from pdx_spark.oracle import BM25Oracle
-    from pdx_spark.schemas import TRANSCRIPTS
-    from pdx_spark.sources.fixtures import make_topic_transcripts_pdf
-
-    pdf = make_topic_transcripts_pdf(600, n_topics=16)
-    Indexer(spark, cfg=IndexConfig(block_size=32, **layout)).build(
-        spark.createDataFrame(pdf, schema=TRANSCRIPTS), path)
-    texts = pdf.sort_values(["conv_id", "turn_idx"])["text"]
-    return (Searcher.load(spark, path),
-            BM25Oracle(dict(enumerate(texts))))
-
-
-@pytest.fixture(scope="module")
-def topic(spark, tmp_path_factory):
-    """The topic fixture at 64 docs per shard (>= 64 shards), written
-    as several segment files of 8 shards each."""
-    return _topic_index(spark, str(tmp_path_factory.mktemp("topic") / "idx"),
-                        docs_per_shard=64, shards_per_task=8)
 
 
 def test_two_phase_pruning_wins_on_topic_clustered_corpus(topic):
@@ -298,32 +276,46 @@ def test_routed_task_count_is_byte_aware(searcher):
         searcher._seg_bytes = total
 
 
-def test_warm_routed_batches_compile_nothing(spark, topic):
+def topic_queries(n, off):
+    """n signature/exclusive-term queries over the topic fixture, each
+    of one topic (the perfbench topic mix); `off` shifts topics and
+    shapes (query 0 has 1 term at off=0, 3 terms at off=1)."""
+    from pdx_spark.sources.fixtures import topic_query_terms
+    per = 4
+    terms = topic_query_terms(16, per_topic=per)
+    out = []
+    for q in range(n):
+        t = (3 * q + 7 * off) % 16
+        sig, ex = terms[t * per], terms[t * per + 1: t * per + per]
+        shape = [[sig], [ex[off % 3]], [sig, ex[(q + off) % 3]],
+                 [ex[0], ex[2]], [sig, *ex[1:]]][(q + 4 * off) % 5]
+        out.append((q, " ".join(shape), [10, 1, 50][(q + off) % 3]))
+    return out
+
+
+def assert_oracle_rows(rows, queries, oracle):
+    """Each query's rows rank and score as the oracle's top-k."""
+    for qid, text, k in queries:
+        got = sorted(((r["doc_id"], r["score"]) for r in rows
+                      if r["query_id"] == qid), key=lambda x: (-x[1], x[0]))
+        want = oracle.topk(text, k)
+        assert [d for d, _ in got] == [d for d, _ in want], (qid, text)
+        assert all(abs(a - b) <= 1e-9 * max(1.0, abs(b))
+                   for (_, a), (_, b) in zip(got, want)), (qid, text)
+
+
+def test_warm_routed_batches_compile_nothing(spark, topic, monkeypatch):
     """Routing reaches the JVM scan as data: the batch's terms and its
     routed shards are InSet predicates (padded past Catalyst's In -> InSet
     threshold), so every routed batch runs the same generated code. After
     one warm-up pass of 1-, 16- and 48-query batches, the same sizes with
     different queries compile no class (Spark's CodegenMetrics count is
-    unchanged) and still match the oracle."""
-    from pdx_spark.sources.fixtures import topic_query_terms
-
+    unchanged) and still match the oracle. The bound at 0 keeps every
+    routed scan on Spark."""
+    import pdx_spark.operators.searcher as S
+    monkeypatch.setattr(S, "_ROUTED_TASK_BYTES", 0)
     s, oracle = topic
     assert -(-s.n_docs // s.cfg.docs_per_shard) >= 64
-    per = 4
-    terms = topic_query_terms(16, per_topic=per)
-
-    def queries(n, off):
-        """n signature/exclusive-term queries, each of one topic (the
-        perfbench topic mix); `off` shifts topics and shapes (query 0
-        has 1 term at off=0, 3 terms at off=1)."""
-        out = []
-        for q in range(n):
-            t = (3 * q + 7 * off) % 16
-            sig, ex = terms[t * per], terms[t * per + 1: t * per + per]
-            shape = [[sig], [ex[off % 3]], [sig, ex[(q + off) % 3]],
-                     [ex[0], ex[2]], [sig, *ex[1:]]][(q + 4 * off) % 5]
-            out.append((q, " ".join(shape), [10, 1, 50][(q + off) % 3]))
-        return out
 
     codegen = spark.sparkContext._jvm \
         .org.apache.spark.metrics.source.CodegenMetrics
@@ -334,7 +326,7 @@ def test_warm_routed_batches_compile_nothing(spark, topic):
     def run(off):
         out = []
         for n in (1, 16, 48):
-            qs = queries(n, off)
+            qs = topic_queries(n, off)
             rows = s.search_batch(qs, force_two_phase=True).collect()
             out.append((qs, rows, dict(s.last_plan)))
         return out
@@ -345,14 +337,7 @@ def test_warm_routed_batches_compile_nothing(spark, topic):
     assert compiles() == before
     for qs, rows, plan in warm + second:
         assert plan["mode"] == "routed", plan
-        for qid, text, k in qs:
-            got = sorted(((r["doc_id"], r["score"]) for r in rows
-                          if r["query_id"] == qid),
-                         key=lambda x: (-x[1], x[0]))
-            want = oracle.topk(text, k)
-            assert [d for d, _ in got] == [d for d, _ in want], (qid, text)
-            assert all(abs(a - b) <= 1e-9 * max(1.0, abs(b))
-                       for (_, a), (_, b) in zip(got, want)), (qid, text)
+        assert_oracle_rows(rows, qs, oracle)
 
 
 def test_routed_scan_skips_segment_files(topic):
@@ -382,3 +367,73 @@ def test_routed_scan_skips_segment_files(topic):
                if "FileSourceScan" in n.getClass().getSimpleName()]
     read = scan.metrics().apply("numOutputRows").value()
     assert read == rows[f] < sum(rows.values()), (read, rows[f])
+
+
+def test_warm_routed_batch_scores_in_the_driver(spark, topic, monkeypatch):
+    """A routed scan whose byte slice fits one routed-scan task
+    (_ROUTED_TASK_BYTES) is scored in the driver: a warm routed batch
+    on the topic fixture launches no Spark job, last_plan records where
+    each scan ran with its byte estimate next to the cap, and the rows
+    match the oracle. With the bound at 0 the same batch runs the Spark
+    map-scan and returns identical rows."""
+    import pdx_spark.operators.searcher as S
+    s, oracle = topic
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        return len(tracker.getJobIdsForGroup(None))
+
+    qs = topic_queries(16, 2)
+    s.search_batch(qs).collect()  # warms the idf and plan caches
+    n0 = jobs()
+    rows = s.search_batch(qs).collect()
+    assert jobs() == n0
+    plan = dict(s.last_plan)
+    assert plan["mode"] == "routed", plan
+    for scan in ("seed_scan", "main_scan"):
+        site = plan[scan]
+        assert site["ran"] == "driver", plan
+        assert site["cap"] == "_ROUTED_TASK_BYTES", plan
+        assert 0 < site["routed_bytes"] <= site["limit"] \
+            == S._ROUTED_TASK_BYTES, plan
+    assert_oracle_rows(rows, qs, oracle)
+
+    monkeypatch.setattr(S, "_ROUTED_TASK_BYTES", 0)
+    n1 = jobs()
+    spark_rows = s.search_batch(qs).collect()
+    assert jobs() - n1 >= 2
+    plan = dict(s.last_plan)
+    assert plan["mode"] == "routed", plan
+    assert plan["seed_scan"]["ran"] == plan["main_scan"]["ran"] == "spark"
+    assert sorted(map(tuple, spark_rows)) == sorted(map(tuple, rows))
+
+
+def test_planner_counts_shards_over_the_id_space(spark, topic, tmp_path):
+    """Shard ids span [0, next_doc_id): deletes lower n_docs, not the
+    shard count. With every other doc of the topic fixture tombstoned,
+    a selective batch on default options still plans two-phase and
+    routes (a count from live docs would see half the shards, under
+    two_phase_min_shards, and run exhaustive), and matches the oracle
+    over the live docs."""
+    import shutil
+
+    from pdx_spark.operators.maintenance import Maintainer
+    from pdx_spark.oracle import BM25Oracle
+    from pdx_spark.sources.fixtures import make_topic_transcripts_pdf
+
+    path = str(tmp_path / "idx")
+    shutil.copytree(topic[0].path, path)
+    n = topic[0].n_docs
+    Maintainer(spark, path).delete(spark.createDataFrame(
+        [(i,) for i in range(0, n, 2)], "doc_id long"))
+    s = Searcher.load(spark, path)
+    assert -(-s.n_docs // s.cfg.docs_per_shard) < 64 <= s._n_shards()
+    qs = topic_queries(16, 0)
+    rows = s.search_batch(qs).collect()
+    assert s.last_plan["mode"] == "routed", s.last_plan
+    assert s.last_plan["n_shards"] == s._n_shards()
+    texts = make_topic_transcripts_pdf(600, n_topics=16) \
+        .sort_values(["conv_id", "turn_idx"])["text"].tolist()
+    assert len(texts) == n
+    live = BM25Oracle({i: t for i, t in enumerate(texts) if i % 2})
+    assert_oracle_rows(rows, qs, live)

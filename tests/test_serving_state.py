@@ -2,6 +2,7 @@
 their own options, and cached per-batch frames are released even when a
 batch fails."""
 
+import sys
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -39,6 +40,46 @@ def test_concurrent_batches_keep_their_options(spark, tiny_index):
         got = [f.result(timeout=600) for f in futures]
     bad = [i for i, (o, rows) in enumerate(got) if rows != want[o]]
     assert not bad, f"{len(bad)} of {len(got)} batches differ: {bad}"
+
+
+
+def test_concurrent_driver_scored_batches(spark, topic, monkeypatch):
+    """8 threads run routed batches on ONE fresh Searcher over the topic
+    fixture, every scan scored in the driver: no Spark job runs, every
+    batch equals its serial answer, and each index dir's pyarrow
+    dataset (the per-Searcher file list) is built once."""
+    import pyarrow.dataset as ds
+
+    from tests.test_plans import topic_queries
+
+    batches = [topic_queries(n, off) for off in range(3) for n in (1, 16, 48)]
+    want = [_rows(topic[0].search_batch(qs, force_two_phase=True))
+            for qs in batches]
+    built, dataset = [], ds.dataset
+
+    def counted(path, *a, **k):
+        built.append(path)
+        return dataset(path, *a, **k)
+    monkeypatch.setattr(ds, "dataset", counted)
+    s = Searcher.load(spark, topic[0].path)
+    tracker = spark.sparkContext.statusTracker()
+    n0 = len(tracker.getJobIdsForGroup(None))
+
+    def run(i):
+        b = i % len(batches)
+        return b, _rows(s.search_batch(batches[b], force_two_phase=True))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads more often
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            got = list(pool.map(run, range(3 * len(batches)), timeout=600))
+    finally:
+        sys.setswitchinterval(switch)
+    assert len(tracker.getJobIdsForGroup(None)) == n0
+    bad = [i for i, (b, rows) in enumerate(got) if rows != want[b]]
+    assert not bad, f"{len(bad)} of {len(got)} batches differ: {bad}"
+    assert built and len(built) == len(set(built)), built
 
 
 def test_failed_batch_releases_cached_frames(spark, tiny_index, monkeypatch):
