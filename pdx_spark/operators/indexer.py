@@ -200,21 +200,13 @@ def stat_artifacts_local(fs: IndexFS, seg_dirs: list[str], ts_final: str,
     pdf = tab.to_pandas()
 
     def _write_pa(table: "pa.Table", final: str):
-        tmp = final + ".tmp"
-        if fs.exists(tmp):
-            fs.delete(tmp)
-        os.makedirs(tmp)
         # a dictionary only pays where terms repeat: term_stats (and a
         # directory with one shard per term) stores each term once, and
         # there PLAIN is smaller than dictionary + indices
         unique = pc.count_distinct(table["term"]).as_py() == table.num_rows
-        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"),
-                       row_group_size=_STATS_ROW_GROUP,
-                       use_dictionary=[c for c in table.column_names
-                                       if c != "term"] if unique else True)
-        if fs.exists(final):
-            fs.delete(final)
-        fs.rename(tmp, final)
+        write_table_local(fs, table, final, row_group_size=_STATS_ROW_GROUP,
+                          use_dictionary=[c for c in table.column_names
+                                          if c != "term"] if unique else True)
 
     gd = pdf.groupby(["term", "shard"], sort=True, as_index=False).agg(
         n_blocks=("n", "size"), n_postings=("n", "sum"),
@@ -248,6 +240,21 @@ def stat_artifacts_local(fs: IndexFS, seg_dirs: list[str], ts_final: str,
             params["dl_scale"]).astype(np.int16))})
     _write_pa(dirt, dir_final)
     return params
+
+
+def write_table_local(fs: IndexFS, table, final: str, **write_kw) -> None:
+    """One pyarrow Table as the single parquet file of the local dir
+    `final`, through tmp-dir -> rename (the commit protocol of every
+    Spark-written artifact). write_kw goes to pq.write_table."""
+    import pyarrow.parquet as pq
+    tmp = final + ".tmp"
+    if fs.exists(tmp):
+        fs.delete(tmp)
+    os.makedirs(tmp)
+    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"), **write_kw)
+    if fs.exists(final):
+        fs.delete(final)
+    fs.rename(tmp, final)
 
 
 def _chunk_stats(spark, fs: IndexFS, seg_dir: str) -> dict:

@@ -31,7 +31,13 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
        that hold delta blocks or tombstoned postings into a patch
        segment dir; untouched base files stay byte-identical. Base
        term_stats/directory are untouched (bounds stay admissible:
-       tombstone removal can only shrink true maxima).
+       tombstone removal can only shrink true maxima). Like the
+       reference, which compacts one cluster in process, the whole op
+       runs in the driver when its affected slice fits one routed-scan
+       task (a local fs, and Snapshot.routed_bytes of the affected
+       shards <= _ROUTED_TASK_BYTES): pyarrow reads, decodes, encodes
+       and writes the patch, and no Spark job runs. A larger slice, or
+       a remote fs, runs the same decode and encoder as Spark jobs.
      compact() -> full rewrite: merge everything, drop tombstones and
        dead docs, fold stat deltas into the base, reset all delta state.
        Its new base takes the build's fgroup file layout, and its
@@ -50,6 +56,8 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import ExitStack
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -58,11 +66,14 @@ from pdx_spark.config import BM25Params, IndexConfig
 from pdx_spark.fs import IndexFS, index_fs, verify_single_rowgroup
 from pdx_spark.operators import corpus as C
 from pdx_spark.operators.indexer import (PARQUET_BLOCK_SIZE,
+                                         _empty_segments,
                                          _segment_encoder_docs,
                                          _segment_encoder_postings,
                                          _write_manifest, encode_layout,
                                          read_manifest, stat_artifacts,
-                                         write_directory_rows)
+                                         write_directory_rows,
+                                         write_table_local)
+from pdx_spark.operators.snapshot import Snapshot
 
 
 def _atomic_write(df: DataFrame, final: str, sort_cols: list[str] | None = None,
@@ -98,6 +109,10 @@ class Maintainer:
         p = self.manifest["params"]
         self.params = BM25Params(**p["bm25"])
         self.cfg = IndexConfig(**p["layout"])
+        # the driver-side reader Searcher uses too; it reads
+        # self.manifest, which every commit below updates in place
+        self.snap = Snapshot(spark, self.fs, path, self.manifest,
+                             self.cfg.docs_per_shard)
 
     def _p(self, *parts):
         return IndexFS.join(self.path, *parts)
@@ -121,13 +136,13 @@ class Maintainer:
     def _dead_docs(self):
         if self.manifest.get("dead_docs", 0) > 0:
             d = self.manifest.get("dead_dir", "dead_docs")
-            return self.spark.read.parquet(self._p(d)).select("doc_id")
+            return self.spark.read.schema(schemas.DOC_IDS).parquet(self._p(d))
         return None
 
     def _tombstones(self):
         if self.manifest.get("tombstones", 0) > 0:
             d = self.manifest.get("tomb_dir", "tombstones")
-            return self.spark.read.parquet(self._p(d))
+            return self.spark.read.schema(schemas.DOC_IDS).parquet(self._p(d))
         return None
 
     def _segments(self):
@@ -399,37 +414,32 @@ class Maintainer:
         byte-identical (the CompactCluster/SplitCluster analog — one
         cluster rewritten, not the index). Stats and directory are not
         rebuilt: term_stats deltas already carry the exact df state, and
-        stale-high directory bounds remain admissible."""
+        stale-high directory bounds remain admissible.
+
+        The affected shards are the delta dirs' shard column plus the
+        tombstones' shards, one read of each through the Snapshot (no
+        Spark job on a local fs). When their estimated bytes fit one
+        routed-scan task on a local fs (Snapshot.site), the op runs in
+        the driver (_patch_local): one pyarrow read of their segment
+        rows, the build's Arrow decode and encoder, one patch file.
+        Otherwise the same decode and encoder run on Spark
+        (_patch_spark). Both write the same multiset of SEGMENTS rows.
+        The lineage entry records the site with its byte estimate next
+        to _ROUTED_TASK_BYTES."""
         t0 = time.time()
         m = self.manifest
-        tomb = self._tombstones()
-
-        affected: set[int] = set()
-        for d in m.get("deltas", []):
-            part = (self.spark.read.schema(schemas.SEGMENTS)
-                    .option("recursiveFileLookup", "true")
-                    .parquet(self._p(d)))
-            affected |= {int(r[0]) for r in part.select("shard").distinct().collect()}
-        if tomb is not None:
-            affected |= {int(r[0]) for r in tomb.select(
-                (F.col("doc_id") / self.cfg.docs_per_shard).cast("long")
-                .alias("s")).distinct().collect()}
-        if not affected:
+        shards, tomb_ids = self._affected()
+        if not len(shards):
             return m
-        shards = sorted(affected)
-
-        src = self._segments().filter(F.col("shard").isin(shards))
-        posts = _decode_segments_to_postings(src)
-        if tomb is not None:
-            posts = posts.join(tomb.select("doc_id"), "doc_id", "left_anti")
-        enc = _segment_encoder_postings(self.cfg, m["avgdl"], self.params)
+        site = self.snap.site(len(shards), self.fs.is_local)
+        driver = site["ran"] == "driver"
         gen = int(m.get("gen", 0))
         m["gen"] = gen + 1
         patch = f"segments/patch-{gen}"
-        new_seg = (posts.withColumn("shard", self.cfg.shard_of_expr())
-                   .groupBy("shard").applyInArrow(enc, schema=schemas.SEGMENTS))
-        _atomic_write(new_seg, self._p(patch), ["term", "shard", "block_id"],
-                      fs=self.fs, segments=True)
+        if driver:
+            self._patch_local(shards, tomb_ids, patch)
+        else:
+            self._patch_spark(shards, patch)
         single_rg = verify_single_rowgroup(self.fs, patch, root=self.path)
 
         # bookkeeping: base dirs exclude the patched shards; delta segment
@@ -440,7 +450,7 @@ class Maintainer:
         doomed = list(m.get("deltas", []))
         excl = m.setdefault("seg_excludes", {})
         for d in m.get("segment_dirs", ["segments/base"]):
-            excl[d] = sorted(set(excl.get(d, [])) | affected)
+            excl[d] = sorted(set(excl.get(d, [])) | set(shards.tolist()))
         m["deltas"] = []
         m.setdefault("segment_dirs", ["segments/base"]).append(patch)
 
@@ -448,27 +458,104 @@ class Maintainer:
         # dead list so docs() (predicate masks, key lookups) stays
         # live-only. Gen-named + manifest pointer = same staging
         # discipline as tombstones/deltas (no pre-commit overwrite).
-        if tomb is not None:
+        if len(tomb_ids):
             dd_dir = f"dead_docs-{gen}"
-            old_dd = self._dead_docs()
-            merged = tomb.select("doc_id") if old_dd is None \
-                else old_dd.unionByName(tomb.select("doc_id")).distinct()
-            _atomic_write(merged, self._p(dd_dir), fs=self.fs)
-            if m.get("dead_docs", 0) > 0:
-                doomed.append(m.get("dead_dir", "dead_docs"))
-            m["dead_docs"] = self.spark.read.parquet(self._p(dd_dir)).count()
+            old_dd = m.get("dead_dir", "dead_docs") \
+                if m.get("dead_docs", 0) > 0 else None
+            if driver:
+                old = self.snap.meta_rows(
+                    [old_dd], schemas.DOC_IDS, ["doc_id"]).column("doc_id") \
+                    .to_numpy() if old_dd else tomb_ids[:0]
+                write_table_local(self.fs, pa.table(
+                    {"doc_id": np.concatenate([old, tomb_ids])}),
+                    self._p(dd_dir))
+            else:
+                merged = self._tombstones()
+                if old_dd:
+                    merged = self._dead_docs().unionByName(merged)
+                _atomic_write(merged, self._p(dd_dir), fs=self.fs)
+            if old_dd:
+                doomed.append(old_dd)
+            # delete() tombstones only live, not yet tombstoned ids, so
+            # the tombstones and the old dead docs are disjoint
+            m["dead_docs"] = int(m.get("dead_docs", 0)) + len(tomb_ids)
             m["dead_dir"] = dd_dir
             doomed.append(m.get("tomb_dir", "tombstones"))
             m["tombstones"] = 0
 
         m["seg_single_rg"] = bool(m.get("seg_single_rg", False) and single_rg)
         m["lineage"].append({"stage": "compact_targeted",
-                             "shards": len(shards),
+                             "shards": len(shards), **site,
                              "sec": round(time.time() - t0, 2)})
         _write_manifest(self.path, m, fs=self.fs)
         for d in doomed:
             self.fs.delete(self._p(d))
         return m
+
+    def _affected(self) -> tuple[np.ndarray, np.ndarray]:
+        """-> (sorted shards compact_targeted rewrites, tombstoned doc
+        ids): the delta dirs' shard column and the tombstone ids, each
+        one read through the Snapshot (pyarrow on a local fs, one Spark
+        scan collected as Arrow on any other)."""
+        m = self.manifest
+        shards = [np.zeros(0, np.int64)]
+        tomb = np.zeros(0, np.int64)
+        if m.get("deltas"):
+            shards.append(self.snap.meta_rows(
+                m["deltas"], schemas.SEGMENTS, ["shard"])
+                .column("shard").to_numpy())
+        if m.get("tombstones", 0) > 0:
+            tomb = self.snap.meta_rows(
+                [m.get("tomb_dir", "tombstones")], schemas.DOC_IDS,
+                ["doc_id"]).column("doc_id").to_numpy()
+            shards.append(tomb // self.cfg.docs_per_shard)
+        return np.unique(np.concatenate(shards)), tomb
+
+    def _patch_local(self, shards: np.ndarray, tomb_ids: np.ndarray,
+                     patch: str) -> None:
+        """compact_targeted's driver half: the affected shards' segment
+        rows (base minus seg_excludes, patches, deltas) in one pyarrow
+        read, decoded by blocks.decode_blocks_arrow, tombstoned ids
+        dropped, each shard encoded by the build's encoder, written as
+        ONE (term, shard, block_id)-sorted file with one row group."""
+        from pdx_spark.functions.blocks import decode_blocks_arrow
+        tab = self.snap.meta_rows(self.snap.seg_dirs(), schemas.SEGMENTS,
+                                  _DECODE_COLS, shards=shards.tolist())
+        posts = pa.Table.from_batches(
+            [decode_blocks_arrow(b) for b in tab.to_batches() if b.num_rows],
+            schema=_POSTINGS)
+        doc = posts.column("doc_id").to_numpy()
+        keep = np.flatnonzero(~np.isin(doc, tomb_ids))
+        shard = doc[keep] // self.cfg.docs_per_shard
+        order = keep[np.argsort(shard, kind="stable")]
+        posts = posts.take(order).append_column(
+            "shard", pa.array(np.sort(shard, kind="stable")))
+        enc = _segment_encoder_postings(self.cfg, self.manifest["avgdl"],
+                                        self.params)
+        cuts = np.flatnonzero(np.diff(posts.column("shard").to_numpy())) + 1
+        parts = [enc(posts.slice(a, b - a)) for a, b in
+                 zip([0, *cuts], [*cuts, posts.num_rows]) if b > a]
+        seg = pa.concat_tables(parts) if parts else _empty_segments()
+        seg = seg.sort_by([("term", "ascending"), ("shard", "ascending"),
+                           ("block_id", "ascending")])
+        write_table_local(self.fs, seg, self._p(patch),
+                          row_group_size=max(1, seg.num_rows))
+
+    def _patch_spark(self, shards: np.ndarray, patch: str) -> None:
+        """compact_targeted's Spark half: the same decode and encoder as
+        _patch_local, as a mapInArrow decode, a tombstone anti-join and
+        a per-shard applyInArrow encode."""
+        src = self._segments().filter(F.col("shard").isin(shards.tolist()))
+        posts = _decode_segments_to_postings(src)
+        tomb = self._tombstones()
+        if tomb is not None:
+            posts = posts.join(tomb, "doc_id", "left_anti")
+        enc = _segment_encoder_postings(self.cfg, self.manifest["avgdl"],
+                                        self.params)
+        new_seg = (posts.withColumn("shard", self.cfg.shard_of_expr())
+                   .groupBy("shard").applyInArrow(enc, schema=schemas.SEGMENTS))
+        _atomic_write(new_seg, self._p(patch), ["term", "shard", "block_id"],
+                      fs=self.fs, segments=True)
 
     # ---- minor (stats) compaction --------------------------------------------
     def compact_stats(self) -> dict:
@@ -679,6 +766,13 @@ class Maintainer:
         return m
 
 
+# the SEGMENTS columns the decode reads, and the decoded postings' schema
+_DECODE_COLS = ["term", "n", "first_doc", "ids_bw", "tfs_bw", "dls_bw",
+                "ids", "tfs", "dls"]
+_POSTINGS = pa.schema([("term", pa.string()), ("doc_id", pa.int64()),
+                       ("tf", pa.int32()), ("dl", pa.int32())])
+
+
 def _decode_segments_to_postings(seg: DataFrame) -> DataFrame:
     """Explode packed blocks back to (term, doc_id, tf, dl) rows — the M8
     de-transpose analog (cluster.hpp:165-181), one vectorized Arrow
@@ -690,6 +784,5 @@ def _decode_segments_to_postings(seg: DataFrame) -> DataFrame:
             if batch.num_rows:
                 yield decode_blocks_arrow(batch)
 
-    return (seg.select("term", "n", "first_doc", "ids_bw", "tfs_bw",
-                       "dls_bw", "ids", "tfs", "dls")
+    return (seg.select(*_DECODE_COLS)
             .mapInArrow(fn, schema="term string, doc_id long, tf int, dl int"))

@@ -7,7 +7,7 @@ Mirrors the reference's pruned scan (PDXearch::Search,
      the term_stats parquet (filter pushdown on the sorted `term`
      column) — analog of rotate-the-query (searcher.hpp:602-613).
   2. Driver-side plan: the directory slice of the query terms is read
-     on the driver (Searcher._meta_rows: pyarrow on a local fs, one
+     on the driver (Snapshot.meta_rows: pyarrow on a local fs, one
      Spark scan collected as Arrow on any other scheme) and summed in
      numpy to per-(query, shard) upper bounds — the "rank clusters by
      promise" step, in-process as in the reference
@@ -26,7 +26,7 @@ Mirrors the reference's pruned scan (PDXearch::Search,
      term of _routed_task_count) is scored IN THE DRIVER, as the
      reference runs Warmup and Prune in the query's own thread: the
      routed shards' rows of the batch's terms come through the one
-     driver-side reader (_meta_rows: pyarrow with term and shard
+     driver-side reader (Snapshot.meta_rows: pyarrow with term and shard
      filters on a local fs, one Spark scan collected as Arrow on any
      other scheme) and all of them score in one table — a shard's rows
      together, exact under any file layout. A larger routed scan runs
@@ -80,15 +80,12 @@ see BENCH.md's bandwidth ceiling.
 from __future__ import annotations
 
 import functools
-import operator
-import threading
 import time
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark import SparkContext
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -99,6 +96,7 @@ from pdx_spark.functions.blocks import decode_term_run_views, payload_view
 from pdx_spark.functions.bm25 import idf_np, tfnorm_np
 from pdx_spark.functions.tokenize import tokenize_py
 from pdx_spark.operators.indexer import MANIFEST, read_manifest
+from pdx_spark.operators.snapshot import Snapshot, _id_set, _in_list
 
 _THETA_GUARD = 1e-9  # float-monotonicity guard on upper-bound comparisons
 
@@ -136,81 +134,6 @@ _BYPASS_REPROBE_SECS = 300.0
 # (shard long, kind int, id long, p int)
 _KIND_MASK = 0   # (shard, kind=0, id=doc_id, p): selection-vector row
 _KIND_QUERY = 1  # (shard, kind=1, id=query_id): per-shard query routing
-
-# target decoded bytes per routed-scan task. Every python task costs a
-# fixed ~0.2 CPU-s (Arrow runner round-trip) regardless of data, so a
-# routed scan over a small slice should run FEW tasks: task count is
-# capped at ceil(routed_bytes / this) in addition to the shard-count and
-# parallelism caps. 2 MiB balances the two regimes: tiny routed slices
-# (a well-pruned scan) still run 1-2 tasks, while a routed scan whose
-# byte slice is large (seed phase of a big batch, unprunable corpora)
-# fills the cores instead of idling 80% of them — at 8 MiB the bench's
-# forced-two-phase seed scan ran 6 tasks on 32 cores (0.89 s; 0.41 s at
-# 2 MiB, interleaved A/B), and a byte cap below parallelism is exactly
-# what breaks N->4N query scaling. At 100 TB the byte cap is never the
-# binding term — defaultParallelism is. A routed slice of at most this
-# many bytes (one task's worth) is scored in the driver instead, which
-# also saves the Spark job around the task (_scan_site).
-_ROUTED_TASK_BYTES = 2 * 1024 * 1024
-
-
-# Catalyst keeps IN lists of <= inSetConversionThreshold (10) values as
-# `In`, inlining long literals into generated Java (new classes per id
-# set); longer lists become `InSet`, whose hash set the generated code
-# takes by reference. Sets are padded with _SET_PAD never-held values;
-# a shard set is split into _SET_RUNS runs (see _id_set).
-_SET_PAD = 11
-_SET_RUNS = 8
-
-
-def _in_list(col: str, values) -> "F.Column":
-    """IN predicate over a python string list as ONE SQL parse call
-    (`Column.isin` pays a py4j round trip per value: 8-10 s of driver
-    time for a 2,900-term batch), padded to plan as InSet. Values are
-    tokenizer output ([a-z0-9]+), so '#i' pads never match; escape
-    defensively anyway."""
-    vals = [*values, *(f"#{i}" for i in range(_SET_PAD))]
-    esc = ",".join("'" + str(v).replace("\\", "\\\\").replace("'", "\\'")
-                   + "'" for v in vals)
-    return F.expr(f"{col} IN ({esc})")
-
-
-def _id_set(col: str, ids) -> "F.Column":
-    """`col IN ids` over int64 ids (shards) as data, not SQL text: every
-    id set reaches the JVM in one byte buffer (a constant number of
-    py4j calls), padded to plan as InSet. Parquet checks an `In` against
-    row-group stats by its values' [min, max] only, so the ids are cut
-    at their _SET_RUNS - 1 widest gaps into runs, each an InSet padded
-    below every shard AND one padded above (the conjunction's envelope
-    is the run's own), OR-ed in a fixed shape: stats skip the segment
-    files between runs unopened (files hold contiguous shard ranges),
-    shard dictionaries those inside a run holding no routed shard."""
-    from pyspark.sql.classic.column import Column
-    sc = SparkContext._active_spark_context
-    jvm = sc._jvm
-    ids = np.unique(np.fromiter((int(i) for i in ids), np.int64))
-    gaps = np.diff(ids)
-    cuts = np.sort(np.argsort(-gaps, kind="stable")[:_SET_RUNS - 1]) + 1
-    runs = np.split(ids, cuts[gaps[cuts - 1] > 1])
-    runs += [ids[:0]] * (_SET_RUNS - len(runs))
-    # pads differ per run: Catalyst folds repeated disjuncts, which
-    # would make the plan's shape follow the run count
-    pad = np.arange(1, _SET_PAD + 1)
-    sets = [np.concatenate([r, p]) for i, r in enumerate(runs)
-            for p in (-pad - _SET_PAD * i, pad + _SET_PAD * i + (1 << 62))]
-    vals = np.concatenate(sets).astype(">i8")
-    arr = sc._gateway.new_array(jvm.long, len(vals))
-    jvm.java.nio.ByteBuffer.wrap(bytearray(vals.tobytes())) \
-        .asLongBuffer().get(arr)
-    boxed = jvm.java.util.Arrays.stream(arr).boxed().toArray()
-    # composed on the JVM Columns: pyspark's Column operators cost ~10
-    # py4j round trips each (call-site capture), these one
-    jc, ends = F.col(col)._jc, np.cumsum([len(x) for x in sets]).tolist()
-    ins = [jc.isin(boxed[a:b]) for a, b in zip([0] + ends[:-1], ends)]
-    return Column(functools.reduce(
-        lambda a, b: getattr(a, "or")(b),
-        (getattr(lo, "and")(hi) for lo, hi in zip(ins[::2], ins[1::2]))))
-
 
 def _route(pairs) -> dict[int, set]:
     """(query, shard) pairs -> shard -> query set routing."""
@@ -647,12 +570,11 @@ class Searcher:
         # ({mode: exhaustive|routed|unrouted|cogroup, ...counts}) — the
         # observability hook ops dashboards and tests read
         self.last_plan: dict = {}
+        # the driver-side reader of this manifest (per-dir readers,
+        # meta_rows, the segment byte estimate), shared with Maintainer
+        self.snap = Snapshot(spark, self.fs, path, self.manifest,
+                             self.cfg.docs_per_shard)
         self._map_scan_ok = self._verify_scan_granularity()
-        self._seg_bytes: int | None = None  # lazy, see _segment_bytes
-        # per-dir readers (see _source), built once under the lock by
-        # whichever concurrent batch needs them first
-        self._sources: dict[str, object] = {}
-        self._lock = threading.Lock()
 
     def _manifest_fingerprint(self) -> str:
         """Cheap generation token for the on-disk manifest (a small JSON
@@ -685,75 +607,26 @@ class Searcher:
             return True
         return False
 
-    def _seg_dirs(self) -> list[str]:
-        return self.manifest["segment_dirs"] + self.manifest.get("deltas", [])
-
-    def _n_shards(self) -> int:
-        """Shard ids span doc ids [0, next_doc_id): deletes lower n_docs
-        but never the id space, so the shard count comes from the
-        id-allocation high-water mark (n_docs on manifests without
-        one)."""
-        n_ids = int(self.manifest.get("next_doc_id", self.n_docs))
-        return max(1, -(-n_ids // self.cfg.docs_per_shard))
-
-    def _segment_bytes(self) -> int:
-        """Total on-disk bytes of the segment files (base + deltas),
-        listed once per Searcher through the fs seam. Used only to SIZE
-        routed scans (never for correctness); a listing failure caches
-        0, which disables the byte cap and the driver scan."""
-        with self._lock:
-            if self._seg_bytes is None:
-                try:
-                    files = [sz for d in self._seg_dirs()
-                             for _, sz in self.fs.parquet_files(
-                                 self.fs.join(self.path, d))]
-                    self._seg_bytes = sum(files)
-                    self._seg_files = len(files)
-                except Exception:
-                    self._seg_bytes = 0
-                    self._seg_files = 0
-            return self._seg_bytes
-
-    def _segment_file_count(self) -> int:
-        self._segment_bytes()
-        return self._seg_files
-
-    def _routed_bytes(self, n_routed_shards: int) -> int:
-        """Estimated on-disk bytes of a routed scan: the routed shard
-        fraction of the total segment bytes. Shards are near-uniform by
-        construction (dense doc_ids, fixed docs_per_shard). 0 when the
-        listing failed."""
-        n = self._n_shards()
-        return int(self._segment_bytes() * min(n_routed_shards, n) / n)
-
     def _routed_task_count(self, n_routed_shards: int) -> int:
         """Task count for a routed scan on Spark: at most one task per
         routed shard, never more than defaultParallelism, and never more
-        tasks than the routed BYTE slice justifies (each python task has
-        a fixed ~0.2 CPU-s cost, so a few-MB routed slice should run as
-        1-2 tasks even on a 32-core box — the round-5 pruning bench
-        measured the task overhead alone flipping the routed path from
-        a CPU win to a 2x CPU loss on a 28 MB index). A slice that
-        fits ONE task by bytes never gets here: _scan_site scores it in
-        the driver, which saves the task and the job around it too."""
+        tasks than the routed BYTE slice justifies. Each python task
+        has a fixed 0.14-0.25 CPU-s cost before any engine code runs,
+        even in a reused worker: pyspark's worker_util.setup_spark_files
+        calls importlib.invalidate_caches(), which on Python 3.11
+        re-reads the central directory of pyspark.zip (1,328 entries)
+        once per zipimporter (about 16). So a few-MB routed slice should
+        run as 1-2 tasks even on a 32-core box — the round-5 pruning
+        bench measured the task overhead alone flipping the routed path
+        from a CPU win to a 2x CPU loss on a 28 MB index. A slice that
+        fits ONE task by bytes never gets here: Snapshot.site sends it
+        to the driver, which saves the task and the job around it too."""
         n = max(1, min(self.spark.sparkContext.defaultParallelism,
                        n_routed_shards))
-        routed = self._routed_bytes(n_routed_shards)
-        if routed > 0:
-            n = min(n, -(-routed // max(1, _ROUTED_TASK_BYTES)))
+        site = self.snap.site(n_routed_shards, False)
+        if site["routed_bytes"] > 0:
+            n = min(n, -(-site["routed_bytes"] // max(1, site["limit"])))
         return n
-
-    def _scan_site(self, n_routed_shards: int, closure: bool) -> dict:
-        """Where a routed scan runs, with the byte estimate next to its
-        cap (as last_plan's plan_cap does): a closure scan whose routed
-        slice fits one routed-scan task by bytes runs in the driver,
-        every other one (a larger slice, an unknown size, the cogroup
-        channel) on Spark."""
-        routed = self._routed_bytes(n_routed_shards)
-        driver = closure and 0 < routed <= _ROUTED_TASK_BYTES
-        return {"ran": "driver" if driver else "spark",
-                "cap": "_ROUTED_TASK_BYTES", "limit": _ROUTED_TASK_BYTES,
-                "routed_bytes": routed}
 
     def _verify_scan_granularity(self) -> bool:
         """The shuffle-free map-scan is exact only if the reader never
@@ -773,7 +646,7 @@ class Searcher:
         if self.manifest.get("seg_single_rg") is True:
             return True
         return all(verify_single_rowgroup(self.fs, d, root=self.path)
-                   for d in self._seg_dirs())
+                   for d in self.snap.seg_dirs())
 
     @classmethod
     def load(cls, spark, path: str) -> "Searcher":
@@ -802,7 +675,7 @@ class Searcher:
         # a real planning cost
         if getattr(self, "_seg_frame", None) is None:
             excl = self.manifest.get("seg_excludes", {})
-            dirs = self._seg_dirs()
+            dirs = self.snap.seg_dirs()
             if not any(excl.get(d) for d in dirs):
                 # one multi-path scan instead of a Union of per-dir
                 # scans: same rows, but a single scan node — smaller
@@ -846,7 +719,7 @@ class Searcher:
         deltas are negative), bounds take max (stale-high = admissible).
         A caller that filters on `term` gets parquet row-group pruning on
         every delta file before the merge agg. (Query serving reads the
-        same dirs through _meta_rows instead.)"""
+        same dirs through Snapshot.meta_rows instead.)"""
         base = self.spark.read.schema(schemas.TERM_STATS).parquet(
             self.fs.join(self.path,
                          self.manifest.get("ts_base", "term_stats")))
@@ -966,7 +839,7 @@ class Searcher:
                 # term-filtered segment rows)
                 mask_df = None
 
-        n_shards_total = self._n_shards()
+        n_shards_total = self.snap.n_shards()
         # exhaustive when pruning cannot pay: too few shards for skipping
         # to matter, or the BATCH is so large that the seed phase alone
         # would touch ~every shard (Q x seed_shards >= shards means the
@@ -1026,13 +899,13 @@ class Searcher:
         seed_routing = _route(seed_set)
         qspec0 = dict(spec, queries=[(q, ts, k, None)
                                      for q, ts, k in live])
-        seed_site = self._scan_site(len(seed_routing), mask_df is None)
+        seed_site = self.snap.site(len(seed_routing), mask_df is None)
 
         def routed_topk(site, qspec, routing, pairs, cogroup, extra=None):
             """One routed scan (seed or main) -> its per-query top-k,
             merged with `extra` (the seed top-k), on the driver: scored
-            there (site from _scan_site), or by the closure map-scan, or
-            by the cogroup channel with `pairs` as its routing rows."""
+            there (site from Snapshot.site), or by the closure map-scan,
+            or by the cogroup channel with `pairs` as its routing rows."""
             if site["ran"] == "driver":
                 parts = [self._driver_scan(all_terms, qspec, routing,
                                            closure_mask)]
@@ -1113,7 +986,7 @@ class Searcher:
         # a large mask, or routing too large for the closure, rides the
         # cogroup channel as aux rows built from the driver's pair list
         cogroup = mask_df is not None or n_main > _ROUTING_CAP
-        main_site = self._scan_site(len(routing), not cogroup) \
+        main_site = self.snap.site(len(routing), not cogroup) \
             if routing else None
         self.last_plan = {"mode": "cogroup" if cogroup else "routed",
                           "n_main": n_main,
@@ -1179,92 +1052,27 @@ class Searcher:
                           "ub_pairs": n_pairs}
         return q_ub, None
 
-    def _source(self, d: str, schema):
-        """The reader of index dir `d`: a pyarrow dataset on a local fs,
-        else a Spark frame. Built once per Searcher — a Searcher is one
-        manifest snapshot — so no batch lists files again."""
-        with self._lock:
-            src = self._sources.get(d)
-            if src is None:
-                path = self.fs.join(self.path, d)
-                if self.fs.is_local:
-                    import pyarrow.dataset as ds
-                    src = ds.dataset(path, format="parquet")
-                else:
-                    src = (self.spark.read.schema(schema)
-                           .option("recursiveFileLookup", "true")
-                           .parquet(path))
-                self._sources[d] = src
-            return src
-
-    def _meta_rows(self, dirs: list[str], schema, columns: list[str], *,
-                   terms: list[str] | None = None,
-                   term_range: tuple[str, str] | None = None,
-                   shards: list[int] | None = None) -> pa.Table:
-        """The driver-side reader of the term-sorted dirs (term_stats,
-        directory or segments; base + deltas): the `columns` of the rows
-        whose term is in `terms`, or in [lo, hi) = `term_range`, and
-        whose shard is in `shards` when given, plus `dir`, the row's
-        index into `dirs`. A dir's seg_excludes shards are dropped, as
-        in segments(). pyarrow on a local fs, else one Spark scan of the
-        same filter collected as Arrow. pyarrow tests ranges, not `isin`,
-        against row-group stats, so the terms add their [min, max]
-        envelope and the shards become an OR of their contiguous runs:
-        stats skip the row groups, and so the files, that hold none."""
-        excl = self.manifest.get("seg_excludes", {})
-        if self.fs.is_local:
-            import pyarrow.dataset as ds
-            t, sh = ds.field("term"), ds.field("shard")
-            filt = t.isin(terms) & (t >= min(terms)) & (t <= max(terms)) \
-                if terms is not None else \
-                (t >= term_range[0]) & (t < term_range[1])
-            if shards is not None:
-                ids = np.unique(np.asarray(shards, dtype=np.int64))
-                runs = np.split(ids, np.flatnonzero(np.diff(ids) > 1) + 1)
-                filt = filt & functools.reduce(operator.or_, (
-                    (sh >= int(r[0])) & (sh <= int(r[-1])) for r in runs))
-            tabs = []
-            for i, d in enumerate(dirs):
-                f = filt & ~sh.isin(excl[d]) if excl.get(d) else filt
-                tab = self._source(d, schema).to_table(columns=columns,
-                                                       filter=f)
-                tabs.append(tab.append_column(
-                    "dir", pa.array(np.full(tab.num_rows, i, np.int32))))
-            return pa.concat_tables(tabs, promote_options="permissive")
-        cond = _in_list("term", terms) if terms is not None else \
-            (F.col("term") >= term_range[0]) & (F.col("term") < term_range[1])
-        if shards is not None:
-            cond = cond & _id_set("shard", shards)
-        df = None
-        for i, d in enumerate(dirs):
-            part = self._source(d, schema).filter(cond)
-            if excl.get(d):
-                part = part.filter(~F.col("shard").isin(
-                    [int(x) for x in excl[d]]))
-            part = part.select(*columns, F.lit(i).cast("int").alias("dir"))
-            df = part if df is None else df.unionByName(part)
-        return df.toArrow()
-
     def _driver_scan(self, terms: list[str], spec: dict,
                      routing: dict[int, set],
                      mask: dict | None) -> pd.DataFrame:
         """A routed closure scan scored in the driver: the routed
         shards' segment rows of the batch's terms, read through
-        _meta_rows, score in ONE table with the same _arrow_scorer —
-        all of a shard's rows together, the groupBy("shard") semantics,
-        exact under any row-group layout. -> the per-query top-k of the
-        routed shards (RESULTS columns)."""
-        tab = self._meta_rows(self._seg_dirs(), schemas.SEGMENTS,
-                              schemas.SEGMENTS.fieldNames(), terms=terms,
-                              shards=list(routing))
+        Snapshot.meta_rows, score in ONE table with the same
+        _arrow_scorer — all of a shard's rows together, the
+        groupBy("shard") semantics, exact under any row-group layout.
+        -> the per-query top-k of the routed shards (RESULTS columns)."""
+        tab = self.snap.meta_rows(self.snap.seg_dirs(), schemas.SEGMENTS,
+                                  schemas.SEGMENTS.fieldNames(), terms=terms,
+                                  shards=list(routing))
         return _arrow_scorer(spec)(tab, routing, None, mask).to_pandas()
 
     def _plan_slice(self, terms: list[str]) -> tuple[dict | None, int]:
         """-> (term -> (shards int64[], admissible tfnorm bound
         float64[]), slice rows) for the query terms, from the directory
-        (base + deltas) through _meta_rows. The u8 bounds dequantize
-        with each dir's own affine params (manifest["dir_quant"]);
-        ceil/floor quantization keeps them admissible.
+        (base + deltas) through Snapshot.meta_rows. The u8 bounds
+        dequantize with each dir's own affine params
+        (manifest["dir_quant"]); ceil/floor quantization keeps them
+        admissible.
 
         The directory is metadata, orders of magnitude smaller than the
         index, so the plan is ranked in-process as in the reference
@@ -1278,7 +1086,7 @@ class Searcher:
                       if t in self._plan_cache)
         dirs = [self.manifest.get("dir_base", "directory")] \
             + self.manifest.get("dir_deltas", [])
-        tab = self._meta_rows(
+        tab = self.snap.meta_rows(
             dirs, schemas.DIRECTORY, ["term", "shard", "max_tf_q", "min_dl_q"],
             terms=missing) if missing else None
         n_slice += 0 if tab is None else tab.num_rows
@@ -1314,10 +1122,10 @@ class Searcher:
     def _live_df(self, **where) -> dict[str, int]:
         """term -> df summed over term_stats base + deltas (delete
         deltas are negative) for the live terms (df > 0) matching
-        `where` (_meta_rows' terms / term_range)."""
+        `where` (Snapshot.meta_rows' terms / term_range)."""
         dirs = [self.manifest.get("ts_base", "term_stats")] \
             + self.manifest.get("ts_deltas", [])
-        tab = self._meta_rows(dirs, schemas.TERM_STATS, ["term", "df"],
+        tab = self.snap.meta_rows(dirs, schemas.TERM_STATS, ["term", "df"],
                               **where)
         df_by_term: dict[str, int] = {}
         for t, c in zip(tab["term"].to_pylist(), tab["df"].to_pylist()):
@@ -1348,8 +1156,8 @@ class Searcher:
 
     def _idf_lookup(self, terms: list[str]) -> dict[str, float]:
         """term -> idf for the query terms, from term_stats (base +
-        deltas) through _meta_rows. Driver-cached per Searcher (N is
-        load-time fixed, so idf is too). OOV and dead terms are cached
+        deltas) through Snapshot.meta_rows. Driver-cached per Searcher
+        (N is load-time fixed, so idf is too). OOV and dead terms are cached
         as absent (df<=0) so repeats skip the lookup too."""
         missing = [t for t in terms if t not in self._idf_cache]
         if missing:
@@ -1466,7 +1274,7 @@ class Searcher:
         go through the cogroup channel instead (search_batch keeps
         mask_df non-None in that case). Exhaustive and unrouted scans
         always come here; a routed scan only when its byte slice is
-        larger than one routed-scan task (_scan_site; a smaller one is
+        larger than one routed-scan task (Snapshot.site; a smaller one is
         scored in the driver by _driver_scan). A routed `seg` arrives
         filtered to the batch's term and routed shard sets only
         (_id_set); the scorer drops the rows of terms no query routed to
@@ -1526,7 +1334,7 @@ class Searcher:
         window merge runs Spark-side, unchanged."""
         if not self._map_scan_ok:
             return False
-        n_files = self._segment_file_count()
+        n_files = self.snap.segment_file_count()
         if n_files <= 0:
             return False
         sum_k = sum(k for _, _, k in live)

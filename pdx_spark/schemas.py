@@ -83,6 +83,11 @@ DIRECTORY = T.StructType([
     T.StructField("min_dl_q", T.ShortType(), False),
 ])
 
+# Tombstones and compacted-away dead docs: one doc id per row.
+DOC_IDS = T.StructType([
+    T.StructField("doc_id", T.LongType(), False),
+])
+
 # Search results.
 RESULTS = T.StructType([
     T.StructField("query_id", T.IntegerType(), False),

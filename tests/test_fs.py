@@ -44,10 +44,10 @@ def _oracle(pdf, drop_ids=()):
 
 
 def test_file_uri_roundtrip(spark, tiny_pdf, tmp_path):
-    """Build + load + append + delete + compact + query entirely through
-    a file: URI — the HadoopFS seam (manifest via FSDataOutputStream,
-    renames via FileSystem.rename, row-group verification via
-    parquet-hadoop)."""
+    """Build + load + append + delete + compact_targeted + compact +
+    query entirely through a file: URI — the HadoopFS seam (manifest
+    via FSDataOutputStream, renames via FileSystem.rename, row-group
+    verification via parquet-hadoop)."""
     from pdx_spark.fs import HadoopFS, index_fs
 
     n = len(tiny_pdf)
@@ -88,15 +88,28 @@ def test_file_uri_roundtrip(spark, tiny_pdf, tmp_path):
                               f"uri-append q{qid}")
     res.unpersist()
 
-    # delete + full compact through the same seam: compact() derives its
-    # term_stats/directory with the Spark half of stat_artifacts here
+    # delete + targeted and full compact through the same seam:
+    # compact() derives its term_stats/directory with the Spark half of
+    # stat_artifacts here
     dead = [d for d, _ in s2.search("w0000", k=4)]
     Maintainer(spark, uri).delete(spark.createDataFrame(
         [(int(d),) for d in dead], "doc_id long"))
+    # targeted compaction off a local fs takes its Spark half, with the
+    # affected shards read through the Snapshot's Spark scan
+    ora3 = _oracle(tiny_pdf, drop_ids=dead)
+    m = Maintainer(spark, uri).compact_targeted()
+    assert m["lineage"][-1]["ran"] == "spark"
+    assert m["deltas"] == [] and m["tombstones"] == 0
+    assert m["dead_docs"] == len(dead)
+    res = Searcher.load(spark, uri).search_batch(
+        QUERIES, two_phase_min_shards=2, force_two_phase=True).persist()
+    for qid, qtext, k in QUERIES:
+        assert_rank_identical(collect_topk(res, qid), ora3.topk(qtext, k),
+                              f"uri-targeted q{qid}")
+    res.unpersist()
     m = Maintainer(spark, uri).compact()
     assert m["tombstones"] == 0 and m["dir_base"] in m["dir_quant"]
     s3 = Searcher.load(spark, uri)
-    ora3 = _oracle(tiny_pdf, drop_ids=dead)
     assert s3.n_docs == ora3.n_docs
     assert math.isclose(s3.avgdl, ora3.avgdl, rel_tol=1e-12)
     res = s3.search_batch(QUERIES, two_phase_min_shards=2, force_two_phase=True).persist()
@@ -123,7 +136,8 @@ def test_uri_index_plans_on_the_driver(spark, tiny_pdf, tiny_oracle, tmp_path,
     (query, shard) pairs and matches the oracle. The bound at 0 keeps
     every routed scan on Spark."""
     from pdx_spark.operators import searcher as S
-    monkeypatch.setattr(S, "_ROUTED_TASK_BYTES", 0)
+    from pdx_spark.operators import snapshot as SN
+    monkeypatch.setattr(SN, "_ROUTED_TASK_BYTES", 0)
 
     path = str(tmp_path / "idx_plan")
     Indexer(spark, cfg=CFG).build(
@@ -204,6 +218,56 @@ def test_compact_crash_before_commit_is_harmless(spark, tiny_pdf, tmp_path,
         assert_rank_identical(collect_topk(res, qid), ora.topk(qtext, k),
                               f"retry q{qid}")
     res.unpersist()
+
+
+def test_driver_compact_targeted_crash_before_commit_is_harmless(
+        spark, tiny_pdf, tmp_path, monkeypatch):
+    """Kill a driver-half compact_targeted() between the patch write and
+    the manifest commit: the committed index still answers exactly, and
+    a retry on a fresh Maintainer (over the orphan gen-named dirs)
+    succeeds and stays exact."""
+    import pdx_spark.operators.maintenance as M
+
+    n = len(tiny_pdf)
+    head, tail = tiny_pdf.iloc[: n - 40], tiny_pdf.iloc[n - 40:]
+    path = str(tmp_path / "idx_tc_crash")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    Maintainer(spark, path).append(
+        spark.createDataFrame(tail, schema=TRANSCRIPTS))
+    dead = [3, 70, n - 5]
+    Maintainer(spark, path).delete(
+        spark.createDataFrame([(i,) for i in dead], "doc_id long"))
+    before = read_manifest(path)
+
+    ora = _oracle(tiny_pdf, drop_ids=dead)
+    real_write = M._write_manifest
+
+    def boom(*a, **kw):
+        raise RuntimeError("injected crash before manifest commit")
+
+    monkeypatch.setattr(M, "_write_manifest", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        Maintainer(spark, path).compact_targeted()
+    monkeypatch.setattr(M, "_write_manifest", real_write)
+    assert read_manifest(path) == before
+
+    def exact(tag):
+        s = Searcher.load(spark, path)
+        assert s.n_docs == ora.n_docs
+        res = s.search_batch(QUERIES, two_phase_min_shards=2,
+                             force_two_phase=True).persist()
+        for qid, qtext, k in QUERIES:
+            assert_rank_identical(collect_topk(res, qid),
+                                  ora.topk(qtext, k), f"{tag} q{qid}")
+        res.unpersist()
+
+    exact("crash")
+    m = Maintainer(spark, path).compact_targeted()
+    assert m["lineage"][-1]["ran"] == "driver"
+    assert m["deltas"] == [] and m["tombstones"] == 0
+    assert m["dead_docs"] == len(dead)
+    exact("retry")
 
 
 def test_delete_crash_then_retry_keeps_stats_exact(spark, tiny_pdf, tmp_path,

@@ -441,29 +441,46 @@ def _reference_rows(runs, avgdl, shards=None):
 
 
 def test_compaction_rows_equal_reference_encoding(spark, tmp_path,
-                                                  corpus_pdfs):
+                                                  corpus_pdfs, monkeypatch):
     """compact_targeted()'s patch and compact()'s new base hold exactly
     the reference encoding of the live postings — the same multiset of
     SEGMENTS rows, payload bytes included, that the per-row decode and
-    the pandas encoder wrote. compact()'s term_stats df come from the
-    new base's metadata and must count the live postings."""
+    the pandas encoder wrote. compact_targeted() runs on both halves on
+    copies of one index: in the driver (the default bound) and on Spark
+    (_ROUTED_TASK_BYTES at 0); both patches and their manifests agree,
+    and the dead_docs count is the number of rows written.
+    compact()'s term_stats df come from the new base's metadata and
+    must count the live postings."""
     import os
 
     import pyarrow.parquet as pq
-    full, head, tail = corpus_pdfs
-    path = str(tmp_path / "idx_ref")
-    Indexer(spark, cfg=CFG).build(
-        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
-    Maintainer(spark, path).append(
-        spark.createDataFrame(tail, schema=TRANSCRIPTS))
-    Maintainer(spark, path).delete(spark.createDataFrame(
-        [(i,) for i in range(3, 400, 41)], "doc_id long"))
 
-    live = _live_postings(path)
-    m = Maintainer(spark, path).compact_targeted()
-    patched = set(m["seg_excludes"]["segments/base"])
-    assert _segment_rows(os.path.join(path, m["segment_dirs"][-1])) == \
-        _reference_rows(live, m["avgdl"], patched)
+    import pdx_spark.operators.snapshot as SN
+    full, head, tail = corpus_pdfs
+    built = str(tmp_path / "idx_ref")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), built)
+    Maintainer(spark, built).append(
+        spark.createDataFrame(tail, schema=TRANSCRIPTS))
+    n_dead = Maintainer(spark, built).delete(spark.createDataFrame(
+        [(i,) for i in range(3, 400, 41)], "doc_id long"))["tombstones"]
+
+    live = _live_postings(built)
+    ms = {}
+    for half, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+        path = str(tmp_path / f"idx_ref_{half}")
+        shutil.copytree(built, path)
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+            m = ms[half] = Maintainer(spark, path).compact_targeted()
+        assert m["lineage"][-1]["ran"] == half, m["lineage"][-1]
+        patched = set(m["seg_excludes"]["segments/base"])
+        assert _segment_rows(os.path.join(path, m["segment_dirs"][-1])) == \
+            _reference_rows(live, m["avgdl"], patched), half
+        assert pq.read_table(os.path.join(path, m["dead_dir"])).num_rows \
+            == m["dead_docs"] == n_dead, half
+    for key in ("seg_excludes", "dead_docs", "tombstones"):
+        assert ms["driver"][key] == ms["spark"][key], key
 
     h = head.sort_values(["conv_id", "turn_idx"])
     Maintainer(spark, path).delete(spark.createDataFrame(
@@ -478,3 +495,90 @@ def test_compaction_rows_equal_reference_encoding(spark, tmp_path,
     for (term, _), ps in live.items():
         df[term] = df.get(term, 0) + len(ps)
     assert dict(zip(ts["term"], ts["df"])) == df
+
+
+def test_driver_compaction_runs_no_spark_job(spark, tmp_path, corpus_pdfs):
+    """A targeted compaction whose affected slice fits one routed-scan
+    task runs in the driver: after an append and a delete,
+    compact_targeted() launches no Spark job, its lineage entry names
+    the site with the byte estimate next to the cap, and a search on
+    the patched index matches the oracle over the live corpus."""
+    import pdx_spark.operators.snapshot as SN
+    full, head, tail = corpus_pdfs
+    path = str(tmp_path / "idx_driver_tc")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    Maintainer(spark, path).append(
+        spark.createDataFrame(tail, schema=TRANSCRIPTS))
+    hits = Searcher.load(spark, path).search("w0000", k=2)
+    dead_ids = [d for d, _ in hits] + [len(head) + 3]
+    Maintainer(spark, path).delete(spark.createDataFrame(
+        [(i,) for i in dead_ids], "doc_id long"))
+
+    tracker = spark.sparkContext.statusTracker()
+    n0 = len(tracker.getJobIdsForGroup(None))
+    m = Maintainer(spark, path).compact_targeted()
+    assert len(tracker.getJobIdsForGroup(None)) == n0
+    entry = m["lineage"][-1]
+    assert entry["ran"] == "driver" and entry["cap"] == "_ROUTED_TASK_BYTES"
+    assert 0 < entry["routed_bytes"] <= entry["limit"] \
+        == SN._ROUTED_TASK_BYTES, entry
+    assert m["deltas"] == [] and m["tombstones"] == 0
+    assert m["dead_docs"] == len(dead_ids)
+
+    h = head.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    t = tail.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    texts = dict(enumerate(list(h["text"]) + list(t["text"])))
+    for d in dead_ids:
+        texts.pop(d)
+    oracle = BM25Oracle(texts)
+    res = Searcher.load(spark, path).search_batch(
+        QUERIES, two_phase_min_shards=2, force_two_phase=True).persist()
+    for qid, qtext, k in QUERIES:
+        got = collect_topk(res, qid)
+        assert not set(dead_ids) & {d for d, _ in got}
+        assert_rank_identical(got, oracle.topk(qtext, k), f"driver q{qid}")
+    res.unpersist()
+
+
+def test_fully_tombstoned_shards_compact_to_valid_patch(spark, tmp_path,
+                                                        corpus_pdfs,
+                                                        monkeypatch):
+    """Affected shards whose postings are all tombstoned compact, on
+    both halves, to a patch that holds no row and passes
+    verify_single_rowgroup; no deleted doc comes back, and results
+    match the oracle over the live docs."""
+    import os
+
+    import pdx_spark.operators.snapshot as SN
+    from pdx_spark.fs import LocalFS, verify_single_rowgroup
+    full, head, tail = corpus_pdfs
+    built = str(tmp_path / "idx_allgone")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), built)
+    dead_ids = list(range(64, 192))  # every doc of shards 1 and 2
+    Maintainer(spark, built).delete(spark.createDataFrame(
+        [(i,) for i in dead_ids], "doc_id long"))
+
+    h = head.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    oracle = BM25Oracle({i: t for i, t in enumerate(h["text"])
+                         if i not in set(dead_ids)})
+    for half, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+        path = str(tmp_path / f"idx_allgone_{half}")
+        shutil.copytree(built, path)
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+            m = Maintainer(spark, path).compact_targeted()
+        assert m["lineage"][-1]["ran"] == half
+        assert m["seg_excludes"]["segments/base"] == [1, 2]
+        patch = m["segment_dirs"][-1]
+        assert verify_single_rowgroup(LocalFS(), patch, root=path)
+        assert not _segment_rows(os.path.join(path, patch)), half
+        res = Searcher.load(spark, path).search_batch(
+            QUERIES, two_phase_min_shards=2, force_two_phase=True).persist()
+        for qid, qtext, k in QUERIES:
+            got = collect_topk(res, qid)
+            assert not set(dead_ids) & {d for d, _ in got}
+            assert_rank_identical(got, oracle.topk(qtext, k),
+                                  f"{half} q{qid}")
+        res.unpersist()

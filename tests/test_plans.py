@@ -105,7 +105,8 @@ def test_search_batch_is_lazy_and_directory_cache_warms(spark, tiny_index,
     for one fewer exchange+window stage per batch.) The bound at 0 keeps
     every routed scan on Spark, whose job counts this test bounds."""
     import pdx_spark.operators.searcher as S
-    monkeypatch.setattr(S, "_ROUTED_TASK_BYTES", 0)
+    import pdx_spark.operators.snapshot as SN
+    monkeypatch.setattr(SN, "_ROUTED_TASK_BYTES", 0)
     s = Searcher.load(spark, tiny_index)
     s.search("w0001")  # warm idf cache + JIT
 
@@ -251,14 +252,14 @@ def test_two_phase_pruning_wins_on_topic_clustered_corpus(topic):
         (spans, plan["n_shards"], n_files)
 
 
-def test_routed_task_count_is_byte_aware(searcher):
+def test_routed_task_count_is_byte_aware(searcher, monkeypatch):
     """Round-5: routed-scan task count is capped by the routed BYTE
     slice, not just shard count — a few-MB routed slice must run as 1-2
     tasks even with many routed shards on a many-core box (each python
     task costs ~0.2 fixed CPU-s; the pruning bench measured task
     overhead alone flipping routed from a CPU win to a 2x CPU loss)."""
     par = searcher.spark.sparkContext.defaultParallelism
-    total = searcher._segment_bytes()
+    total = searcher.snap.segment_bytes()
     assert total > 0  # listing works through the fs seam
     # tiny index: even a routing that covers every shard is a tiny byte
     # slice -> one task
@@ -268,12 +269,9 @@ def test_routed_task_count_is_byte_aware(searcher):
     # byte cap never RAISES the count above shard/parallelism caps:
     # with a huge fake byte total the old min(parallelism, n_routed)
     # behavior is restored exactly
-    searcher._seg_bytes = 1 << 50
-    try:
-        assert searcher._routed_task_count(2) == min(par, 2)
-        assert searcher._routed_task_count(10_000) == par
-    finally:
-        searcher._seg_bytes = total
+    monkeypatch.setattr(searcher.snap, "segment_bytes", lambda: 1 << 50)
+    assert searcher._routed_task_count(2) == min(par, 2)
+    assert searcher._routed_task_count(10_000) == par
 
 
 def topic_queries(n, off):
@@ -312,8 +310,8 @@ def test_warm_routed_batches_compile_nothing(spark, topic, monkeypatch):
     different queries compile no class (Spark's CodegenMetrics count is
     unchanged) and still match the oracle. The bound at 0 keeps every
     routed scan on Spark."""
-    import pdx_spark.operators.searcher as S
-    monkeypatch.setattr(S, "_ROUTED_TASK_BYTES", 0)
+    import pdx_spark.operators.snapshot as SN
+    monkeypatch.setattr(SN, "_ROUTED_TASK_BYTES", 0)
     s, oracle = topic
     assert -(-s.n_docs // s.cfg.docs_per_shard) >= 64
 
@@ -376,7 +374,7 @@ def test_warm_routed_batch_scores_in_the_driver(spark, topic, monkeypatch):
     each scan ran with its byte estimate next to the cap, and the rows
     match the oracle. With the bound at 0 the same batch runs the Spark
     map-scan and returns identical rows."""
-    import pdx_spark.operators.searcher as S
+    import pdx_spark.operators.snapshot as S
     s, oracle = topic
     tracker = spark.sparkContext.statusTracker()
 
@@ -427,11 +425,11 @@ def test_planner_counts_shards_over_the_id_space(spark, topic, tmp_path):
     Maintainer(spark, path).delete(spark.createDataFrame(
         [(i,) for i in range(0, n, 2)], "doc_id long"))
     s = Searcher.load(spark, path)
-    assert -(-s.n_docs // s.cfg.docs_per_shard) < 64 <= s._n_shards()
+    assert -(-s.n_docs // s.cfg.docs_per_shard) < 64 <= s.snap.n_shards()
     qs = topic_queries(16, 0)
     rows = s.search_batch(qs).collect()
     assert s.last_plan["mode"] == "routed", s.last_plan
-    assert s.last_plan["n_shards"] == s._n_shards()
+    assert s.last_plan["n_shards"] == s.snap.n_shards()
     texts = make_topic_transcripts_pdf(600, n_topics=16) \
         .sort_values(["conv_id", "turn_idx"])["text"].tolist()
     assert len(texts) == n
