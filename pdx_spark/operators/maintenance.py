@@ -48,6 +48,10 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
   (blocks.decode_blocks_arrow, the M8 de-transpose analog,
   cluster.hpp:165-181) feeds the build's Arrow encoder
   (indexer._encode_postings).
+
+Every read goes through the Maintainer's Snapshot (self.snap), the
+reader Searcher holds too: its dir lists, merged views and meta_rows
+follow each commit, which updates self.manifest in place.
 """
 
 from __future__ import annotations
@@ -109,56 +113,14 @@ class Maintainer:
         p = self.manifest["params"]
         self.params = BM25Params(**p["bm25"])
         self.cfg = IndexConfig(**p["layout"])
-        # the driver-side reader Searcher uses too; it reads
-        # self.manifest, which every commit below updates in place
+        # the reader Searcher uses too (dir lists, merged views,
+        # meta_rows): it reads self.manifest, which every commit below
+        # updates in place
         self.snap = Snapshot(spark, self.fs, path, self.manifest,
                              self.cfg.docs_per_shard)
 
     def _p(self, *parts):
         return IndexFS.join(self.path, *parts)
-
-    # ---- shared readers (mirror Searcher's merged views) --------------------
-    def _docs_raw(self):
-        """All doc rows, INCLUDING compacted-away dead docs — id allocation
-        must never reuse a dead id (the dead_docs anti-join would mask the
-        reborn doc)."""
-        df = None
-        for d in self.manifest.get("docs_dirs", ["docs"]):
-            part = self.spark.read.schema(schemas.DOCS).parquet(self._p(d))
-            df = part if df is None else df.unionByName(part)
-        return df
-
-    def _docs(self):
-        df = self._docs_raw()
-        dead = self._dead_docs()
-        return df if dead is None else df.join(dead, "doc_id", "left_anti")
-
-    def _dead_docs(self):
-        if self.manifest.get("dead_docs", 0) > 0:
-            d = self.manifest.get("dead_dir", "dead_docs")
-            return self.spark.read.schema(schemas.DOC_IDS).parquet(self._p(d))
-        return None
-
-    def _tombstones(self):
-        if self.manifest.get("tombstones", 0) > 0:
-            d = self.manifest.get("tomb_dir", "tombstones")
-            return self.spark.read.schema(schemas.DOC_IDS).parquet(self._p(d))
-        return None
-
-    def _segments(self):
-        df = None
-        excl = self.manifest.get("seg_excludes", {})
-        dirs = self.manifest.get("segment_dirs", ["segments/base"]) \
-            + self.manifest.get("deltas", [])
-        for d in dirs:
-            part = (self.spark.read.schema(schemas.SEGMENTS)
-                    .option("recursiveFileLookup", "true")
-                    .parquet(self._p(d)))
-            ex = excl.get(d)
-            if ex:
-                part = part.filter(~F.col("shard").isin([int(s) for s in ex]))
-            df = part if df is None else df.unionByName(part)
-        return df
 
     def _stats(self) -> tuple[int, int]:
         """(n_docs, sum_dl) from the manifest; legacy manifests (no
@@ -166,7 +128,7 @@ class Maintainer:
         m = self.manifest
         if "sum_dl" in m:
             return int(m["n_docs"]), int(m["sum_dl"])
-        row = self._docs().agg(F.count("*").alias("n"),
+        row = self.snap.docs().agg(F.count("*").alias("n"),
                                F.sum("dl").alias("s")).collect()[0]
         return int(row["n"]), int(row["s"] or 0)
 
@@ -177,7 +139,7 @@ class Maintainer:
         m = self.manifest
         if "next_doc_id" in m:
             return int(m["next_doc_id"])
-        row = self._docs_raw().agg(F.max("doc_id")).collect()[0][0]
+        row = self.snap.docs_raw().agg(F.max("doc_id")).collect()[0][0]
         return int(row) + 1 if row is not None else 0
 
     def _assign_append_ids(self, transcripts: DataFrame,
@@ -312,7 +274,7 @@ class Maintainer:
 
         # manifest commit — the single atomic visibility point
         m.setdefault("deltas", []).append(delta_name)
-        m.setdefault("docs_dirs", ["docs"]).append(docs_delta)
+        m["docs_dirs"] = self.snap.docs_dirs() + [docs_delta]
         m.setdefault("ts_deltas", []).append(ts_delta)
         m.setdefault("dir_deltas", []).append(dir_delta)
         m.setdefault("dir_quant", {})[dir_delta] = dq
@@ -342,11 +304,11 @@ class Maintainer:
         t0 = time.time()
         m = self.manifest
         # ONE join resolves the keys against the live, not yet
-        # tombstoned docs (_docs already drops compacted-away dead ids)
-        live = self._docs()
-        old = self._tombstones()
-        if old is not None:
-            live = live.join(old.select("doc_id"), "doc_id", "left_anti")
+        # tombstoned docs (docs() already drops compacted-away dead ids)
+        live = self.snap.docs()
+        old_tomb = self.snap.tomb_dir()
+        if old_tomb:
+            live = live.join(self.snap.tombstones(), "doc_id", "left_anti")
         keys = ["doc_id"] if "doc_id" in doc_keys.columns \
             else ["conv_id", "turn_idx"]
         new_dead = (live.join(doc_keys.select(*keys), keys, "left_semi")
@@ -367,7 +329,7 @@ class Maintainer:
 
         # exact per-term df: decode ONLY the affected shards (parquet
         # min/max on the shard column prunes files and row groups)
-        seg = self._segments().filter(
+        seg = self.snap.segments().filter(
             F.col("shard").isin(sorted(int(x) for x in drow["shards"])))
         posts = _decode_segments_to_postings(seg) \
             .join(new_dead.select("doc_id"), "doc_id", "left_semi")
@@ -388,14 +350,12 @@ class Maintainer:
         # (append's staging discipline, applied to delete)
         tomb_dir = f"tombstones-{gen}"
         merged = new_dead.select("doc_id")
-        if old is not None:
-            merged = old.select("doc_id").unionByName(merged)
+        if old_tomb:
+            merged = self.snap.tombstones().unionByName(merged)
         _atomic_write(merged, self._p(tomb_dir), fs=self.fs)
         n_tomb = int(m.get("tombstones", 0)) + n_dead  # disjoint sets
         new_dead.unpersist()
 
-        old_tomb = m.get("tomb_dir", "tombstones") \
-            if m.get("tombstones", 0) > 0 else None
         m["tombstones"] = int(n_tomb)
         m["tomb_dir"] = tomb_dir
         m.setdefault("ts_deltas", []).append(ts_delta)
@@ -449,10 +409,10 @@ class Maintainer:
         # dirs (same commit discipline as append).
         doomed = list(m.get("deltas", []))
         excl = m.setdefault("seg_excludes", {})
-        for d in m.get("segment_dirs", ["segments/base"]):
+        for d in m["segment_dirs"]:
             excl[d] = sorted(set(excl.get(d, [])) | set(shards.tolist()))
         m["deltas"] = []
-        m.setdefault("segment_dirs", ["segments/base"]).append(patch)
+        m["segment_dirs"].append(patch)
 
         # tombstoned postings are gone from segments; keep the doc-level
         # dead list so docs() (predicate masks, key lookups) stays
@@ -460,8 +420,7 @@ class Maintainer:
         # discipline as tombstones/deltas (no pre-commit overwrite).
         if len(tomb_ids):
             dd_dir = f"dead_docs-{gen}"
-            old_dd = m.get("dead_dir", "dead_docs") \
-                if m.get("dead_docs", 0) > 0 else None
+            old_dd, tomb_dir = self.snap.dead_dir(), self.snap.tomb_dir()
             if driver:
                 old = self.snap.meta_rows(
                     [old_dd], schemas.DOC_IDS, ["doc_id"]).column("doc_id") \
@@ -470,17 +429,16 @@ class Maintainer:
                     {"doc_id": np.concatenate([old, tomb_ids])}),
                     self._p(dd_dir))
             else:
-                merged = self._tombstones()
-                if old_dd:
-                    merged = self._dead_docs().unionByName(merged)
-                _atomic_write(merged, self._p(dd_dir), fs=self.fs)
+                _atomic_write(self.snap.union(
+                    [d for d in (old_dd, tomb_dir) if d], schemas.DOC_IDS),
+                    self._p(dd_dir), fs=self.fs)
             if old_dd:
                 doomed.append(old_dd)
             # delete() tombstones only live, not yet tombstoned ids, so
             # the tombstones and the old dead docs are disjoint
             m["dead_docs"] = int(m.get("dead_docs", 0)) + len(tomb_ids)
             m["dead_dir"] = dd_dir
-            doomed.append(m.get("tomb_dir", "tombstones"))
+            doomed.append(tomb_dir)
             m["tombstones"] = 0
 
         m["seg_single_rg"] = bool(m.get("seg_single_rg", False) and single_rg)
@@ -504,9 +462,9 @@ class Maintainer:
             shards.append(self.snap.meta_rows(
                 m["deltas"], schemas.SEGMENTS, ["shard"])
                 .column("shard").to_numpy())
-        if m.get("tombstones", 0) > 0:
+        if self.snap.tomb_dir():
             tomb = self.snap.meta_rows(
-                [m.get("tomb_dir", "tombstones")], schemas.DOC_IDS,
+                [self.snap.tomb_dir()], schemas.DOC_IDS,
                 ["doc_id"]).column("doc_id").to_numpy()
             shards.append(tomb // self.cfg.docs_per_shard)
         return np.unique(np.concatenate(shards)), tomb
@@ -545,9 +503,10 @@ class Maintainer:
         """compact_targeted's Spark half: the same decode and encoder as
         _patch_local, as a mapInArrow decode, a tombstone anti-join and
         a per-shard applyInArrow encode."""
-        src = self._segments().filter(F.col("shard").isin(shards.tolist()))
+        src = self.snap.segments().filter(
+            F.col("shard").isin(shards.tolist()))
         posts = _decode_segments_to_postings(src)
-        tomb = self._tombstones()
+        tomb = self.snap.tombstones()
         if tomb is not None:
             posts = posts.join(tomb, "doc_id", "left_anti")
         enc = _segment_encoder_postings(self.cfg, self.manifest["avgdl"],
@@ -572,12 +531,8 @@ class Maintainer:
 
         ts_deltas = m.get("ts_deltas", [])
         if len(ts_deltas) > 1:
-            df = None
-            for d in ts_deltas:
-                part = self.spark.read.schema(schemas.TERM_STATS).parquet(
-                    self._p(d))
-                df = part if df is None else df.unionByName(part)
-            folded = (df.groupBy("term")
+            folded = (self.snap.union(ts_deltas, schemas.TERM_STATS)
+                      .groupBy("term")
                       .agg(F.sum("df").alias("df"),
                            F.max("max_tf").cast("int").alias("max_tf"),
                            F.max("gmax").alias("gmax")))
@@ -591,17 +546,16 @@ class Maintainer:
             from pdx_spark.functions.quantize import (ZERO_PARAMS,
                                                       dequantize_col)
             dq = m.get("dir_quant", {})
-            df = None
-            for d in dir_deltas:
+
+            def dequantized(d, part):
                 p = dq.get(d, ZERO_PARAMS)
-                part = (self.spark.read.schema(schemas.DIRECTORY)
-                        .parquet(self._p(d))
-                        .select("term", "shard", "n_blocks", "n_postings",
-                                dequantize_col(F.col("max_tf_q"), p["tf_base"],
-                                               p["tf_scale"]).alias("max_tf"),
-                                dequantize_col(F.col("min_dl_q"), p["dl_base"],
-                                               p["dl_scale"]).alias("min_dl")))
-                df = part if df is None else df.unionByName(part)
+                return part.select(
+                    "term", "shard", "n_blocks", "n_postings",
+                    dequantize_col(F.col("max_tf_q"), p["tf_base"],
+                                   p["tf_scale"]).alias("max_tf"),
+                    dequantize_col(F.col("min_dl_q"), p["dl_base"],
+                                   p["dl_scale"]).alias("min_dl"))
+            df = self.snap.union(dir_deltas, schemas.DIRECTORY, dequantized)
             # re-quantizing dequantized (stale-high/stale-low) bounds with
             # the same ceil/floor discipline keeps them admissible
             rows = (df.groupBy("term", "shard")
@@ -617,15 +571,11 @@ class Maintainer:
             m["dir_deltas"] = [new_dir]
             m.setdefault("dir_quant", {})[new_dir] = params
 
-        docs_dirs = m.get("docs_dirs", ["docs"])
+        docs_dirs = self.snap.docs_dirs()
         if len(docs_dirs) > 2:  # base + more than one delta
-            df = None
-            for d in docs_dirs[1:]:
-                part = self.spark.read.schema(schemas.DOCS).parquet(
-                    self._p(d))
-                df = part if df is None else df.unionByName(part)
             new_docs = f"docs_delta-m{gen}"
-            _atomic_write(df, self._p(new_docs), fs=self.fs)
+            _atomic_write(self.snap.union(docs_dirs[1:], schemas.DOCS),
+                          self._p(new_docs), fs=self.fs)
             doomed += docs_dirs[1:]
             m["docs_dirs"] = [docs_dirs[0], new_docs]
 
@@ -668,18 +618,16 @@ class Maintainer:
         m = self.manifest
         gen = int(m.get("gen", 0))
         m["gen"] = gen + 1
-        tomb = self._tombstones()
+        tomb = self.snap.tombstones()
 
         # the encode below must stay this decode's only consumer: any
         # other action on it (a range sample, a stats pass) decodes the
         # whole index again
-        posts = _decode_segments_to_postings(self._segments())
+        posts = _decode_segments_to_postings(self.snap.segments())
+        docs = self.snap.docs()
         if tomb is not None:
-            posts = posts.join(tomb.select("doc_id"), "doc_id", "left_anti")
-
-        docs = self._docs()
-        if tomb is not None:
-            docs = docs.join(tomb.select("doc_id"), "doc_id", "left_anti")
+            posts = posts.join(tomb, "doc_id", "left_anti")
+            docs = docs.join(tomb, "doc_id", "left_anti")
         # delete() keeps N/sum_dl exact in the manifest: no docs scan
         n_docs, sum_dl = self._stats()
         avgdl = sum_dl / n_docs if n_docs else 0.0
@@ -697,16 +645,10 @@ class Maintainer:
         # every old artifact is deleted only AFTER the manifest commit
         # (a crash in between leaves harmless orphans, never a manifest
         # pointing at missing data)
-        doomed = (list(m.get("deltas", []))
-                  + list(m.get("segment_dirs", ["segments/base"]))
-                  + list(m.get("docs_dirs", ["docs"]))
-                  + list(m.get("ts_deltas", []))
-                  + list(m.get("dir_deltas", []))
-                  + ["deltas"])
-        if m.get("tombstones", 0) > 0:
-            doomed.append(m.get("tomb_dir", "tombstones"))
-        if m.get("dead_docs", 0) > 0:
-            doomed.append(m.get("dead_dir", "dead_docs"))
+        snap = self.snap
+        doomed = [*snap.seg_dirs(), *snap.docs_dirs(), *snap.ts_dirs(),
+                  *snap.directory_dirs(), "deltas",
+                  *(d for d in (snap.tomb_dir(), snap.dead_dir()) if d)]
         base = f"segments/base-{gen}"
         # the sort leads with fgroup so it satisfies the planned write's
         # fgroup ordering and survives: files stay term-ordered
@@ -724,8 +666,6 @@ class Maintainer:
         ts_base, dir_base = f"term_stats-{gen}", f"directory-{gen}"
         dq = stat_artifacts(self.spark, self.fs, [self._p(base)],
                             self._p(ts_base), self._p(dir_base))
-        doomed += [m.get("ts_base", "term_stats"),
-                   m.get("dir_base", "directory")]
 
         # positional artifact (phrase search): fold base + deltas into
         # one gen-named dir, dropping tombstoned docs. Correctness never
@@ -733,19 +673,15 @@ class Maintainer:
         # longer contains the deleted ids) — this is byte hygiene, the
         # same fold discipline as term_stats/directory.
         pos_new = None
-        if m.get("positions_dirs"):
+        if snap.positions_dirs():
             from pdx_spark.operators.phrase import (POSITIONS_SCHEMA,
                                                     write_positions_rows)
-            pos = None
-            for d in m["positions_dirs"]:
-                part = self.spark.read.schema(POSITIONS_SCHEMA).parquet(
-                    self._p(d))
-                pos = part if pos is None else pos.unionByName(part)
+            pos = snap.union(snap.positions_dirs(), POSITIONS_SCHEMA)
             if tomb is not None:
-                pos = pos.join(tomb.select("doc_id"), "doc_id", "left_anti")
+                pos = pos.join(tomb, "doc_id", "left_anti")
             pos_new = f"positions-{gen}"
             write_positions_rows(pos, self._p(pos_new))
-            doomed += list(m["positions_dirs"]) + ["positions"]
+            doomed += snap.positions_dirs() + ["positions"]
 
         m.update(segment_dirs=[base], deltas=[], ts_deltas=[],
                  dir_deltas=[], docs_dirs=[docs_dir], seg_excludes={},

@@ -111,7 +111,7 @@ def phrase_topk(searcher, phrase_text: str, k: int = 10) -> DataFrame:
     phrase (adjacent tokens, in order), scored by phrase-unit BM25
     (idf of the phrase df x tf-norm of the phrase tf). Tie-break
     (score desc, doc_id asc). Requires a positions-enabled index."""
-    dirs = searcher.manifest.get("positions_dirs")
+    dirs = searcher.snap.positions_dirs()
     if not dirs:
         raise ValueError(
             "index has no positional artifact - build with "
@@ -119,13 +119,8 @@ def phrase_topk(searcher, phrase_text: str, k: int = 10) -> DataFrame:
     terms = tokenize_py(phrase_text)
     if not terms:
         return searcher.spark.createDataFrame([], "doc_id long, score double")
-    spark = searcher.spark
-    pos = None
-    for d in dirs:
-        part = spark.read.schema(POSITIONS_SCHEMA).parquet(
-            searcher.fs.join(searcher.path, d))
-        pos = part if pos is None else pos.unionByName(part)
-    pos = pos.filter(F.col("term").isin(sorted(set(terms))))
+    pos = searcher.snap.union(dirs, POSITIONS_SCHEMA) \
+        .filter(F.col("term").isin(sorted(set(terms))))
 
     # shift each occurrence list by its offset in the phrase; a doc
     # contains the phrase iff the shifted lists share a start position

@@ -95,7 +95,7 @@ from pdx_spark.fs import index_fs, verify_single_rowgroup
 from pdx_spark.functions.blocks import decode_term_run_views, payload_view
 from pdx_spark.functions.bm25 import idf_np, tfnorm_np
 from pdx_spark.functions.tokenize import tokenize_py
-from pdx_spark.operators.indexer import MANIFEST, read_manifest
+from pdx_spark.operators.indexer import read_manifest
 from pdx_spark.operators.snapshot import Snapshot, _id_set, _in_list
 
 _THETA_GUARD = 1e-9  # float-monotonicity guard on upper-bound comparisons
@@ -119,15 +119,6 @@ _PLAN_SLICE_CAP = 2_000_000
 # max rows the driver-side global top-k merge may collect (bounded by
 # n_segment_files x Σk); above this the window merge runs Spark-side
 _MERGE_LOCAL_CAP = 4_000_000
-
-# adaptive-planner feedback: after this many consecutive unrouted
-# fallbacks (θ pruned nothing), skip the seed phase; re-probe two-phase
-# after this many bypassed batches OR this many wall seconds (ten
-# bypassed batches can be ten seconds or ten hours) OR any on-disk
-# manifest change (append/compact can make a corpus prunable)
-_UNROUTED_BYPASS = 2
-_BYPASS_REPROBE = 10
-_BYPASS_REPROBE_SECS = 300.0
 
 # cogroup side-channel row kinds (one aux frame carries both because
 # cogroup pairs exactly two frames); aux rows are
@@ -550,62 +541,15 @@ class Searcher:
         # planning cache: term -> (shards, admissible tfnorm bound) from
         # the directory parquet (see _plan_slice)
         self._plan_cache: dict[str, tuple] = {}
-        # outcome feedback for the adaptive planner: consecutive batches
-        # whose θ could not prune (unrouted fallback) — after
-        # _UNROUTED_BYPASS of them, skip the seed phase entirely and
-        # re-probe two-phase every _BYPASS_REPROBE batches (runtime
-        # adaptivity in the spirit of the reference's selectivity-
-        # adaptive scan switch, searcher.hpp:321-345)
-        self._unrouted_streak = 0
-        self._bypassed = 0
-        self._bypass_started: float | None = None  # monotonic, 1st bypass
-        self._manifest_fp = self._manifest_fingerprint()
-        # workload key for the bypass: smallest live-query count among the
-        # batches that fell back — bypass applies only to batches of
-        # comparable-or-larger size, so a stream of small selective
-        # queries after two big unselective batches still gets two-phase
-        # pruning (ADVICE r3: don't make the streak global)
-        self._unrouted_min_live: int | None = None
         # populated by every search_batch: which physical strategy ran
         # ({mode: exhaustive|routed|unrouted|cogroup, ...counts}) — the
         # observability hook ops dashboards and tests read
         self.last_plan: dict = {}
-        # the driver-side reader of this manifest (per-dir readers,
-        # meta_rows, the segment byte estimate), shared with Maintainer
+        # the reader of this manifest (dir lists, merged views,
+        # meta_rows, the segment byte estimate), as Maintainer's
         self.snap = Snapshot(spark, self.fs, path, self.manifest,
                              self.cfg.docs_per_shard)
         self._map_scan_ok = self._verify_scan_granularity()
-
-    def _manifest_fingerprint(self) -> str:
-        """Cheap generation token for the on-disk manifest (a small JSON
-        read). Unreadable manifest -> '' so a transient fs error never
-        crashes planning; '' != loaded fp just triggers a re-probe."""
-        try:
-            import hashlib
-            from pdx_spark.fs import IndexFS
-            text = self.fs.read_text(IndexFS.join(self.path, MANIFEST))
-            return hashlib.md5(text.encode()).hexdigest()
-        except Exception:
-            return ""
-
-    def _bypass_expired(self) -> bool:
-        """Should the seed-phase bypass re-probe two-phase NOW? Yes after
-        _BYPASS_REPROBE bypassed batches, after _BYPASS_REPROBE_SECS wall
-        seconds, or when the on-disk manifest changed since load
-        (append/compact bumps it — a grown corpus may have become
-        prunable). The manifest read only happens while bypassing, so
-        steady-state two-phase batches pay nothing."""
-        if self._bypassed >= _BYPASS_REPROBE:
-            return True
-        if (self._bypass_started is not None
-                and time.monotonic() - self._bypass_started
-                > _BYPASS_REPROBE_SECS):
-            return True
-        fp = self._manifest_fingerprint()
-        if fp != self._manifest_fp:
-            self._manifest_fp = fp
-            return True
-        return False
 
     def _routed_task_count(self, n_routed_shards: int) -> int:
         """Task count for a routed scan on Spark: at most one task per
@@ -666,86 +610,18 @@ class Searcher:
     def __exit__(self, *exc) -> None:
         self.close()
 
-    # -- lazy frames (merged views over base + maintenance deltas) ----------
+    # -- merged views over base + maintenance deltas (the Snapshot's) ---------
     def segments(self) -> DataFrame:
-        # one lazy frame per Searcher: a Searcher is a snapshot of one
-        # manifest, so the frame (and Spark's file-listing cache inside
-        # it) is reused across batches instead of re-listing the segment
-        # dirs on every query — per-batch serial latency, at 10^5 files
-        # a real planning cost
-        if getattr(self, "_seg_frame", None) is None:
-            excl = self.manifest.get("seg_excludes", {})
-            dirs = self.snap.seg_dirs()
-            if not any(excl.get(d) for d in dirs):
-                # one multi-path scan instead of a Union of per-dir
-                # scans: same rows, but a single scan node — smaller
-                # plan, one whole-stage-codegen compile (a fresh
-                # post-append Searcher paid ~0.4 s of first-batch
-                # codegen on the union plan), one task pool
-                self._seg_frame = (
-                    self.spark.read.schema(schemas.SEGMENTS)
-                    .option("recursiveFileLookup", "true")
-                    .parquet(*[self.fs.join(self.path, d) for d in dirs]))
-                return self._seg_frame
-            df = None
-            for d in dirs:
-                part = (self.spark.read.schema(schemas.SEGMENTS)
-                        .option("recursiveFileLookup", "true")
-                        .parquet(self.fs.join(self.path, d)))
-                ex = excl.get(d)
-                if ex:  # shards superseded by a targeted-compaction patch
-                    part = part.filter(
-                        ~F.col("shard").isin([int(s) for s in ex]))
-                df = part if df is None else df.unionByName(part)
-            self._seg_frame = df
-        return self._seg_frame
+        return self.snap.segments()
 
     def docs(self) -> DataFrame:
-        df = None
-        for d in self.manifest.get("docs_dirs", ["docs"]):
-            part = self.spark.read.schema(schemas.DOCS).parquet(
-                self.fs.join(self.path, d))
-            df = part if df is None else df.unionByName(part)
-        if self.manifest.get("dead_docs", 0) > 0:
-            dead = self.spark.read.parquet(
-                self.fs.join(self.path,
-                             self.manifest.get("dead_dir", "dead_docs"))
-            ).select("doc_id")
-            df = df.join(dead, "doc_id", "left_anti")
-        return df
+        return self.snap.docs()
 
     def term_stats(self) -> DataFrame:
-        """Base ∪ append/delete deltas, merged at read: df sums (delete
-        deltas are negative), bounds take max (stale-high = admissible).
-        A caller that filters on `term` gets parquet row-group pruning on
-        every delta file before the merge agg. (Query serving reads the
-        same dirs through Snapshot.meta_rows instead.)"""
-        base = self.spark.read.schema(schemas.TERM_STATS).parquet(
-            self.fs.join(self.path,
-                         self.manifest.get("ts_base", "term_stats")))
-        deltas = self.manifest.get("ts_deltas", [])
-        if not deltas:
-            return base
-        df = base
-        for d in deltas:
-            part = self.spark.read.schema(schemas.TERM_STATS).parquet(
-                self.fs.join(self.path, d))
-            df = df.unionByName(part)
-        return (df.groupBy("term")
-                .agg(F.sum("df").alias("df"),
-                     F.max("max_tf").alias("max_tf"),
-                     F.max("gmax").alias("gmax"))
-                .filter(F.col("df") > 0))
+        return self.snap.term_stats()
 
     def tombstones(self) -> DataFrame | None:
-        # generation-named tombstone dir, resolved THROUGH the manifest
-        # (visibility = manifest commit; a staged-but-uncommitted merge
-        # is invisible, so delete() replays are exact — see
-        # maintenance.delete)
-        if self.manifest.get("tombstones", 0) > 0:
-            d = self.manifest.get("tomb_dir", "tombstones")
-            return self.spark.read.parquet(self.fs.join(self.path, d))
-        return None
+        return self.snap.tombstones()
 
     # -- public API ----------------------------------------------------------
     def search(self, query_text: str, k: int = 10, *, exact: bool = False,
@@ -848,25 +724,10 @@ class Searcher:
         # size picks two-phase on a bigger index. force_two_phase
         # overrides (tests/bench exercise the pruned path explicitly).
         big_batch = len(live) * seed_shards >= n_shards_total
-        bypass = False
-        if self._unrouted_streak >= _UNROUTED_BYPASS:
-            if self._bypass_expired():
-                self._unrouted_streak = 0  # re-probe two-phase
-                self._bypassed = 0
-                self._bypass_started = None
-            elif (self._unrouted_min_live is None
-                    or 2 * len(live) >= self._unrouted_min_live):
-                # bypass only batches that RESEMBLE the ones that fell
-                # back (size-keyed): a much smaller batch prunes
-                # differently and deserves its own two-phase probe
-                bypass = True
-                self._bypassed += 1
-                if self._bypass_started is None:
-                    self._bypass_started = time.monotonic()
         q_ub = plan_cap = None
         if not exact and (force_two_phase or not (
                 n_shards_total < max(two_phase_min_shards, 4 * seed_shards)
-                or big_batch or bypass)):
+                or big_batch)):
             _t0 = time.time()
             q_ub, plan_cap = self._upper_bounds(live, all_terms, idf,
                                                 require_all_terms)
@@ -875,7 +736,6 @@ class Searcher:
             self.last_plan = {"mode": "exhaustive",
                               "n_shards": n_shards_total,
                               "big_batch": big_batch,
-                              "unrouted_bypass": bypass,
                               "mask_in_closure": closure_mask is not None,
                               "timings": tm}
             if plan_cap is not None:
@@ -971,9 +831,6 @@ class Searcher:
                               "seed_scan": seed_site,
                               "main_scan": {"ran": "spark"},
                               "timings": tm}
-            self._unrouted_streak += 1
-            self._unrouted_min_live = min(
-                self._unrouted_min_live or (1 << 30), len(live))
             res = self._map_scan(seg(), qspec1, anti_routing=seed_routing,
                                  mask=closure_mask)
             if self._merge_bound_ok(live):
@@ -997,8 +854,6 @@ class Searcher:
                           "seed_scan": seed_site,
                           "main_scan": main_site,
                           "timings": tm}
-        self._unrouted_streak = 0
-        self._unrouted_min_live = None
         if not routing:
             # every surviving pair was a seed pair: the collected seed
             # top-k IS the answer — zero further jobs
@@ -1084,8 +939,7 @@ class Searcher:
         missing = [t for t in terms if t not in self._plan_cache]
         n_slice = sum(len(self._plan_cache[t][0]) for t in terms
                       if t in self._plan_cache)
-        dirs = [self.manifest.get("dir_base", "directory")] \
-            + self.manifest.get("dir_deltas", [])
+        dirs = self.snap.directory_dirs()
         tab = self.snap.meta_rows(
             dirs, schemas.DIRECTORY, ["term", "shard", "max_tf_q", "min_dl_q"],
             terms=missing) if missing else None
@@ -1123,10 +977,8 @@ class Searcher:
         """term -> df summed over term_stats base + deltas (delete
         deltas are negative) for the live terms (df > 0) matching
         `where` (Snapshot.meta_rows' terms / term_range)."""
-        dirs = [self.manifest.get("ts_base", "term_stats")] \
-            + self.manifest.get("ts_deltas", [])
-        tab = self.snap.meta_rows(dirs, schemas.TERM_STATS, ["term", "df"],
-                              **where)
+        tab = self.snap.meta_rows(self.snap.ts_dirs(), schemas.TERM_STATS,
+                                  ["term", "df"], **where)
         df_by_term: dict[str, int] = {}
         for t, c in zip(tab["term"].to_pylist(), tab["df"].to_pylist()):
             df_by_term[t] = df_by_term.get(t, 0) + int(c)

@@ -1,4 +1,4 @@
-"""Plan-inspection + adaptive-strategy helpers.
+"""Plan-inspection helpers and the selectivity threshold.
 
 PDX has no query optimizer; its physical adaptivity is (a) nprobe
 cluster ranking and (b) a selectivity-adaptive filtered scan
@@ -6,11 +6,11 @@ cluster ranking and (b) a selectivity-adaptive filtered scan
 searcher.hpp:57,321-345,401-409: gather-only scan under low selectivity,
 full vertical scan above 20%). Our analogs:
 
-  choose_filter_mode  — ship the *smaller* side of a predicate to the
-                        scorer: passing doc ids ("allow") under low
-                        selectivity, failing doc ids ("deny") under
-                        high — the F3 analog, decided from a cheap
-                        count, the way AQE decides broadcast joins.
+  SELECTIVITY_THRESHOLD — Searcher._filter_mode ships the *smaller* side
+                        of a predicate to the scorer: passing doc ids
+                        ("allow") under low selectivity, failing doc ids
+                        ("deny") under high — the F3 analog, decided from
+                        a cached docs sample, never a per-batch count.
   explain_checks      — assert the physical plan really pushed filters /
                         pruned columns (used by tests + bench).
 """
@@ -18,18 +18,8 @@ full vertical scan above 20%). Our analogs:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 SELECTIVITY_THRESHOLD = 0.80  # mirror reference searcher.hpp:57
-
-
-def choose_filter_mode(docs: DataFrame, predicate: str,
-                       n_docs: int) -> tuple[str, int]:
-    """-> ("allow"|"deny", n_passing). "allow" ships passing ids to the
-    scorer; "deny" ships failing ids (cheaper when almost all pass)."""
-    n_pass = docs.filter(F.expr(predicate)).count()
-    mode = "deny" if n_pass >= SELECTIVITY_THRESHOLD * n_docs else "allow"
-    return mode, n_pass
 
 
 def plan_string(df: DataFrame) -> str:

@@ -165,42 +165,22 @@ def test_default_adaptive_path_many_shards(spark, tiny_pdf, tiny_oracle,
         assert_rank_identical(got, want, f"adaptive q{qid}")
     res.unpersist()
 
-    # outcome feedback: after consecutive unrouted fallbacks (θ prunes
-    # nothing on this corpus) the planner bypasses the seed phase and
-    # goes straight to the single exhaustive pass — rank-identity holds
-    from pdx_spark.operators.searcher import _UNROUTED_BYPASS
+    # repeated hot batches: θ prunes nothing on this uniform corpus, so
+    # every one runs the unrouted single pass, and answers stay
+    # rank-identical
     hot = [(0, "w0000 w0001", 10)]
-    for _ in range(_UNROUTED_BYPASS + 1):
-        s.search_batch(hot)
-    assert s.last_plan["mode"] == "exhaustive" \
-        and s.last_plan["unrouted_bypass"], s.last_plan
-    res = s.search_batch(queries).persist()   # bypassed batch, same answers
-    assert s.last_plan["mode"] == "exhaustive"
+    for i in range(3):
+        res = s.search_batch(hot)
+        assert s.last_plan["mode"] == "unrouted", s.last_plan
+        assert_rank_identical(collect_topk(res, 0),
+                              tiny_oracle.topk("w0000 w0001", 10),
+                              f"hot batch {i}")
+    res = s.search_batch(queries).persist()
+    assert s.last_plan["mode"] == "unrouted", s.last_plan
     for qid, qtext, k in queries:
         assert_rank_identical(collect_topk(res, qid),
-                              tiny_oracle.topk(qtext, k), f"bypass q{qid}")
+                              tiny_oracle.topk(qtext, k), f"repeat q{qid}")
     res.unpersist()
-
-    # bypass decay triggers: the re-probe fires on batch count, on wall
-    # time, and on any on-disk manifest change (append/compact bump) —
-    # ten bypassed batches can be ten seconds or ten hours, and a grown
-    # corpus may have become prunable
-    import time as _time
-
-    from pdx_spark.operators.searcher import (_BYPASS_REPROBE,
-                                              _BYPASS_REPROBE_SECS)
-    assert s._bypassed > 0 and not s._bypass_expired()  # steady bypass
-    s._bypassed = _BYPASS_REPROBE
-    assert s._bypass_expired()                           # count trigger
-    s._bypassed = 1
-    s._bypass_started = _time.monotonic() - _BYPASS_REPROBE_SECS - 1
-    assert s._bypass_expired()                           # time trigger
-    s._bypass_started = _time.monotonic()
-    from pdx_spark.fs import IndexFS
-    man_path = IndexFS.join(path, "manifest.json")
-    s.fs.write_text_atomic(man_path, s.fs.read_text(man_path) + "\n")
-    assert s._bypass_expired()                           # manifest trigger
-    assert not s._bypass_expired()  # fp re-armed after observing change
 
 
 def test_require_all_terms_vs_oracle(spark, tiny_df, searcher, tiny_oracle):

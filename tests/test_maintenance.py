@@ -582,3 +582,98 @@ def test_fully_tombstoned_shards_compact_to_valid_patch(spark, tmp_path,
             assert_rank_identical(got, oracle.topk(qtext, k),
                                   f"{half} q{qid}")
         res.unpersist()
+
+
+def _jobs(spark) -> int:
+    """Spark jobs submitted so far (the DAGScheduler's job id counter)."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
+
+
+def test_tombstoned_index_reads_run_no_inference_job(spark, tiny_index,
+                                                     tiny_pdf, tmp_path):
+    """Every merged view reads its dirs with their schemas.* schema: on
+    an index with tombstones and dead docs, building the tombstone,
+    docs and dead-docs frames runs no Spark job (an untyped parquet read
+    runs a schema-inference job per call), and a warm exhaustive batch
+    runs two jobs (the tombstone mask collect and the scan) with rows
+    that match the oracle over the live docs."""
+    path = str(tmp_path / "tiny_tomb")
+    shutil.copytree(tiny_index, path)
+    dead = [d for d, _ in Searcher.load(spark, path).search("w0000", k=3)]
+    Maintainer(spark, path).delete(spark.createDataFrame(
+        [(d,) for d in dead], "doc_id long"))
+    Maintainer(spark, path).compact_targeted()
+    more = [d for d, _ in Searcher.load(spark, path).search("w0003 w0150",
+                                                            k=2)]
+    m = Maintainer(spark, path).delete(spark.createDataFrame(
+        [(d,) for d in more], "doc_id long"))
+    assert m["tombstones"] == len(more) and m["dead_docs"] == len(dead)
+
+    s = Searcher.load(spark, path)
+    for read in (s.tombstones, s.docs, s.snap.dead_docs):
+        n0 = _jobs(spark)
+        assert read() is not None
+        assert _jobs(spark) == n0, read
+
+    texts = tiny_pdf.sort_values(["conv_id", "turn_idx"])["text"].tolist()
+    oracle = BM25Oracle({i: t for i, t in enumerate(texts)
+                         if i not in set(dead + more)})
+    s.search_batch(QUERIES, exact=True)
+    n0 = _jobs(spark)
+    res = s.search_batch(QUERIES, exact=True)
+    assert _jobs(spark) - n0 == 2
+    for qid, qtext, k in QUERIES:
+        assert_rank_identical(collect_topk(res, qid), oracle.topk(qtext, k),
+                              f"tombstoned q{qid}")
+
+
+def test_one_maintainer_across_every_commit_kind(spark, tmp_path,
+                                                 corpus_pdfs):
+    """One Maintainer commits append, delete, maintain(max_deltas=0)
+    (compact_stats, then compact_targeted) and compact() into its
+    manifest in place. After each commit a fresh Searcher matches the
+    oracle, and the Maintainer's segments() frame reads exactly the
+    manifest's current segment dirs, with the rows a fresh reader
+    sees."""
+    import os
+    from urllib.parse import urlparse
+    full, head, tail = corpus_pdfs
+    path = str(tmp_path / "idx_reuse")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    h = head.sort_values(["conv_id", "turn_idx"])["text"].tolist()
+    t = tail.sort_values(["conv_id", "turn_idx"])["text"].tolist()
+    texts = dict(enumerate(h + t))
+    mt = Maintainer(spark, path)
+
+    def check(stage):
+        fresh = Searcher.load(spark, path)
+        res = fresh.search_batch(QUERIES, two_phase_min_shards=2,
+                                 force_two_phase=True).persist()
+        oracle = BM25Oracle(texts)
+        for qid, qtext, k in QUERIES:
+            assert_rank_identical(collect_topk(res, qid),
+                                  oracle.topk(qtext, k), f"{stage} q{qid}")
+        res.unpersist()
+        seg = mt.snap.segments()
+        cur = mt.manifest["segment_dirs"] + mt.manifest["deltas"]
+        owners = [[d for d in cur if urlparse(f).path.startswith(
+            os.path.join(path, d) + "/")] for f in seg.inputFiles()]
+        assert all(len(o) == 1 for o in owners), (stage, owners)
+        assert {o[0] for o in owners} == set(cur), stage
+        assert seg.count() == fresh.segments().count(), stage
+
+    mt.append(spark.createDataFrame(tail, schema=TRANSCRIPTS))
+    check("append")
+    dead = [d for d, _ in Searcher.load(spark, path).search("w0000", k=2)]
+    mt.delete(spark.createDataFrame([(d,) for d in dead], "doc_id long"))
+    for d in dead:
+        texts.pop(d)
+    check("delete")
+    m = mt.maintain(max_deltas=0)
+    assert [e["stage"] for e in m["lineage"][-2:]] \
+        == ["compact_stats", "compact_targeted"]
+    assert m["deltas"] == [] and m["tombstones"] == 0
+    check("maintain")
+    mt.compact()
+    check("compact")

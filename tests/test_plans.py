@@ -42,11 +42,16 @@ def test_exact_scorer_broadcasts_query_terms(spark, tiny_df):
 
 
 def test_choose_filter_mode(spark, searcher):
-    from pdx_spark.plans.planner import choose_filter_mode
-    docs = searcher.docs()
-    mode_rare, n_rare = choose_filter_mode(docs, "role = 'system'", searcher.n_docs)
+    """The F3 selectivity branch, Searcher._filter_mode: a rare predicate
+    ships its passing ids ("allow"), an all-pass one its failing ids
+    ("deny"). The tiny index's docs sample is the whole docs table, so
+    _last_sel_frac times n_docs is the exact pass count."""
+    mode_rare = searcher._filter_mode("role = 'system'")
+    assert searcher._sel_sample[1] == searcher.n_docs
+    n_rare = round(searcher._last_sel_frac * searcher.n_docs)
     assert mode_rare == "allow" and n_rare < 0.5 * searcher.n_docs
-    mode_all, n_all = choose_filter_mode(docs, "doc_id >= 0", searcher.n_docs)
+    mode_all = searcher._filter_mode("doc_id >= 0")
+    n_all = round(searcher._last_sel_frac * searcher.n_docs)
     assert mode_all == "deny" and n_all == searcher.n_docs
 
 
