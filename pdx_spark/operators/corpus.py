@@ -15,6 +15,9 @@ ivf_wrapper.hpp:76-87). Only the tiny counts vector hits the driver.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,7 +38,6 @@ def _assign_ids_conv_driver(transcripts: DataFrame,
     single key — measured 2.6 -> 1.1 s on the bench corpus, ids
     identical. Returns None (callers fall through to the per-key rank)
     above the cap or when any conv is not dense-from-zero."""
-    import numpy as np
     import pandas as pd
 
     agg = (transcripts.groupBy("conv_id")
@@ -62,28 +64,34 @@ def _assign_ids_conv_driver(transcripts: DataFrame,
             .drop("conv_off"))
 
 
+def dense_rank(conv_id, turn_idx) -> np.ndarray:
+    """Dense int64 rank of each (conv_id, turn_idx) key under the global
+    (conv_id, turn_idx) order: a numpy lexsort (Python string order ==
+    Spark's UTF8 binary order — UTF-8 preserves code-point order)."""
+    order = np.lexsort((np.asarray(turn_idx),
+                        np.asarray(conv_id, dtype=object)))
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order), dtype=np.int64)
+    return rank
+
+
 def _assign_ids_driver(transcripts: DataFrame, cap: int) -> DataFrame | None:
     """Bounded driver-side dense-rank fast path: peek up to cap+1
-    (conv_id, turn_idx) keys; if the corpus fits, rank with a numpy
-    lexsort (Python string order == Spark's UTF8 binary order — UTF-8
-    preserves code-point order) and broadcast-join the ids back — two
-    jobs, ZERO shuffles, no checkpoint pin. Returns None above the cap
-    (callers run the range-partition scale path). Ids are identical to
-    the scale path by construction (same total order, same dense rank)."""
-    import numpy as np
+    (conv_id, turn_idx) keys; if the corpus fits, rank them (dense_rank)
+    and broadcast-join the ids back — two jobs, ZERO shuffles, no
+    checkpoint pin. Returns None above the cap (callers run the
+    range-partition scale path). Ids are identical to the scale path by
+    construction (same total order, same dense rank)."""
+    import pandas as pd
 
     keys = (transcripts.select("conv_id", "turn_idx")
             .limit(cap + 1).toPandas())
     if len(keys) > cap:
         return None
-    order = np.lexsort((keys["turn_idx"].to_numpy(),
-                        keys["conv_id"].to_numpy(dtype=object)))
-    rank = np.empty(len(keys), dtype=np.int64)
-    rank[order] = np.arange(len(keys), dtype=np.int64)
-    import pandas as pd
     ids_pdf = pd.DataFrame({"conv_id": keys["conv_id"],
                             "turn_idx": keys["turn_idx"],
-                            "doc_id": rank})
+                            "doc_id": dense_rank(keys["conv_id"],
+                                                 keys["turn_idx"])})
     ids_df = transcripts.sparkSession.createDataFrame(
         ids_pdf, "conv_id string, turn_idx int, doc_id long")
     return transcripts.join(F.broadcast(ids_df), ["conv_id", "turn_idx"])
@@ -229,12 +237,7 @@ def doc_postings(with_ids: DataFrame,
     combining dot) differs from Arrow's simple 1:1 mapping in a way
     that changes [a-z0-9] tokens — it is literal-substituted before
     utf8_lower (verified exhaustively over all printable codepoints)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
     from pyspark.sql.types import StructType
-
-    from pdx_spark.config import TOKEN_SPLIT_PATTERN
 
     in_fields = {f.name: f for f in with_ids.schema.fields}
     out_schema = StructType(
@@ -244,61 +247,63 @@ def doc_postings(with_ids: DataFrame,
 
     def fn(batches):
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            text = pc.fill_null(batch.column("text"), "")
-            text = pc.replace_substring(text, "İ", "i̇")
-            split = pc.split_pattern_regex(
-                pc.utf8_lower(text), TOKEN_SPLIT_PATTERN)
-            lens_raw = pc.list_value_length(split).to_numpy() \
-                .astype(np.int64)
-            flat = pc.list_flatten(split)
-            doc_idx = np.repeat(np.arange(n, dtype=np.int64), lens_raw)
-            keep = pc.not_equal(flat, "")  # leading/trailing separators
-            if pc.sum(keep).as_py() != len(flat):
-                flat = flat.filter(keep)
-                doc_idx = doc_idx[keep.to_numpy(zero_copy_only=False)]
-            if len(flat) == 0:
-                offsets = np.zeros(n + 1, np.int32)
-                lens = np.zeros(n, np.int64)
-                terms = pa.ListArray.from_arrays(
-                    pa.array(offsets), pa.array([], pa.string()))
-                tfs = pa.ListArray.from_arrays(
-                    pa.array(offsets), pa.array([], pa.int32()))
-            else:
-                lens = np.bincount(doc_idx, minlength=n)
-                denc = pc.dictionary_encode(flat)
-                codes = denc.indices.to_numpy(zero_copy_only=False) \
-                    .astype(np.int64)
-                vocab = denc.dictionary
-                nv = len(vocab)
-                sort_idx = pc.array_sort_indices(vocab).to_numpy() \
-                    .astype(np.int64)
-                rank = np.empty(nv, np.int64)
-                rank[sort_idx] = np.arange(nv)
-                key = doc_idx * nv + rank[codes]
-                ukey, tf = np.unique(key, return_counts=True)
-                pair_doc = ukey // nv
-                pair_code = ukey % nv
-                offsets = np.concatenate(
-                    [[0], np.cumsum(np.bincount(pair_doc, minlength=n))]
-                ).astype(np.int32)
-                vocab_sorted = vocab.take(pa.array(sort_idx))
-                terms = pa.ListArray.from_arrays(
-                    pa.array(offsets), vocab_sorted.take(pa.array(pair_code)))
-                tfs = pa.ListArray.from_arrays(
-                    pa.array(offsets), pa.array(tf.astype(np.int32)))
-            cols = [batch.column("doc_id"),
-                    pa.array(lens.astype(np.int32)), terms, tfs]
-            names = ["doc_id", "dl", "terms", "tfs"]
-            for c in extras:
-                cols.append(batch.column(c))
-                names.append(c)
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            if batch.num_rows:
+                yield doc_postings_batch(batch, extras)
 
     cols = ["doc_id", "text", *extras]
     return with_ids.select(*cols).mapInArrow(fn, schema=out_schema)
+
+
+def doc_postings_batch(batch: pa.RecordBatch,
+                       extras: tuple[str, ...] = ()) -> pa.RecordBatch:
+    """doc_postings' Arrow body: one (doc_id, text, *extras) batch ->
+    (doc_id, dl, terms[], tfs[], *extras). mapInArrow runs it per batch;
+    Maintainer.append's driver half runs it on the collected input."""
+    from pdx_spark.config import TOKEN_SPLIT_PATTERN
+
+    n = batch.num_rows
+    text = pc.fill_null(batch.column("text"), "")
+    text = pc.replace_substring(text, "İ", "i̇")
+    split = pc.split_pattern_regex(pc.utf8_lower(text), TOKEN_SPLIT_PATTERN)
+    lens_raw = pc.list_value_length(split).to_numpy().astype(np.int64)
+    flat = pc.list_flatten(split)
+    doc_idx = np.repeat(np.arange(n, dtype=np.int64), lens_raw)
+    keep = pc.not_equal(flat, "")  # leading/trailing separators
+    if pc.sum(keep).as_py() != len(flat):
+        flat = flat.filter(keep)
+        doc_idx = doc_idx[keep.to_numpy(zero_copy_only=False)]
+    if len(flat) == 0:
+        offsets = np.zeros(n + 1, np.int32)
+        lens = np.zeros(n, np.int64)
+        terms = pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array([], pa.string()))
+        tfs = pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array([], pa.int32()))
+    else:
+        lens = np.bincount(doc_idx, minlength=n)
+        denc = pc.dictionary_encode(flat)
+        codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+        vocab = denc.dictionary
+        nv = len(vocab)
+        sort_idx = pc.array_sort_indices(vocab).to_numpy().astype(np.int64)
+        rank = np.empty(nv, np.int64)
+        rank[sort_idx] = np.arange(nv)
+        key = doc_idx * nv + rank[codes]
+        ukey, tf = np.unique(key, return_counts=True)
+        pair_doc = ukey // nv
+        pair_code = ukey % nv
+        offsets = np.concatenate(
+            [[0], np.cumsum(np.bincount(pair_doc, minlength=n))]
+        ).astype(np.int32)
+        vocab_sorted = vocab.take(pa.array(sort_idx))
+        terms = pa.ListArray.from_arrays(
+            pa.array(offsets), vocab_sorted.take(pa.array(pair_code)))
+        tfs = pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(tf.astype(np.int32)))
+    cols = [batch.column("doc_id"), pa.array(lens.astype(np.int32)),
+            terms, tfs, *(batch.column(c) for c in extras)]
+    return pa.RecordBatch.from_arrays(
+        cols, names=["doc_id", "dl", "terms", "tfs", *extras])
 
 
 def corpus_stats(docs: DataFrame) -> tuple[int, float]:

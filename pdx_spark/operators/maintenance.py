@@ -15,7 +15,14 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
      leaves no phantom docs/postings (the retry overwrites the orphan
      dirs). Idempotent: callers passing batch_id (streaming ingest) get
      exactly-once semantics — a replayed micro-batch with
-     batch_id <= manifest.last_batch_id is a no-op.
+     batch_id <= manifest.last_batch_id is a no-op. Like the reference,
+     which appends into one cluster in process, an append whose input
+     fits one routed-scan task (Spark's plan size estimate <=
+     _ROUTED_TASK_BYTES, a local fs, no positional artifact) runs in the
+     driver: one Arrow collect of the input, then the build's tokenizer
+     body (corpus.doc_postings_batch), dense rank and encoder, pyarrow
+     writes and stat_artifacts — one Spark job in all. A larger input,
+     or a remote fs, runs the same kernels as Spark jobs.
   M2 Delete  -> tombstones + EXACT stats: the keys resolve against the
      live docs in one join, so only ids the index holds are tombstoned;
      their doc_ids land in a tombstone parquet (the scorer masks them
@@ -64,6 +71,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from pdx_spark import schemas
 from pdx_spark.config import BM25Params, IndexConfig
@@ -77,7 +85,7 @@ from pdx_spark.operators.indexer import (PARQUET_BLOCK_SIZE,
                                          read_manifest, stat_artifacts,
                                          write_directory_rows,
                                          write_table_local)
-from pdx_spark.operators.snapshot import Snapshot
+from pdx_spark.operators.snapshot import Snapshot, _id_set, one_task_site
 
 
 def _atomic_write(df: DataFrame, final: str, sort_cols: list[str] | None = None,
@@ -162,7 +170,16 @@ class Maintainer:
     def append(self, transcripts: DataFrame, batch_id: int | None = None) -> dict:
         """Append new turns; O(delta) work, crash-safe, idempotent under
         batch_id replay (streaming foreachBatch re-runs the last
-        uncommitted micro-batch on restart)."""
+        uncommitted micro-batch on restart).
+
+        The input picks the half (_append_site): an input that fits one
+        routed-scan task by Spark's size estimate of its plan, on a local
+        fs without positional artifacts, runs in the driver
+        (_append_local: one Arrow collect, no other Spark job); any other
+        runs on Spark (_append_spark). Both write equal docs-delta and
+        delta-segment rows and equal stat artifacts. The lineage entry
+        records the site with the input estimate next to
+        _ROUTED_TASK_BYTES."""
         m = self.manifest
         if batch_id is not None and batch_id <= m.get("last_batch_id", -1):
             return m  # replayed micro-batch: already committed
@@ -173,11 +190,110 @@ class Maintainer:
         gen = int(m.get("gen", 0))
         m["gen"] = gen + 1
         next_id = self._next_doc_id()  # O(1) manifest read, never a scan
+        n_old, sum_old = self._stats()
 
-        docs_delta = f"docs_delta-{gen}"
-        delta_name = f"deltas/delta-{gen}"
-        ts_delta = f"term_stats_delta-{gen}"
-        dir_delta = f"directory_delta-{gen}"
+        # the artifacts land under generation names, unreferenced until
+        # the manifest commit below
+        d = {"docs": f"docs_delta-{gen}", "seg": f"deltas/delta-{gen}",
+             "ts": f"term_stats_delta-{gen}",
+             "dir": f"directory_delta-{gen}",
+             "pos": f"positions_delta-{gen}"}
+        site = self._append_site(transcripts)
+        half = self._append_local if site["ran"] == "driver" \
+            else self._append_spark
+        n_new, dl_new, single_rg, dq, pos_delta = half(
+            transcripts, next_id, n_old, sum_old, d, timings)
+        n_docs, sum_dl = n_old + n_new, sum_old + dl_new
+        avgdl = sum_dl / n_docs if n_docs else 0.0
+
+        # manifest commit — the single atomic visibility point
+        m.setdefault("deltas", []).append(d["seg"])
+        m["docs_dirs"] = self.snap.docs_dirs() + [d["docs"]]
+        m.setdefault("ts_deltas", []).append(d["ts"])
+        m.setdefault("dir_deltas", []).append(d["dir"])
+        m.setdefault("dir_quant", {})[d["dir"]] = dq
+        if pos_delta is not None:
+            m["positions_dirs"].append(pos_delta)
+        m["n_docs"], m["sum_dl"], m["avgdl"] = n_docs, sum_dl, avgdl
+        m["next_doc_id"] = next_id + n_new
+        m["seg_single_rg"] = bool(m.get("seg_single_rg", False) and single_rg)
+        if batch_id is not None:
+            m["last_batch_id"] = int(batch_id)
+        m["lineage"].append({"stage": "append", "new_docs": n_new,
+                             "batch_id": batch_id, **site,
+                             "timings": timings,
+                             "sec": round(time.time() - t0, 2)})
+        _write_manifest(self.path, m, fs=self.fs)
+        return m
+
+    def _append_site(self, transcripts: DataFrame) -> dict:
+        """append's site (one_task_site): the driver when the index is on
+        a local fs, holds no positional artifact (its writer is a Spark
+        job), and Spark's size estimate of the input plan — computed
+        from the plan, no job — fits one routed-scan task."""
+        est = int(transcripts._jdf.queryExecution().optimizedPlan()
+                  .stats().sizeInBytes())
+        return one_task_site(
+            est, self.fs.is_local and not self.snap.positions_dirs(),
+            "input_bytes")
+
+    def _append_local(self, transcripts: DataFrame, next_id: int,
+                      n_old: int, sum_old: int, d: dict,
+                      timings: dict) -> tuple:
+        """append's driver half: ONE toArrow() collect of the input with
+        the text hash computed in the same JVM projection; doc ids are
+        corpus.dense_rank + next_id; doc_postings_batch tokenizes;
+        _encode_shards runs the build's per-shard encoder; the docs delta
+        and the delta segment (one (term, shard, block_id)-sorted file,
+        one row group) land through write_table_local in the schemas.*
+        Arrow types, then stat_artifacts as in _append_spark.
+        -> (n_new, dl_new, single_rg, dir params, None)."""
+        tt = time.time()
+        tab = transcripts.withColumn(
+            "text_hash",
+            F.xxhash64(F.coalesce(F.col("text"), F.lit("")))).toArrow()
+        timings["collect"] = round(time.time() - tt, 2)
+        tt = time.time()
+        ids = C.dense_rank(
+            tab.column("conv_id").to_numpy(zero_copy_only=False),
+            tab.column("turn_idx").to_numpy(zero_copy_only=False)) + next_id
+        cols = ["text", *C.DOC_META_COLS]
+        dp = pa.Table.from_batches([C.doc_postings_batch(
+            pa.RecordBatch.from_arrays(
+                [pa.array(ids), *(tab.column(c).combine_chunks()
+                                  for c in cols)],
+                names=["doc_id", *cols]), C.DOC_META_COLS)])
+        n_new, dl_new = dp.num_rows, int(dp.column("dl").to_numpy().sum())
+        avgdl = (sum_old + dl_new) / (n_old + n_new) if n_old + n_new else 0.0
+        timings["tokenize+stats"] = round(time.time() - tt, 2)
+
+        tt = time.time()
+        docs = dp.select([f.name for f in schemas.DOCS.fields])
+        write_table_local(self.fs, docs.cast(to_arrow_schema(schemas.DOCS)),
+                          self._p(d["docs"]))
+        timings["docs"] = round(time.time() - tt, 2)
+        tt = time.time()
+        enc = _segment_encoder_docs(self.cfg, avgdl, self.params)
+        seg = _encode_shards(dp.select(["doc_id", "dl", "terms", "tfs"]),
+                             ids // self.cfg.docs_per_shard, enc)
+        write_table_local(self.fs, seg, self._p(d["seg"]),
+                          row_group_size=max(1, seg.num_rows))
+        single_rg = verify_single_rowgroup(self.fs, d["seg"], root=self.path)
+        timings["segments"] = round(time.time() - tt, 2)
+        tt = time.time()
+        dq = stat_artifacts(self.spark, self.fs, [self._p(d["seg"])],
+                            self._p(d["ts"]), self._p(d["dir"]))
+        timings["stat_artifacts"] = round(time.time() - tt, 2)
+        return n_new, dl_new, single_rg, dq, None
+
+    def _append_spark(self, transcripts: DataFrame, next_id: int,
+                      n_old: int, sum_old: int, d: dict,
+                      timings: dict) -> tuple:
+        """append's Spark half: assign_doc_ids, the mapInArrow tokenize,
+        the docs delta and the per-shard applyInArrow encode as Spark
+        jobs, stat_artifacts, and the positional delta when the index
+        has one. -> (n_new, dl_new, single_rg, dir params, positions
+        delta dir or None)."""
         # every frame cached below is released on every path, a failed
         # step included
         with ExitStack() as cached:
@@ -206,11 +322,9 @@ class Maintainer:
             drow = dp.agg(F.count("*").alias("n"),
                           F.sum("dl").alias("s")).collect()[0]
             n_new, dl_new = int(drow["n"]), int(drow["s"] or 0)
-            n_old, sum_old = self._stats()
             n_docs, sum_dl = n_old + n_new, sum_old + dl_new
             avgdl = sum_dl / n_docs if n_docs else 0.0
             timings["tokenize+stats"] = round(time.time() - tt, 2)
-
             # the docs delta and the delta segment are independent given
             # the cached dp: they run as concurrent driver-thread jobs
             # instead of serially paying each job's fixed latency on a
@@ -223,7 +337,7 @@ class Maintainer:
                 self.spark.sparkContext.setJobDescription(
                     "append: docs delta")
                 new_docs = dp.select(*[f.name for f in schemas.DOCS.fields])
-                _atomic_write(new_docs, self._p(docs_delta), fs=self.fs)
+                _atomic_write(new_docs, self._p(d["docs"]), fs=self.fs)
                 return round(time.time() - tt, 2)
 
             def _seg_job():
@@ -243,16 +357,15 @@ class Maintainer:
                 enc = _segment_encoder_docs(self.cfg, avgdl, self.params)
                 seg = posts.groupBy("shard").applyInArrow(
                     enc, schema=schemas.SEGMENTS)
-                _atomic_write(seg, self._p(delta_name),
+                _atomic_write(seg, self._p(d["seg"]),
                               ["term", "shard", "block_id"],
                               fs=self.fs, segments=True)
-                rg = verify_single_rowgroup(self.fs, delta_name,
+                rg = verify_single_rowgroup(self.fs, d["seg"],
                                             root=self.path)
                 t_seg = round(time.time() - tt, 2)
                 tt = time.time()
-                dq_ = stat_artifacts(self.spark, self.fs,
-                                     [self._p(delta_name)],
-                                     self._p(ts_delta), self._p(dir_delta))
+                dq_ = stat_artifacts(self.spark, self.fs, [self._p(d["seg"])],
+                                     self._p(d["ts"]), self._p(d["dir"]))
                 return rg, dq_, t_seg, round(time.time() - tt, 2)
 
             with ThreadPoolExecutor(max_workers=2) as pool:
@@ -265,31 +378,14 @@ class Maintainer:
             # positional delta (only for positions-enabled indexes):
             # same O(delta) discipline, merged at read by phrase_topk
             pos_delta = None
-            if m.get("positions_dirs"):
+            if self.snap.positions_dirs():
                 tt = time.time()
                 from pdx_spark.operators.phrase import write_positions
-                pos_delta = f"positions_delta-{gen}"
+                pos_delta = d["pos"]
                 write_positions(with_ids, self._p(pos_delta))
                 timings["positions"] = round(time.time() - tt, 2)
 
-        # manifest commit — the single atomic visibility point
-        m.setdefault("deltas", []).append(delta_name)
-        m["docs_dirs"] = self.snap.docs_dirs() + [docs_delta]
-        m.setdefault("ts_deltas", []).append(ts_delta)
-        m.setdefault("dir_deltas", []).append(dir_delta)
-        m.setdefault("dir_quant", {})[dir_delta] = dq
-        if pos_delta is not None:
-            m["positions_dirs"].append(pos_delta)
-        m["n_docs"], m["sum_dl"], m["avgdl"] = n_docs, sum_dl, avgdl
-        m["next_doc_id"] = next_id + n_new
-        m["seg_single_rg"] = bool(m.get("seg_single_rg", False) and single_rg)
-        if batch_id is not None:
-            m["last_batch_id"] = int(batch_id)
-        m["lineage"].append({"stage": "append", "new_docs": n_new,
-                             "batch_id": batch_id, "timings": timings,
-                             "sec": round(time.time() - t0, 2)})
-        _write_manifest(self.path, m, fs=self.fs)
-        return m
+        return n_new, dl_new, single_rg, dq, pos_delta
 
     # ---- M2: delete ---------------------------------------------------------
     def delete(self, doc_keys: DataFrame) -> dict:
@@ -311,50 +407,54 @@ class Maintainer:
             live = live.join(self.snap.tombstones(), "doc_id", "left_anti")
         keys = ["doc_id"] if "doc_id" in doc_keys.columns \
             else ["conv_id", "turn_idx"]
-        new_dead = (live.join(doc_keys.select(*keys), keys, "left_semi")
-                    .select("doc_id", "dl").persist())
-        # ONE aggregate: exact N/sum_dl decrements + the affected shards
-        # (doc-range sharding -> shard id is derivable from doc_id)
-        drow = new_dead.agg(
-            F.count("*").alias("n"), F.sum("dl").alias("s"),
-            F.collect_set((F.col("doc_id") / self.cfg.docs_per_shard)
-                          .cast("long")).alias("shards")).collect()[0]
-        n_dead, dl_dead = int(drow["n"]), int(drow["s"] or 0)
-        if n_dead == 0:
-            new_dead.unpersist()
-            return m
-        n_old, sum_old = self._stats()
-        n_docs, sum_dl = n_old - n_dead, sum_old - dl_dead
-        avgdl = sum_dl / n_docs if n_docs else 0.0
+        # the cached dead rows are released on every path, a failed
+        # step included
+        with ExitStack() as cached:
+            new_dead = (live.join(doc_keys.select(*keys), keys, "left_semi")
+                        .select("doc_id", "dl").persist())
+            cached.callback(new_dead.unpersist)
+            # ONE aggregate: exact N/sum_dl decrements + the affected
+            # shards (doc-range sharding -> shard id is derivable from
+            # doc_id)
+            drow = new_dead.agg(
+                F.count("*").alias("n"), F.sum("dl").alias("s"),
+                F.collect_set((F.col("doc_id") / self.cfg.docs_per_shard)
+                              .cast("long")).alias("shards")).collect()[0]
+            n_dead, dl_dead = int(drow["n"]), int(drow["s"] or 0)
+            if n_dead == 0:
+                return m
+            n_old, sum_old = self._stats()
+            n_docs, sum_dl = n_old - n_dead, sum_old - dl_dead
+            avgdl = sum_dl / n_docs if n_docs else 0.0
 
-        # exact per-term df: decode ONLY the affected shards (parquet
-        # min/max on the shard column prunes files and row groups)
-        seg = self.snap.segments().filter(
-            F.col("shard").isin(sorted(int(x) for x in drow["shards"])))
-        posts = _decode_segments_to_postings(seg) \
-            .join(new_dead.select("doc_id"), "doc_id", "left_semi")
-        dec = (posts.groupBy("term")
-               .agg((-F.count("*")).cast("long").alias("df"))
-               .withColumn("max_tf", F.lit(0).cast("int"))
-               .withColumn("gmax", F.lit(0.0)))
-        gen = int(m.get("gen", 0))
-        m["gen"] = gen + 1
-        ts_delta = f"term_stats_delta-d{gen}"
-        _atomic_write(dec, self._p(ts_delta), ["term"], fs=self.fs)
+            # exact per-term df: decode ONLY the affected shards (parquet
+            # min/max on the shard column prunes files and row groups)
+            seg = self.snap.segments().filter(
+                _id_set("shard", drow["shards"]))
+            posts = _decode_segments_to_postings(seg) \
+                .join(new_dead.select("doc_id"), "doc_id", "left_semi")
+            dec = (posts.groupBy("term")
+                   .agg((-F.count("*")).cast("long").alias("df"))
+                   .withColumn("max_tf", F.lit(0).cast("int"))
+                   .withColumn("gmax", F.lit(0.0)))
+            gen = int(m.get("gen", 0))
+            m["gen"] = gen + 1
+            ts_delta = f"term_stats_delta-d{gen}"
+            _atomic_write(dec, self._p(ts_delta), ["term"], fs=self.fs)
 
-        # merged tombstones land in a GENERATION-NAMED dir that becomes
-        # visible only via the manifest commit below — a crash between
-        # this write and the commit leaves the committed tombstone set
-        # untouched, so a retried delete() recomputes new_dead against
-        # the LAST COMMITTED state and the stat decrements are never lost
-        # (append's staging discipline, applied to delete)
-        tomb_dir = f"tombstones-{gen}"
-        merged = new_dead.select("doc_id")
-        if old_tomb:
-            merged = self.snap.tombstones().unionByName(merged)
-        _atomic_write(merged, self._p(tomb_dir), fs=self.fs)
-        n_tomb = int(m.get("tombstones", 0)) + n_dead  # disjoint sets
-        new_dead.unpersist()
+            # merged tombstones land in a GENERATION-NAMED dir that
+            # becomes visible only via the manifest commit below — a
+            # crash between this write and the commit leaves the
+            # committed tombstone set untouched, so a retried delete()
+            # recomputes new_dead against the LAST COMMITTED state and
+            # the stat decrements are never lost (append's staging
+            # discipline, applied to delete)
+            tomb_dir = f"tombstones-{gen}"
+            merged = new_dead.select("doc_id")
+            if old_tomb:
+                merged = self.snap.tombstones().unionByName(merged)
+            _atomic_write(merged, self._p(tomb_dir), fs=self.fs)
+            n_tomb = int(m.get("tombstones", 0)) + n_dead  # disjoint sets
 
         m["tombstones"] = int(n_tomb)
         m["tomb_dir"] = tomb_dir
@@ -484,18 +584,10 @@ class Maintainer:
             schema=_POSTINGS)
         doc = posts.column("doc_id").to_numpy()
         keep = np.flatnonzero(~np.isin(doc, tomb_ids))
-        shard = doc[keep] // self.cfg.docs_per_shard
-        order = keep[np.argsort(shard, kind="stable")]
-        posts = posts.take(order).append_column(
-            "shard", pa.array(np.sort(shard, kind="stable")))
         enc = _segment_encoder_postings(self.cfg, self.manifest["avgdl"],
                                         self.params)
-        cuts = np.flatnonzero(np.diff(posts.column("shard").to_numpy())) + 1
-        parts = [enc(posts.slice(a, b - a)) for a, b in
-                 zip([0, *cuts], [*cuts, posts.num_rows]) if b > a]
-        seg = pa.concat_tables(parts) if parts else _empty_segments()
-        seg = seg.sort_by([("term", "ascending"), ("shard", "ascending"),
-                           ("block_id", "ascending")])
+        seg = _encode_shards(posts.take(keep),
+                             doc[keep] // self.cfg.docs_per_shard, enc)
         write_table_local(self.fs, seg, self._p(patch),
                           row_group_size=max(1, seg.num_rows))
 
@@ -503,8 +595,7 @@ class Maintainer:
         """compact_targeted's Spark half: the same decode and encoder as
         _patch_local, as a mapInArrow decode, a tombstone anti-join and
         a per-shard applyInArrow encode."""
-        src = self.snap.segments().filter(
-            F.col("shard").isin(shards.tolist()))
+        src = self.snap.segments().filter(_id_set("shard", shards))
         posts = _decode_segments_to_postings(src)
         tomb = self.snap.tombstones()
         if tomb is not None:
@@ -700,6 +791,22 @@ class Maintainer:
             if d not in (base, docs_dir):
                 self.fs.delete(self._p(d))
         return m
+
+
+def _encode_shards(posts: pa.Table, shard: np.ndarray, enc) -> pa.Table:
+    """The driver run of a per-shard applyInArrow encode: the rows of
+    `posts` grouped by `shard` (stable), each group passed to `enc`
+    with its shard column, as ONE (term, shard, block_id)-sorted
+    SEGMENTS table."""
+    order = np.argsort(shard, kind="stable")
+    shard = shard[order]
+    posts = posts.take(order).append_column("shard", pa.array(shard))
+    cuts = np.flatnonzero(np.diff(shard)) + 1
+    parts = [enc(posts.slice(a, b - a)) for a, b in
+             zip([0, *cuts], [*cuts, posts.num_rows]) if b > a]
+    seg = pa.concat_tables(parts) if parts else _empty_segments()
+    return seg.sort_by([("term", "ascending"), ("shard", "ascending"),
+                        ("block_id", "ascending")])
 
 
 # the SEGMENTS columns the decode reads, and the decoded postings' schema

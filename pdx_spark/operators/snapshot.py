@@ -43,8 +43,9 @@ from pdx_spark import schemas
 # what breaks N->4N query scaling. At 100 TB the byte cap is never the
 # binding term — defaultParallelism is. A slice of at most this many
 # bytes (one task's worth) runs in the driver instead, which also saves
-# the Spark job around the task: routed scans (Searcher) and targeted
-# compactions (Maintainer.compact_targeted) both take that site.
+# the Spark job around the task: routed scans (Searcher), targeted
+# compactions (Maintainer.compact_targeted) and appends (by Spark's size
+# estimate of the input plan, Maintainer.append) take that site.
 _ROUTED_TASK_BYTES = 2 * 1024 * 1024
 
 
@@ -104,6 +105,18 @@ def _id_set(col: str, ids) -> "F.Column":
     return Column(functools.reduce(
         lambda a, b: getattr(a, "or")(b),
         (getattr(lo, "and")(hi) for lo, hi in zip(ins[::2], ins[1::2]))))
+
+
+def one_task_site(nbytes: int, eligible: bool, measure: str) -> dict:
+    """Where work over an estimated `nbytes` runs, with the estimate
+    (under the key `measure`) next to its cap: in the driver when the
+    caller can run it there (`eligible`) and it fits one routed-scan
+    task by bytes, on Spark otherwise (a larger input, an unknown
+    size)."""
+    driver = eligible and 0 < nbytes <= _ROUTED_TASK_BYTES
+    return {"ran": "driver" if driver else "spark",
+            "cap": "_ROUTED_TASK_BYTES", "limit": _ROUTED_TASK_BYTES,
+            measure: nbytes}
 
 
 class Snapshot:
@@ -198,15 +211,10 @@ class Snapshot:
         return int(self.segment_bytes() * min(n_routed_shards, n) / n)
 
     def site(self, n_shards: int, eligible: bool) -> dict:
-        """Where work over `n_shards` shards runs, with the byte
-        estimate next to its cap: in the driver when the caller can run
-        it there (`eligible`) and the slice fits one routed-scan task by
-        bytes, on Spark otherwise (a larger slice, an unknown size)."""
-        routed = self.routed_bytes(n_shards)
-        driver = eligible and 0 < routed <= _ROUTED_TASK_BYTES
-        return {"ran": "driver" if driver else "spark",
-                "cap": "_ROUTED_TASK_BYTES", "limit": _ROUTED_TASK_BYTES,
-                "routed_bytes": routed}
+        """one_task_site of work over `n_shards` shards, by their
+        estimated bytes (routed_bytes)."""
+        return one_task_site(self.routed_bytes(n_shards), eligible,
+                             "routed_bytes")
 
     # -- readers ---------------------------------------------------------------
     def dataset(self, d: str):
@@ -239,15 +247,15 @@ class Snapshot:
     def union(self, dirs: list[str], schema, each=None) -> DataFrame:
         """One typed Spark frame over index dirs: each dir's frame minus
         its seg_excludes shards (superseded by a targeted-compaction
-        patch), mapped by `each(d, frame)` when given, unioned by
-        name."""
+        patch; an _id_set, so the filter costs the same few py4j calls
+        for any number of shards), mapped by `each(d, frame)` when
+        given, unioned by name."""
         excl = self.manifest.get("seg_excludes", {})
         parts = []
         for d in dirs:
             part = self.frame(d, schema)
             if excl.get(d):
-                part = part.filter(
-                    ~F.col("shard").isin([int(x) for x in excl[d]]))
+                part = part.filter(~_id_set("shard", excl[d]))
             parts.append(part if each is None else each(d, part))
         return functools.reduce(DataFrame.unionByName, parts)
 

@@ -179,50 +179,193 @@ def _file_state(root):
     return out
 
 
-def test_append_is_incremental_and_idempotent(spark, tmp_path, corpus_pdfs):
+def test_append_is_incremental_and_idempotent(spark, tmp_path, corpus_pdfs,
+                                              monkeypatch):
     """Append must be O(delta): the base term_stats/directory/segments
     files are never rewritten (byte/mtime-identical across >=2 appends,
-    the round-1 scale-killer), and a replayed batch_id is a no-op."""
+    the round-1 scale-killer), and a replayed batch_id is a no-op. Runs
+    on both halves, on copies of one index: in the driver (the default
+    bound) and on Spark (_ROUTED_TASK_BYTES at 0)."""
     import os
+
+    import pdx_spark.operators.snapshot as SN
     full, head, tail = corpus_pdfs
     t = tail.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     half = len(t) // 2
-    path = str(tmp_path / "idx_incr")
+    built = str(tmp_path / "idx_incr")
     Indexer(spark, cfg=CFG).build(
-        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
-    base_state = {
-        d: _file_state(os.path.join(path, d))
-        for d in ("term_stats", "directory", "segments/base", "docs")}
-
-    m1 = Maintainer(spark, path).append(
-        spark.createDataFrame(t.iloc[:half], schema=TRANSCRIPTS), batch_id=0)
-    m2 = Maintainer(spark, path).append(
-        spark.createDataFrame(t.iloc[half:], schema=TRANSCRIPTS), batch_id=1)
-    for d, before in base_state.items():
-        assert _file_state(os.path.join(path, d)) == before, \
-            f"append rewrote base artifact {d}"
-    assert len(m2["deltas"]) == 2 and len(m2["ts_deltas"]) == 2
-    assert len(m2["dir_deltas"]) == 2 and len(m2["docs_dirs"]) == 3
-
-    # replayed micro-batch (same batch_id) must be a no-op
-    n_before = read_manifest(path)["n_docs"]
-    m3 = Maintainer(spark, path).append(
-        spark.createDataFrame(t.iloc[half:], schema=TRANSCRIPTS), batch_id=1)
-    assert m3["n_docs"] == n_before
-    assert len(read_manifest(path)["deltas"]) == 2
-
-    # merged-at-read correctness: results equal the full-corpus oracle
+        spark.createDataFrame(head, schema=TRANSCRIPTS), built)
     h = head.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     texts = list(h["text"]) + list(t["text"])
     oracle = BM25Oracle(dict(enumerate(texts)))
-    searcher = Searcher.load(spark, path)
-    assert searcher.n_docs == oracle.n_docs
-    assert math.isclose(searcher.avgdl, oracle.avgdl, rel_tol=1e-12)
-    res = searcher.search_batch(QUERIES, two_phase_min_shards=2, force_two_phase=True).persist()
-    for qid, qtext, k in QUERIES:
-        assert_rank_identical(collect_topk(res, qid), oracle.topk(qtext, k),
-                              f"incr q{qid}")
-    res.unpersist()
+    for site, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+        path = str(tmp_path / f"idx_incr_{site}")
+        shutil.copytree(built, path)
+        base_state = {
+            d: _file_state(os.path.join(path, d))
+            for d in ("term_stats", "directory", "segments/base", "docs")}
+
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+            m1 = Maintainer(spark, path).append(spark.createDataFrame(
+                t.iloc[:half], schema=TRANSCRIPTS), batch_id=0)
+            m2 = Maintainer(spark, path).append(spark.createDataFrame(
+                t.iloc[half:], schema=TRANSCRIPTS), batch_id=1)
+            assert [e["ran"] for e in m2["lineage"][-2:]] == [site] * 2
+            for d, before in base_state.items():
+                assert _file_state(os.path.join(path, d)) == before, \
+                    f"append rewrote base artifact {d} ({site})"
+            assert len(m2["deltas"]) == 2 and len(m2["ts_deltas"]) == 2
+            assert len(m2["dir_deltas"]) == 2 and len(m2["docs_dirs"]) == 3
+
+            # replayed micro-batch (same batch_id) must be a no-op
+            n_before = read_manifest(path)["n_docs"]
+            m3 = Maintainer(spark, path).append(spark.createDataFrame(
+                t.iloc[half:], schema=TRANSCRIPTS), batch_id=1)
+            assert m3["n_docs"] == n_before
+            assert len(read_manifest(path)["deltas"]) == 2
+
+        # merged-at-read correctness: results equal the full-corpus oracle
+        searcher = Searcher.load(spark, path)
+        assert searcher.n_docs == oracle.n_docs
+        assert math.isclose(searcher.avgdl, oracle.avgdl, rel_tol=1e-12)
+        res = searcher.search_batch(QUERIES, two_phase_min_shards=2,
+                                    force_two_phase=True).persist()
+        for qid, qtext, k in QUERIES:
+            assert_rank_identical(collect_topk(res, qid),
+                                  oracle.topk(qtext, k),
+                                  f"incr {site} q{qid}")
+        res.unpersist()
+
+
+def _append_artifacts(spark, path, m):
+    """What the last append committed: its docs-delta rows (a typed
+    Spark read), its delta segment's SEGMENTS rows (payload bytes
+    included), its term_stats and directory delta rows, the directory
+    delta's dir_quant params, and the manifest's global stats."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from pdx_spark import schemas
+
+    def rows(d):
+        return sorted(tuple(r.values()) for r in
+                      pq.read_table(os.path.join(path, d)).to_pylist())
+    docs = spark.read.schema(schemas.DOCS).parquet(
+        os.path.join(path, m["docs_dirs"][-1])).collect()
+    return {"docs": sorted(tuple(r) for r in docs),
+            "segments": _segment_rows(os.path.join(path, m["deltas"][-1])),
+            "term_stats": rows(m["ts_deltas"][-1]),
+            "directory": rows(m["dir_deltas"][-1]),
+            "dir_quant": m["dir_quant"][m["dir_deltas"][-1]],
+            "stats": {k: m[k] for k in ("n_docs", "sum_dl", "avgdl",
+                                         "next_doc_id")}}
+
+
+def test_driver_append_matches_spark_append(spark, tmp_path, corpus_pdfs,
+                                            monkeypatch):
+    """append() on copies of one index, in the driver (the default
+    bound) and on Spark (_ROUTED_TASK_BYTES at 0), for a batch whose
+    turn_idx runs are dense and one with gaps (the Spark half ranks
+    per conversation for the first, per turn for the second): equal doc
+    ids, docs-delta rows, delta-segment rows, term_stats and directory
+    deltas, dir_quant params and manifest stats, and results equal to
+    the oracle. The driver append runs at most one Spark job (the input
+    collect) and records its site with the input estimate."""
+    import pdx_spark.operators.snapshot as SN
+    full, head, tail = corpus_pdfs
+    built = str(tmp_path / "idx_halves")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), built)
+    next_id = read_manifest(built)["next_doc_id"]
+    gaps = tail.copy()
+    gaps["turn_idx"] = gaps["turn_idx"] * 3 + 1
+    h = head.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    for name, batch in (("dense", tail), ("gaps", gaps)):
+        b = batch.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+        want_ids = {(c, int(t)): next_id + i for i, (c, t) in
+                    enumerate(b[["conv_id", "turn_idx"]].values)}
+        oracle = BM25Oracle(dict(enumerate(list(h["text"])
+                                           + list(b["text"]))))
+        got = {}
+        for site, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+            path = str(tmp_path / f"idx_halves_{name}_{site}")
+            shutil.copytree(built, path)
+            df = spark.createDataFrame(batch, schema=TRANSCRIPTS)
+            with monkeypatch.context() as mp:
+                mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+                n0 = _jobs(spark)
+                m = Maintainer(spark, path).append(df)
+                jobs = _jobs(spark) - n0
+            entry = m["lineage"][-1]
+            assert entry["ran"] == site and entry["limit"] == bound, entry
+            assert entry["cap"] == "_ROUTED_TASK_BYTES" \
+                and entry["input_bytes"] > 0, entry
+            if site == "driver":
+                assert jobs <= 1, jobs
+            art = got[site] = _append_artifacts(spark, path, m)
+            assert {(r[1], r[2]): r[0] for r in art["docs"]} == want_ids
+            res = Searcher.load(spark, path).search_batch(
+                QUERIES, two_phase_min_shards=2,
+                force_two_phase=True).persist()
+            for qid, qtext, k in QUERIES:
+                assert_rank_identical(collect_topk(res, qid),
+                                      oracle.topk(qtext, k),
+                                      f"{name} {site} q{qid}")
+            res.unpersist()
+        for key in got["driver"]:
+            assert got["driver"][key] == got["spark"][key], (name, key)
+
+
+def test_driver_append_crash_and_replay(spark, tmp_path, corpus_pdfs,
+                                        monkeypatch):
+    """A driver append that dies in the manifest commit leaves the
+    manifest unchanged and the index exact; a retry on a fresh
+    Maintainer succeeds, and replaying its batch_id is a no-op that
+    runs no Spark job."""
+    from pdx_spark.operators import maintenance
+
+    full, head, tail = corpus_pdfs
+    path = str(tmp_path / "idx_append_crash")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    before_m = read_manifest(path)
+    h = head.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    t = tail.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+
+    def check(texts, stage):
+        oracle = BM25Oracle(dict(enumerate(texts)))
+        s = Searcher.load(spark, path)
+        assert s.n_docs == oracle.n_docs, stage
+        res = s.search_batch(QUERIES, two_phase_min_shards=2,
+                             force_two_phase=True).persist()
+        for qid, qtext, k in QUERIES:
+            assert_rank_identical(collect_topk(res, qid),
+                                  oracle.topk(qtext, k), f"{stage} q{qid}")
+        res.unpersist()
+
+    def boom(*a, **k):
+        raise RuntimeError("commit failed")
+    with monkeypatch.context() as mp:
+        mp.setattr(maintenance, "_write_manifest", boom)
+        with pytest.raises(RuntimeError, match="commit failed"):
+            Maintainer(spark, path).append(spark.createDataFrame(
+                tail, schema=TRANSCRIPTS), batch_id=0)
+    assert read_manifest(path) == before_m
+    check(list(h["text"]), "crashed")
+
+    m = Maintainer(spark, path).append(spark.createDataFrame(
+        tail, schema=TRANSCRIPTS), batch_id=0)
+    assert m["lineage"][-1]["ran"] == "driver"
+    assert read_manifest(path) == m
+    check(list(h["text"]) + list(t["text"]), "retried")
+
+    replay = spark.createDataFrame(tail, schema=TRANSCRIPTS)
+    n0 = _jobs(spark)
+    Maintainer(spark, path).append(replay, batch_id=0)
+    assert _jobs(spark) == n0
+    assert read_manifest(path) == m
 
 
 def test_targeted_compact(spark, tmp_path, corpus_pdfs):
@@ -348,23 +491,56 @@ def test_delete_ignores_ids_outside_the_index(spark, tmp_path, corpus_pdfs):
 def test_failed_append_releases_cached_frames(spark, tmp_path, corpus_pdfs,
                                               monkeypatch):
     """An append that fails after its input batch and postings are
-    cached leaves no cached frame behind, and commits nothing."""
+    cached leaves no cached frame behind, and commits nothing. Runs on
+    both halves, on copies of one index: in the driver (the default
+    bound) and on Spark (_ROUTED_TASK_BYTES at 0)."""
+    import pdx_spark.operators.snapshot as SN
     from pdx_spark.operators import indexer
 
     full, head, tail = corpus_pdfs
-    path = str(tmp_path / "idx_append_fail")
+    built = str(tmp_path / "idx_append_fail")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), built)
+    jsc = spark.sparkContext._jsc
+
+    def boom(*a, **k):
+        raise RuntimeError("stats failed")
+    for site, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+        path = str(tmp_path / f"idx_append_fail_{site}")
+        shutil.copytree(built, path)
+        before_m = read_manifest(path)
+        batch = spark.createDataFrame(tail, schema=TRANSCRIPTS)
+        before = set(jsc.getPersistentRDDs().keys())
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+            mp.setattr(indexer, "stat_artifacts_local", boom)
+            with pytest.raises(RuntimeError, match="stats failed"):
+                Maintainer(spark, path).append(batch)
+        assert set(jsc.getPersistentRDDs().keys()) <= before, site
+        assert read_manifest(path) == before_m, site
+
+
+def test_failed_delete_releases_cached_frames(spark, tmp_path, corpus_pdfs,
+                                              monkeypatch):
+    """A delete that fails after its dead rows are cached (here: in the
+    term_stats delta write) leaves no cached frame behind, and commits
+    nothing."""
+    from pdx_spark.operators import maintenance
+
+    full, head, tail = corpus_pdfs
+    path = str(tmp_path / "idx_delete_fail")
     Indexer(spark, cfg=CFG).build(
         spark.createDataFrame(head, schema=TRANSCRIPTS), path)
     before_m = read_manifest(path)
-    batch = spark.createDataFrame(tail, schema=TRANSCRIPTS)
+    keys = spark.createDataFrame([(3,), (70,), (200,)], "doc_id long")
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
 
     def boom(*a, **k):
-        raise RuntimeError("stats failed")
-    monkeypatch.setattr(indexer, "stat_artifacts_local", boom)
-    with pytest.raises(RuntimeError, match="stats failed"):
-        Maintainer(spark, path).append(batch)
+        raise RuntimeError("write failed")
+    monkeypatch.setattr(maintenance, "_atomic_write", boom)
+    with pytest.raises(RuntimeError, match="write failed"):
+        Maintainer(spark, path).delete(keys)
     assert set(jsc.getPersistentRDDs().keys()) <= before
     assert read_manifest(path) == before_m
 
@@ -677,3 +853,56 @@ def test_one_maintainer_across_every_commit_kind(spark, tmp_path,
     check("maintain")
     mt.compact()
     check("compact")
+
+
+def test_excluded_shards_filter_in_constant_py4j_calls(spark, topic):
+    """A union that drops seg_excludes shards sends the shard set in one
+    buffer: building it costs the same number of py4j gateway round
+    trips for 10 and for 4,000 excluded shards, and with the extra
+    3,990 ids held by no shard it returns the same rows, those of every
+    shard but the 10."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from pdx_spark import schemas
+    from pdx_spark.operators.snapshot import Snapshot
+    path = topic[0].path
+    m = read_manifest(path)
+    assert m["segment_dirs"] == ["segments/base"]
+    n_shards = -(-m["next_doc_id"] // 64)
+    ten = [1, 2, 3, 9, 10, 20, 33, 34, 50, n_shards - 1]
+    many = ten + list(range(n_shards + 7, n_shards + 7 + 3990))
+    client = spark.sparkContext._gateway._gateway_client
+    sent = [0]
+    send = client.send_command
+
+    def counting(*a, **k):
+        sent[0] += 1
+        return send(*a, **k)
+
+    def build(excl):
+        snap = Snapshot(spark, topic[0].fs, path,
+                        {**m, "seg_excludes": {"segments/base": excl}}, 64)
+        snap.frame("segments/base", schemas.SEGMENTS)  # the cached reader
+        n0 = sent[0]
+        df = snap.union(["segments/base"], schemas.SEGMENTS)
+        calls = sent[0] - n0
+        return calls, {r["shard"]: r["count"] for r in
+                       df.groupBy("shard").count().collect()}
+
+    client.send_command = counting
+    try:
+        calls_ten, rows_ten = build(ten)
+        calls_many, rows_many = build(many)
+    finally:
+        del client.send_command
+    assert calls_ten == calls_many, (calls_ten, calls_many)
+    assert rows_ten == rows_many
+    shards = pq.read_table(os.path.join(path, "segments", "base"),
+                           columns=["shard"]).column("shard").to_pylist()
+    want = {}
+    for sh in shards:
+        if sh not in ten:
+            want[sh] = want.get(sh, 0) + 1
+    assert rows_ten == want
