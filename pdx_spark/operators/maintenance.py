@@ -31,7 +31,10 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
      are computed at delete time by decoding ONLY the affected shards'
      blocks (doc-range sharding makes that a targeted read) into a
      negative term_stats delta — idf is exact immediately after delete,
-     not only after compact.
+     not only after compact. Like the reference, which tombstones in
+     the caller's thread (index.hpp:619-638), a delete whose index fits
+     one routed-scan task on a local fs, with at most n_docs keys, runs
+     in the driver (one Spark job, the keys peek); else on Spark.
   M3-M6 Compact:
      compact_targeted() -> the SplitCluster/CompactCluster analog
        (index.hpp:1314-1611, cluster.hpp:260-294): rewrites ONLY shards
@@ -179,11 +182,17 @@ class Maintainer:
         runs on Spark (_append_spark). Both write equal docs-delta and
         delta-segment rows and equal stat artifacts. The lineage entry
         records the site with the input estimate next to
-        _ROUTED_TASK_BYTES."""
+        _ROUTED_TASK_BYTES. An input whose estimate is unknown is checked
+        for rows first (one 1-task job): an empty one returns the manifest
+        unchanged and commits nothing, so its batch_id is not recorded
+        and a later batch may carry it."""
         m = self.manifest
         if batch_id is not None and batch_id <= m.get("last_batch_id", -1):
             return m  # replayed micro-batch: already committed
         t0 = time.time()
+        site = self._append_site(transcripts)
+        if site is None:
+            return m  # an empty input: nothing to commit
         timings: dict[str, float] = {}
         # monotone artifact generation counter — list lengths would reuse
         # names after compact_targeted() resets `deltas`
@@ -198,7 +207,6 @@ class Maintainer:
              "ts": f"term_stats_delta-{gen}",
              "dir": f"directory_delta-{gen}",
              "pos": f"positions_delta-{gen}"}
-        site = self._append_site(transcripts)
         half = self._append_local if site["ran"] == "driver" \
             else self._append_spark
         n_new, dl_new, single_rg, dq, pos_delta = half(
@@ -226,13 +234,18 @@ class Maintainer:
         _write_manifest(self.path, m, fs=self.fs)
         return m
 
-    def _append_site(self, transcripts: DataFrame) -> dict:
+    def _append_site(self, transcripts: DataFrame) -> dict | None:
         """append's site (one_task_site): the driver when the index is on
         a local fs, holds no positional artifact (its writer is a Spark
         job), and Spark's size estimate of the input plan — computed
-        from the plan, no job — fits one routed-scan task."""
+        from the plan, no job — fits one routed-scan task. None for an
+        empty input whose estimate is unknown (_peek)."""
         est = int(transcripts._jdf.queryExecution().optimizedPlan()
                   .stats().sizeInBytes())
+        # Long.MaxValue: the estimate of an RDD scan (a frame built from a
+        # Python list or an empty pandas frame), i.e. unknown
+        if est >= (1 << 63) - 1 and _peek(transcripts, 0) is not None:
+            return None
         return one_task_site(
             est, self.fs.is_local and not self.snap.positions_dirs(),
             "input_bytes")
@@ -396,64 +409,97 @@ class Maintainer:
         rank-identical to a fresh build over the live corpus. Keys that
         match no live doc are ignored: an id the index does not hold
         (e.g. one at or past next_doc_id) must never be tombstoned, or
-        the doc a later append gives that id would be masked."""
+        the doc a later append gives that id would be masked.
+
+        _delete_site picks the site. In the driver, the keys peek is the
+        one Spark job, a pyarrow join resolves the keys, and the affected
+        shards decode through _decoded; on Spark a join, the same decode
+        and an aggregate. Both write equal rows; the lineage entry
+        records the site."""
         t0 = time.time()
         m = self.manifest
-        # ONE join resolves the keys against the live, not yet
-        # tombstoned docs (docs() already drops compacted-away dead ids)
-        live = self.snap.docs()
-        old_tomb = self.snap.tomb_dir()
-        if old_tomb:
-            live = live.join(self.snap.tombstones(), "doc_id", "left_anti")
         keys = ["doc_id"] if "doc_id" in doc_keys.columns \
             else ["conv_id", "turn_idx"]
-        # the cached dead rows are released on every path, a failed
-        # step included
+        site, peek = self._delete_site(doc_keys.select(*keys))
+        driver = site["ran"] == "driver"
+        old_tomb = self.snap.tomb_dir()
+        # the cached dead rows (Spark) are released on every path
         with ExitStack() as cached:
-            new_dead = (live.join(doc_keys.select(*keys), keys, "left_semi")
-                        .select("doc_id", "dl").persist())
-            cached.callback(new_dead.unpersist)
-            # ONE aggregate: exact N/sum_dl decrements + the affected
-            # shards (doc-range sharding -> shard id is derivable from
-            # doc_id)
-            drow = new_dead.agg(
-                F.count("*").alias("n"), F.sum("dl").alias("s"),
-                F.collect_set((F.col("doc_id") / self.cfg.docs_per_shard)
-                              .cast("long")).alias("shards")).collect()[0]
-            n_dead, dl_dead = int(drow["n"]), int(drow["s"] or 0)
+            if driver:
+                dead = self._live_matching(peek, keys)
+                ids = dead.column("doc_id").to_numpy()
+                n_dead = len(ids)
+                dl_dead = int(dead.column("dl").to_numpy().sum())
+                shards = np.unique(ids // self.cfg.docs_per_shard)
+            else:
+                # ONE join resolves the keys against the live, not yet
+                # tombstoned docs (docs() already drops compacted-away
+                # dead ids)
+                live = self.snap.docs()
+                if old_tomb:
+                    live = live.join(self.snap.tombstones(), "doc_id",
+                                     "left_anti")
+                new_dead = (live.join(doc_keys.select(*keys), keys,
+                                      "left_semi")
+                            .select("doc_id", "dl").persist())
+                cached.callback(new_dead.unpersist)
+                # ONE aggregate: exact N/sum_dl decrements + the affected
+                # shards (doc-range sharding -> shard id is derivable
+                # from doc_id)
+                drow = new_dead.agg(
+                    F.count("*").alias("n"), F.sum("dl").alias("s"),
+                    F.collect_set((F.col("doc_id") / self.cfg.docs_per_shard)
+                                  .cast("long")).alias("shards")).collect()[0]
+                n_dead, dl_dead = int(drow["n"]), int(drow["s"] or 0)
+                shards = drow["shards"]
             if n_dead == 0:
                 return m
             n_old, sum_old = self._stats()
             n_docs, sum_dl = n_old - n_dead, sum_old - dl_dead
             avgdl = sum_dl / n_docs if n_docs else 0.0
-
-            # exact per-term df: decode ONLY the affected shards (parquet
-            # min/max on the shard column prunes files and row groups)
-            seg = self.snap.segments().filter(
-                _id_set("shard", drow["shards"]))
-            posts = _decode_segments_to_postings(seg) \
-                .join(new_dead.select("doc_id"), "doc_id", "left_semi")
-            dec = (posts.groupBy("term")
-                   .agg((-F.count("*")).cast("long").alias("df"))
-                   .withColumn("max_tf", F.lit(0).cast("int"))
-                   .withColumn("gmax", F.lit(0.0)))
             gen = int(m.get("gen", 0))
             m["gen"] = gen + 1
-            ts_delta = f"term_stats_delta-d{gen}"
-            _atomic_write(dec, self._p(ts_delta), ["term"], fs=self.fs)
-
             # merged tombstones land in a GENERATION-NAMED dir that
             # becomes visible only via the manifest commit below — a
             # crash between this write and the commit leaves the
             # committed tombstone set untouched, so a retried delete()
-            # recomputes new_dead against the LAST COMMITTED state and
+            # recomputes the dead ids against the LAST COMMITTED state and
             # the stat decrements are never lost (append's staging
             # discipline, applied to delete)
+            ts_delta = f"term_stats_delta-d{gen}"
             tomb_dir = f"tombstones-{gen}"
-            merged = new_dead.select("doc_id")
-            if old_tomb:
-                merged = self.snap.tombstones().unionByName(merged)
-            _atomic_write(merged, self._p(tomb_dir), fs=self.fs)
+
+            # exact per-term df: decode ONLY the affected shards (row-group
+            # stats on the shard column skip the other files)
+            if driver:
+                tab = self.snap.meta_rows(self.snap.seg_dirs(),
+                                          schemas.SEGMENTS, _DECODE_COLS,
+                                          shards=shards.tolist())
+                terms = pa.Table.from_batches(
+                    _decoded(tab.to_batches(), ids, keep=True),
+                    schema=_POSTINGS).column("term")
+                terms, n = np.unique(terms.to_numpy(zero_copy_only=False),
+                                     return_counts=True)
+                write_table_local(self.fs, pa.table(
+                    {"term": terms, "df": -n,
+                     "max_tf": np.zeros(len(n), np.int32),
+                     "gmax": np.zeros(len(n))},
+                    schema=to_arrow_schema(schemas.TERM_STATS)),
+                    self._p(ts_delta))
+                self._write_ids(old_tomb, ids, tomb_dir)
+            else:
+                seg = self.snap.segments().filter(_id_set("shard", shards))
+                posts = _decode_segments_to_postings(seg) \
+                    .join(new_dead.select("doc_id"), "doc_id", "left_semi")
+                dec = (posts.groupBy("term")
+                       .agg((-F.count("*")).cast("long").alias("df"))
+                       .withColumn("max_tf", F.lit(0).cast("int"))
+                       .withColumn("gmax", F.lit(0.0)))
+                _atomic_write(dec, self._p(ts_delta), ["term"], fs=self.fs)
+                merged = new_dead.select("doc_id")
+                if old_tomb:
+                    merged = self.snap.tombstones().unionByName(merged)
+                _atomic_write(merged, self._p(tomb_dir), fs=self.fs)
             n_tomb = int(m.get("tombstones", 0)) + n_dead  # disjoint sets
 
         m["tombstones"] = int(n_tomb)
@@ -461,11 +507,43 @@ class Maintainer:
         m.setdefault("ts_deltas", []).append(ts_delta)
         m["n_docs"], m["sum_dl"], m["avgdl"] = n_docs, sum_dl, avgdl
         m["lineage"].append({"stage": "delete", "tombstones": int(n_tomb),
-                             "sec": round(time.time() - t0, 2)})
+                             **site, "sec": round(time.time() - t0, 2)})
         _write_manifest(self.path, m, fs=self.fs)
         if old_tomb and old_tomb != tomb_dir:
             self.fs.delete(self._p(old_tomb))  # post-commit cleanup
         return m
+
+    def _delete_site(self, keys: DataFrame) -> tuple[dict, pa.Table | None]:
+        """delete's site (one_task_site) and, on the driver, the keys: the
+        driver when the fs is local, the docs and segment bytes (file
+        listings, no job) fit one routed-scan task, and _peek finds at
+        most n_docs keys. (A list- or pandas-built keys frame has no
+        usable plan estimate.)"""
+        nbytes = self.snap.segment_bytes() + sum(
+            sz for d in self.snap.docs_dirs()
+            for _, sz in self.fs.parquet_files(self._p(d)))
+        site = one_task_site(nbytes, self.fs.is_local, "index_bytes")
+        peek = None
+        if site["ran"] == "driver":
+            peek = _peek(keys, int(self.manifest["n_docs"]))
+            if peek is None:
+                site = one_task_site(nbytes, False, "index_bytes")
+        return site, peek
+
+    def _live_matching(self, keys: pa.Table, cols: list[str]) -> pa.Table:
+        """(doc_id, dl) of the live, not yet tombstoned docs matching a
+        row of `keys` on `cols`: one pyarrow left-semi join (each doc at
+        most once), the keys cast to the docs' types first."""
+        snap = self.snap
+        live = snap.meta_rows(snap.docs_dirs(), schemas.DOCS,
+                              list(dict.fromkeys(["doc_id", "dl", *cols])))
+        gone = snap.doc_ids(snap.dead_dir(), snap.tomb_dir())
+        live = live.filter(pa.array(
+            ~np.isin(live.column("doc_id").to_numpy(), gone)))
+        keys = keys.cast(pa.schema([pa.field(c, live.schema.field(c).type)
+                                    for c in cols]))
+        return live.join(keys, cols, join_type="left semi") \
+            .select(["doc_id", "dl"])
 
     # ---- M4-M6: targeted compaction ----------------------------------------
     def compact_targeted(self) -> dict:
@@ -522,12 +600,7 @@ class Maintainer:
             dd_dir = f"dead_docs-{gen}"
             old_dd, tomb_dir = self.snap.dead_dir(), self.snap.tomb_dir()
             if driver:
-                old = self.snap.meta_rows(
-                    [old_dd], schemas.DOC_IDS, ["doc_id"]).column("doc_id") \
-                    .to_numpy() if old_dd else tomb_ids[:0]
-                write_table_local(self.fs, pa.table(
-                    {"doc_id": np.concatenate([old, tomb_ids])}),
-                    self._p(dd_dir))
+                self._write_ids(old_dd, tomb_ids, dd_dir)
             else:
                 _atomic_write(self.snap.union(
                     [d for d in (old_dd, tomb_dir) if d], schemas.DOC_IDS),
@@ -556,18 +629,21 @@ class Maintainer:
         one read through the Snapshot (pyarrow on a local fs, one Spark
         scan collected as Arrow on any other)."""
         m = self.manifest
-        shards = [np.zeros(0, np.int64)]
-        tomb = np.zeros(0, np.int64)
+        tomb = self.snap.doc_ids(self.snap.tomb_dir())
+        shards = [tomb // self.cfg.docs_per_shard]
         if m.get("deltas"):
             shards.append(self.snap.meta_rows(
                 m["deltas"], schemas.SEGMENTS, ["shard"])
                 .column("shard").to_numpy())
-        if self.snap.tomb_dir():
-            tomb = self.snap.meta_rows(
-                [self.snap.tomb_dir()], schemas.DOC_IDS,
-                ["doc_id"]).column("doc_id").to_numpy()
-            shards.append(tomb // self.cfg.docs_per_shard)
         return np.unique(np.concatenate(shards)), tomb
+
+    def _write_ids(self, old_dir: str | None, ids: np.ndarray,
+                   final: str) -> None:
+        """`old_dir`'s doc ids plus `ids` as one pyarrow-written DOC_IDS
+        dir (the driver sites' merged tombstones and dead docs)."""
+        write_table_local(self.fs, pa.table(
+            {"doc_id": np.concatenate([self.snap.doc_ids(old_dir), ids])}),
+            self._p(final))
 
     def _patch_local(self, shards: np.ndarray, tomb_ids: np.ndarray,
                      patch: str) -> None:
@@ -576,18 +652,14 @@ class Maintainer:
         read, decoded by blocks.decode_blocks_arrow, tombstoned ids
         dropped, each shard encoded by the build's encoder, written as
         ONE (term, shard, block_id)-sorted file with one row group."""
-        from pdx_spark.functions.blocks import decode_blocks_arrow
         tab = self.snap.meta_rows(self.snap.seg_dirs(), schemas.SEGMENTS,
                                   _DECODE_COLS, shards=shards.tolist())
-        posts = pa.Table.from_batches(
-            [decode_blocks_arrow(b) for b in tab.to_batches() if b.num_rows],
-            schema=_POSTINGS)
-        doc = posts.column("doc_id").to_numpy()
-        keep = np.flatnonzero(~np.isin(doc, tomb_ids))
+        posts = pa.Table.from_batches(_decoded(tab.to_batches(), tomb_ids),
+                                      schema=_POSTINGS)
         enc = _segment_encoder_postings(self.cfg, self.manifest["avgdl"],
                                         self.params)
-        seg = _encode_shards(posts.take(keep),
-                             doc[keep] // self.cfg.docs_per_shard, enc)
+        shard = posts.column("doc_id").to_numpy() // self.cfg.docs_per_shard
+        seg = _encode_shards(posts, shard, enc)
         write_table_local(self.fs, seg, self._p(patch),
                           row_group_size=max(1, seg.num_rows))
 
@@ -816,16 +888,32 @@ _POSTINGS = pa.schema([("term", pa.string()), ("doc_id", pa.int64()),
                        ("tf", pa.int32()), ("dl", pa.int32())])
 
 
-def _decode_segments_to_postings(seg: DataFrame) -> DataFrame:
-    """Explode packed blocks back to (term, doc_id, tf, dl) rows — the M8
-    de-transpose analog (cluster.hpp:165-181), one vectorized Arrow
-    decode per batch (blocks.decode_blocks_arrow)."""
+def _peek(df: DataFrame, n: int) -> pa.Table | None:
+    """`df`'s rows as Arrow when it has at most `n`, else None: ONE Spark
+    job that stops after n + 1 rows, in one task (coalesce(1): the RDD of
+    a Python-built frame would run a task per partition). Sizes inputs
+    whose plan estimate says nothing (an RDD scan's is Long.MaxValue)."""
+    tab = df.coalesce(1).limit(n + 1).toArrow()
+    return tab if tab.num_rows <= n else None
+
+
+def _decoded(batches, ids=None, keep: bool = False):
+    """The (term, doc_id, tf, dl) postings of each non-empty SEGMENTS
+    batch — the M8 de-transpose analog (cluster.hpp:165-181), one
+    vectorized blocks.decode_blocks_arrow per batch — and, given `ids`,
+    only those whose doc_id is in them (keep) or is not (drop)."""
     from pdx_spark.functions.blocks import decode_blocks_arrow
+    for batch in batches:
+        if batch.num_rows:
+            posts = decode_blocks_arrow(batch)
+            if ids is not None:
+                hit = np.isin(posts.column("doc_id").to_numpy(), ids)
+                posts = posts.filter(pa.array(hit == keep))
+            yield posts
 
-    def fn(batches):
-        for batch in batches:
-            if batch.num_rows:
-                yield decode_blocks_arrow(batch)
 
-    return (seg.select(*_DECODE_COLS)
-            .mapInArrow(fn, schema="term string, doc_id long, tf int, dl int"))
+def _decode_segments_to_postings(seg: DataFrame) -> DataFrame:
+    """Explode packed blocks back to (term, doc_id, tf, dl) rows: the
+    _decoded body as a mapInArrow."""
+    return seg.select(*_DECODE_COLS).mapInArrow(
+        _decoded, schema="term string, doc_id long, tf int, dl int")

@@ -44,8 +44,10 @@ from pdx_spark import schemas
 # binding term — defaultParallelism is. A slice of at most this many
 # bytes (one task's worth) runs in the driver instead, which also saves
 # the Spark job around the task: routed scans (Searcher), targeted
-# compactions (Maintainer.compact_targeted) and appends (by Spark's size
-# estimate of the input plan, Maintainer.append) take that site.
+# compactions (Maintainer.compact_targeted), appends (by Spark's size
+# estimate of the input plan, Maintainer.append) and deletes (by the
+# docs and segment bytes, then a bounded peek of the keys,
+# Maintainer.delete) take that site.
 _ROUTED_TASK_BYTES = 2 * 1024 * 1024
 
 
@@ -302,6 +304,13 @@ class Snapshot:
     def dead_docs(self) -> DataFrame | None:
         d = self.dead_dir()
         return None if d is None else self.frame(d, schemas.DOC_IDS)
+
+    def doc_ids(self, *dirs: str | None) -> np.ndarray:
+        """The doc ids in the given DOC_IDS dirs (tombstones, dead docs;
+        None skipped), read in the driver by meta_rows."""
+        dirs = [d for d in dirs if d]
+        return self.meta_rows(dirs, schemas.DOC_IDS, ["doc_id"]) \
+            .column("doc_id").to_numpy() if dirs else np.zeros(0, np.int64)
 
     def term_stats(self) -> DataFrame:
         """Base ∪ append/delete deltas, merged at read: df sums (delete

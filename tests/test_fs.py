@@ -276,54 +276,64 @@ def test_delete_crash_then_retry_keeps_stats_exact(spark, tiny_pdf, tmp_path,
     between the tombstone-merge write and the manifest commit. The
     staged tombstones are generation-named and unreferenced, so the
     retry recomputes against the COMMITTED state — N/sum_dl/df
-    decrements land exactly once and ranks match a fresh build."""
-    import pdx_spark.operators.maintenance as M
+    decrements land exactly once and ranks match a fresh build. Runs on
+    both delete sites, on copies of one index: in the driver (the
+    default bound) and on Spark (_ROUTED_TASK_BYTES at 0)."""
+    import shutil
 
-    path = str(tmp_path / "idx_delcrash")
+    import pdx_spark.operators.maintenance as M
+    import pdx_spark.operators.snapshot as SN
+
+    built = str(tmp_path / "idx_delcrash")
     Indexer(spark, cfg=CFG).build(
-        spark.createDataFrame(tiny_pdf, schema=TRANSCRIPTS), path)
-    s0 = Searcher.load(spark, path)
+        spark.createDataFrame(tiny_pdf, schema=TRANSCRIPTS), built)
+    s0 = Searcher.load(spark, built)
     hits = [d for d, _ in s0.search("w0000", k=6)]
     first, second = hits[:2], hits[2:4]
+    for site, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+        path = str(tmp_path / f"idx_delcrash_{site}")
+        shutil.copytree(built, path)
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
 
-    # delete #1 commits normally
-    Maintainer(spark, path).delete(spark.createDataFrame(
-        [(int(d),) for d in first], "doc_id long"))
-    assert read_manifest(path)["tombstones"] == len(first)
+            # delete #1 commits normally
+            Maintainer(spark, path).delete(spark.createDataFrame(
+                [(int(d),) for d in first], "doc_id long"))
+            assert read_manifest(path)["tombstones"] == len(first)
 
-    # delete #2 crashes before the manifest commit
-    maint = Maintainer(spark, path)
-    real_write = M._write_manifest
-    calls = {"n": 0}
+            # delete #2 crashes before the manifest commit
+            maint = Maintainer(spark, path)
+            calls = {"n": 0}
 
-    def boom_on_manifest(*a, **kw):
-        calls["n"] += 1
-        raise RuntimeError("injected crash")
+            def boom_on_manifest(*a, **kw):
+                calls["n"] += 1
+                raise RuntimeError("injected crash")
 
-    monkeypatch.setattr(M, "_write_manifest", boom_on_manifest)
-    with pytest.raises(RuntimeError, match="injected"):
-        maint.delete(spark.createDataFrame(
-            [(int(d),) for d in second], "doc_id long"))
-    monkeypatch.setattr(M, "_write_manifest", real_write)
-    # committed manifest still shows only delete #1
-    assert read_manifest(path)["tombstones"] == len(first)
+            with monkeypatch.context() as crash:
+                crash.setattr(M, "_write_manifest", boom_on_manifest)
+                with pytest.raises(RuntimeError, match="injected"):
+                    maint.delete(spark.createDataFrame(
+                        [(int(d),) for d in second], "doc_id long"))
+            # committed manifest still shows only delete #1
+            assert read_manifest(path)["tombstones"] == len(first)
 
-    # retry delete #2 on a fresh Maintainer: must NOT no-op
-    m = Maintainer(spark, path).delete(spark.createDataFrame(
-        [(int(d),) for d in second], "doc_id long"))
-    assert m["tombstones"] == len(first) + len(second)
+            # retry delete #2 on a fresh Maintainer: must NOT no-op
+            m = Maintainer(spark, path).delete(spark.createDataFrame(
+                [(int(d),) for d in second], "doc_id long"))
+            assert m["tombstones"] == len(first) + len(second)
+            assert m["lineage"][-1]["ran"] == site
 
-    # exactness: rank-identical to a fresh build over the live corpus
-    ora = _oracle(tiny_pdf, drop_ids=first + second)
-    s = Searcher.load(spark, path)
-    assert s.n_docs == ora.n_docs
-    assert math.isclose(s.avgdl, ora.avgdl, rel_tol=1e-12)
-    res = s.search_batch(QUERIES, two_phase_min_shards=2, force_two_phase=True).persist()
-    for qid, qtext, k in QUERIES:
-        got = collect_topk(res, qid)
-        assert not (set(first + second) & {d for d, _ in got})
-        assert_rank_identical(got, ora.topk(qtext, k), f"delretry q{qid}")
-    res.unpersist()
+        # exactness: rank-identical to a fresh build over the live corpus
+        ora = _oracle(tiny_pdf, drop_ids=first + second)
+        s = Searcher.load(spark, path)
+        assert s.n_docs == ora.n_docs
+        assert math.isclose(s.avgdl, ora.avgdl, rel_tol=1e-12)
+        res = s.search_batch(QUERIES, two_phase_min_shards=2, force_two_phase=True).persist()
+        for qid, qtext, k in QUERIES:
+            got = collect_topk(res, qid)
+            assert not (set(first + second) & {d for d, _ in got})
+            assert_rank_identical(got, ora.topk(qtext, k), f"delretry {site} q{qid}")
+        res.unpersist()
 
 
 def test_format_version_gate(spark, tiny_index, tmp_path):

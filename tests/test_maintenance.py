@@ -467,25 +467,35 @@ def test_minor_stats_compaction_policy(spark, tmp_path, corpus_pdfs):
     res.unpersist()
 
 
-def test_delete_ignores_ids_outside_the_index(spark, tmp_path, corpus_pdfs):
+def test_delete_ignores_ids_outside_the_index(spark, tmp_path, corpus_pdfs,
+                                              monkeypatch):
     """delete() by doc_id tombstones only ids the index holds. An id at
     next_doc_id is not a doc yet: tombstoning it would mask, forever,
-    the doc the next append gives that id."""
+    the doc the next append gives that id. Runs on both sites, on copies
+    of one index: in the driver (the default bound) and on Spark
+    (_ROUTED_TASK_BYTES at 0)."""
+    import pdx_spark.operators.snapshot as SN
     full, head, tail = corpus_pdfs
-    path = str(tmp_path / "idx_del_unknown")
+    built = str(tmp_path / "idx_del_unknown")
     Indexer(spark, cfg=CFG).build(
-        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
-    nxt = read_manifest(path)["next_doc_id"]
-    m = Maintainer(spark, path).delete(
-        spark.createDataFrame([(0,), (nxt,)], "doc_id long"))
-    assert m["tombstones"] == 1
+        spark.createDataFrame(head, schema=TRANSCRIPTS), built)
+    for site, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+        path = str(tmp_path / f"idx_del_unknown_{site}")
+        shutil.copytree(built, path)
+        nxt = read_manifest(path)["next_doc_id"]
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+            m = Maintainer(spark, path).delete(
+                spark.createDataFrame([(0,), (nxt,)], "doc_id long"))
+        assert m["tombstones"] == 1
+        assert m["lineage"][-1]["ran"] == site
 
-    one = tail.iloc[:1].copy()
-    one["conv_id"], one["text"] = "zz-appended", "zzqnovel w0000"
-    Maintainer(spark, path).append(
-        spark.createDataFrame(one, schema=TRANSCRIPTS))
-    res = Searcher.load(spark, path).search_batch([(0, "zzqnovel", 5)])
-    assert [d for d, _ in collect_topk(res, 0)] == [nxt]
+        one = tail.iloc[:1].copy()
+        one["conv_id"], one["text"] = "zz-appended", "zzqnovel w0000"
+        Maintainer(spark, path).append(
+            spark.createDataFrame(one, schema=TRANSCRIPTS))
+        res = Searcher.load(spark, path).search_batch([(0, "zzqnovel", 5)])
+        assert [d for d, _ in collect_topk(res, 0)] == [nxt]
 
 
 def test_failed_append_releases_cached_frames(spark, tmp_path, corpus_pdfs,
@@ -522,27 +532,158 @@ def test_failed_append_releases_cached_frames(spark, tmp_path, corpus_pdfs,
 
 def test_failed_delete_releases_cached_frames(spark, tmp_path, corpus_pdfs,
                                               monkeypatch):
-    """A delete that fails after its dead rows are cached (here: in the
+    """A delete that fails after its dead rows are resolved (here: in the
     term_stats delta write) leaves no cached frame behind, and commits
-    nothing."""
+    nothing. Runs on both sites, on copies of one index: in the driver
+    (the default bound; its pyarrow write fails) and on Spark
+    (_ROUTED_TASK_BYTES at 0; its Spark write fails)."""
+    import pdx_spark.operators.snapshot as SN
     from pdx_spark.operators import maintenance
 
     full, head, tail = corpus_pdfs
-    path = str(tmp_path / "idx_delete_fail")
+    built = str(tmp_path / "idx_delete_fail")
     Indexer(spark, cfg=CFG).build(
-        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
-    before_m = read_manifest(path)
-    keys = spark.createDataFrame([(3,), (70,), (200,)], "doc_id long")
+        spark.createDataFrame(head, schema=TRANSCRIPTS), built)
     jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
 
     def boom(*a, **k):
         raise RuntimeError("write failed")
-    monkeypatch.setattr(maintenance, "_atomic_write", boom)
-    with pytest.raises(RuntimeError, match="write failed"):
-        Maintainer(spark, path).delete(keys)
-    assert set(jsc.getPersistentRDDs().keys()) <= before
-    assert read_manifest(path) == before_m
+    for site, bound, writer in (
+            ("driver", SN._ROUTED_TASK_BYTES, "write_table_local"),
+            ("spark", 0, "_atomic_write")):
+        path = str(tmp_path / f"idx_delete_fail_{site}")
+        shutil.copytree(built, path)
+        before_m = read_manifest(path)
+        keys = spark.createDataFrame([(3,), (70,), (200,)], "doc_id long")
+        before = set(jsc.getPersistentRDDs().keys())
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+            mp.setattr(maintenance, writer, boom)
+            with pytest.raises(RuntimeError, match="write failed"):
+                Maintainer(spark, path).delete(keys)
+        assert set(jsc.getPersistentRDDs().keys()) <= before, site
+        assert read_manifest(path) == before_m, site
+
+
+def _delete_artifacts(path, m):
+    """What the last delete committed: its term_stats-delta rows, the
+    merged tombstone ids and the manifest's stats."""
+    import os
+
+    import pyarrow.parquet as pq
+    ts = pq.read_table(os.path.join(path, m["ts_deltas"][-1]))
+    tomb = pq.read_table(os.path.join(path, m["tomb_dir"]))
+    return {"term_stats": sorted(tuple(r.values()) for r in ts.to_pylist()),
+            "tombstones": sorted(tomb.column("doc_id").to_pylist()),
+            "stats": {k: m[k] for k in ("n_docs", "sum_dl", "avgdl",
+                                         "tombstones")}}
+
+
+def test_driver_delete_matches_spark_delete(spark, tmp_path, corpus_pdfs,
+                                            monkeypatch):
+    """delete() on copies of one index (base, a delta segment, dead docs
+    and tombstones), in the driver (the default bound) and on Spark
+    (_ROUTED_TASK_BYTES at 0), with keys given as (conv_id, turn_idx)
+    and as doc_id — duplicated, already tombstoned, compacted-away dead,
+    at or past next_doc_id, matching nothing: equal term_stats-delta
+    rows, tombstone ids and manifest stats, and results equal to the
+    oracle. The driver delete runs at most one Spark job (the keys
+    peek); a keys frame of more than n_docs rows runs on Spark."""
+    import pandas as pd
+
+    import pdx_spark.operators.snapshot as SN
+    full, head, tail = corpus_pdfs
+    built = str(tmp_path / "idx_del_sites")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), built)
+    Maintainer(spark, built).append(
+        spark.createDataFrame(tail, schema=TRANSCRIPTS))
+    docs = pd.concat([d.sort_values(["conv_id", "turn_idx"])
+                      for d in (head, tail)]).reset_index(drop=True)
+    n_head, nxt = len(head), len(docs)
+    dead, tomb = [1, n_head // 2], [5, n_head - 2]
+    Maintainer(spark, built).delete(spark.createDataFrame(
+        [(i,) for i in dead], "doc_id long"))
+    Maintainer(spark, built).compact_targeted()
+    Maintainer(spark, built).delete(spark.createDataFrame(
+        [(i,) for i in tomb], "doc_id long"))
+    assert read_manifest(built)["next_doc_id"] == nxt
+
+    doomed = [0, 3, 64, 65, n_head - 1, n_head + 1, nxt - 1]
+    ids = doomed + doomed[:3] + dead + tomb
+    pairs = [(str(c), int(t)) for c, t in
+             docs[["conv_id", "turn_idx"]].values]
+    key_sets = {
+        "doc_id": ([(i,) for i in ids + [nxt, nxt + 3]], "doc_id long"),
+        "pairs": ([pairs[i] for i in ids]
+                  + [(pairs[0][0], 999), ("zz-none", 0)],
+                  "conv_id string, turn_idx int")}
+    gone = set(dead + tomb + doomed)
+    oracle = BM25Oracle({i: t for i, t in enumerate(docs["text"])
+                         if i not in gone})
+    for name, (rows, ddl) in key_sets.items():
+        got = {}
+        for site, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+            path = str(tmp_path / f"idx_del_sites_{name}_{site}")
+            shutil.copytree(built, path)
+            keys = spark.createDataFrame(rows, ddl)
+            with monkeypatch.context() as mp:
+                mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+                n0 = _jobs(spark)
+                m = Maintainer(spark, path).delete(keys)
+                jobs = _jobs(spark) - n0
+            entry = m["lineage"][-1]
+            assert entry["ran"] == site and entry["limit"] == bound, entry
+            assert entry["cap"] == "_ROUTED_TASK_BYTES" \
+                and entry["index_bytes"] > 0, entry
+            if site == "driver":
+                assert jobs <= 1, jobs
+            got[site] = _delete_artifacts(path, m)
+            assert got[site]["tombstones"] == sorted(tomb + doomed)
+            assert got[site]["stats"]["n_docs"] == oracle.n_docs
+            s = Searcher.load(spark, path)
+            assert math.isclose(s.avgdl, oracle.avgdl, rel_tol=1e-12)
+            res = s.search_batch(QUERIES, two_phase_min_shards=2,
+                                 force_two_phase=True).persist()
+            for qid, qtext, k in QUERIES:
+                assert_rank_identical(collect_topk(res, qid),
+                                      oracle.topk(qtext, k),
+                                      f"{name} {site} q{qid}")
+            res.unpersist()
+        assert got["driver"] == got["spark"], name
+
+    # more keys than live docs: the peek stops and Spark runs the delete
+    path = str(tmp_path / "idx_del_sites_oversized")
+    shutil.copytree(built, path)
+    n_docs = read_manifest(path)["n_docs"]
+    m = Maintainer(spark, path).delete(spark.createDataFrame(
+        [(0,)] * (n_docs + 1), "doc_id long"))
+    entry = m["lineage"][-1]
+    assert entry["ran"] == "spark" \
+        and 0 < entry["index_bytes"] <= entry["limit"], entry
+    assert _delete_artifacts(path, m)["tombstones"] == sorted(tomb + [0])
+    assert m["n_docs"] == n_docs - 1
+
+
+def test_empty_append_commits_nothing(spark, tmp_path, corpus_pdfs):
+    """An empty input built from pandas or from a list (an RDD scan whose
+    size estimate is unknown) is found empty by one bounded peek: the
+    append runs at most one Spark job, writes no artifact and leaves the
+    manifest — gen, dir lists, lineage, last_batch_id — unchanged, with
+    or without a batch_id."""
+    full, head, tail = corpus_pdfs
+    path = str(tmp_path / "idx_empty_append")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    before, files = read_manifest(path), _file_state(path)
+    for empty in (spark.createDataFrame(tail.iloc[:0], schema=TRANSCRIPTS),
+                  spark.createDataFrame([], TRANSCRIPTS)):
+        for batch_id in (None, 7):
+            n0 = _jobs(spark)
+            m = Maintainer(spark, path).append(empty, batch_id=batch_id)
+            assert _jobs(spark) - n0 <= 1
+            assert m == before and read_manifest(path) == before
+            assert _file_state(path) == files
 
 
 def _segment_rows(root):
