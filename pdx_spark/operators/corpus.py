@@ -97,9 +97,18 @@ def _assign_ids_driver(transcripts: DataFrame, cap: int) -> DataFrame | None:
     return transcripts.join(F.broadcast(ids_df), ["conv_id", "turn_idx"])
 
 
+# the most (conv_id, turn_idx) keys assign_doc_ids ranks on the driver
+_ASSIGN_IDS_LOCAL_CAP = 1_000_000
+
+
 def assign_doc_ids(transcripts: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """transcripts(+any cols) -> same rows + dense int64 doc_id, ordered by
     (conv_id, turn_idx).
+
+    Up to _ASSIGN_IDS_LOCAL_CAP keys the ranks come from the driver and
+    are broadcast-joined back: per conversation when every turn_idx run
+    is provably dense from 0 (_assign_ids_conv_driver), else per turn
+    (_assign_ids_driver). Above the cap the scale path below runs.
 
     The rank computation runs on a SLIM projection — (conv_id, turn_idx)
     only — so the full corpus (text included) is never pinned in executor
@@ -118,11 +127,9 @@ def assign_doc_ids(transcripts: DataFrame, num_partitions: int | None = None) ->
     pinned ids) instead of killing the build. Deterministic regardless of
     partitioning (offsets come from actual counts; the key is unique)."""
     spark = transcripts.sparkSession
-    import os
-    cap = int(os.environ.get("PDX_ASSIGN_IDS_LOCAL_CAP", 1_000_000))
-    fast = _assign_ids_conv_driver(transcripts, cap)
+    fast = _assign_ids_conv_driver(transcripts, _ASSIGN_IDS_LOCAL_CAP)
     if fast is None:
-        fast = _assign_ids_driver(transcripts, cap)
+        fast = _assign_ids_driver(transcripts, _ASSIGN_IDS_LOCAL_CAP)
     if fast is not None:
         return fast
     if num_partitions is None:

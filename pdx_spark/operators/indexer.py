@@ -291,18 +291,11 @@ def read_manifest(path: str, fs: IndexFS | None = None) -> dict:
 
 
 def _empty_segments():
+    """A 0-row SEGMENTS table, typed (and nullable) as the encoder's."""
     import pyarrow as pa
-    return pa.table(
-        {f.name: [] for f in schemas.SEGMENTS.fields},
-        schema=pa.schema([
-            ("term", pa.string()), ("shard", pa.int64()),
-            ("block_id", pa.int32()), ("n", pa.int32()),
-            ("first_doc", pa.int64()), ("last_doc", pa.int64()),
-            ("max_tf", pa.int32()), ("min_dl", pa.int32()),
-            ("gmax", pa.float64()), ("ids_bw", pa.int32()),
-            ("tfs_bw", pa.int32()), ("dls_bw", pa.int32()),
-            ("ids", pa.binary()), ("tfs", pa.binary()),
-            ("dls", pa.binary())]))
+    from pyspark.sql.pandas.types import to_arrow_schema
+    return pa.schema([f.with_nullable(True) for f in
+                      to_arrow_schema(schemas.SEGMENTS)]).empty_table()
 
 
 def _encode_postings(terms, doc_ids: np.ndarray, tfs: np.ndarray,

@@ -19,10 +19,12 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
      which appends into one cluster in process, an append whose input
      fits one routed-scan task (Spark's plan size estimate <=
      _ROUTED_TASK_BYTES, a local fs, no positional artifact) runs in the
-     driver: one Arrow collect of the input, then the build's tokenizer
-     body (corpus.doc_postings_batch), dense rank and encoder, pyarrow
-     writes and stat_artifacts — one Spark job in all. A larger input,
-     or a remote fs, runs the same kernels as Spark jobs.
+     driver: one Arrow collect of the input, dense rank and the build's
+     tokenizer body (corpus.doc_postings_batch) — one Spark job in all. A
+     larger input, or a remote fs, assigns ids and tokenizes as Spark
+     jobs. Only that front differs: the docs delta, the per-shard
+     encoder, the segment write and stat_artifacts are written once, over
+     the Snapshot's steps.
   M2 Delete  -> tombstones + EXACT stats: the keys resolve against the
      live docs in one join, so only ids the index holds are tombstoned;
      their doc_ids land in a tombstone parquet (the scorer masks them
@@ -34,20 +36,25 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
      not only after compact. Like the reference, which tombstones in
      the caller's thread (index.hpp:619-638), a delete whose index fits
      one routed-scan task on a local fs, with at most n_docs keys, runs
-     in the driver (one Spark job, the keys peek); else on Spark.
+     in the driver (one Spark job, the keys peek); else on Spark. The
+     key resolution and the df count differ by site; the segment read
+     and the writes are the Snapshot's steps.
   M3-M6 Compact:
      compact_targeted() -> the SplitCluster/CompactCluster analog
        (index.hpp:1314-1611, cluster.hpp:260-294): rewrites ONLY shards
        that hold delta blocks or tombstoned postings into a patch
        segment dir; untouched base files stay byte-identical. Base
        term_stats/directory are untouched (bounds stay admissible:
-       tombstone removal can only shrink true maxima). Like the
-       reference, which compacts one cluster in process, the whole op
-       runs in the driver when its affected slice fits one routed-scan
-       task (a local fs, and Snapshot.routed_bytes of the affected
-       shards <= _ROUTED_TASK_BYTES): pyarrow reads, decodes, encodes
-       and writes the patch, and no Spark job runs. A larger slice, or
-       a remote fs, runs the same decode and encoder as Spark jobs.
+       tombstone removal can only shrink true maxima). Written once over
+       the Snapshot's steps: read the affected shards' packed rows, then
+       per shard decode, drop the tombstoned ids (carried in the
+       closure) and encode, then write the patch. Like the reference,
+       which compacts one cluster in process, the steps run in the
+       driver when the affected slice fits one routed-scan task (a local
+       fs, and Snapshot.routed_bytes of the affected shards <=
+       _ROUTED_TASK_BYTES): pyarrow reads and writes, no Spark job. A
+       larger slice, or a remote fs, runs them as Spark jobs, the packed
+       rows shuffled by shard.
      compact() -> full rewrite: merge everything, drop tombstones and
        dead docs, fold stat deltas into the base, reset all delta state.
        Its new base takes the build's fgroup file layout, and its
@@ -61,13 +68,14 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
 
 Every read goes through the Maintainer's Snapshot (self.snap), the
 reader Searcher holds too: its dir lists, merged views and meta_rows
-follow each commit, which updates self.manifest in place.
+follow each commit, which updates self.manifest in place. Its read,
+group_apply and write steps take the op's one_task_site record and run
+in the driver (pyarrow) or on Spark, so each op is written once.
 """
 
 from __future__ import annotations
 
 import time
-from concurrent.futures import ThreadPoolExecutor
 from contextlib import ExitStack
 
 import numpy as np
@@ -80,34 +88,13 @@ from pdx_spark import schemas
 from pdx_spark.config import BM25Params, IndexConfig
 from pdx_spark.fs import IndexFS, index_fs, verify_single_rowgroup
 from pdx_spark.operators import corpus as C
-from pdx_spark.operators.indexer import (PARQUET_BLOCK_SIZE,
-                                         _empty_segments,
-                                         _segment_encoder_docs,
+from pdx_spark.operators.indexer import (_segment_encoder_docs,
                                          _segment_encoder_postings,
                                          _write_manifest, encode_layout,
                                          read_manifest, stat_artifacts,
-                                         write_directory_rows,
-                                         write_table_local)
-from pdx_spark.operators.snapshot import Snapshot, _id_set, one_task_site
-
-
-def _atomic_write(df: DataFrame, final: str, sort_cols: list[str] | None = None,
-                  fs: IndexFS | None = None, segments: bool = False,
-                  partition_by: str | None = None):
-    """tmp-dir -> rename commit protocol (same as the indexer's chunks).
-    segments=True also pins the one-row-group-per-file invariant the
-    map-scan needs (parquet.block.size >> file size)."""
-    from pdx_spark.fs import LocalFS
-    fs = fs or LocalFS()
-    tmp = final + ".tmp"
-    w = df.sortWithinPartitions(*sort_cols) if sort_cols else df
-    w = w.write.mode("overwrite")
-    if segments:
-        w = w.option("parquet.block.size", PARQUET_BLOCK_SIZE)
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(tmp)
-    fs.rename(tmp, final)
+                                         write_directory_rows)
+from pdx_spark.operators.snapshot import (Snapshot, _atomic_write,
+                                          one_task_site)
 
 
 class Maintainer:
@@ -153,39 +140,24 @@ class Maintainer:
         row = self.snap.docs_raw().agg(F.max("doc_id")).collect()[0][0]
         return int(row) + 1 if row is not None else 0
 
-    def _assign_append_ids(self, transcripts: DataFrame,
-                           next_id: int) -> DataFrame:
-        """Dense doc_id assignment for an append batch: rank of
-        (conv_id, turn_idx) + next_id, with the build's corpus.
-        assign_doc_ids. Up to PDX_ASSIGN_IDS_LOCAL_CAP keys it ranks on
-        the driver and broadcast-joins the ids back — per conversation
-        when every turn_idx run is provably dense from 0, else per
-        turn; above the cap it runs the range-partition path with
-        num_partitions = the default parallelism (at least 8)."""
-        with_ids = C.assign_doc_ids(
-            transcripts,
-            num_partitions=max(
-                self.spark.sparkContext.defaultParallelism, 8))
-        return with_ids.withColumn(
-            "doc_id", F.col("doc_id") + F.lit(int(next_id)))
-
     # ---- M1: append ---------------------------------------------------------
     def append(self, transcripts: DataFrame, batch_id: int | None = None) -> dict:
         """Append new turns; O(delta) work, crash-safe, idempotent under
         batch_id replay (streaming foreachBatch re-runs the last
         uncommitted micro-batch on restart).
 
-        The input picks the half (_append_site): an input that fits one
+        The input picks the site (_append_site): an input that fits one
         routed-scan task by Spark's size estimate of its plan, on a local
-        fs without positional artifacts, runs in the driver
-        (_append_local: one Arrow collect, no other Spark job); any other
-        runs on Spark (_append_spark). Both write equal docs-delta and
-        delta-segment rows and equal stat artifacts. The lineage entry
-        records the site with the input estimate next to
-        _ROUTED_TASK_BYTES. An input whose estimate is unknown is checked
-        for rows first (one 1-task job): an empty one returns the manifest
-        unchanged and commits nothing, so its batch_id is not recorded
-        and a later batch may carry it."""
+        fs without positional artifacts, runs in the driver (one Arrow
+        collect, no other Spark job); any other runs on Spark. Only the
+        id and tokenize front (_doc_postings) and the positional delta
+        differ by site: the docs delta, the per-shard encode, the delta
+        segment, its verify and stat_artifacts are the Snapshot's steps.
+        The lineage entry records the site with the input estimate next
+        to _ROUTED_TASK_BYTES. An input whose estimate is unknown is
+        checked for rows first (one 1-task job): an empty one returns the
+        manifest unchanged and commits nothing, so its batch_id is not
+        recorded and a later batch may carry it."""
         m = self.manifest
         if batch_id is not None and batch_id <= m.get("last_batch_id", -1):
             return m  # replayed micro-batch: already committed
@@ -207,12 +179,52 @@ class Maintainer:
              "ts": f"term_stats_delta-{gen}",
              "dir": f"directory_delta-{gen}",
              "pos": f"positions_delta-{gen}"}
-        half = self._append_local if site["ran"] == "driver" \
-            else self._append_spark
-        n_new, dl_new, single_rg, dq, pos_delta = half(
-            transcripts, next_id, n_old, sum_old, d, timings)
-        n_docs, sum_dl = n_old + n_new, sum_old + dl_new
-        avgdl = sum_dl / n_docs if n_docs else 0.0
+        # every frame cached below is released on every path, a failed
+        # step included
+        with ExitStack() as cached:
+            tt = time.time()
+            dp, n_new, dl_new, with_ids = self._doc_postings(
+                site, transcripts, next_id, cached, timings)
+            n_docs, sum_dl = n_old + n_new, sum_old + dl_new
+            avgdl = sum_dl / n_docs if n_docs else 0.0
+            timings["tokenize+stats"] = round(time.time() - tt, 2)
+
+            tt = time.time()
+            self.snap.write(site, dp.select([f.name for f in
+                                             schemas.DOCS.fields]), d["docs"])
+            timings["docs"] = round(time.time() - tt, 2)
+            # delta segment: blocks store (tf, dl); pruning bounds are
+            # recomputed from (max_tf, min_dl) at query time, so avgdl
+            # drift cannot over-prune (see searcher._arrow_scorer)
+            tt = time.time()
+            seg = self.snap.group_apply(
+                site, dp.select(["doc_id", "dl", "terms", "tfs", "shard"]),
+                _segment_encoder_docs(self.cfg, avgdl, self.params),
+                schemas.SEGMENTS)
+            self.snap.write(site, seg, d["seg"], ["term", "shard", "block_id"],
+                            segments=True)
+            single_rg = verify_single_rowgroup(self.fs, d["seg"],
+                                               root=self.path)
+            timings["segments"] = round(time.time() - tt, 2)
+            # the term_stats and directory deltas derive from the written
+            # delta segment's metadata, as for a build; the directory
+            # delta is quantized with its OWN affine params — delta values
+            # can exceed the base range
+            tt = time.time()
+            dq = stat_artifacts(self.spark, self.fs, [self._p(d["seg"])],
+                                self._p(d["ts"]), self._p(d["dir"]))
+            timings["stat_artifacts"] = round(time.time() - tt, 2)
+
+            # positional delta (positions-enabled indexes, which only the
+            # Spark site takes): same O(delta) discipline, merged at read
+            # by phrase_topk
+            pos_delta = None
+            if self.snap.positions_dirs():
+                tt = time.time()
+                from pdx_spark.operators.phrase import write_positions
+                pos_delta = d["pos"]
+                write_positions(with_ids, self._p(pos_delta))
+                timings["positions"] = round(time.time() - tt, 2)
 
         # manifest commit — the single atomic visibility point
         m.setdefault("deltas", []).append(d["seg"])
@@ -250,155 +262,65 @@ class Maintainer:
             est, self.fs.is_local and not self.snap.positions_dirs(),
             "input_bytes")
 
-    def _append_local(self, transcripts: DataFrame, next_id: int,
-                      n_old: int, sum_old: int, d: dict,
-                      timings: dict) -> tuple:
-        """append's driver half: ONE toArrow() collect of the input with
-        the text hash computed in the same JVM projection; doc ids are
-        corpus.dense_rank + next_id; doc_postings_batch tokenizes;
-        _encode_shards runs the build's per-shard encoder; the docs delta
-        and the delta segment (one (term, shard, block_id)-sorted file,
-        one row group) land through write_table_local in the schemas.*
-        Arrow types, then stat_artifacts as in _append_spark.
-        -> (n_new, dl_new, single_rg, dir params, None)."""
-        tt = time.time()
-        tab = transcripts.withColumn(
-            "text_hash",
-            F.xxhash64(F.coalesce(F.col("text"), F.lit("")))).toArrow()
-        timings["collect"] = round(time.time() - tt, 2)
-        tt = time.time()
-        ids = C.dense_rank(
-            tab.column("conv_id").to_numpy(zero_copy_only=False),
-            tab.column("turn_idx").to_numpy(zero_copy_only=False)) + next_id
-        cols = ["text", *C.DOC_META_COLS]
-        dp = pa.Table.from_batches([C.doc_postings_batch(
-            pa.RecordBatch.from_arrays(
-                [pa.array(ids), *(tab.column(c).combine_chunks()
-                                  for c in cols)],
-                names=["doc_id", *cols]), C.DOC_META_COLS)])
-        n_new, dl_new = dp.num_rows, int(dp.column("dl").to_numpy().sum())
-        avgdl = (sum_old + dl_new) / (n_old + n_new) if n_old + n_new else 0.0
-        timings["tokenize+stats"] = round(time.time() - tt, 2)
-
-        tt = time.time()
-        docs = dp.select([f.name for f in schemas.DOCS.fields])
-        write_table_local(self.fs, docs.cast(to_arrow_schema(schemas.DOCS)),
-                          self._p(d["docs"]))
-        timings["docs"] = round(time.time() - tt, 2)
-        tt = time.time()
-        enc = _segment_encoder_docs(self.cfg, avgdl, self.params)
-        seg = _encode_shards(dp.select(["doc_id", "dl", "terms", "tfs"]),
-                             ids // self.cfg.docs_per_shard, enc)
-        write_table_local(self.fs, seg, self._p(d["seg"]),
-                          row_group_size=max(1, seg.num_rows))
-        single_rg = verify_single_rowgroup(self.fs, d["seg"], root=self.path)
-        timings["segments"] = round(time.time() - tt, 2)
-        tt = time.time()
-        dq = stat_artifacts(self.spark, self.fs, [self._p(d["seg"])],
-                            self._p(d["ts"]), self._p(d["dir"]))
-        timings["stat_artifacts"] = round(time.time() - tt, 2)
-        return n_new, dl_new, single_rg, dq, None
-
-    def _append_spark(self, transcripts: DataFrame, next_id: int,
-                      n_old: int, sum_old: int, d: dict,
-                      timings: dict) -> tuple:
-        """append's Spark half: assign_doc_ids, the mapInArrow tokenize,
-        the docs delta and the per-shard applyInArrow encode as Spark
-        jobs, stat_artifacts, and the positional delta when the index
-        has one. -> (n_new, dl_new, single_rg, dir params, positions
-        delta dir or None)."""
-        # every frame cached below is released on every path, a failed
-        # step included
-        with ExitStack() as cached:
+    def _doc_postings(self, site: dict, transcripts: DataFrame, next_id: int,
+                      cached: ExitStack, timings: dict) -> tuple:
+        """append's front, the part that differs by site: the batch's
+        (doc_id, dl, terms, tfs, shard, DOCS columns) postings, with dense
+        doc ids from next_id and the text hash computed in the input's
+        JVM projection -> (postings, n_new, dl_new, the ids-joined input
+        for the positional writer, None in the driver). In the driver one
+        toArrow() collect, corpus.dense_rank and the build's tokenizer
+        body; on Spark corpus.assign_doc_ids, the mapInArrow tokenize and
+        one aggregate."""
+        transcripts = transcripts.withColumn(
+            "text_hash", F.xxhash64(F.coalesce(F.col("text"), F.lit(""))))
+        if site["ran"] == "driver":
             tt = time.time()
-            # appends are delta-sized by design, so caching the input
-            # batch is bounded by the delta — and assign_doc_ids
-            # otherwise reads the caller's frame at least twice (a key
-            # aggregate or range sample, then the id join-back), which
-            # for the common filtered-view input means repeated passes
-            # over the SOURCE. One materialization, then cache reads.
-            # (The full build never caches its input — corpus-sized;
-            # this is the delta exception.)
-            transcripts = transcripts.persist()
-            cached.callback(transcripts.unpersist)
-            with_ids = self._assign_append_ids(transcripts, next_id)
-            # same single-text-pass shape as Indexer.build: metadata
-            # rides through the Arrow tokenize, only the (text-free)
-            # postings frame is ever cached
-            meta = with_ids.withColumn(
-                "text_hash",
-                F.xxhash64(F.coalesce(F.col("text"), F.lit(""))))
-            dp = C.doc_postings(meta, extra_cols=C.DOC_META_COLS).persist()
-            cached.callback(dp.unpersist)
-            # delta stats straight off the cached postings — no write-
-            # then-re-read round trip (the batch is materialized once)
-            drow = dp.agg(F.count("*").alias("n"),
-                          F.sum("dl").alias("s")).collect()[0]
-            n_new, dl_new = int(drow["n"]), int(drow["s"] or 0)
-            n_docs, sum_dl = n_old + n_new, sum_old + dl_new
-            avgdl = sum_dl / n_docs if n_docs else 0.0
-            timings["tokenize+stats"] = round(time.time() - tt, 2)
-            # the docs delta and the delta segment are independent given
-            # the cached dp: they run as concurrent driver-thread jobs
-            # instead of serially paying each job's fixed latency on a
-            # delta-sized batch (append wall time is job-count-bound,
-            # not data-bound). Every artifact lands via tmp -> rename and
-            # is unreferenced until the single manifest commit below,
-            # which happens in this thread after both joins.
-            def _docs_job():
-                tt = time.time()
-                self.spark.sparkContext.setJobDescription(
-                    "append: docs delta")
-                new_docs = dp.select(*[f.name for f in schemas.DOCS.fields])
-                _atomic_write(new_docs, self._p(d["docs"]), fs=self.fs)
-                return round(time.time() - tt, 2)
-
-            def _seg_job():
-                # delta segment: blocks store (tf, dl); pruning bounds
-                # are recomputed from (max_tf, min_dl) at query time, so
-                # avgdl drift cannot over-prune (see
-                # searcher._arrow_scorer). The term_stats and directory
-                # deltas then derive from the written delta segment's
-                # metadata (stat_artifacts, as for a build). The
-                # directory delta is quantized with its OWN affine
-                # params — delta values can exceed the base range.
-                tt = time.time()
-                self.spark.sparkContext.setJobDescription(
-                    "append: delta segment")
-                posts = (dp.select("doc_id", "dl", "terms", "tfs")
-                         .withColumn("shard", self.cfg.shard_of_expr()))
-                enc = _segment_encoder_docs(self.cfg, avgdl, self.params)
-                seg = posts.groupBy("shard").applyInArrow(
-                    enc, schema=schemas.SEGMENTS)
-                _atomic_write(seg, self._p(d["seg"]),
-                              ["term", "shard", "block_id"],
-                              fs=self.fs, segments=True)
-                rg = verify_single_rowgroup(self.fs, d["seg"],
-                                            root=self.path)
-                t_seg = round(time.time() - tt, 2)
-                tt = time.time()
-                dq_ = stat_artifacts(self.spark, self.fs, [self._p(d["seg"])],
-                                     self._p(d["ts"]), self._p(d["dir"]))
-                return rg, dq_, t_seg, round(time.time() - tt, 2)
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                f_docs = pool.submit(_docs_job)
-                f_seg = pool.submit(_seg_job)
-                timings["docs"] = f_docs.result()
-                (single_rg, dq, timings["segments"],
-                 timings["stat_artifacts"]) = f_seg.result()
-
-            # positional delta (only for positions-enabled indexes):
-            # same O(delta) discipline, merged at read by phrase_topk
-            pos_delta = None
-            if self.snap.positions_dirs():
-                tt = time.time()
-                from pdx_spark.operators.phrase import write_positions
-                pos_delta = d["pos"]
-                write_positions(with_ids, self._p(pos_delta))
-                timings["positions"] = round(time.time() - tt, 2)
-
-        return n_new, dl_new, single_rg, dq, pos_delta
+            tab = transcripts.toArrow()
+            timings["collect"] = round(time.time() - tt, 2)
+            ids = C.dense_rank(
+                tab.column("conv_id").to_numpy(zero_copy_only=False),
+                tab.column("turn_idx").to_numpy(zero_copy_only=False)) \
+                + next_id
+            cols = ["text", *C.DOC_META_COLS]
+            dp = pa.Table.from_batches([C.doc_postings_batch(
+                pa.RecordBatch.from_arrays(
+                    [pa.array(ids), *(tab.column(c).combine_chunks()
+                                      for c in cols)],
+                    names=["doc_id", *cols]), C.DOC_META_COLS)])
+            # the docs columns in the schemas.DOCS Arrow types
+            docs = to_arrow_schema(schemas.DOCS)
+            dp = dp.cast(pa.schema([
+                docs.field(f.name) if f.name in docs.names else f
+                for f in dp.schema])).append_column(
+                "shard", pa.array(ids // self.cfg.docs_per_shard))
+            return (dp, dp.num_rows, int(dp.column("dl").to_numpy().sum()),
+                    None)
+        # appends are delta-sized by design, so caching the input batch is
+        # bounded by the delta — and assign_doc_ids otherwise reads the
+        # caller's frame at least twice (a key aggregate or range sample,
+        # then the id join-back), which for the common filtered-view input
+        # means repeated passes over the SOURCE. One materialization, then
+        # cache reads. (The full build never caches its input —
+        # corpus-sized; this is the delta exception.)
+        transcripts = transcripts.persist()
+        cached.callback(transcripts.unpersist)
+        with_ids = C.assign_doc_ids(
+            transcripts, num_partitions=max(
+                self.spark.sparkContext.defaultParallelism, 8))
+        with_ids = with_ids.withColumn(
+            "doc_id", F.col("doc_id") + F.lit(int(next_id)))
+        # same single-text-pass shape as Indexer.build: metadata rides
+        # through the Arrow tokenize, only the (text-free) postings frame
+        # is ever cached
+        dp = (C.doc_postings(with_ids, extra_cols=C.DOC_META_COLS)
+              .withColumn("shard", self.cfg.shard_of_expr()).persist())
+        cached.callback(dp.unpersist)
+        # delta stats straight off the cached postings — no write-then-
+        # re-read round trip (the batch is materialized once)
+        row = dp.agg(F.count("*").alias("n"),
+                     F.sum("dl").alias("s")).collect()[0]
+        return dp, int(row["n"]), int(row["s"] or 0), with_ids
 
     # ---- M2: delete ---------------------------------------------------------
     def delete(self, doc_keys: DataFrame) -> dict:
@@ -471,35 +393,32 @@ class Maintainer:
 
             # exact per-term df: decode ONLY the affected shards (row-group
             # stats on the shard column skip the other files)
+            seg = self.snap.read(site, self.snap.seg_dirs(), schemas.SEGMENTS,
+                                 _DECODE_COLS, shards=shards)
             if driver:
-                tab = self.snap.meta_rows(self.snap.seg_dirs(),
-                                          schemas.SEGMENTS, _DECODE_COLS,
-                                          shards=shards.tolist())
                 terms = pa.Table.from_batches(
-                    _decoded(tab.to_batches(), ids, keep=True),
+                    _decoded(seg.to_batches(), ids, keep=True),
                     schema=_POSTINGS).column("term")
                 terms, n = np.unique(terms.to_numpy(zero_copy_only=False),
                                      return_counts=True)
-                write_table_local(self.fs, pa.table(
-                    {"term": terms, "df": -n,
-                     "max_tf": np.zeros(len(n), np.int32),
-                     "gmax": np.zeros(len(n))},
-                    schema=to_arrow_schema(schemas.TERM_STATS)),
-                    self._p(ts_delta))
-                self._write_ids(old_tomb, ids, tomb_dir)
+                dec = pa.table({"term": terms, "df": -n,
+                                "max_tf": np.zeros(len(n), np.int32),
+                                "gmax": np.zeros(len(n))},
+                               schema=to_arrow_schema(schemas.TERM_STATS))
+                tomb = pa.table({"doc_id": np.concatenate(
+                    [self.snap.doc_ids(old_tomb), ids])})
             else:
-                seg = self.snap.segments().filter(_id_set("shard", shards))
                 posts = _decode_segments_to_postings(seg) \
                     .join(new_dead.select("doc_id"), "doc_id", "left_semi")
                 dec = (posts.groupBy("term")
                        .agg((-F.count("*")).cast("long").alias("df"))
                        .withColumn("max_tf", F.lit(0).cast("int"))
                        .withColumn("gmax", F.lit(0.0)))
-                _atomic_write(dec, self._p(ts_delta), ["term"], fs=self.fs)
-                merged = new_dead.select("doc_id")
+                tomb = new_dead.select("doc_id")
                 if old_tomb:
-                    merged = self.snap.tombstones().unionByName(merged)
-                _atomic_write(merged, self._p(tomb_dir), fs=self.fs)
+                    tomb = self.snap.tombstones().unionByName(tomb)
+            self.snap.write(site, dec, ts_delta, ["term"])
+            self.snap.write(site, tomb, tomb_dir)
             n_tomb = int(m.get("tombstones", 0)) + n_dead  # disjoint sets
 
         m["tombstones"] = int(n_tomb)
@@ -517,8 +436,8 @@ class Maintainer:
         """delete's site (one_task_site) and, on the driver, the keys: the
         driver when the fs is local, the docs and segment bytes (file
         listings, no job) fit one routed-scan task, and _peek finds at
-        most n_docs keys. (A list- or pandas-built keys frame has no
-        usable plan estimate.)"""
+        most n_docs keys. (A list-built keys frame plans as an RDD scan,
+        whose estimate is Long.MaxValue.)"""
         nbytes = self.snap.segment_bytes() + sum(
             sz for d in self.snap.docs_dirs()
             for _, sz in self.fs.parquet_files(self._p(d)))
@@ -556,12 +475,12 @@ class Maintainer:
 
         The affected shards are the delta dirs' shard column plus the
         tombstones' shards, one read of each through the Snapshot (no
-        Spark job on a local fs). When their estimated bytes fit one
-        routed-scan task on a local fs (Snapshot.site), the op runs in
-        the driver (_patch_local): one pyarrow read of their segment
-        rows, the build's Arrow decode and encoder, one patch file.
-        Otherwise the same decode and encoder run on Spark
-        (_patch_spark). Both write the same multiset of SEGMENTS rows.
+        Spark job on a local fs). Their estimated bytes pick the site
+        (Snapshot.site): in the driver when they fit one routed-scan task
+        on a local fs (no Spark job at all), else on Spark. On either,
+        the Snapshot's steps read the affected shards' packed rows,
+        re-encode each shard once (decode, drop the tombstoned ids, which
+        ride the closure, and the build's encoder) and write the patch.
         The lineage entry records the site with its byte estimate next
         to _ROUTED_TASK_BYTES."""
         t0 = time.time()
@@ -570,14 +489,22 @@ class Maintainer:
         if not len(shards):
             return m
         site = self.snap.site(len(shards), self.fs.is_local)
-        driver = site["ran"] == "driver"
         gen = int(m.get("gen", 0))
         m["gen"] = gen + 1
         patch = f"segments/patch-{gen}"
-        if driver:
-            self._patch_local(shards, tomb_ids, patch)
-        else:
-            self._patch_spark(shards, patch)
+        enc = _segment_encoder_postings(self.cfg, m["avgdl"], self.params)
+
+        def reencode(packed: pa.Table) -> pa.Table:
+            # one shard's packed rows -> its live postings, re-encoded
+            posts = pa.Table.from_batches(
+                list(_decoded(packed.to_batches(), tomb_ids)))
+            return enc(posts.append_column("shard", pa.array(
+                np.full(posts.num_rows, packed.column("shard")[0].as_py()))))
+        packed = self.snap.read(site, self.snap.seg_dirs(), schemas.SEGMENTS,
+                                [*_DECODE_COLS, "shard"], shards=shards)
+        self.snap.write(site, self.snap.group_apply(
+            site, packed, reencode, schemas.SEGMENTS), patch,
+            ["term", "shard", "block_id"], segments=True)
         single_rg = verify_single_rowgroup(self.fs, patch, root=self.path)
 
         # bookkeeping: base dirs exclude the patched shards; delta segment
@@ -599,12 +526,9 @@ class Maintainer:
         if len(tomb_ids):
             dd_dir = f"dead_docs-{gen}"
             old_dd, tomb_dir = self.snap.dead_dir(), self.snap.tomb_dir()
-            if driver:
-                self._write_ids(old_dd, tomb_ids, dd_dir)
-            else:
-                _atomic_write(self.snap.union(
-                    [d for d in (old_dd, tomb_dir) if d], schemas.DOC_IDS),
-                    self._p(dd_dir), fs=self.fs)
+            self.snap.write(site, self.snap.read(
+                site, [d for d in (old_dd, tomb_dir) if d], schemas.DOC_IDS,
+                ["doc_id"]), dd_dir)
             if old_dd:
                 doomed.append(old_dd)
             # delete() tombstones only live, not yet tombstoned ids, so
@@ -636,48 +560,6 @@ class Maintainer:
                 m["deltas"], schemas.SEGMENTS, ["shard"])
                 .column("shard").to_numpy())
         return np.unique(np.concatenate(shards)), tomb
-
-    def _write_ids(self, old_dir: str | None, ids: np.ndarray,
-                   final: str) -> None:
-        """`old_dir`'s doc ids plus `ids` as one pyarrow-written DOC_IDS
-        dir (the driver sites' merged tombstones and dead docs)."""
-        write_table_local(self.fs, pa.table(
-            {"doc_id": np.concatenate([self.snap.doc_ids(old_dir), ids])}),
-            self._p(final))
-
-    def _patch_local(self, shards: np.ndarray, tomb_ids: np.ndarray,
-                     patch: str) -> None:
-        """compact_targeted's driver half: the affected shards' segment
-        rows (base minus seg_excludes, patches, deltas) in one pyarrow
-        read, decoded by blocks.decode_blocks_arrow, tombstoned ids
-        dropped, each shard encoded by the build's encoder, written as
-        ONE (term, shard, block_id)-sorted file with one row group."""
-        tab = self.snap.meta_rows(self.snap.seg_dirs(), schemas.SEGMENTS,
-                                  _DECODE_COLS, shards=shards.tolist())
-        posts = pa.Table.from_batches(_decoded(tab.to_batches(), tomb_ids),
-                                      schema=_POSTINGS)
-        enc = _segment_encoder_postings(self.cfg, self.manifest["avgdl"],
-                                        self.params)
-        shard = posts.column("doc_id").to_numpy() // self.cfg.docs_per_shard
-        seg = _encode_shards(posts, shard, enc)
-        write_table_local(self.fs, seg, self._p(patch),
-                          row_group_size=max(1, seg.num_rows))
-
-    def _patch_spark(self, shards: np.ndarray, patch: str) -> None:
-        """compact_targeted's Spark half: the same decode and encoder as
-        _patch_local, as a mapInArrow decode, a tombstone anti-join and
-        a per-shard applyInArrow encode."""
-        src = self.snap.segments().filter(_id_set("shard", shards))
-        posts = _decode_segments_to_postings(src)
-        tomb = self.snap.tombstones()
-        if tomb is not None:
-            posts = posts.join(tomb, "doc_id", "left_anti")
-        enc = _segment_encoder_postings(self.cfg, self.manifest["avgdl"],
-                                        self.params)
-        new_seg = (posts.withColumn("shard", self.cfg.shard_of_expr())
-                   .groupBy("shard").applyInArrow(enc, schema=schemas.SEGMENTS))
-        _atomic_write(new_seg, self._p(patch), ["term", "shard", "block_id"],
-                      fs=self.fs, segments=True)
 
     # ---- minor (stats) compaction --------------------------------------------
     def compact_stats(self) -> dict:
@@ -863,22 +745,6 @@ class Maintainer:
             if d not in (base, docs_dir):
                 self.fs.delete(self._p(d))
         return m
-
-
-def _encode_shards(posts: pa.Table, shard: np.ndarray, enc) -> pa.Table:
-    """The driver run of a per-shard applyInArrow encode: the rows of
-    `posts` grouped by `shard` (stable), each group passed to `enc`
-    with its shard column, as ONE (term, shard, block_id)-sorted
-    SEGMENTS table."""
-    order = np.argsort(shard, kind="stable")
-    shard = shard[order]
-    posts = posts.take(order).append_column("shard", pa.array(shard))
-    cuts = np.flatnonzero(np.diff(shard)) + 1
-    parts = [enc(posts.slice(a, b - a)) for a, b in
-             zip([0, *cuts], [*cuts, posts.num_rows]) if b > a]
-    seg = pa.concat_tables(parts) if parts else _empty_segments()
-    return seg.sort_by([("term", "ascending"), ("shard", "ascending"),
-                        ("block_id", "ascending")])
 
 
 # the SEGMENTS columns the decode reads, and the decoded postings' schema

@@ -12,6 +12,11 @@ its schemas.* schema, so none runs a schema-inference job. A Maintainer
 mutates its manifest in place as it commits: the dir lists read it
 live, and the segment listing and the segments() frame are keyed by
 the segment dirs (and excludes), so both follow every commit.
+
+It also runs a one-task op's work where one_task_site put it: the
+read / group_apply / write steps take and return a pyarrow Table in the
+driver and a DataFrame on Spark, with the same Arrow body per shard
+group on both, so a maintenance op is written once over them.
 """
 
 from __future__ import annotations
@@ -25,8 +30,11 @@ import pyarrow as pa
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from pdx_spark import schemas
+from pdx_spark.fs import IndexFS
+from pdx_spark.operators.indexer import PARQUET_BLOCK_SIZE, write_table_local
 
 # target on-disk bytes per routed-scan task, and the bound below which a
 # slice of the segments is read and processed in the driver instead of
@@ -119,6 +127,23 @@ def one_task_site(nbytes: int, eligible: bool, measure: str) -> dict:
     return {"ran": "driver" if driver else "spark",
             "cap": "_ROUTED_TASK_BYTES", "limit": _ROUTED_TASK_BYTES,
             measure: nbytes}
+
+
+def _atomic_write(df: DataFrame, final: str,
+                  sort_cols: list[str] | None = None, *, fs: IndexFS,
+                  segments: bool = False, partition_by: str | None = None):
+    """tmp-dir -> rename commit protocol (same as the indexer's chunks).
+    segments=True also pins the one-row-group-per-file invariant the
+    map-scan needs (parquet.block.size >> file size)."""
+    tmp = final + ".tmp"
+    w = df.sortWithinPartitions(*sort_cols) if sort_cols else df
+    w = w.write.mode("overwrite")
+    if segments:
+        w = w.option("parquet.block.size", PARQUET_BLOCK_SIZE)
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(tmp)
+    fs.rename(tmp, final)
 
 
 class Snapshot:
@@ -379,3 +404,51 @@ class Snapshot:
         return self.union(dirs, schema, lambda d, part: part.filter(cond)
                           .select(*columns, F.lit(idx[d]).cast("int")
                                   .alias("dir"))).toArrow()
+
+    # -- the steps of a one-task op, on the site its one_task_site picked ------
+    def read(self, site: dict, dirs: list[str], schema, columns: list[str],
+             shards=None):
+        """The `columns` of index dirs `dirs` minus their seg_excludes
+        shards, only the rows whose shard is in `shards` when given. In
+        the driver meta_rows; on Spark the typed union (segments(), one
+        multi-path scan, for the segment dirs) filtered by _id_set."""
+        if site["ran"] == "driver":
+            return self.meta_rows(dirs, schema, columns,
+                                  shards=shards).select(columns)
+        df = self.segments() if dirs == self.seg_dirs() \
+            else self.union(dirs, schema)
+        if shards is not None:
+            df = df.filter(_id_set("shard", shards))
+        return df.select(*columns)
+
+    def group_apply(self, site: dict, x, fn, schema):
+        """`fn` (pyarrow Table -> Table of `schema`) run once per shard
+        group of `x`, each group with its shard column (a gapply: the
+        caller never sees how the groups form). On Spark
+        groupBy("shard").applyInArrow; in the driver a stable sort by
+        shard and one call per run, concatenated."""
+        if site["ran"] == "spark":
+            return x.groupBy("shard").applyInArrow(fn, schema=schema)
+        shard = x.column("shard").to_numpy()
+        order = np.argsort(shard, kind="stable")
+        x = x.take(order)
+        cuts = [0, *(np.flatnonzero(np.diff(shard[order])) + 1), x.num_rows]
+        parts = [fn(x.slice(a, b - a)) for a, b in zip(cuts, cuts[1:])
+                 if b > a]
+        return pa.concat_tables(parts) if parts \
+            else to_arrow_schema(schema).empty_table()
+
+    def write(self, site: dict, x, final: str, sort: list[str] | None = None,
+              segments: bool = False) -> None:
+        """`x` as index dir `final`, through tmp dir -> rename, its rows
+        ordered by `sort` when given; segments=True keeps one row group
+        per file. In the driver one pyarrow file (write_table_local); on
+        Spark _atomic_write."""
+        final = self.fs.join(self.path, final)
+        if site["ran"] == "spark":
+            _atomic_write(x, final, sort, fs=self.fs, segments=segments)
+            return
+        if sort:
+            x = x.sort_by([(c, "ascending") for c in sort])
+        write_table_local(self.fs, x, final, **(
+            {"row_group_size": max(1, x.num_rows)} if segments else {}))

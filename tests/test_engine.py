@@ -298,10 +298,10 @@ def test_assign_doc_ids_driver_path_matches_scale_path(spark, tiny_df,
         "ts": pd.to_datetime(["2031-01-01"] * 5, utc=True)})
     df = tiny_df.unionByName(
         spark.createDataFrame(extra, schema=TRANSCRIPTS))
-    monkeypatch.setenv("PDX_ASSIGN_IDS_LOCAL_CAP", "1000000")
+    monkeypatch.setattr(C, "_ASSIGN_IDS_LOCAL_CAP", 1_000_000)
     fast = {(r["conv_id"], r["turn_idx"]): r["doc_id"]
             for r in C.assign_doc_ids(df).collect()}
-    monkeypatch.setenv("PDX_ASSIGN_IDS_LOCAL_CAP", "0")
+    monkeypatch.setattr(C, "_ASSIGN_IDS_LOCAL_CAP", 0)
     slow = {(r["conv_id"], r["turn_idx"]): r["doc_id"]
             for r in C.assign_doc_ids(df).collect()}
     assert fast == slow and len(fast) == df.count()
@@ -312,7 +312,7 @@ def test_assign_doc_ids_conv_rank_path(spark, tiny_df, monkeypatch):
     conv) must produce exactly the per-key fast path's ids, must be the
     path actually taken on a dense corpus, and must FALL BACK when any
     conversation's turn_idx is not dense-from-zero."""
-    monkeypatch.setenv("PDX_ASSIGN_IDS_LOCAL_CAP", "1000000")
+    monkeypatch.setattr(C, "_ASSIGN_IDS_LOCAL_CAP", 1_000_000)
     want = {(r["conv_id"], r["turn_idx"]): r["doc_id"]
             for r in C._assign_ids_driver(tiny_df, 1_000_000).collect()}
 
@@ -341,7 +341,7 @@ def test_assign_doc_ids_conv_rank_path(spark, tiny_df, monkeypatch):
     assert C._assign_ids_conv_driver(df, 1_000_000) is None
     fast = {(r["conv_id"], r["turn_idx"]): r["doc_id"]
             for r in C.assign_doc_ids(df).collect()}
-    monkeypatch.setenv("PDX_ASSIGN_IDS_LOCAL_CAP", "0")
+    monkeypatch.setattr(C, "_ASSIGN_IDS_LOCAL_CAP", 0)
     slow = {(r["conv_id"], r["turn_idx"]): r["doc_id"]
             for r in C.assign_doc_ids(df).collect()}
     assert fast == slow and len(fast) == df.count()

@@ -222,52 +222,60 @@ def test_compact_crash_before_commit_is_harmless(spark, tiny_pdf, tmp_path,
 
 def test_driver_compact_targeted_crash_before_commit_is_harmless(
         spark, tiny_pdf, tmp_path, monkeypatch):
-    """Kill a driver-half compact_targeted() between the patch write and
-    the manifest commit: the committed index still answers exactly, and
-    a retry on a fresh Maintainer (over the orphan gen-named dirs)
-    succeeds and stays exact."""
+    """Kill a compact_targeted() between the patch write and the manifest
+    commit: the committed index still answers exactly, and a retry on a
+    fresh Maintainer (over the orphan gen-named dirs) succeeds and stays
+    exact. Runs on both sites, on copies of one index: in the driver
+    (the default bound) and on Spark (_ROUTED_TASK_BYTES at 0)."""
+    import shutil
+
     import pdx_spark.operators.maintenance as M
+    import pdx_spark.operators.snapshot as SN
 
     n = len(tiny_pdf)
     head, tail = tiny_pdf.iloc[: n - 40], tiny_pdf.iloc[n - 40:]
-    path = str(tmp_path / "idx_tc_crash")
+    built = str(tmp_path / "idx_tc_crash")
     Indexer(spark, cfg=CFG).build(
-        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
-    Maintainer(spark, path).append(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), built)
+    Maintainer(spark, built).append(
         spark.createDataFrame(tail, schema=TRANSCRIPTS))
     dead = [3, 70, n - 5]
-    Maintainer(spark, path).delete(
+    Maintainer(spark, built).delete(
         spark.createDataFrame([(i,) for i in dead], "doc_id long"))
-    before = read_manifest(path)
-
     ora = _oracle(tiny_pdf, drop_ids=dead)
-    real_write = M._write_manifest
 
     def boom(*a, **kw):
         raise RuntimeError("injected crash before manifest commit")
 
-    monkeypatch.setattr(M, "_write_manifest", boom)
-    with pytest.raises(RuntimeError, match="injected"):
-        Maintainer(spark, path).compact_targeted()
-    monkeypatch.setattr(M, "_write_manifest", real_write)
-    assert read_manifest(path) == before
+    for site, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+        path = str(tmp_path / f"idx_tc_crash_{site}")
+        shutil.copytree(built, path)
+        before = read_manifest(path)
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+            with monkeypatch.context() as crash:
+                crash.setattr(M, "_write_manifest", boom)
+                with pytest.raises(RuntimeError, match="injected"):
+                    Maintainer(spark, path).compact_targeted()
+            assert read_manifest(path) == before
 
-    def exact(tag):
-        s = Searcher.load(spark, path)
-        assert s.n_docs == ora.n_docs
-        res = s.search_batch(QUERIES, two_phase_min_shards=2,
-                             force_two_phase=True).persist()
-        for qid, qtext, k in QUERIES:
-            assert_rank_identical(collect_topk(res, qid),
-                                  ora.topk(qtext, k), f"{tag} q{qid}")
-        res.unpersist()
+            def exact(tag):
+                s = Searcher.load(spark, path)
+                assert s.n_docs == ora.n_docs
+                res = s.search_batch(QUERIES, two_phase_min_shards=2,
+                                     force_two_phase=True).persist()
+                for qid, qtext, k in QUERIES:
+                    assert_rank_identical(collect_topk(res, qid),
+                                          ora.topk(qtext, k),
+                                          f"{tag} {site} q{qid}")
+                res.unpersist()
 
-    exact("crash")
-    m = Maintainer(spark, path).compact_targeted()
-    assert m["lineage"][-1]["ran"] == "driver"
-    assert m["deltas"] == [] and m["tombstones"] == 0
-    assert m["dead_docs"] == len(dead)
-    exact("retry")
+            exact("crash")
+            m = Maintainer(spark, path).compact_targeted()
+            assert m["lineage"][-1]["ran"] == site
+            assert m["deltas"] == [] and m["tombstones"] == 0
+            assert m["dead_docs"] == len(dead)
+            exact("retry")
 
 
 def test_delete_crash_then_retry_keeps_stats_exact(spark, tiny_pdf, tmp_path,

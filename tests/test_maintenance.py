@@ -538,7 +538,6 @@ def test_failed_delete_releases_cached_frames(spark, tmp_path, corpus_pdfs,
     (the default bound; its pyarrow write fails) and on Spark
     (_ROUTED_TASK_BYTES at 0; its Spark write fails)."""
     import pdx_spark.operators.snapshot as SN
-    from pdx_spark.operators import maintenance
 
     full, head, tail = corpus_pdfs
     built = str(tmp_path / "idx_delete_fail")
@@ -558,7 +557,7 @@ def test_failed_delete_releases_cached_frames(spark, tmp_path, corpus_pdfs,
         before = set(jsc.getPersistentRDDs().keys())
         with monkeypatch.context() as mp:
             mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
-            mp.setattr(maintenance, writer, boom)
+            mp.setattr(SN, writer, boom)
             with pytest.raises(RuntimeError, match="write failed"):
                 Maintainer(spark, path).delete(keys)
         assert set(jsc.getPersistentRDDs().keys()) <= before, site

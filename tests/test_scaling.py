@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdx_spark.config import IndexConfig
+from pdx_spark.operators import corpus as C
 from pdx_spark.operators.indexer import Indexer
 from pdx_spark.operators.searcher import Searcher
 from pdx_spark.schemas import TRANSCRIPTS
@@ -90,7 +91,7 @@ def test_build_never_persists_text(spark, tmp_path, monkeypatch):
     # range-partition scale path (cap=0): additionally the slim id
     # checkpoint appears, and really is slim — ids + key only
     cached_schemas.clear()
-    monkeypatch.setenv("PDX_ASSIGN_IDS_LOCAL_CAP", "0")
+    monkeypatch.setattr(C, "_ASSIGN_IDS_LOCAL_CAP", 0)
     path2 = str(tmp_path / "notext2")
     Indexer(spark, cfg=CFG).build(df, path2)
     offenders = [s for s in cached_schemas if "text" in s]

@@ -2,7 +2,8 @@
 """Per-operation CPU split of one perfbench workload run.
 
     python3 tools/op_cpu_probe.py --workload serve_topic --seed 1 \\
-        [--seconds 1] [--ops append,compact_targeted] [--json out.json]
+        [--seconds 1] [--ops append,compact_targeted] [--spark-site] \\
+        [--json out.json]
 
 Runs perfbench/run.py in this process, with `Run.op` wrapped at run time
 (as perfbench/spans.py wraps the engine), so perfbench itself is not
@@ -18,6 +19,11 @@ compact_targeted, ...) it prints:
     (the process total counts them; no live thread does);
   - Spark jobs (the DAGScheduler's job id counter), tasks (of the new
     jobs' stages) and Janino compiles (Spark's CodegenMetrics).
+
+--spark-site sets pdx_spark.operators.snapshot._ROUTED_TASK_BYTES to 0
+before the run, so every one-task op (routed scans, append, delete,
+compact_targeted) runs its Spark site, with perfbench's correctness
+check on as usual.
 
 Run from the repository root. The workload's own last line (its JSON
 result) is printed by perfbench as usual; the probe table follows it.
@@ -183,8 +189,14 @@ def main(argv=None) -> int:
     ap.add_argument("--ops", default="",
                     help="comma-separated op kinds to probe (default all)")
     ap.add_argument("--json", default="", help="also write rows here")
+    ap.add_argument("--spark-site", action="store_true",
+                    help="run every one-task op on Spark (bound at 0)")
     args = ap.parse_args(argv)
 
+    sys.path.insert(0, ROOT)
+    if args.spark_site:
+        from pdx_spark.operators import snapshot
+        snapshot._ROUTED_TASK_BYTES = 0
     sys.path.insert(0, BENCH)
     import run as perfbench_run
     records: list[dict] = []
