@@ -21,16 +21,18 @@ Mirrors the reference's pruned scan (PDXearch::Search,
   4. Main scan ("Warmup/Prune", searcher.hpp:376-540): per-(query,
      shard) assignments where the upper bound can still beat θ route
      each shard to only its own queries (work = Σ_q |shards_q|, not
-     |shards| × Q). A routed scan (seed or main) whose estimated byte
-     slice fits one routed-scan task (_ROUTED_TASK_BYTES, the byte
+     |shards| × Q). Every closure scan (exhaustive, seed, main routed,
+     unrouted) goes through one function, Searcher._scan_topk: a scan
+     whose estimated byte slice (the routed shards', or the whole
+     index's) fits one routed-scan task (_ROUTED_TASK_BYTES, the byte
      term of _routed_task_count) is scored IN THE DRIVER, as the
      reference runs Warmup and Prune in the query's own thread: the
-     routed shards' rows of the batch's terms come through the one
+     shards' rows of the batch's terms come through the one
      driver-side reader (Snapshot.meta_rows: pyarrow with term and shard
      filters on a local fs, one Spark scan collected as Arrow on any
      other scheme) and all of them score in one table — a shard's rows
-     together, exact under any file layout. A larger routed scan runs
-     on Spark. Routing reaches the JVM as data: the batch's term set
+     together, exact under any file layout. A larger scan runs on
+     Spark. Routing reaches the JVM as data: the batch's term set
      and the routed shard set are InSet predicates (_in_list, _id_set),
      so every batch runs the same generated code — one fixed kernel
      fed a positions array, as searcher.hpp:104-117 — and the shard set
@@ -66,20 +68,20 @@ Mirrors the reference's pruned scan (PDXearch::Search,
 
 Queries run as a batch (one pass scores all queries of the batch —
 amortizes job overhead, SURVEY §7.4). A batch is at most a handful of
-bounded jobs: seed scan (→ θ), main scan + merge; a routed scan whose
-slice fits one task runs none, so a selective warm batch launches no
-Spark job at all. idf lookup and planning read metadata on the driver
-and are cached per term on a warm Searcher — the serial fraction is job
-scheduling plus Q-sized collects, which is what makes query throughput
-scale with executors (north rule ≥0.8 N→4N); driver-scored scans are
-bounded by _ROUTED_TASK_BYTES each. The remaining single-box limit is
+bounded jobs: seed scan (→ θ), main scan + merge; a scan whose slice
+fits one task runs none, so a warm batch on a small index (exhaustive,
+routed or unrouted, with tombstones) launches no Spark job at all. idf
+lookup and planning read metadata on the driver and are cached per term
+on a warm Searcher — the serial fraction is job scheduling plus Q-sized
+collects, which is what makes query throughput scale with executors
+(north rule ≥0.8 N→4N); driver-scored scans are bounded by
+_ROUTED_TASK_BYTES each. The remaining single-box limit is
 memory bandwidth (the scan streams block bytes through Arrow/numpy) —
 see BENCH.md's bandwidth ceiling.
 """
 
 from __future__ import annotations
 
-import functools
 import time
 
 import numpy as np
@@ -656,7 +658,10 @@ class Searcher:
         records the cap and the observed count. Results are
         rank-identical either way; only the work differs. The adaptive
         choice mirrors the reference's selectivity-adaptive scan
-        branches (searcher.hpp:321-345)."""
+        branches (searcher.hpp:321-345). Each scan runs in the driver
+        when its byte slice fits _ROUTED_TASK_BYTES (Snapshot.site; the
+        whole index's for exhaustive and unrouted scans), else on Spark;
+        last_plan has each scan's site record (_scan_topk)."""
         tm: dict[str, float] = {}
         _t0 = time.time()
         parsed = []
@@ -700,10 +705,6 @@ class Searcher:
                 "require_all": bool(require_all_terms),
                 "min_match": min_match}
 
-        # the term-filtered segment frame, built only by the batches that
-        # scan on Spark (a driver-scored batch touches no JVM plan)
-        seg = functools.cache(
-            lambda: self.segments().filter(_in_list("term", all_terms)))
         mask_df, pred_mode = self._mask_df(predicate)
         closure_mask = None
         if mask_df is not None:
@@ -732,61 +733,28 @@ class Searcher:
             q_ub, plan_cap = self._upper_bounds(live, all_terms, idf,
                                                 require_all_terms)
             tm["plan_ub"] = round(time.time() - _t0, 3)
+        qspec0 = dict(spec, queries=[(q, ts, k, None)
+                                     for q, ts, k in live])
         if q_ub is None:
+            site = self.snap.site(n_shards_total, mask_df is None)
             self.last_plan = {"mode": "exhaustive",
                               "n_shards": n_shards_total,
                               "big_batch": big_batch,
                               "mask_in_closure": closure_mask is not None,
-                              "timings": tm}
+                              "scan": site, "timings": tm}
             if plan_cap is not None:
                 self.last_plan["plan_cap"] = plan_cap
-            qspec = dict(spec, queries=[(q, ts, k, None)
-                                        for q, ts, k in live])
-            if mask_df is None:
-                res = self._map_scan(seg(), qspec, mask=closure_mask)
-                if self._merge_bound_ok(live):
-                    # per-partition top-k collected and merged on the
-                    # driver: one stage, no exchange/window, free count
-                    return self._merge_topk_local(res, live)
-            else:
-                res = self._scan(seg(), qspec, mask_df, pred_mode)
-            return self._global_topk(res, live)
+            return self._results_df(self._scan_topk(
+                site, qspec0, live, all_terms, mask=closure_mask,
+                cogroup=None if mask_df is None else (mask_df, pred_mode,
+                                                      None)))
 
         seed_set = set()
         for q, (ush, ub) in q_ub.items():
             order = np.lexsort((ush, -ub))[:seed_shards]
             seed_set.update((q, int(ush[i])) for i in order)
         seed_routing = _route(seed_set)
-        qspec0 = dict(spec, queries=[(q, ts, k, None)
-                                     for q, ts, k in live])
         seed_site = self.snap.site(len(seed_routing), mask_df is None)
-
-        def routed_topk(site, qspec, routing, pairs, cogroup, extra=None):
-            """One routed scan (seed or main) -> its per-query top-k,
-            merged with `extra` (the seed top-k), on the driver: scored
-            there (site from Snapshot.site), or by the closure map-scan,
-            or by the cogroup channel with `pairs` as its routing rows."""
-            if site["ran"] == "driver":
-                parts = [self._driver_scan(all_terms, qspec, routing,
-                                           closure_mask)]
-            else:
-                rseg = seg().filter(_id_set("shard", routing))
-                if cogroup:
-                    res = self._scan(rseg, qspec, mask_df, pred_mode,
-                                     asg_df=self._pairs_df(pairs))
-                else:
-                    res = self._map_scan(rseg, qspec, routing=routing,
-                                         mask=closure_mask)
-                if cogroup or not self._merge_bound_ok(live):
-                    if extra is not None:
-                        res = self._results_df(extra).unionByName(res)
-                    return self._global_topk(res, live).toPandas()
-                # bounded per-partition top-k -> one collect stage,
-                # driver merge (no exchange/window job)
-                parts = [res.toPandas()]
-            if extra is not None:
-                parts.append(extra)
-            return self._topk_merge_pdf(parts, live)
 
         # ---- seed top-k + θ: the per-query top-k over the seed shards
         # (bounded: <= Σk rows) lands on the driver, from the driver scan
@@ -795,8 +763,10 @@ class Searcher:
         # are REUSED as the seed contribution to the final merge — the
         # seed scan is never thrown away or re-run.
         _t0 = time.time()
-        seed_pdf = routed_topk(seed_site, qspec0, seed_routing, seed_set,
-                               cogroup=mask_df is not None)
+        seed_pdf = self._scan_topk(seed_site, qspec0, live, all_terms,
+                                   routing=seed_routing, mask=closure_mask,
+                                   cogroup=None if mask_df is None else
+                                   (mask_df, pred_mode, seed_set))
         tm["seed_scan"] = round(time.time() - _t0, 3)
         seed = seed_pdf.groupby("query_id")["score"].agg(["size", "min"])
         theta = {q: float(seed.at[q, "min"]) for q, _, k in live
@@ -824,19 +794,17 @@ class Searcher:
             # supplies those shards' contribution, so no (query, doc)
             # is scored twice and the seed work is reused, not
             # discarded.
+            main_site = self.snap.site(n_shards_total, True)
             self.last_plan = {"mode": "unrouted", "n_main": n_main,
                               "n_shards": n_shards_total,
                               "n_queries": len(live),
                               "mask_in_closure": closure_mask is not None,
                               "seed_scan": seed_site,
-                              "main_scan": {"ran": "spark"},
+                              "main_scan": main_site,
                               "timings": tm}
-            res = self._map_scan(seg(), qspec1, anti_routing=seed_routing,
-                                 mask=closure_mask)
-            if self._merge_bound_ok(live):
-                return self._merge_topk_local(res, live, extra_pdf=seed_pdf)
-            return self._global_topk(
-                self._results_df(seed_pdf).unionByName(res), live)
+            return self._results_df(self._scan_topk(
+                main_site, qspec1, live, all_terms, anti=seed_routing,
+                mask=closure_mask, extra=seed_pdf))
 
         main_pairs = [p for p in pairs if p not in seed_set]
         routing = _route(main_pairs)
@@ -858,8 +826,10 @@ class Searcher:
             # every surviving pair was a seed pair: the collected seed
             # top-k IS the answer — zero further jobs
             return self._results_df(seed_pdf)
-        return self._results_df(routed_topk(
-            main_site, qspec1, routing, main_pairs, cogroup, extra=seed_pdf))
+        return self._results_df(self._scan_topk(
+            main_site, qspec1, live, all_terms, routing=routing,
+            mask=closure_mask, extra=seed_pdf,
+            cogroup=(mask_df, pred_mode, main_pairs) if cogroup else None))
 
     def _upper_bounds(self, live, terms: list[str], idf: dict,
                       require_all: bool):
@@ -907,19 +877,51 @@ class Searcher:
                           "ub_pairs": n_pairs}
         return q_ub, None
 
-    def _driver_scan(self, terms: list[str], spec: dict,
-                     routing: dict[int, set],
-                     mask: dict | None) -> pd.DataFrame:
-        """A routed closure scan scored in the driver: the routed
-        shards' segment rows of the batch's terms, read through
-        Snapshot.meta_rows, score in ONE table with the same
-        _arrow_scorer — all of a shard's rows together, the
-        groupBy("shard") semantics, exact under any row-group layout.
-        -> the per-query top-k of the routed shards (RESULTS columns)."""
-        tab = self.snap.meta_rows(self.snap.seg_dirs(), schemas.SEGMENTS,
-                                  schemas.SEGMENTS.fieldNames(), terms=terms,
-                                  shards=list(routing))
-        return _arrow_scorer(spec)(tab, routing, None, mask).to_pandas()
+    def _scan_topk(self, site: dict, spec: dict, live, terms: list[str],
+                   routing: dict[int, set] | None = None,
+                   anti: dict[int, set] | None = None,
+                   mask: dict | None = None, cogroup: tuple | None = None,
+                   extra: pd.DataFrame | None = None) -> pd.DataFrame:
+        """One closure scan of the batch's `terms` (every shard, or the
+        `routing` ones) -> its per-query top-k merged with `extra` (the
+        seed top-k), as pandas; every strategy's scans come here, run
+        where `site` (Snapshot.site) says:
+        - driver: the slice's segment rows through Snapshot.meta_rows,
+          scored in ONE table by _arrow_scorer — all of a shard's rows
+          together, the groupBy("shard") semantics, exact under any
+          row-group layout;
+        - spark: _map_scan, or the cogroup channel when `cogroup` =
+          (mask_df, mode, routing pairs | None) carries a mask or
+          routing too large for the closure; per-partition top-k merged
+          on the driver, or by the window merge above _MERGE_LOCAL_CAP
+          and after a cogroup scan."""
+        if site["ran"] == "driver":
+            tab = self.snap.meta_rows(
+                self.snap.seg_dirs(), schemas.SEGMENTS,
+                schemas.SEGMENTS.fieldNames(), terms=terms,
+                shards=None if routing is None else list(routing))
+            parts = [_arrow_scorer(spec)(tab, routing, anti, mask)
+                     .to_pandas()]
+        else:
+            seg = self.segments().filter(_in_list("term", terms))
+            if routing is not None:
+                seg = seg.filter(_id_set("shard", routing))
+            if cogroup is not None:
+                mask_df, mode, pairs = cogroup
+                res = self._scan(seg, spec, mask_df, mode, asg_df=None
+                                 if pairs is None else self._pairs_df(pairs))
+            else:
+                res = self._map_scan(seg, spec, routing, anti, mask)
+            if cogroup is not None or not self._merge_bound_ok(live):
+                if extra is not None:
+                    res = self._results_df(extra).unionByName(res)
+                return self._global_topk(res, live).toPandas()
+            # bounded per-partition top-k -> one collect stage, driver
+            # merge (no exchange/window job)
+            parts = [res.toPandas()]
+        if extra is not None:
+            parts.append(extra)
+        return self._topk_merge_pdf(parts, live)
 
     def _plan_slice(self, terms: list[str]) -> tuple[dict | None, int]:
         """-> (term -> (shards int64[], admissible tfnorm bound
@@ -1076,11 +1078,16 @@ class Searcher:
             est = self.manifest.get("tombstones", 0)
         if est is not None and est > 2 * _ROUTING_CAP:
             return None
-        pdf = mask_df.select("id", "p").limit(_ROUTING_CAP + 1).toPandas()
-        if len(pdf) > _ROUTING_CAP:
+        if pred_mode is None:  # tombstones: a driver read (no job locally)
+            ids = self.snap.doc_ids(self.snap.tomb_dir()).astype(np.int64)
+            p = np.zeros(len(ids), np.int8)
+        else:
+            pdf = mask_df.select("id", "p").limit(_ROUTING_CAP + 1) \
+                .toPandas()
+            ids = pdf["id"].to_numpy(np.int64)
+            p = pdf["p"].to_numpy(np.int8)
+        if len(ids) > _ROUTING_CAP:
             return None
-        ids = pdf["id"].to_numpy(np.int64)
-        p = pdf["p"].to_numpy(np.int8)
         order = np.argsort(ids, kind="stable")
         return {"mode": pred_mode, "ids": ids[order], "p": p[order]}
 
@@ -1124,10 +1131,10 @@ class Searcher:
         predicate/tombstone mask (`mask`, from _collect_small_mask — the
         scan-fused selection vector) ride the scorer closure; large masks
         go through the cogroup channel instead (search_batch keeps
-        mask_df non-None in that case). Exhaustive and unrouted scans
-        always come here; a routed scan only when its byte slice is
-        larger than one routed-scan task (Snapshot.site; a smaller one is
-        scored in the driver by _driver_scan). A routed `seg` arrives
+        mask_df non-None in that case). A scan of any strategy comes
+        here only when its byte slice is larger than one routed-scan
+        task (Snapshot.site; a smaller one is scored in the driver by
+        _scan_topk). A routed `seg` arrives
         filtered to the batch's term and routed shard sets only
         (_id_set); the scorer drops the rows of terms no query routed to
         their shard needs before it decodes anything. The scorer runs as
@@ -1206,18 +1213,6 @@ class Searcher:
             "query_id": pd.Series(q, dtype="int32"),
             "doc_id": pd.Series(d, dtype="int64"),
             "score": pd.Series(s, dtype="float64")})
-
-    def _merge_topk_local(self, res: DataFrame, live,
-                          extra_pdf: pd.DataFrame | None = None
-                          ) -> DataFrame:
-        """Collect the bounded per-partition top-k and merge driver-side
-        (one collect stage — no exchange, no window, and the returned
-        frame is local so downstream count()/collect() are free).
-        Callers must have checked _merge_bound_ok."""
-        parts = [res.toPandas()]
-        if extra_pdf is not None and len(extra_pdf):
-            parts.append(extra_pdf)
-        return self._results_df(self._topk_merge_pdf(parts, live))
 
     def _global_topk(self, res: DataFrame, live) -> DataFrame:
         kdf = _pdf_df(self.spark, {

@@ -51,11 +51,12 @@ from pdx_spark.operators.indexer import PARQUET_BLOCK_SIZE, write_table_local
 # what breaks N->4N query scaling. At 100 TB the byte cap is never the
 # binding term — defaultParallelism is. A slice of at most this many
 # bytes (one task's worth) runs in the driver instead, which also saves
-# the Spark job around the task: routed scans (Searcher), targeted
-# compactions (Maintainer.compact_targeted), appends (by Spark's size
-# estimate of the input plan, Maintainer.append) and deletes (by the
-# docs and segment bytes, then a bounded peek of the keys,
-# Maintainer.delete) take that site.
+# the Spark job around the task: query scans (Searcher; a routed scan
+# by its routed shards' bytes, an exhaustive or unrouted one by the
+# whole index's), targeted compactions (Maintainer.compact_targeted),
+# appends (by Spark's size estimate of the input plan, Maintainer.append)
+# and deletes (by the docs and segment bytes, then a bounded peek of the
+# keys, Maintainer.delete) take that site.
 _ROUTED_TASK_BYTES = 2 * 1024 * 1024
 
 
@@ -371,6 +372,11 @@ class Snapshot:
         excl = self.manifest.get("seg_excludes", {})
         if self.fs.is_local:
             import pyarrow.dataset as ds
+            # each dir's columns cast to the schema's types: Spark writes
+            # TimestampType as INT96 (read as naive ns), the driver
+            # writer as timestamp[us, tz=UTC]
+            want = to_arrow_schema(schema)
+            want = pa.schema([want.field(c) for c in columns])
             t, sh = ds.field("term"), ds.field("shard")
             conds = []
             if terms is not None:
@@ -387,10 +393,11 @@ class Snapshot:
             for i, d in enumerate(dirs):
                 c = conds + [~sh.isin(excl[d])] if excl.get(d) else conds
                 f = functools.reduce(operator.and_, c) if c else None
-                tab = self.dataset(d).to_table(columns=columns, filter=f)
+                tab = self.dataset(d).to_table(columns=columns,
+                                               filter=f).cast(want)
                 tabs.append(tab.append_column(
                     "dir", pa.array(np.full(tab.num_rows, i, np.int32))))
-            return pa.concat_tables(tabs, promote_options="permissive")
+            return pa.concat_tables(tabs)
         conds = []
         if terms is not None:
             conds.append(_in_list("term", terms))

@@ -53,6 +53,20 @@ def tiny_index(spark, tiny_df, tmp_path_factory):
     return path
 
 
+@pytest.fixture(scope="session")
+def many_shards_index(spark, tiny_df, tmp_path_factory):
+    """The tiny corpus at 4 docs per shard (> 64 shards): default
+    options plan its batches two-phase, and a hot batch, whose bounds
+    beat θ on every shard of this uniform corpus, runs the unrouted
+    pass. Shared and read-only."""
+    from pdx_spark.config import IndexConfig
+    from pdx_spark.operators.indexer import Indexer
+    path = str(tmp_path_factory.mktemp("many") / "idx")
+    Indexer(spark, cfg=IndexConfig(block_size=8, docs_per_shard=4)).build(
+        tiny_df, path)
+    return path
+
+
 def _topic_index(spark, path, **layout):
     """The topic-clustered fixture (600 conversations, 16 topics) built
     at `path` -> (its Searcher, an oracle keyed by dense doc_id)."""

@@ -135,24 +135,16 @@ def test_text_roundtrip_invariant(spark, tiny_df, searcher):
     assert [r["doc_id"] for r in d] == list(range(len(d)))
 
 
-def test_default_adaptive_path_many_shards(spark, tiny_pdf, tiny_oracle,
-                                           tmp_path):
+def test_default_adaptive_path_many_shards(spark, tiny_oracle,
+                                           many_shards_index):
     """Default search_batch (no two_phase_min_shards override) on an
     index with > 64 shards: the adaptive planner takes the two-phase
     route and — on this uniform corpus where θ prunes no shards — the
     unrouted single-pass fallback. Results must stay rank-identical for
     hot, mid, needle, and OOV queries alike."""
-    from pdx_spark.config import IndexConfig
-    from pdx_spark.operators.indexer import Indexer
-    from pdx_spark.operators.searcher import Searcher
-    from pdx_spark.schemas import TRANSCRIPTS
-
-    path = str(tmp_path / "many_shards")
-    cfg = IndexConfig(block_size=8, docs_per_shard=4)  # ~113 shards
-    df = spark.createDataFrame(tiny_pdf, schema=TRANSCRIPTS)
-    Indexer(spark, cfg=cfg).build(df, path)
-    s = Searcher.load(spark, path)
-    assert -(-s.n_docs // cfg.docs_per_shard) > 64
+    s = Searcher.load(spark, many_shards_index)
+    assert s.cfg.docs_per_shard == 4  # ~113 shards
+    assert -(-s.n_docs // s.cfg.docs_per_shard) > 64
 
     queries = [(0, "w0000", 10),            # hot: ub beats theta everywhere
                (1, "w0003 w0150", 10),      # mid conjunction

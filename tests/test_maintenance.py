@@ -30,6 +30,41 @@ def corpus_pdfs():
     return pdf, head, tail
 
 
+def test_driver_reads_every_docs_column_across_sites(spark, tmp_path,
+                                                     corpus_pdfs):
+    """A Spark build writes the docs' ts as parquet INT96 (pyarrow reads
+    naive ns) and a driver append writes timestamp[us, tz=UTC]: the
+    driver reader (Snapshot.meta_rows) casts each dir to the DOCS
+    types, so every docs column reads across both kinds of dir, with
+    the rows, ts values included, of a Spark read."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    from pdx_spark import schemas
+    full, head, tail = corpus_pdfs
+    path = str(tmp_path / "idx_ts")
+    Indexer(spark, cfg=CFG).build(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    m = Maintainer(spark, path).append(
+        spark.createDataFrame(tail, schema=TRANSCRIPTS))
+    assert m["lineage"][-1]["ran"] == "driver", m["lineage"][-1]
+    s = Searcher.load(spark, path)
+    dirs = s.snap.docs_dirs()
+    assert len({str(ds.dataset(f"{path}/{d}").schema.field("ts").type)
+                for d in dirs}) == 2, dirs
+    cols = schemas.DOCS.fieldNames()
+    tab = s.snap.meta_rows(dirs, schemas.DOCS, cols)
+    assert sorted(set(tab["dir"].to_pylist())) == [0, 1]
+    assert tab.schema.field("ts").type == pa.timestamp("us", tz="UTC")
+    tab = tab.set_column(cols.index("ts"), "ts",
+                         tab["ts"].cast(pa.int64()))
+    got = sorted(zip(*(tab[c].to_pylist() for c in cols)))
+    want = sorted(tuple(r) for r in s.docs().select(
+        *(F.unix_micros(c).alias(c) if c == "ts" else c for c in cols))
+        .collect())
+    assert len(got) == len(full) and got == want
+
+
 def _oracle_for(pdf):
     s = pdf.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     return BM25Oracle({i: t for i, t in enumerate(s["text"])})
@@ -906,13 +941,16 @@ def _jobs(spark) -> int:
 
 
 def test_tombstoned_index_reads_run_no_inference_job(spark, tiny_index,
-                                                     tiny_pdf, tmp_path):
+                                                     tiny_pdf, tmp_path,
+                                                     monkeypatch):
     """Every merged view reads its dirs with their schemas.* schema: on
     an index with tombstones and dead docs, building the tombstone,
     docs and dead-docs frames runs no Spark job (an untyped parquet read
-    runs a schema-inference job per call), and a warm exhaustive batch
-    runs two jobs (the tombstone mask collect and the scan) with rows
-    that match the oracle over the live docs."""
+    runs a schema-inference job per call). The tombstone mask is read in
+    the driver, so a warm exhaustive batch runs no job in the driver
+    (the default bound) and one, the scan, on Spark (_ROUTED_TASK_BYTES
+    at 0), with rows that match the oracle over the live docs."""
+    import pdx_spark.operators.snapshot as SN
     path = str(tmp_path / "tiny_tomb")
     shutil.copytree(tiny_index, path)
     dead = [d for d, _ in Searcher.load(spark, path).search("w0000", k=3)]
@@ -934,13 +972,20 @@ def test_tombstoned_index_reads_run_no_inference_job(spark, tiny_index,
     texts = tiny_pdf.sort_values(["conv_id", "turn_idx"])["text"].tolist()
     oracle = BM25Oracle({i: t for i, t in enumerate(texts)
                          if i not in set(dead + more)})
-    s.search_batch(QUERIES, exact=True)
-    n0 = _jobs(spark)
-    res = s.search_batch(QUERIES, exact=True)
-    assert _jobs(spark) - n0 == 2
-    for qid, qtext, k in QUERIES:
-        assert_rank_identical(collect_topk(res, qid), oracle.topk(qtext, k),
-                              f"tombstoned q{qid}")
+    for site, bound, n_jobs in (("driver", SN._ROUTED_TASK_BYTES, 0),
+                                ("spark", 0, 1)):
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+            s.search_batch(QUERIES, exact=True)
+            n0 = _jobs(spark)
+            res = s.search_batch(QUERIES, exact=True)
+            assert _jobs(spark) - n0 == n_jobs, site
+            assert s.last_plan["scan"]["ran"] == site, s.last_plan
+            assert s.last_plan["mask_in_closure"] is True, s.last_plan
+        for qid, qtext, k in QUERIES:
+            assert_rank_identical(collect_topk(res, qid),
+                                  oracle.topk(qtext, k),
+                                  f"tombstoned {site} q{qid}")
 
 
 def test_one_maintainer_across_every_commit_kind(spark, tmp_path,
@@ -1017,9 +1062,12 @@ def test_excluded_shards_filter_in_constant_py4j_calls(spark, topic):
     sent = [0]
     send = client.send_command
 
-    def counting(*a, **k):
-        sent[0] += 1
-        return send(*a, **k)
+    def counting(command, *a, **k):
+        # py4j memory deletes ("m\nd\n...") are sent when Python's GC
+        # frees earlier, unrelated proxies; they are not the build's
+        if not command.startswith("m\nd\n"):
+            sent[0] += 1
+        return send(command, *a, **k)
 
     def build(excl):
         snap = Snapshot(spark, topic[0].fs, path,

@@ -56,24 +56,17 @@ def test_choose_filter_mode(spark, searcher):
 
 
 def test_pruning_routes_selective_queries_at_high_shard_count(
-        spark, tiny_pdf, tiny_oracle, tmp_path):
+        spark, tiny_pdf, tiny_oracle, many_shards_index):
     """At > 64 shards the planner must still PRUNE for selective queries
     (only a batch whose plan exceeds _PLAN_SLICE_CAP runs exhaustive):
     rare-term queries route to a small fraction of shards,
     and results stay rank-identical. Uniform hot batches instead pick
     the unrouted pass. last_plan is the observability hook."""
-    from pdx_spark.config import IndexConfig
-    from pdx_spark.operators.indexer import Indexer
-    from pdx_spark.operators.searcher import Searcher
-    from pdx_spark.schemas import TRANSCRIPTS
     from tests.test_engine import assert_rank_identical, collect_topk
 
-    path = str(tmp_path / "route_idx")
-    cfg = IndexConfig(block_size=8, docs_per_shard=4)
-    Indexer(spark, cfg=cfg).build(
-        spark.createDataFrame(tiny_pdf, schema=TRANSCRIPTS), path)
-    s = Searcher.load(spark, path)
-    n_shards = -(-s.n_docs // cfg.docs_per_shard)
+    s = Searcher.load(spark, many_shards_index)
+    assert s.cfg.docs_per_shard == 4
+    n_shards = -(-s.n_docs // s.cfg.docs_per_shard)
     assert n_shards > 64
 
     # rare tail terms (df==1 in this corpus): routing touches only
@@ -409,6 +402,57 @@ def test_warm_routed_batch_scores_in_the_driver(spark, topic, monkeypatch):
     assert plan["mode"] == "routed", plan
     assert plan["seed_scan"]["ran"] == plan["main_scan"]["ran"] == "spark"
     assert sorted(map(tuple, spark_rows)) == sorted(map(tuple, rows))
+
+
+def test_every_closure_strategy_on_both_sites(spark, topic, tiny_oracle,
+                                             many_shards_index, monkeypatch):
+    """Exhaustive (exact=True), unrouted (a hot batch on the many-shard
+    index) and routed (the topic fixture) batches, each at the default
+    bound, where every scan is scored in the driver, and with
+    _ROUTED_TASK_BYTES at 0, where each runs on Spark: the rows match
+    the oracle on both sites, and last_plan names each scan's site next
+    to its byte estimate and cap (the whole index's bytes for the
+    exhaustive and unrouted scans). A warm driver-site batch of any
+    strategy launches no Spark job; a Spark-site one launches some."""
+    import pdx_spark.operators.snapshot as SN
+    s_topic, topic_oracle = topic
+    many = Searcher.load(spark, many_shards_index)
+    cases = [(s_topic, topic_oracle, topic_queries(16, 1), {"exact": True},
+              "exhaustive", {"scan": True}),
+             (many, tiny_oracle, [(0, "w0000 w0001", 10)], {}, "unrouted",
+              {"seed_scan": False, "main_scan": True}),
+             (s_topic, topic_oracle, topic_queries(16, 2), {}, "routed",
+              {"seed_scan": False, "main_scan": False})]
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs():
+        return len(tracker.getJobIdsForGroup(None))
+
+    got = {}
+    for site, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+        monkeypatch.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+        for s, oracle, qs, kw, mode, scans in cases:
+            s.search_batch(qs, **kw).collect()  # warms the caches
+            n0 = jobs()
+            rows = s.search_batch(qs, **kw).collect()
+            n = jobs() - n0
+            plan = dict(s.last_plan)
+            assert plan["mode"] == mode, plan
+            total = s.snap.segment_bytes()
+            for scan, whole in scans.items():
+                rec = plan[scan]
+                assert rec["ran"] == site, (scan, plan)
+                assert rec["cap"] == "_ROUTED_TASK_BYTES", plan
+                assert rec["limit"] == bound, plan
+                if whole:
+                    assert rec["routed_bytes"] == total, (scan, plan)
+                else:
+                    assert 0 < rec["routed_bytes"] <= total, (scan, plan)
+            assert (n == 0) if site == "driver" else (n >= 1), (mode, n)
+            assert_oracle_rows(rows, qs, oracle)
+            got.setdefault(mode, []).append(sorted(map(tuple, rows)))
+    for mode, (driver_rows, spark_rows) in got.items():
+        assert driver_rows == spark_rows, mode
 
 
 def test_planner_counts_shards_over_the_id_space(spark, topic, tmp_path):

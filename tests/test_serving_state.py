@@ -43,31 +43,44 @@ def test_concurrent_batches_keep_their_options(spark, tiny_index):
 
 
 
-def test_concurrent_driver_scored_batches(spark, topic, monkeypatch):
-    """8 threads run routed batches on ONE fresh Searcher over the topic
-    fixture, every scan scored in the driver: no Spark job runs, every
-    batch equals its serial answer, and each index dir's pyarrow
-    dataset (the per-Searcher file list) is built once."""
+def test_concurrent_driver_scored_batches(spark, topic, many_shards_index,
+                                          monkeypatch):
+    """8 threads run batches on two fresh Searchers, every scan scored
+    in the driver: routed and exhaustive (exact=True) batches over the
+    topic fixture, and a hot batch that runs the unrouted pass over the
+    many-shard index. No Spark job runs, every batch equals its serial
+    answer, and each index dir's pyarrow dataset (the per-Searcher file
+    list) is built once."""
     import pyarrow.dataset as ds
 
     from tests.test_plans import topic_queries
 
-    batches = [topic_queries(n, off) for off in range(3) for n in (1, 16, 48)]
-    want = [_rows(topic[0].search_batch(qs, force_two_phase=True))
-            for qs in batches]
+    two_phase, exact = {"force_two_phase": True}, {"exact": True}
+    batches = [(0, topic_queries(n, off), two_phase)
+               for off in range(3) for n in (1, 16, 48)]
+    batches += [(0, topic_queries(n, 1), exact) for n in (1, 48)]
+    batches += [(1, [(0, "w0000 w0001", 10)], {})]
+    serial = [topic[0], Searcher.load(spark, many_shards_index)]
+    want, modes = [], []
+    for i, qs, kw in batches:
+        want.append(_rows(serial[i].search_batch(qs, **kw)))
+        modes.append(serial[i].last_plan["mode"])
+    assert set(modes) == {"routed", "exhaustive", "unrouted"}, modes
     built, dataset = [], ds.dataset
 
     def counted(path, *a, **k):
         built.append(path)
         return dataset(path, *a, **k)
     monkeypatch.setattr(ds, "dataset", counted)
-    s = Searcher.load(spark, topic[0].path)
+    fresh = [Searcher.load(spark, topic[0].path),
+             Searcher.load(spark, many_shards_index)]
     tracker = spark.sparkContext.statusTracker()
     n0 = len(tracker.getJobIdsForGroup(None))
 
-    def run(i):
-        b = i % len(batches)
-        return b, _rows(s.search_batch(batches[b], force_two_phase=True))
+    def run(j):
+        b = j % len(batches)
+        i, qs, kw = batches[b]
+        return b, _rows(fresh[i].search_batch(qs, **kw))
 
     switch = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)  # interleave the threads more often
