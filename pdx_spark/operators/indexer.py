@@ -183,7 +183,6 @@ def stat_artifacts_local(fs: IndexFS, seg_dirs: list[str], ts_final: str,
     if not fs.is_local:
         return None
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     files, total_rows = [], 0
@@ -199,15 +198,6 @@ def stat_artifacts_local(fs: IndexFS, seg_dirs: list[str], ts_final: str,
         if files else pa.table({c: [] for c in cols})
     pdf = tab.to_pandas()
 
-    def _write_pa(table: "pa.Table", final: str):
-        # a dictionary only pays where terms repeat: term_stats (and a
-        # directory with one shard per term) stores each term once, and
-        # there PLAIN is smaller than dictionary + indices
-        unique = pc.count_distinct(table["term"]).as_py() == table.num_rows
-        write_table_local(fs, table, final, row_group_size=_STATS_ROW_GROUP,
-                          use_dictionary=[c for c in table.column_names
-                                          if c != "term"] if unique else True)
-
     gd = pdf.groupby(["term", "shard"], sort=True, as_index=False).agg(
         n_blocks=("n", "size"), n_postings=("n", "sum"),
         max_tf=("max_tf", "max"), min_dl=("min_dl", "min"),
@@ -221,7 +211,7 @@ def stat_artifacts_local(fs: IndexFS, seg_dirs: list[str], ts_final: str,
         "df": pa.array(gt["df"].to_numpy().astype(np.int64)),
         "max_tf": pa.array(gt["max_tf"].to_numpy().astype(np.int32)),
         "gmax": pa.array(gt["gmax"].to_numpy().astype(np.float64))})
-    _write_pa(ts, ts_final)
+    write_table_local(fs, ts, ts_final, row_group_size=_STATS_ROW_GROUP)
 
     params = dir_quant_params(*(
         (gd["max_tf"].min(), gd["max_tf"].max(),
@@ -238,20 +228,27 @@ def stat_artifacts_local(fs: IndexFS, seg_dirs: list[str], ts_final: str,
         "min_dl_q": pa.array(quantize_down_np(
             gd["min_dl"].to_numpy(), params["dl_base"],
             params["dl_scale"]).astype(np.int16))})
-    _write_pa(dirt, dir_final)
+    write_table_local(fs, dirt, dir_final, row_group_size=_STATS_ROW_GROUP)
     return params
 
 
 def write_table_local(fs: IndexFS, table, final: str, **write_kw) -> None:
     """One pyarrow Table as the single parquet file of the local dir
     `final`, through tmp-dir -> rename (the commit protocol of every
-    Spark-written artifact). write_kw goes to pq.write_table."""
+    Spark-written artifact). write_kw goes to pq.write_table. Only columns
+    with at most half as many distinct values as rows get a dictionary:
+    elsewhere (unique terms, payload blobs) PLAIN is smaller, and unlike
+    Spark's writer pyarrow does not fall back to it by itself."""
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
+    dictionary = [c for c in table.column_names
+                  if 2 * pc.count_distinct(table[c]).as_py() <= table.num_rows]
     tmp = final + ".tmp"
     if fs.exists(tmp):
         fs.delete(tmp)
     os.makedirs(tmp)
-    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"), **write_kw)
+    pq.write_table(table, os.path.join(tmp, "part-00000.parquet"),
+                   use_dictionary=dictionary, **write_kw)
     if fs.exists(final):
         fs.delete(final)
     fs.rename(tmp, final)
@@ -363,15 +360,15 @@ def _segment_encoder_postings(cfg: IndexConfig, avgdl: float,
     return fn
 
 
-def encode_layout(spark, n_docs: int, cfg: IndexConfig):
+def encode_layout(spark, n_shards: int):
     """(n_encode, fgroup column) of the encode shuffle and the segment
-    write. Encode at ~4 partitions per core: segment files come out small
-    enough that (a) the query-time map-scan gets several task waves
-    (straggler smoothing — one file = one wave is the worst case) and
-    (b) no file approaches the reader's split threshold (map-scan
-    exactness invariant, searcher.py).
+    write over `n_shards` shards. Encode at ~4 partitions per core:
+    segment files come out small enough that (a) the query-time
+    map-scan gets several task waves (straggler smoothing — one file =
+    one wave is the worst case) and (b) no file approaches the reader's
+    split threshold (map-scan exactness invariant, searcher.py).
 
-    Dense doc_ids (n_docs = the id high-water mark) make shard sizes
+    Dense doc_ids (shards span the id high-water mark) make shard sizes
     ANALYTIC (docs_per_shard docs each), so file-group boundaries need
     no sampling: fgroup = shard // spg gives n_encode equal-width,
     contiguous shard ranges. A hash repartition on fgroup replaces
@@ -389,7 +386,6 @@ def encode_layout(spark, n_docs: int, cfg: IndexConfig):
     mult = int(os.environ.get("PDX_ENCODE_FILES_PER_CORE", "4"))
     n_encode = max(mult * spark.sparkContext.defaultParallelism,
                    int(spark.conf.get("spark.sql.shuffle.partitions", "8")))
-    n_shards = max(1, -(-n_docs // cfg.docs_per_shard))
     spg = max(1, -(-n_shards // n_encode))
     return n_encode, (F.col("shard") / spg).cast("long")
 
@@ -535,7 +531,8 @@ class Indexer:
                      .withColumn("shard", self.cfg.shard_of_expr()))
 
             enc = _segment_encoder_docs(self.cfg, avgdl, self.params)
-            n_encode, fgroup = encode_layout(self.spark, n_docs, self.cfg)
+            n_encode, fgroup = encode_layout(
+                self.spark, -(-n_docs // self.cfg.docs_per_shard))
             n_chunks = manifest["n_chunks"]
             for chunk in range(n_chunks):
                 key = str(chunk)

@@ -39,32 +39,27 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
      in the driver (one Spark job, the keys peek); else on Spark. The
      key resolution and the df count differ by site; the segment read
      and the writes are the Snapshot's steps.
-  M3-M6 Compact:
+  M3-M6 Compact: both compactions are one re-encode (_reencode) over
+     the Snapshot's steps: read the shards' packed rows, then per shard
+     one Arrow decode pass (blocks.decode_blocks_arrow, the M8
+     de-transpose analog, cluster.hpp:165-181) minus the tombstoned ids
+     (in the closure) into the build's Arrow encoder, then write. Like
+     the reference, which compacts one cluster in process, it runs in
+     the driver (pyarrow, no Spark job) when its input fits one
+     routed-scan task on a local fs, else on Spark, in the build's
+     fgroup file layout.
      compact_targeted() -> the SplitCluster/CompactCluster analog
        (index.hpp:1314-1611, cluster.hpp:260-294): rewrites ONLY shards
-       that hold delta blocks or tombstoned postings into a patch
-       segment dir; untouched base files stay byte-identical. Base
-       term_stats/directory are untouched (bounds stay admissible:
-       tombstone removal can only shrink true maxima). Written once over
-       the Snapshot's steps: read the affected shards' packed rows, then
-       per shard decode, drop the tombstoned ids (carried in the
-       closure) and encode, then write the patch. Like the reference,
-       which compacts one cluster in process, the steps run in the
-       driver when the affected slice fits one routed-scan task (a local
-       fs, and Snapshot.routed_bytes of the affected shards <=
-       _ROUTED_TASK_BYTES): pyarrow reads and writes, no Spark job. A
-       larger slice, or a remote fs, runs them as Spark jobs, the packed
-       rows shuffled by shard.
-     compact() -> full rewrite: merge everything, drop tombstones and
-       dead docs, fold stat deltas into the base, reset all delta state.
-       Its new base takes the build's fgroup file layout, and its
-       term_stats/directory come from the new base's segment METADATA
-       (indexer.stat_artifacts, as in build stage C) — the output
-       is never decoded again.
-  Both compactions run the build's kernels: one Arrow decode pass
-  (blocks.decode_blocks_arrow, the M8 de-transpose analog,
-  cluster.hpp:165-181) feeds the build's Arrow encoder
-  (indexer._encode_postings).
+       that hold delta blocks or tombstoned postings (sized by
+       Snapshot.routed_bytes) into a patch segment dir; untouched base
+       files stay byte-identical, as do term_stats/directory (bounds
+       stay admissible: tombstone removal only shrinks true maxima).
+     compact() -> full rewrite, like OPTIMIZE in Delta Lake under the
+       commit protocol of any write: every shard (sized by
+       Snapshot.index_bytes, as delete), the docs folded minus dead and
+       tombstoned docs, all delta state reset. Its term_stats/directory
+       come from the new base's segment METADATA (stat_artifacts, as in
+       build stage C) — the output is never decoded again.
 
 Every read goes through the Maintainer's Snapshot (self.snap), the
 reader Searcher holds too: its dir lists, merged views and meta_rows
@@ -90,9 +85,8 @@ from pdx_spark.fs import IndexFS, index_fs, verify_single_rowgroup
 from pdx_spark.operators import corpus as C
 from pdx_spark.operators.indexer import (_segment_encoder_docs,
                                          _segment_encoder_postings,
-                                         _write_manifest, encode_layout,
-                                         read_manifest, stat_artifacts,
-                                         write_directory_rows)
+                                         _write_manifest, read_manifest,
+                                         stat_artifacts, write_directory_rows)
 from pdx_spark.operators.snapshot import (Snapshot, _atomic_write,
                                           one_task_site)
 
@@ -348,21 +342,22 @@ class Maintainer:
         # the cached dead rows (Spark) are released on every path
         with ExitStack() as cached:
             if driver:
-                dead = self._live_matching(peek, keys)
+                # one pyarrow left-semi join (each doc at most once), the
+                # keys cast to the docs' types first
+                live = self.snap.live_docs(
+                    site, list(dict.fromkeys(["doc_id", "dl", *keys])))
+                dead = live.join(peek.cast(pa.schema(
+                    [pa.field(c, live.schema.field(c).type) for c in keys])),
+                    keys, join_type="left semi").select(["doc_id", "dl"])
                 ids = dead.column("doc_id").to_numpy()
                 n_dead = len(ids)
                 dl_dead = int(dead.column("dl").to_numpy().sum())
                 shards = np.unique(ids // self.cfg.docs_per_shard)
             else:
                 # ONE join resolves the keys against the live, not yet
-                # tombstoned docs (docs() already drops compacted-away
-                # dead ids)
-                live = self.snap.docs()
-                if old_tomb:
-                    live = live.join(self.snap.tombstones(), "doc_id",
-                                     "left_anti")
-                new_dead = (live.join(doc_keys.select(*keys), keys,
-                                      "left_semi")
+                # tombstoned docs
+                new_dead = (self.snap.live_docs(site)
+                            .join(doc_keys.select(*keys), keys, "left_semi")
                             .select("doc_id", "dl").persist())
                 cached.callback(new_dead.unpersist)
                 # ONE aggregate: exact N/sum_dl decrements + the affected
@@ -438,9 +433,7 @@ class Maintainer:
         listings, no job) fit one routed-scan task, and _peek finds at
         most n_docs keys. (A list-built keys frame plans as an RDD scan,
         whose estimate is Long.MaxValue.)"""
-        nbytes = self.snap.segment_bytes() + sum(
-            sz for d in self.snap.docs_dirs()
-            for _, sz in self.fs.parquet_files(self._p(d)))
+        nbytes = self.snap.index_bytes()
         site = one_task_site(nbytes, self.fs.is_local, "index_bytes")
         peek = None
         if site["ran"] == "driver":
@@ -448,21 +441,6 @@ class Maintainer:
             if peek is None:
                 site = one_task_site(nbytes, False, "index_bytes")
         return site, peek
-
-    def _live_matching(self, keys: pa.Table, cols: list[str]) -> pa.Table:
-        """(doc_id, dl) of the live, not yet tombstoned docs matching a
-        row of `keys` on `cols`: one pyarrow left-semi join (each doc at
-        most once), the keys cast to the docs' types first."""
-        snap = self.snap
-        live = snap.meta_rows(snap.docs_dirs(), schemas.DOCS,
-                              list(dict.fromkeys(["doc_id", "dl", *cols])))
-        gone = snap.doc_ids(snap.dead_dir(), snap.tomb_dir())
-        live = live.filter(pa.array(
-            ~np.isin(live.column("doc_id").to_numpy(), gone)))
-        keys = keys.cast(pa.schema([pa.field(c, live.schema.field(c).type)
-                                    for c in cols]))
-        return live.join(keys, cols, join_type="left semi") \
-            .select(["doc_id", "dl"])
 
     # ---- M4-M6: targeted compaction ----------------------------------------
     def compact_targeted(self) -> dict:
@@ -478,11 +456,9 @@ class Maintainer:
         Spark job on a local fs). Their estimated bytes pick the site
         (Snapshot.site): in the driver when they fit one routed-scan task
         on a local fs (no Spark job at all), else on Spark. On either,
-        the Snapshot's steps read the affected shards' packed rows,
-        re-encode each shard once (decode, drop the tombstoned ids, which
-        ride the closure, and the build's encoder) and write the patch.
-        The lineage entry records the site with its byte estimate next
-        to _ROUTED_TASK_BYTES."""
+        _reencode rewrites the affected shards without the tombstoned
+        ids. The lineage entry records the site with its byte estimate
+        next to _ROUTED_TASK_BYTES."""
         t0 = time.time()
         m = self.manifest
         shards, tomb_ids = self._affected()
@@ -492,20 +468,7 @@ class Maintainer:
         gen = int(m.get("gen", 0))
         m["gen"] = gen + 1
         patch = f"segments/patch-{gen}"
-        enc = _segment_encoder_postings(self.cfg, m["avgdl"], self.params)
-
-        def reencode(packed: pa.Table) -> pa.Table:
-            # one shard's packed rows -> its live postings, re-encoded
-            posts = pa.Table.from_batches(
-                list(_decoded(packed.to_batches(), tomb_ids)))
-            return enc(posts.append_column("shard", pa.array(
-                np.full(posts.num_rows, packed.column("shard")[0].as_py()))))
-        packed = self.snap.read(site, self.snap.seg_dirs(), schemas.SEGMENTS,
-                                [*_DECODE_COLS, "shard"], shards=shards)
-        self.snap.write(site, self.snap.group_apply(
-            site, packed, reencode, schemas.SEGMENTS), patch,
-            ["term", "shard", "block_id"], segments=True)
-        single_rg = verify_single_rowgroup(self.fs, patch, root=self.path)
+        single_rg = self._reencode(site, patch, m["avgdl"], tomb_ids, shards)
 
         # bookkeeping: base dirs exclude the patched shards; delta segment
         # dirs are folded into the patch entirely. Old artifacts are
@@ -546,6 +509,19 @@ class Maintainer:
         for d in doomed:
             self.fs.delete(self._p(d))
         return m
+
+    def _reencode(self, site: dict, out: str, avgdl: float,
+                  drop_ids: np.ndarray, shards=None) -> bool:
+        """Both compactions' rewrite of `shards` (all when None) into
+        segment dir `out` on the Snapshot's steps, each shard re-encoded
+        by _reencoder -> whether each file of `out` is one row group."""
+        packed = self.snap.read(site, self.snap.seg_dirs(), schemas.SEGMENTS,
+                                [*_DECODE_COLS, "shard"], shards=shards)
+        self.snap.write(site, self.snap.group_apply(
+            site, packed, _reencoder(self.cfg, avgdl, self.params, drop_ids),
+            schemas.SEGMENTS), out, ["term", "shard", "block_id"],
+            segments=True)
+        return verify_single_rowgroup(self.fs, out, root=self.path)
 
     def _affected(self) -> tuple[np.ndarray, np.ndarray]:
         """-> (sorted shards compact_targeted rewrites, tombstoned doc
@@ -648,63 +624,40 @@ class Maintainer:
 
     # ---- M3-M6: full compact ------------------------------------------------
     def compact(self) -> dict:
-        """Full rewrite: decode all live postings (every segment dir minus
-        tombstones) and rebuild segments/docs/stats/directory from them;
-        resets every delta/patch/exclude/dead-doc artifact.
+        """Full rewrite: _reencode over every shard without the
+        tombstoned ids into a new base, the docs folded into one dir
+        minus the dead and tombstoned ids (Snapshot.live_docs), and
+        stat_artifacts of the new base; resets every delta, patch,
+        exclude and dead-doc artifact. Snapshot.index_bytes picks the
+        site: the driver (no Spark job) when the index fits one
+        routed-scan task on a local fs without positional artifacts,
+        else Spark. The lineage entry records it.
 
         Crash-safe end to end: the new base lands in GENERATION-NAMED
-        dirs (segments/base-{gen}, docs-{gen}) and the manifest pointer
-        flip is the only commit; old dirs are deleted after. There is no
-        instant at which the manifest references deleted or half-written
-        data (closes the rmtree-then-rename window the reference's Save
-        also has, index.hpp:213-267 — acceptable there, not at 1000
-        executors)."""
+        dirs and the manifest pointer flip is the only commit; old dirs
+        are deleted after, so the manifest never references deleted or
+        half-written data (the reference's Save has an rmtree-then-rename
+        window, index.hpp:213-267)."""
         t0 = time.time()
         m = self.manifest
+        snap = self.snap
+        site = one_task_site(snap.index_bytes(), self.fs.is_local
+                             and not snap.positions_dirs(), "index_bytes")
         gen = int(m.get("gen", 0))
         m["gen"] = gen + 1
-        tomb = self.snap.tombstones()
-
-        # the encode below must stay this decode's only consumer: any
-        # other action on it (a range sample, a stats pass) decodes the
-        # whole index again
-        posts = _decode_segments_to_postings(self.snap.segments())
-        docs = self.snap.docs()
-        if tomb is not None:
-            posts = posts.join(tomb, "doc_id", "left_anti")
-            docs = docs.join(tomb, "doc_id", "left_anti")
         # delete() keeps N/sum_dl exact in the manifest: no docs scan
         n_docs, sum_dl = self._stats()
         avgdl = sum_dl / n_docs if n_docs else 0.0
-
-        enc = _segment_encoder_postings(self.cfg, avgdl, self.params)
-        # the build's analytic fgroup layout over the id range
-        n_encode, fgroup = encode_layout(self.spark, self._next_doc_id(),
-                                         self.cfg)
-        new_seg = (posts.withColumn("shard", self.cfg.shard_of_expr())
-                   .withColumn("fgroup", fgroup)
-                   .repartition(n_encode, "fgroup")
-                   .groupBy("fgroup", "shard")
-                   .applyInArrow(enc, schema=schemas.SEGMENTS)
-                   .withColumn("fgroup", fgroup))
         # every old artifact is deleted only AFTER the manifest commit
         # (a crash in between leaves harmless orphans, never a manifest
         # pointing at missing data)
-        snap = self.snap
         doomed = [*snap.seg_dirs(), *snap.docs_dirs(), *snap.ts_dirs(),
                   *snap.directory_dirs(), "deltas",
                   *(d for d in (snap.tomb_dir(), snap.dead_dir()) if d)]
-        base = f"segments/base-{gen}"
-        # the sort leads with fgroup so it satisfies the planned write's
-        # fgroup ordering and survives: files stay term-ordered
-        _atomic_write(new_seg, self._p(base),
-                      ["fgroup", "term", "shard", "block_id"], fs=self.fs,
-                      segments=True, partition_by="fgroup")
-        single_rg = verify_single_rowgroup(self.fs, base, root=self.path)
-
-        # docs: fold deltas + drop dead into a single gen-named dir
-        docs_dir = f"docs-{gen}"
-        _atomic_write(docs, self._p(docs_dir), fs=self.fs)
+        base, docs_dir = f"segments/base-{gen}", f"docs-{gen}"
+        single_rg = self._reencode(site, base, avgdl,
+                                   snap.doc_ids(snap.tomb_dir()))
+        snap.write(site, snap.live_docs(site), docs_dir)
 
         # exact term stats + directory from the new base's segment
         # metadata, as in build stage C
@@ -712,18 +665,16 @@ class Maintainer:
         dq = stat_artifacts(self.spark, self.fs, [self._p(base)],
                             self._p(ts_base), self._p(dir_base))
 
-        # positional artifact (phrase search): fold base + deltas into
-        # one gen-named dir, dropping tombstoned docs. Correctness never
-        # depends on this (phrase_topk inner-joins docs(), which no
-        # longer contains the deleted ids) — this is byte hygiene, the
-        # same fold discipline as term_stats/directory.
+        # positional artifact (phrase search, Spark site only): base +
+        # deltas folded minus tombstoned docs. Byte hygiene: phrase_topk
+        # inner-joins docs(), which no longer holds the deleted ids.
         pos_new = None
         if snap.positions_dirs():
             from pdx_spark.operators.phrase import (POSITIONS_SCHEMA,
                                                     write_positions_rows)
             pos = snap.union(snap.positions_dirs(), POSITIONS_SCHEMA)
-            if tomb is not None:
-                pos = pos.join(tomb, "doc_id", "left_anti")
+            if snap.tomb_dir():
+                pos = pos.join(snap.tombstones(), "doc_id", "left_anti")
             pos_new = f"positions-{gen}"
             write_positions_rows(pos, self._p(pos_new))
             doomed += snap.positions_dirs() + ["positions"]
@@ -738,7 +689,7 @@ class Maintainer:
             m["positions_dirs"] = [pos_new]
         m.pop("tomb_dir", None)
         m.pop("dead_dir", None)
-        m["lineage"].append({"stage": "compact",
+        m["lineage"].append({"stage": "compact", **site,
                              "sec": round(time.time() - t0, 2)})
         _write_manifest(self.path, m, fs=self.fs)
         for d in doomed:
@@ -761,6 +712,21 @@ def _peek(df: DataFrame, n: int) -> pa.Table | None:
     whose plan estimate says nothing (an RDD scan's is Long.MaxValue)."""
     tab = df.coalesce(1).limit(n + 1).toArrow()
     return tab if tab.num_rows <= n else None
+
+
+def _reencoder(cfg: IndexConfig, avgdl: float, params: BM25Params,
+               drop_ids: np.ndarray):
+    """The group_apply body of both compactions: one shard's packed
+    SEGMENTS rows -> its postings minus `drop_ids` (_decoded), encoded
+    by the build's encoder (_segment_encoder_postings)."""
+    enc = _segment_encoder_postings(cfg, avgdl, params)
+
+    def fn(packed: pa.Table) -> pa.Table:
+        posts = pa.Table.from_batches(
+            list(_decoded(packed.to_batches(), drop_ids)))
+        return enc(posts.append_column("shard", pa.array(
+            np.full(posts.num_rows, packed.column("shard")[0].as_py()))))
+    return fn
 
 
 def _decoded(batches, ids=None, keep: bool = False):

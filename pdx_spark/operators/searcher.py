@@ -705,16 +705,9 @@ class Searcher:
                 "require_all": bool(require_all_terms),
                 "min_match": min_match}
 
-        mask_df, pred_mode = self._mask_df(predicate)
-        closure_mask = None
-        if mask_df is not None:
-            closure_mask = self._collect_small_mask(mask_df, pred_mode)
-            if closure_mask is not None:
-                # small mask rides the scorer closure: every branch below
-                # keeps the closure map scan, the plans a filtered batch
-                # used to forfeit (cogroup + groupBy-shuffle of the
-                # term-filtered segment rows)
-                mask_df = None
+        # a small mask rides the scorer closure, so every branch below
+        # keeps the closure map scan; only a large one comes as mask_df
+        closure_mask, mask_df, pred_mode = self._masks(predicate)
 
         n_shards_total = self.snap.n_shards()
         # exhaustive when pruning cannot pay: too few shards for skipping
@@ -1055,51 +1048,56 @@ class Searcher:
         self._last_sel_frac = n_pass / max(n, 1)
         return "deny" if n_pass >= SELECTIVITY_THRESHOLD * max(n, 1) else "allow"
 
-    def _collect_small_mask(self, mask_df: DataFrame,
-                            pred_mode: str | None) -> dict | None:
-        """Small masks ride the scorer CLOSURE instead of the cogroup
-        channel: the reference fuses selection vectors into the scan
-        (searcher.hpp:284-372) rather than running a separate routing
-        pass, and a selective predicate or a short tombstone list is
-        exactly that case — forcing it through cogroup forfeits the
-        shuffle-free map-scan and the unrouted pass (both need the mask
-        in the closure). Every batch plans on the driver either way;
-        this cap only picks the channel the mask travels in. Returns
-        {mode, ids sorted int64[], p int8[]} when the mask has at most
-        _ROUTING_CAP rows, else None (cogroup carries it). The sample-
-        based selectivity estimate skips the bounded peek when the mask
-        is obviously huge, so unselective predicates pay nothing new."""
-        est = None
-        if pred_mode is not None and self._last_sel_frac is not None:
-            frac = self._last_sel_frac if pred_mode == "allow" \
-                else 1.0 - self._last_sel_frac
-            est = frac * self.n_docs + self.manifest.get("tombstones", 0)
-        elif pred_mode is None:
-            est = self.manifest.get("tombstones", 0)
-        if est is not None and est > 2 * _ROUTING_CAP:
-            return None
-        if pred_mode is None:  # tombstones: a driver read (no job locally)
-            ids = self.snap.doc_ids(self.snap.tomb_dir()).astype(np.int64)
-            p = np.zeros(len(ids), np.int8)
-        else:
-            pdf = mask_df.select("id", "p").limit(_ROUTING_CAP + 1) \
-                .toPandas()
-            ids = pdf["id"].to_numpy(np.int64)
-            p = pdf["p"].to_numpy(np.int8)
-        if len(ids) > _ROUTING_CAP:
-            return None
-        order = np.argsort(ids, kind="stable")
-        return {"mode": pred_mode, "ids": ids[order], "p": p[order]}
+    def _masks(self, predicate: str | None) -> tuple:
+        """-> (closure mask | None, cogroup mask frame | None, mode) of a
+        batch's predicate and tombstones. Small masks ride the scorer
+        CLOSURE instead of the cogroup channel: the reference fuses
+        selection vectors into the scan (searcher.hpp:284-372) rather
+        than running a separate routing pass, and a selective predicate
+        or a short tombstone list is exactly that case — forcing it
+        through cogroup forfeits the shuffle-free map-scan and the
+        unrouted pass (both need the mask in the closure). This cap only
+        picks the channel: {mode, ids sorted int64[], p int8[]} when the
+        mask has at most _ROUTING_CAP rows, else the frame (_mask_df).
+        Tombstones alone are read in the driver (doc_ids), so only a
+        predicate's bounded peek or the cogroup channel builds a frame.
+        The sample-based selectivity estimate skips the peek when the
+        mask is obviously huge."""
+        pred_mode = None if predicate is None \
+            else self._filter_mode(predicate)
+        if pred_mode is None and self.snap.tomb_dir() is None:
+            return None, None, None
+        est = self.manifest.get("tombstones", 0)
+        mask_df = None
+        if pred_mode is not None:  # _filter_mode set _last_sel_frac
+            est += self.n_docs * (self._last_sel_frac if pred_mode == "allow"
+                                  else 1.0 - self._last_sel_frac)
+            mask_df = self._mask_df(predicate, pred_mode)
+        if est <= 2 * _ROUTING_CAP:
+            if mask_df is None:  # a driver read, no job on a local fs
+                ids = self.snap.doc_ids(self.snap.tomb_dir()).astype(np.int64)
+                p = np.zeros(len(ids), np.int8)
+            else:
+                pdf = mask_df.select("id", "p").limit(_ROUTING_CAP + 1) \
+                    .toPandas()
+                ids = pdf["id"].to_numpy(np.int64)
+                p = pdf["p"].to_numpy(np.int8)
+            if len(ids) <= _ROUTING_CAP:
+                order = np.argsort(ids, kind="stable")
+                return ({"mode": pred_mode, "ids": ids[order],
+                         "p": p[order]}, None, pred_mode)
+        if mask_df is None:
+            mask_df = self._mask_df(None, None)
+        return None, mask_df, pred_mode
 
-    def _mask_df(self, predicate: str | None):
-        """-> (aux-format (shard, kind=0, id, p) rows | None, mode).
-        p=1 predicate-pass (allow mode), p=0 predicate-fail (deny mode)
-        or tombstoned. Deny mode ships the complement when the predicate
+    def _mask_df(self, predicate: str | None, mode: str | None) -> DataFrame:
+        """The mask as aux-format (shard, kind=0, id, p) rows: p=1
+        predicate-pass (allow mode), p=0 predicate-fail (deny mode) or
+        tombstoned. Deny mode ships the complement when the predicate
         passes most docs — the selectivity-adaptive F3 analog (reference
         searcher.hpp:57, threshold 0.80)."""
-        parts, mode = [], None
+        parts = []
         if predicate is not None:
-            mode = self._filter_mode(predicate)
             if mode == "allow":
                 parts.append(self.docs().filter(F.expr(predicate))
                              .select("doc_id").withColumn("p", F.lit(1)))
@@ -1112,8 +1110,6 @@ class Searcher:
         tomb = self.tombstones()
         if tomb is not None:
             parts.append(tomb.select("doc_id").withColumn("p", F.lit(0)))
-        if not parts:
-            return None, mode
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -1121,14 +1117,14 @@ class Searcher:
             (F.col("doc_id") / self.cfg.docs_per_shard).cast("long").alias("shard"),
             F.lit(_KIND_MASK).alias("kind"),
             F.col("doc_id").cast("long").alias("id"),
-            F.col("p").cast("int").alias("p")), mode
+            F.col("p").cast("int").alias("p"))
 
     def _map_scan(self, seg: DataFrame, spec: dict,
                   routing: dict[int, set] | None = None,
                   anti_routing: dict[int, set] | None = None,
                   mask: dict | None = None) -> DataFrame:
         """Closure scan on Spark: routing, anti-routing and a SMALL
-        predicate/tombstone mask (`mask`, from _collect_small_mask — the
+        predicate/tombstone mask (`mask`, from _masks — the
         scan-fused selection vector) ride the scorer closure; large masks
         go through the cogroup channel instead (search_batch keeps
         mask_df non-None in that case). A scan of any strategy comes

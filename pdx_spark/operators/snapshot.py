@@ -6,8 +6,9 @@ every read-side default (seg_dirs ... dead_dir); the per-dir readers (a
 pyarrow dataset on a local fs, a typed Spark frame, union); the merged
 views over base + maintenance deltas (segments, docs, docs_raw,
 tombstones, dead_docs, term_stats); the filtered driver-side row reader
-(meta_rows); and the byte estimate that decides whether a slice of the
-segments fits one task (routed_bytes, site). Every Spark read carries
+(meta_rows); and the byte estimates that decide whether a slice of the
+segments, or the whole index, fits one task (routed_bytes, site,
+index_bytes). Every Spark read carries
 its schemas.* schema, so none runs a schema-inference job. A Maintainer
 mutates its manifest in place as it commits: the dir lists read it
 live, and the segment listing and the segments() frame are keyed by
@@ -16,7 +17,8 @@ the segment dirs (and excludes), so both follow every commit.
 It also runs a one-task op's work where one_task_site put it: the
 read / group_apply / write steps take and return a pyarrow Table in the
 driver and a DataFrame on Spark, with the same Arrow body per shard
-group on both, so a maintenance op is written once over them.
+group on both, so a maintenance op is written once over them. On
+Spark they give every segment dir the build's fgroup file layout.
 """
 
 from __future__ import annotations
@@ -34,7 +36,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from pdx_spark import schemas
 from pdx_spark.fs import IndexFS
-from pdx_spark.operators.indexer import PARQUET_BLOCK_SIZE, write_table_local
+from pdx_spark.operators.indexer import (PARQUET_BLOCK_SIZE, encode_layout,
+                                         write_table_local)
 
 # target on-disk bytes per routed-scan task, and the bound below which a
 # slice of the segments is read and processed in the driver instead of
@@ -54,9 +57,9 @@ from pdx_spark.operators.indexer import PARQUET_BLOCK_SIZE, write_table_local
 # the Spark job around the task: query scans (Searcher; a routed scan
 # by its routed shards' bytes, an exhaustive or unrouted one by the
 # whole index's), targeted compactions (Maintainer.compact_targeted),
-# appends (by Spark's size estimate of the input plan, Maintainer.append)
-# and deletes (by the docs and segment bytes, then a bounded peek of the
-# keys, Maintainer.delete) take that site.
+# appends (by Spark's size estimate of the input plan, Maintainer.append),
+# deletes and full compactions (by Snapshot.index_bytes; a delete then
+# peeks at its keys) take that site.
 _ROUTED_TASK_BYTES = 2 * 1024 * 1024
 
 
@@ -132,17 +135,19 @@ def one_task_site(nbytes: int, eligible: bool, measure: str) -> dict:
 
 def _atomic_write(df: DataFrame, final: str,
                   sort_cols: list[str] | None = None, *, fs: IndexFS,
-                  segments: bool = False, partition_by: str | None = None):
+                  segments: bool = False):
     """tmp-dir -> rename commit protocol (same as the indexer's chunks).
-    segments=True also pins the one-row-group-per-file invariant the
-    map-scan needs (parquet.block.size >> file size)."""
+    segments=True writes a file per `fgroup` (sorted by it first, so the
+    planned write keeps the sort) and pins the one-row-group-per-file
+    invariant the map-scan needs (parquet.block.size >> file size)."""
     tmp = final + ".tmp"
+    if segments:
+        sort_cols = ["fgroup", *(sort_cols or [])]
     w = df.sortWithinPartitions(*sort_cols) if sort_cols else df
     w = w.write.mode("overwrite")
     if segments:
-        w = w.option("parquet.block.size", PARQUET_BLOCK_SIZE)
-    if partition_by:
-        w = w.partitionBy(partition_by)
+        w = w.option("parquet.block.size", PARQUET_BLOCK_SIZE) \
+            .partitionBy("fgroup")
     w.parquet(tmp)
     fs.rename(tmp, final)
 
@@ -226,6 +231,13 @@ class Snapshot:
 
     def segment_bytes(self) -> int:
         return sum(self._segment_sizes())
+
+    def index_bytes(self) -> int:
+        """Docs plus segment file bytes (fs listings, no job): the size of
+        an op over the whole index (delete, compact)."""
+        return self.segment_bytes() + sum(
+            sz for d in self.docs_dirs()
+            for _, sz in self.fs.parquet_files(self.fs.join(self.path, d)))
 
     def segment_file_count(self) -> int:
         return len(self._segment_sizes())
@@ -331,6 +343,21 @@ class Snapshot:
         d = self.dead_dir()
         return None if d is None else self.frame(d, schemas.DOC_IDS)
 
+    def live_docs(self, site: dict, columns: list[str] | None = None):
+        """The `columns` (default all) of the docs neither compacted away
+        nor tombstoned: their read on `site` minus the dead and
+        tombstoned ids (doc_ids in the driver, anti-joins on Spark)."""
+        gone = [d for d in (self.dead_dir(), self.tomb_dir()) if d]
+        docs = self.read(site, self.docs_dirs(), schemas.DOCS,
+                         columns or schemas.DOCS.fieldNames())
+        if site["ran"] == "driver":
+            return docs.filter(pa.array(~np.isin(
+                docs.column("doc_id").to_numpy(), self.doc_ids(*gone))))
+        for d in gone:
+            docs = docs.join(self.frame(d, schemas.DOC_IDS), "doc_id",
+                             "left_anti")
+        return docs
+
     def doc_ids(self, *dirs: str | None) -> np.ndarray:
         """The doc ids in the given DOC_IDS dirs (tombstones, dead docs;
         None skipped), read in the driver by meta_rows."""
@@ -393,8 +420,10 @@ class Snapshot:
             for i, d in enumerate(dirs):
                 c = conds + [~sh.isin(excl[d])] if excl.get(d) else conds
                 f = functools.reduce(operator.and_, c) if c else None
-                tab = self.dataset(d).to_table(columns=columns,
-                                               filter=f).cast(want)
+                # a Spark fgroup write of no rows leaves a dir of no files
+                src = self.dataset(d)
+                tab = src.to_table(columns=columns, filter=f).cast(want) \
+                    if src.files else want.empty_table()
                 tabs.append(tab.append_column(
                     "dir", pa.array(np.full(tab.num_rows, i, np.int32))))
             return pa.concat_tables(tabs)
@@ -431,11 +460,15 @@ class Snapshot:
     def group_apply(self, site: dict, x, fn, schema):
         """`fn` (pyarrow Table -> Table of `schema`) run once per shard
         group of `x`, each group with its shard column (a gapply: the
-        caller never sees how the groups form). On Spark
-        groupBy("shard").applyInArrow; in the driver a stable sort by
-        shard and one call per run, concatenated."""
+        caller never sees how the groups form). On Spark the build's
+        encode shuffle (by encode_layout's fgroup) and applyInArrow; in
+        the driver a stable sort by shard and one call per run."""
         if site["ran"] == "spark":
-            return x.groupBy("shard").applyInArrow(fn, schema=schema)
+            n_encode, fgroup = encode_layout(self.spark, self.n_shards())
+            return (x.withColumn("fgroup", fgroup)
+                    .repartition(n_encode, "fgroup")
+                    .groupBy("fgroup", "shard")
+                    .applyInArrow(fn, schema=schema))
         shard = x.column("shard").to_numpy()
         order = np.argsort(shard, kind="stable")
         x = x.take(order)
@@ -450,9 +483,12 @@ class Snapshot:
         """`x` as index dir `final`, through tmp dir -> rename, its rows
         ordered by `sort` when given; segments=True keeps one row group
         per file. In the driver one pyarrow file (write_table_local); on
-        Spark _atomic_write."""
+        Spark _atomic_write, segments in encode_layout's fgroup files."""
         final = self.fs.join(self.path, final)
         if site["ran"] == "spark":
+            if segments:
+                x = x.withColumn("fgroup", encode_layout(
+                    self.spark, self.n_shards())[1])
             _atomic_write(x, final, sort, fs=self.fs, segments=segments)
             return
         if sort:

@@ -92,3 +92,34 @@ def topic(spark, tmp_path_factory):
     a test that changes the index works on a copy of `topic[0].path`."""
     return _topic_index(spark, str(tmp_path_factory.mktemp("topic") / "idx"),
                         docs_per_shard=64, shards_per_task=8)
+
+
+@pytest.fixture
+def py4j_commands(spark):
+    """A counter of the py4j commands the driver sends to the JVM while
+    the test runs: a one-item list, read before and after the step
+    being counted. Memory deletes ("m\\nd\\n...") are not counted:
+    Python's GC sends them when it frees earlier, unrelated proxies."""
+    client = spark.sparkContext._gateway._gateway_client
+    sent = [0]
+    send = client.send_command
+
+    def counting(command, *a, **k):
+        if not command.startswith("m\nd\n"):
+            sent[0] += 1
+        return send(command, *a, **k)
+
+    client.send_command = counting
+    try:
+        yield sent
+    finally:
+        del client.send_command
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """The number of Spark jobs submitted so far (the DAGScheduler's job
+    id counter). Unlike the status tracker's job lists, which drop the
+    oldest jobs past spark.ui.retainedJobs, it never goes down."""
+    sc = spark.sparkContext
+    return lambda: int(sc._jsc.sc().dagScheduler().numTotalJobs())

@@ -127,7 +127,7 @@ def _rows(df):
 
 
 def test_uri_index_plans_on_the_driver(spark, tiny_pdf, tiny_oracle, tmp_path,
-                                       monkeypatch):
+                                       monkeypatch, spark_jobs):
     """One index loaded as a plain path and as a file:// URI. Both plan
     every pruned batch on the driver: a warm two-phase batch on the URI
     Searcher runs at most the seed and main scan jobs and returns the
@@ -146,10 +146,7 @@ def test_uri_index_plans_on_the_driver(spark, tiny_pdf, tiny_oracle, tmp_path,
     uri = Searcher.load(spark, "file://" + path)
     assert not uri.fs.is_local
     kw = dict(force_two_phase=True, two_phase_min_shards=2)
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs():
-        return len(tracker.getJobIdsForGroup(None))
+    jobs = spark_jobs
 
     uri.search_batch(QUERIES, **kw).collect()  # warms idf + plan caches
     n0 = jobs()
@@ -178,46 +175,56 @@ def test_compact_crash_before_commit_is_harmless(spark, tiny_pdf, tmp_path,
                                                  monkeypatch):
     """Kill compact() between the new-base write and the manifest commit:
     the committed index must still load and answer exactly (old dirs are
-    deleted only after the commit — no destructive window)."""
+    deleted only after the commit — no destructive window), and a retry
+    on a fresh Maintainer stays exact. Runs on both sites, on copies of
+    one index: in the driver (the default bound) and on Spark
+    (_ROUTED_TASK_BYTES at 0)."""
+    import shutil
+
     import pdx_spark.operators.maintenance as M
+    import pdx_spark.operators.snapshot as SN
 
     n = len(tiny_pdf)
     head, tail = tiny_pdf.iloc[: n - 40], tiny_pdf.iloc[n - 40:]
-    path = str(tmp_path / "idx_crash")
+    built = str(tmp_path / "idx_crash")
     Indexer(spark, cfg=CFG).build(
-        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
-    Maintainer(spark, path).append(
+        spark.createDataFrame(head, schema=TRANSCRIPTS), built)
+    Maintainer(spark, built).append(
         spark.createDataFrame(tail, schema=TRANSCRIPTS))
-
     ora = _oracle(tiny_pdf)
-    maint = Maintainer(spark, path)
-    real_write = M._write_manifest
 
     def boom(*a, **kw):
         raise RuntimeError("injected crash before manifest commit")
 
-    monkeypatch.setattr(M, "_write_manifest", boom)
-    with pytest.raises(RuntimeError, match="injected"):
-        maint.compact()
-    monkeypatch.setattr(M, "_write_manifest", real_write)
+    for site, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+        path = str(tmp_path / f"idx_crash_{site}")
+        shutil.copytree(built, path)
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+            maint = Maintainer(spark, path)
+            with monkeypatch.context() as crash:
+                crash.setattr(M, "_write_manifest", boom)
+                with pytest.raises(RuntimeError, match="injected"):
+                    maint.compact()
 
-    # committed state untouched: loads, and answers are exact
-    s = Searcher.load(spark, path)
-    assert s.n_docs == ora.n_docs
-    res = s.search_batch(QUERIES, two_phase_min_shards=2, force_two_phase=True).persist()
-    for qid, qtext, k in QUERIES:
-        assert_rank_identical(collect_topk(res, qid), ora.topk(qtext, k),
-                              f"crash q{qid}")
-    res.unpersist()
+            def exact(tag):
+                s = Searcher.load(spark, path)
+                assert s.n_docs == ora.n_docs
+                res = s.search_batch(QUERIES, two_phase_min_shards=2,
+                                     force_two_phase=True).persist()
+                for qid, qtext, k in QUERIES:
+                    assert_rank_identical(collect_topk(res, qid),
+                                          ora.topk(qtext, k),
+                                          f"{tag} {site} q{qid}")
+                res.unpersist()
 
-    # retrying the compact on a fresh Maintainer succeeds and stays exact
-    Maintainer(spark, path).compact()
-    s2 = Searcher.load(spark, path)
-    res = s2.search_batch(QUERIES, two_phase_min_shards=2, force_two_phase=True).persist()
-    for qid, qtext, k in QUERIES:
-        assert_rank_identical(collect_topk(res, qid), ora.topk(qtext, k),
-                              f"retry q{qid}")
-    res.unpersist()
+            # committed state untouched: loads, and answers are exact
+            exact("crash")
+            # retrying the compact on a fresh Maintainer succeeds and
+            # stays exact
+            m = Maintainer(spark, path).compact()
+            assert m["lineage"][-1]["ran"] == site
+            exact("retry")
 
 
 def test_driver_compact_targeted_crash_before_commit_is_harmless(

@@ -299,7 +299,7 @@ def _append_artifacts(spark, path, m):
 
 
 def test_driver_append_matches_spark_append(spark, tmp_path, corpus_pdfs,
-                                            monkeypatch):
+                                            monkeypatch, spark_jobs):
     """append() on copies of one index, in the driver (the default
     bound) and on Spark (_ROUTED_TASK_BYTES at 0), for a batch whose
     turn_idx runs are dense and one with gaps (the Spark half ranks
@@ -330,9 +330,9 @@ def test_driver_append_matches_spark_append(spark, tmp_path, corpus_pdfs,
             df = spark.createDataFrame(batch, schema=TRANSCRIPTS)
             with monkeypatch.context() as mp:
                 mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
-                n0 = _jobs(spark)
+                n0 = spark_jobs()
                 m = Maintainer(spark, path).append(df)
-                jobs = _jobs(spark) - n0
+                jobs = spark_jobs() - n0
             entry = m["lineage"][-1]
             assert entry["ran"] == site and entry["limit"] == bound, entry
             assert entry["cap"] == "_ROUTED_TASK_BYTES" \
@@ -354,7 +354,7 @@ def test_driver_append_matches_spark_append(spark, tmp_path, corpus_pdfs,
 
 
 def test_driver_append_crash_and_replay(spark, tmp_path, corpus_pdfs,
-                                        monkeypatch):
+                                        monkeypatch, spark_jobs):
     """A driver append that dies in the manifest commit leaves the
     manifest unchanged and the index exact; a retry on a fresh
     Maintainer succeeds, and replaying its batch_id is a no-op that
@@ -397,9 +397,9 @@ def test_driver_append_crash_and_replay(spark, tmp_path, corpus_pdfs,
     check(list(h["text"]) + list(t["text"]), "retried")
 
     replay = spark.createDataFrame(tail, schema=TRANSCRIPTS)
-    n0 = _jobs(spark)
+    n0 = spark_jobs()
     Maintainer(spark, path).append(replay, batch_id=0)
-    assert _jobs(spark) == n0
+    assert spark_jobs() == n0
     assert read_manifest(path) == m
 
 
@@ -614,7 +614,7 @@ def _delete_artifacts(path, m):
 
 
 def test_driver_delete_matches_spark_delete(spark, tmp_path, corpus_pdfs,
-                                            monkeypatch):
+                                            monkeypatch, spark_jobs):
     """delete() on copies of one index (base, a delta segment, dead docs
     and tombstones), in the driver (the default bound) and on Spark
     (_ROUTED_TASK_BYTES at 0), with keys given as (conv_id, turn_idx)
@@ -663,9 +663,9 @@ def test_driver_delete_matches_spark_delete(spark, tmp_path, corpus_pdfs,
             keys = spark.createDataFrame(rows, ddl)
             with monkeypatch.context() as mp:
                 mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
-                n0 = _jobs(spark)
+                n0 = spark_jobs()
                 m = Maintainer(spark, path).delete(keys)
-                jobs = _jobs(spark) - n0
+                jobs = spark_jobs() - n0
             entry = m["lineage"][-1]
             assert entry["ran"] == site and entry["limit"] == bound, entry
             assert entry["cap"] == "_ROUTED_TASK_BYTES" \
@@ -699,7 +699,8 @@ def test_driver_delete_matches_spark_delete(spark, tmp_path, corpus_pdfs,
     assert m["n_docs"] == n_docs - 1
 
 
-def test_empty_append_commits_nothing(spark, tmp_path, corpus_pdfs):
+def test_empty_append_commits_nothing(spark, tmp_path, corpus_pdfs,
+                                      spark_jobs):
     """An empty input built from pandas or from a list (an RDD scan whose
     size estimate is unknown) is found empty by one bounded peek: the
     append runs at most one Spark job, writes no artifact and leaves the
@@ -713,9 +714,9 @@ def test_empty_append_commits_nothing(spark, tmp_path, corpus_pdfs):
     for empty in (spark.createDataFrame(tail.iloc[:0], schema=TRANSCRIPTS),
                   spark.createDataFrame([], TRANSCRIPTS)):
         for batch_id in (None, 7):
-            n0 = _jobs(spark)
+            n0 = spark_jobs()
             m = Maintainer(spark, path).append(empty, batch_id=batch_id)
-            assert _jobs(spark) - n0 <= 1
+            assert spark_jobs() - n0 <= 1
             assert m == before and read_manifest(path) == before
             assert _file_state(path) == files
 
@@ -799,9 +800,11 @@ def test_compaction_rows_equal_reference_encoding(spark, tmp_path,
     the pandas encoder wrote. compact_targeted() runs on both halves on
     copies of one index: in the driver (the default bound) and on Spark
     (_ROUTED_TASK_BYTES at 0); both patches and their manifests agree,
-    and the dead_docs count is the number of rows written.
-    compact()'s term_stats df come from the new base's metadata and
-    must count the live postings."""
+    and the dead_docs count is the number of rows written. compact()
+    runs on both halves on copies of one index too: its term_stats df
+    come from the new base's metadata and must count the live postings,
+    and the docs, term_stats and directory rows and dir_quant of the two
+    halves are equal."""
     import os
 
     import pyarrow.parquet as pq
@@ -838,22 +841,40 @@ def test_compaction_rows_equal_reference_encoding(spark, tmp_path,
         [(c, int(t)) for c, t in h.iloc[7:300:13][["conv_id", "turn_idx"]]
          .values], "conv_id string, turn_idx int"))
     live = _live_postings(path)
-    m = Maintainer(spark, path).compact()
-    assert _segment_rows(os.path.join(path, m["segment_dirs"][0])) == \
-        _reference_rows(live, m["avgdl"])
-    ts = pq.read_table(os.path.join(path, m["ts_base"])).to_pydict()
     df = {}
     for (term, _), ps in live.items():
         df[term] = df.get(term, 0) + len(ps)
-    assert dict(zip(ts["term"], ts["df"])) == df
+
+    def rows(root, d):
+        return sorted(map(tuple, spark.read.parquet(
+            os.path.join(root, d)).collect()))
+    out = {}
+    for half, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
+        cpath = str(tmp_path / f"idx_compact_{half}")
+        shutil.copytree(path, cpath)
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+            m = Maintainer(spark, cpath).compact()
+        assert m["lineage"][-1]["ran"] == half, m["lineage"][-1]
+        assert _segment_rows(os.path.join(cpath, m["segment_dirs"][0])) == \
+            _reference_rows(live, m["avgdl"]), half
+        ts = pq.read_table(os.path.join(cpath, m["ts_base"])).to_pydict()
+        assert dict(zip(ts["term"], ts["df"])) == df, half
+        out[half] = [m["dir_quant"], *(rows(cpath, d) for d in (
+            m["docs_dirs"][0], m["ts_base"], m["dir_base"]))]
+    for i, what in enumerate(("dir_quant", "docs", "term_stats",
+                              "directory")):
+        assert out["driver"][i] == out["spark"][i], what
 
 
-def test_driver_compaction_runs_no_spark_job(spark, tmp_path, corpus_pdfs):
+def test_driver_compaction_runs_no_spark_job(spark, tmp_path, corpus_pdfs,
+                                             spark_jobs):
     """A targeted compaction whose affected slice fits one routed-scan
     task runs in the driver: after an append and a delete,
     compact_targeted() launches no Spark job, its lineage entry names
     the site with the byte estimate next to the cap, and a search on
-    the patched index matches the oracle over the live corpus."""
+    the patched index matches the oracle over the live corpus. So does
+    a full compact() of an index that fits one task, after it."""
     import pdx_spark.operators.snapshot as SN
     full, head, tail = corpus_pdfs
     path = str(tmp_path / "idx_driver_tc")
@@ -866,10 +887,9 @@ def test_driver_compaction_runs_no_spark_job(spark, tmp_path, corpus_pdfs):
     Maintainer(spark, path).delete(spark.createDataFrame(
         [(i,) for i in dead_ids], "doc_id long"))
 
-    tracker = spark.sparkContext.statusTracker()
-    n0 = len(tracker.getJobIdsForGroup(None))
+    n0 = spark_jobs()
     m = Maintainer(spark, path).compact_targeted()
-    assert len(tracker.getJobIdsForGroup(None)) == n0
+    assert spark_jobs() == n0
     entry = m["lineage"][-1]
     assert entry["ran"] == "driver" and entry["cap"] == "_ROUTED_TASK_BYTES"
     assert 0 < entry["routed_bytes"] <= entry["limit"] \
@@ -889,6 +909,21 @@ def test_driver_compaction_runs_no_spark_job(spark, tmp_path, corpus_pdfs):
         got = collect_topk(res, qid)
         assert not set(dead_ids) & {d for d, _ in got}
         assert_rank_identical(got, oracle.topk(qtext, k), f"driver q{qid}")
+    res.unpersist()
+
+    n0 = spark_jobs()
+    m = Maintainer(spark, path).compact()
+    assert spark_jobs() == n0
+    entry = m["lineage"][-1]
+    assert entry["stage"] == "compact" and entry["ran"] == "driver", entry
+    assert 0 < entry["index_bytes"] <= entry["limit"] \
+        == SN._ROUTED_TASK_BYTES, entry
+    assert m["dead_docs"] == m["tombstones"] == 0
+    res = Searcher.load(spark, path).search_batch(
+        QUERIES, two_phase_min_shards=2, force_two_phase=True).persist()
+    for qid, qtext, k in QUERIES:
+        assert_rank_identical(collect_topk(res, qid), oracle.topk(qtext, k),
+                              f"driver compact q{qid}")
     res.unpersist()
 
 
@@ -935,14 +970,9 @@ def test_fully_tombstoned_shards_compact_to_valid_patch(spark, tmp_path,
         res.unpersist()
 
 
-def _jobs(spark) -> int:
-    """Spark jobs submitted so far (the DAGScheduler's job id counter)."""
-    return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
-
-
 def test_tombstoned_index_reads_run_no_inference_job(spark, tiny_index,
                                                      tiny_pdf, tmp_path,
-                                                     monkeypatch):
+                                                     monkeypatch, spark_jobs):
     """Every merged view reads its dirs with their schemas.* schema: on
     an index with tombstones and dead docs, building the tombstone,
     docs and dead-docs frames runs no Spark job (an untyped parquet read
@@ -965,9 +995,9 @@ def test_tombstoned_index_reads_run_no_inference_job(spark, tiny_index,
 
     s = Searcher.load(spark, path)
     for read in (s.tombstones, s.docs, s.snap.dead_docs):
-        n0 = _jobs(spark)
+        n0 = spark_jobs()
         assert read() is not None
-        assert _jobs(spark) == n0, read
+        assert spark_jobs() == n0, read
 
     texts = tiny_pdf.sort_values(["conv_id", "turn_idx"])["text"].tolist()
     oracle = BM25Oracle({i: t for i, t in enumerate(texts)
@@ -977,9 +1007,9 @@ def test_tombstoned_index_reads_run_no_inference_job(spark, tiny_index,
         with monkeypatch.context() as mp:
             mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
             s.search_batch(QUERIES, exact=True)
-            n0 = _jobs(spark)
+            n0 = spark_jobs()
             res = s.search_batch(QUERIES, exact=True)
-            assert _jobs(spark) - n0 == n_jobs, site
+            assert spark_jobs() - n0 == n_jobs, site
             assert s.last_plan["scan"]["ran"] == site, s.last_plan
             assert s.last_plan["mask_in_closure"] is True, s.last_plan
         for qid, qtext, k in QUERIES:
@@ -1040,7 +1070,8 @@ def test_one_maintainer_across_every_commit_kind(spark, tmp_path,
     check("compact")
 
 
-def test_excluded_shards_filter_in_constant_py4j_calls(spark, topic):
+def test_excluded_shards_filter_in_constant_py4j_calls(spark, topic,
+                                                       py4j_commands):
     """A union that drops seg_excludes shards sends the shard set in one
     buffer: building it costs the same number of py4j gateway round
     trips for 10 and for 4,000 excluded shards, and with the extra
@@ -1058,16 +1089,7 @@ def test_excluded_shards_filter_in_constant_py4j_calls(spark, topic):
     n_shards = -(-m["next_doc_id"] // 64)
     ten = [1, 2, 3, 9, 10, 20, 33, 34, 50, n_shards - 1]
     many = ten + list(range(n_shards + 7, n_shards + 7 + 3990))
-    client = spark.sparkContext._gateway._gateway_client
-    sent = [0]
-    send = client.send_command
-
-    def counting(command, *a, **k):
-        # py4j memory deletes ("m\nd\n...") are sent when Python's GC
-        # frees earlier, unrelated proxies; they are not the build's
-        if not command.startswith("m\nd\n"):
-            sent[0] += 1
-        return send(command, *a, **k)
+    sent = py4j_commands
 
     def build(excl):
         snap = Snapshot(spark, topic[0].fs, path,
@@ -1079,12 +1101,8 @@ def test_excluded_shards_filter_in_constant_py4j_calls(spark, topic):
         return calls, {r["shard"]: r["count"] for r in
                        df.groupBy("shard").count().collect()}
 
-    client.send_command = counting
-    try:
-        calls_ten, rows_ten = build(ten)
-        calls_many, rows_many = build(many)
-    finally:
-        del client.send_command
+    calls_ten, rows_ten = build(ten)
+    calls_many, rows_many = build(many)
     assert calls_ten == calls_many, (calls_ten, calls_many)
     assert rows_ten == rows_many
     shards = pq.read_table(os.path.join(path, "segments", "base"),

@@ -92,7 +92,8 @@ def test_pruning_routes_selective_queries_at_high_shard_count(
 
 
 def test_search_batch_is_lazy_and_directory_cache_warms(spark, tiny_index,
-                                                        monkeypatch):
+                                                        monkeypatch,
+                                                        spark_jobs):
     """Round-3 judge task 4/10, amended by the round-6 driver-side
     merge: a batch costs a BOUNDED number of Spark jobs (the scan's one
     collect — merge and count add none), and a warm Searcher reuses its
@@ -108,10 +109,7 @@ def test_search_batch_is_lazy_and_directory_cache_warms(spark, tiny_index,
     s = Searcher.load(spark, tiny_index)
     s.search("w0001")  # warm idf cache + JIT
 
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs():
-        return len(tracker.getJobIdsForGroup(None))
+    jobs = spark_jobs
 
     # exhaustive path, idf cached (local pyarrow lookup): at most the
     # one scan-collect job at call time, and the action on the returned
@@ -365,7 +363,8 @@ def test_routed_scan_skips_segment_files(topic):
     assert read == rows[f] < sum(rows.values()), (read, rows[f])
 
 
-def test_warm_routed_batch_scores_in_the_driver(spark, topic, monkeypatch):
+def test_warm_routed_batch_scores_in_the_driver(spark, topic, monkeypatch,
+                                                spark_jobs):
     """A routed scan whose byte slice fits one routed-scan task
     (_ROUTED_TASK_BYTES) is scored in the driver: a warm routed batch
     on the topic fixture launches no Spark job, last_plan records where
@@ -374,10 +373,7 @@ def test_warm_routed_batch_scores_in_the_driver(spark, topic, monkeypatch):
     map-scan and returns identical rows."""
     import pdx_spark.operators.snapshot as S
     s, oracle = topic
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs():
-        return len(tracker.getJobIdsForGroup(None))
+    jobs = spark_jobs
 
     qs = topic_queries(16, 2)
     s.search_batch(qs).collect()  # warms the idf and plan caches
@@ -405,7 +401,8 @@ def test_warm_routed_batch_scores_in_the_driver(spark, topic, monkeypatch):
 
 
 def test_every_closure_strategy_on_both_sites(spark, topic, tiny_oracle,
-                                             many_shards_index, monkeypatch):
+                                             many_shards_index, monkeypatch,
+                                             spark_jobs):
     """Exhaustive (exact=True), unrouted (a hot batch on the many-shard
     index) and routed (the topic fixture) batches, each at the default
     bound, where every scan is scored in the driver, and with
@@ -423,10 +420,7 @@ def test_every_closure_strategy_on_both_sites(spark, topic, tiny_oracle,
               {"seed_scan": False, "main_scan": True}),
              (s_topic, topic_oracle, topic_queries(16, 2), {}, "routed",
               {"seed_scan": False, "main_scan": False})]
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs():
-        return len(tracker.getJobIdsForGroup(None))
+    jobs = spark_jobs
 
     got = {}
     for site, bound in (("driver", SN._ROUTED_TASK_BYTES), ("spark", 0)):
@@ -453,6 +447,41 @@ def test_every_closure_strategy_on_both_sites(spark, topic, tiny_oracle,
             got.setdefault(mode, []).append(sorted(map(tuple, rows)))
     for mode, (driver_rows, spark_rows) in got.items():
         assert driver_rows == spark_rows, mode
+
+
+def test_tombstoned_driver_batch_builds_no_mask_frame(spark, tiny_index,
+                                                     tiny_pdf, tmp_path,
+                                                     py4j_commands):
+    """A driver-scored batch reads a tombstoned index's mask in the
+    driver, and builds no Spark mask frame for it (only the cogroup
+    channel needs one): a warm exhaustive batch sends as many py4j
+    commands after a delete as the same batch before it, and its rows
+    match the oracle over the live docs."""
+    import shutil
+
+    from pdx_spark.operators.maintenance import Maintainer
+    from pdx_spark.oracle import BM25Oracle
+    path = str(tmp_path / "idx")
+    shutil.copytree(tiny_index, path)
+    qs = [(0, "w0000", 10), (1, "w0003 w0150", 10)]
+
+    def warm_batch_commands():
+        s = Searcher.load(spark, path)
+        s.search_batch(qs, exact=True).collect()  # warms the caches
+        n0 = py4j_commands[0]
+        rows = s.search_batch(qs, exact=True).collect()
+        assert s.last_plan["scan"]["ran"] == "driver", s.last_plan
+        return py4j_commands[0] - n0, rows
+
+    before, _ = warm_batch_commands()
+    dead = [0, 5, 17, 64, 130]
+    Maintainer(spark, path).delete(spark.createDataFrame(
+        [(i,) for i in dead], "doc_id long"))
+    after, rows = warm_batch_commands()
+    assert after == before, (before, after)
+    texts = tiny_pdf.sort_values(["conv_id", "turn_idx"])["text"]
+    assert_oracle_rows(rows, qs, BM25Oracle(
+        {i: t for i, t in enumerate(texts) if i not in dead}))
 
 
 def test_planner_counts_shards_over_the_id_space(spark, topic, tmp_path):

@@ -44,7 +44,7 @@ def test_concurrent_batches_keep_their_options(spark, tiny_index):
 
 
 def test_concurrent_driver_scored_batches(spark, topic, many_shards_index,
-                                          monkeypatch):
+                                          monkeypatch, spark_jobs):
     """8 threads run batches on two fresh Searchers, every scan scored
     in the driver: routed and exhaustive (exact=True) batches over the
     topic fixture, and a hot batch that runs the unrouted pass over the
@@ -74,8 +74,7 @@ def test_concurrent_driver_scored_batches(spark, topic, many_shards_index,
     monkeypatch.setattr(ds, "dataset", counted)
     fresh = [Searcher.load(spark, topic[0].path),
              Searcher.load(spark, many_shards_index)]
-    tracker = spark.sparkContext.statusTracker()
-    n0 = len(tracker.getJobIdsForGroup(None))
+    n0 = spark_jobs()
 
     def run(j):
         b = j % len(batches)
@@ -89,29 +88,29 @@ def test_concurrent_driver_scored_batches(spark, topic, many_shards_index,
             got = list(pool.map(run, range(3 * len(batches)), timeout=600))
     finally:
         sys.setswitchinterval(switch)
-    assert len(tracker.getJobIdsForGroup(None)) == n0
+    assert spark_jobs() == n0
     bad = [i for i, (b, rows) in enumerate(got) if rows != want[b]]
     assert not bad, f"{len(bad)} of {len(got)} batches differ: {bad}"
     assert built and len(built) == len(set(built)), built
 
 
-def test_failed_batch_releases_cached_frames(spark, tiny_index, monkeypatch):
+def test_failed_batch_releases_cached_frames(spark, tiny_index, monkeypatch,
+                                             spark_jobs):
     """A cogroup batch that fails mid-scan leaves no cached frame
     behind: the persistent RDDs are those of the warm-up batch (the
     selectivity-sample cache stays, by design, until close())."""
     monkeypatch.setattr(S, "_ROUTING_CAP", 2)  # mask + routing via cogroup
     s = Searcher.load(spark, tiny_index)
     kw = dict(predicate="role = 'assistant'", **PRUNED)
-    tracker = spark.sparkContext.statusTracker()
     s.search_batch(QUERIES[:5], **kw).collect()
-    n0 = len(tracker.getJobIdsForGroup(None))
+    n0 = spark_jobs()
     s.search_batch(QUERIES[:5], **kw).collect()
     assert s.last_plan["mode"] == "cogroup", s.last_plan
     # warm: planning runs on the driver and adds no Spark job. Measured
     # 12 jobs at local[4] and local[8] (selectivity count, seed and main
     # cogroup scans with their window merges); the distributed planner
     # this replaced ran 24
-    assert len(tracker.getJobIdsForGroup(None)) - n0 <= 12
+    assert spark_jobs() - n0 <= 12
     jsc = spark.sparkContext._jsc
     warm = set(jsc.getPersistentRDDs().keys())
 

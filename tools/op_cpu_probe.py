@@ -22,8 +22,8 @@ compact_targeted, ...) it prints:
 
 --spark-site sets pdx_spark.operators.snapshot._ROUTED_TASK_BYTES to 0
 before the run, so every one-task op (exhaustive, unrouted and routed
-scans, append, delete, compact_targeted) runs its Spark site, with
-perfbench's correctness check on as usual.
+scans, append, delete, compact_targeted, compact) runs its Spark site,
+with perfbench's correctness check on as usual.
 
 Run from the repository root. The workload's own last line (its JSON
 result) is printed by perfbench as usual; the probe table follows it.
