@@ -1,88 +1,84 @@
 """Query serving: block-max pruned top-k BM25 over the blocked segments.
 
 Mirrors the reference's pruned scan (PDXearch::Search,
-/root/reference/include/pdx/searcher.hpp:596-724), re-shaped for Spark:
+searcher.hpp:596-724), re-shaped for Spark. A batch is Searcher.plan()
+(steps 1-2, everything decided before scoring, as a QueryPlan) then
+Searcher.execute(plan) (steps 3-5); search_batch runs both:
 
-  1. Query prep on the driver: tokenize, fetch idf of query terms from
-     the term_stats parquet (filter pushdown on the sorted `term`
-     column) — analog of rotate-the-query (searcher.hpp:602-613).
-  2. Driver-side plan: the directory slice of the query terms is read
-     on the driver (Snapshot.meta_rows: pyarrow on a local fs, one
-     Spark scan collected as Arrow on any other scheme) and summed in
-     numpy to per-(query, shard) upper bounds — the "rank clusters by
-     promise" step, in-process as in the reference
-     (searcher.hpp:181-215). A batch whose slice or (query, shard)
-     bound count exceeds _PLAN_SLICE_CAP runs exhaustive instead
-     (rank-identical), which bounds driver memory.
-  3. Seed scan ("Start", searcher.hpp:218-281): each query's most
-     promising `seed_shards` shards are scored exactly; the driver
+  1. plan(), query prep on the driver: tokenize, fetch idf of query
+     terms from term_stats (filter pushdown on the sorted `term`
+     column; analog of rotate-the-query, searcher.hpp:602-613), and the
+     predicate's pass fraction and mask.
+  2. plan(), the shard plan: the directory slice of the query terms is
+     read on the driver (Snapshot.meta_rows) and summed in numpy to
+     per-(query, shard) upper bounds — the "rank clusters by promise"
+     step, in-process as in the reference (searcher.hpp:181-215) — and
+     each query's seed shards picked. A batch whose slice or (query,
+     shard) bound count exceeds _PLAN_SLICE_CAP, or too small for
+     pruning to pay, runs exhaustive instead (rank-identical).
+  3. execute(), seed scan ("Start", searcher.hpp:218-281): each query's
+     most promising `seed_shards` shards are scored exactly; the driver
      keeps the k-th best seed score per query (θ, Q floats) and the
      seed top-k (≤ Σk rows) — never candidates.
-  4. Main scan ("Warmup/Prune", searcher.hpp:376-540): per-(query,
-     shard) assignments where the upper bound can still beat θ route
+  4. execute(), main scan ("Warmup/Prune", searcher.hpp:376-540):
+     per-(query, shard) pairs whose upper bound can still beat θ route
      each shard to only its own queries (work = Σ_q |shards_q|, not
      |shards| × Q). Every closure scan (exhaustive, seed, main routed,
      unrouted) goes through one function, Searcher._scan_topk: a scan
      whose estimated byte slice (the routed shards', or the whole
-     index's) fits one routed-scan task (_ROUTED_TASK_BYTES, the byte
-     term of _routed_task_count) is scored IN THE DRIVER, as the
-     reference runs Warmup and Prune in the query's own thread: the
-     shards' rows of the batch's terms come through the one
-     driver-side reader (Snapshot.meta_rows: pyarrow with term and shard
-     filters on a local fs, one Spark scan collected as Arrow on any
-     other scheme) and all of them score in one table — a shard's rows
+     index's) fits one routed-scan task (_ROUTED_TASK_BYTES) is scored
+     IN THE DRIVER, as the reference runs Warmup and Prune in the
+     query's own thread: the shards' rows of the batch's terms come
+     through Snapshot.meta_rows and score in one table — a shard's rows
      together, exact under any file layout. A larger scan runs on
-     Spark. Routing reaches the JVM as data: the batch's term set
-     and the routed shard set are InSet predicates (_in_list, _id_set),
-     so every batch runs the same generated code — one fixed kernel
-     fed a positions array, as searcher.hpp:104-117 — and the shard set
-     still skips segment files at parquet row-group stats. Either way
-     the scorer makes the row-precise (term, shard) cut before it
-     decodes any payload. Spark scans are SHUFFLE-FREE:
-     segment files hold complete shards (the encode shuffle wrote
-     them that way), so the scorer runs as mapInArrow directly on
-     the parquet scan with routing and small masks in the closure.
-     One Arrow scoring body
-     (_arrow_scorer) serves every channel: the driver scan, the map
-     scan, a per-shard groupBy when files may hold several row groups,
-     and the cogroup channel for masks and routing above _ROUTING_CAP.
-     When θ cannot
-     prune (uniform corpora — every shard's bound beats θ), the
-     planner detects it from the main-pair ratio and runs ONE unrouted
-     pass instead that skips each query's seed shards (anti-routing),
-     so the seed results are reused, never rescored. Inside a shard the
-     scorer builds a per-doc upper-bound array from block metadata
-     alone (range-add/cumsum), masks docs below θ, skips terms with no
-     surviving candidate, decodes each term ONCE PER PARTITION (all of
-     the partition's shards in one batched unpack straight from the
-     Arrow payload buffers, sliced per shard by searchsorted), and
-     scores with one vectorized add per (query, term) in float64 (numpy
-     is our SIMD; scalar_computers.hpp:19-44's role). Exactness: every
-     term with a candidate is decoded fully, so candidate scores are
-     complete; pruned docs provably score < θ.
-  5. Global merge: per-partition (or driver-scan) per-query top-k,
-     merged on the driver (bounded: n_segment_files x Σk rows). Above
-     _MERGE_LOCAL_CAP, or when the scan ran per shard, a window top-k
-     per query runs Spark-side instead. Tie-break (score desc, doc_id
-     asc).
+     Spark. Routing reaches the JVM as data: the batch's term set and
+     the routed shard set are InSet predicates (_in_list, _id_set), so
+     every batch runs the same generated code — one fixed kernel fed a
+     positions array, as searcher.hpp:104-117 — and the shard set still
+     skips segment files at parquet row-group stats. Spark scans are
+     SHUFFLE-FREE: segment files hold complete shards, so the scorer
+     runs as mapInArrow directly on the parquet scan with routing and
+     small masks in the closure. One Arrow scoring body (_arrow_scorer)
+     serves every channel: the driver scan, the map scan, a per-shard
+     groupBy when files may hold several row groups, and the cogroup
+     channel for masks and routing above _ROUTING_CAP. When θ cannot
+     prune (uniform corpora — every shard's bound beats θ), execute()
+     sees it from the main-pair ratio and runs ONE unrouted pass
+     instead that skips each query's seed shards (anti-routing), so the
+     seed results are reused, never rescored. Inside a shard the scorer
+     builds a per-doc upper-bound array from block metadata alone
+     (range-add/cumsum), masks docs below θ, skips terms with no
+     surviving candidate, decodes each term ONCE PER PARTITION (one
+     batched unpack straight from the Arrow payload buffers, sliced per
+     shard by searchsorted), and scores with one vectorized add per
+     (query, term) in float64 (numpy is our SIMD;
+     scalar_computers.hpp:19-44's role). Exactness: every term with a
+     candidate is decoded fully, so candidate scores are complete;
+     pruned docs provably score < θ.
+  5. execute(), global merge: per-partition (or driver-scan) per-query
+     top-k, merged on the driver (bounded: n_segment_files x Σk rows).
+     Above _MERGE_LOCAL_CAP, or when the scan ran per shard, a window
+     top-k per query runs Spark-side instead. Tie-break (score desc,
+     doc_id asc).
 
-Queries run as a batch (one pass scores all queries of the batch —
-amortizes job overhead, SURVEY §7.4). A batch is at most a handful of
-bounded jobs: seed scan (→ θ), main scan + merge; a scan whose slice
-fits one task runs none, so a warm batch on a small index (exhaustive,
-routed or unrouted, with tombstones) launches no Spark job at all. idf
-lookup and planning read metadata on the driver and are cached per term
-on a warm Searcher — the serial fraction is job scheduling plus Q-sized
-collects, which is what makes query throughput scale with executors
-(north rule ≥0.8 N→4N); driver-scored scans are bounded by
-_ROUTED_TASK_BYTES each. The remaining single-box limit is
-memory bandwidth (the scan streams block bytes through Arrow/numpy) —
-see BENCH.md's bandwidth ceiling.
+A QueryPlan holds all of a batch's state, so concurrent batches on one
+Searcher never share any; its `record` (mode and why, counts, cap hits,
+each scan's site, timings) is the batch's trace, and search_batch
+publishes the last finished one as Searcher.last_plan. One pass scores
+all queries of a batch (amortizes job overhead, SURVEY §7.4): at most a
+handful of bounded jobs, and none when every scan fits one task, so a
+warm batch on a small index launches no Spark job at all. idf and the
+directory slice are cached per term on a warm Searcher, each cache
+bounded by _PLAN_SLICE_CAP (_TermCache). The remaining single-box limit
+is memory bandwidth (the scan streams block bytes through Arrow/numpy)
+— see BENCH.md's bandwidth ceiling.
 """
 
 from __future__ import annotations
 
+import threading
 import time
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -104,10 +100,8 @@ _THETA_GUARD = 1e-9  # float-monotonicity guard on upper-bound comparisons
 
 
 def _pdf_df(spark, data: dict, schema) -> DataFrame:
-    """createDataFrame via pandas — takes the Arrow fast path instead of
-    per-row JVM conversion (matters at thousands of driver-side rows:
-    routing pairs, seed top-k, result materialization — all part of
-    the per-batch FIXED cost that bounds scaling)."""
+    """createDataFrame via pandas: the Arrow fast path, not per-row JVM
+    conversion (thousands of driver-side rows per batch)."""
     return spark.createDataFrame(pd.DataFrame(data), schema=schema)
 
 # max (query, shard) routing pairs or mask rows shipped via the scorer
@@ -464,23 +458,16 @@ def _arrow_scorer(spec: dict):
 
 
 def _map_scorer(spec: dict, routing=None, anti=None, mask=None):
-    """mapInArrow adapter: score a SCAN partition directly — no shuffle
-    of the (large, binary) segment frame; routing, anti-routing and the
-    mask ride the closure.
-
-    Correctness under partition fragmentation: a document's postings for
-    all terms live in ONE segment generation (docs are immutable; appends
-    mint new ids) and one generation's (shard) rows live in one file (the
-    encode shuffle wrote them together), so any doc's full score is
-    computed within a single fragment. A shard split across fragments
-    (base + delta dirs) yields per-fragment top-k lists whose union is a
-    superset of the true shard top-k — exact after the global merge.
-    Files must not be split mid-ROW-GROUP by the reader: segment files
-    hold exactly one row group (writer-verified, manifest
-    `seg_single_rg`), and Spark assigns a parquet row group to the one
-    byte-range split containing its midpoint — so even a file larger
-    than maxPartitionBytes yields one real fragment plus empty phantom
-    splits, never a torn shard. load() checks the flag."""
+    """mapInArrow adapter: score a SCAN partition directly (no shuffle of
+    the segment frame); routing, anti-routing and the mask ride the
+    closure. Exact under fragmentation: a doc's postings live in ONE
+    segment generation, whose shard rows live in one file, so its full
+    score is computed in one fragment; a shard split across base and
+    delta dirs yields per-fragment top-k lists whose union is a superset
+    of its top-k, exact after the global merge. A segment file holds one
+    row group (manifest `seg_single_rg`, checked at load), and Spark
+    gives a row group to the one split holding its midpoint, so no file
+    is torn."""
     score = _arrow_scorer(spec)
 
     def fn(batches):
@@ -514,9 +501,53 @@ def _cogroup_scorer(spec: dict, mode: str | None, routed: bool):
     return fn
 
 
+class _TermCache(dict):
+    """term -> value cache of a long-lived Searcher, bounded at
+    _PLAN_SLICE_CAP units (`weight(value)` each): an admit that would
+    pass the bound drops the cache whole first. Batches copy their
+    values out (into their QueryPlan), so a drop never reaches a
+    running batch."""
+
+    def __init__(self, weight):
+        super().__init__()
+        self.weight, self.size, self.lock = weight, 0, threading.Lock()
+
+    def admit(self, new: dict) -> None:
+        with self.lock:  # terms another batch admitted meanwhile count once
+            new = {t: v for t, v in new.items() if t not in self}
+            w = sum(map(self.weight, new.values()))
+            if self.size + w > _PLAN_SLICE_CAP:
+                self.clear()
+                self.size = 0
+            if w <= _PLAN_SLICE_CAP:
+                self.update(new)
+                self.size += w
+
+
+@dataclass
+class QueryPlan:
+    """What Searcher.plan decided for one batch, run by execute.
+    `record` is its trace: mode ("empty", "exhaustive", or "two_phase"
+    until execute settles "routed", "unrouted" or "cogroup") and why,
+    counts, filter mode and pass fraction, scan sites, timings."""
+    live: list  # [(query_id, sorted distinct terms, k)]
+    record: dict
+    terms: list = field(default_factory=list)  # the live queries' terms
+    spec: dict | None = None  # scoring spec with the batch's own idf
+    mask: dict | None = None  # closure mask (_masks)
+    mask_df: DataFrame | None = None  # cogroup mask frame
+    pred_mode: str | None = None
+    q_ub: dict | None = None  # query -> (shards, ub); None: exhaustive
+    seed: set = field(default_factory=set)  # seed (query, shard) pairs
+
+
 class Searcher:
     """Loaded index handle (analog of the restored PDX index +
     PDXearch searcher, index.hpp:241-267)."""
+
+    # the record of the last finished search_batch (QueryPlan.record):
+    # which strategy ran and why — the hook ops dashboards and tests read
+    last_plan: dict = {}
 
     def __init__(self, spark, path: str):
         self.spark = spark
@@ -538,15 +569,11 @@ class Searcher:
         self.n_docs = self.manifest["n_docs"]
         self.avgdl = self.manifest["avgdl"]
         self._sel_sample = None  # cached docs sample for selectivity est.
-        self._last_sel_frac: float | None = None  # last predicate pass-rate
-        self._idf_cache: dict[str, float] = {}  # term -> idf (load-time N)
-        # planning cache: term -> (shards, admissible tfnorm bound) from
-        # the directory parquet (see _plan_slice)
-        self._plan_cache: dict[str, tuple] = {}
-        # populated by every search_batch: which physical strategy ran
-        # ({mode: exhaustive|routed|unrouted|cogroup, ...counts}) — the
-        # observability hook ops dashboards and tests read
-        self.last_plan: dict = {}
+        # term -> idf (load-time N), counted in terms; term -> (shards,
+        # admissible tfnorm bound) from the directory (_plan_slice),
+        # counted in shard rows
+        self._idf_cache = _TermCache(lambda v: 1)
+        self._plan_cache = _TermCache(lambda v: max(1, len(v[0])))
         # the reader of this manifest (dir lists, merged views,
         # meta_rows, the segment byte estimate), as Maintainer's
         self.snap = Snapshot(spark, self.fs, path, self.manifest,
@@ -554,19 +581,14 @@ class Searcher:
         self._map_scan_ok = self._verify_scan_granularity()
 
     def _routed_task_count(self, n_routed_shards: int) -> int:
-        """Task count for a routed scan on Spark: at most one task per
-        routed shard, never more than defaultParallelism, and never more
-        tasks than the routed BYTE slice justifies. Each python task
-        has a fixed 0.14-0.25 CPU-s cost before any engine code runs,
-        even in a reused worker: pyspark's worker_util.setup_spark_files
-        calls importlib.invalidate_caches(), which on Python 3.11
-        re-reads the central directory of pyspark.zip (1,328 entries)
-        once per zipimporter (about 16). So a few-MB routed slice should
-        run as 1-2 tasks even on a 32-core box — the round-5 pruning
-        bench measured the task overhead alone flipping the routed path
-        from a CPU win to a 2x CPU loss on a 28 MB index. A slice that
-        fits ONE task by bytes never gets here: Snapshot.site sends it
-        to the driver, which saves the task and the job around it too."""
+        """Task count for a routed scan on Spark: at most one per routed
+        shard, at most defaultParallelism, and at most one per
+        _ROUTED_TASK_BYTES of the routed BYTE slice. Each python task
+        has a fixed 0.14-0.25 CPU-s cost (pyspark's setup_spark_files
+        re-reads pyspark.zip about 16 times); the round-5 pruning bench
+        measured it alone turning routed scans from a CPU win into a 2x
+        loss on a 28 MB index. A slice that fits ONE task never gets
+        here: Snapshot.site sends it to the driver."""
         n = max(1, min(self.spark.sparkContext.defaultParallelism,
                        n_routed_shards))
         site = self.snap.site(n_routed_shards, False)
@@ -575,20 +597,13 @@ class Searcher:
         return n
 
     def _verify_scan_granularity(self) -> bool:
-        """The shuffle-free map-scan is exact only if the reader never
-        splits a segment file mid-file (a doc's term rows would fragment
-        and partial BM25 scores would merge wrong). Spark splits parquet
-        files at ROW-GROUP granularity, so the real invariant is: every
-        segment file holds exactly ONE row group (writers enforce it via
-        parquet.block.size >> file size and verify with pyarrow; the
-        manifest carries the verdict per build/append/compact).
-
-        Returns True only when the invariant is PROVEN — via the manifest
-        flag writers record after verifying their own output, or by
-        re-reading footers here (pyarrow locally, parquet-hadoop on any
-        other scheme). A violating file returns False and the closure
-        scorer runs under groupBy("shard") instead of on the scan
-        partitions, which is exact under any file layout."""
+        """The shuffle-free map-scan is exact only if every segment file
+        holds exactly ONE row group (Spark splits parquet at row-group
+        granularity; a torn file would merge partial BM25 scores).
+        True only when PROVEN: by the manifest flag writers record
+        after verifying their output, or by re-reading the footers
+        here. Otherwise the closure scorer runs under groupBy("shard"),
+        exact under any file layout."""
         if self.manifest.get("seg_single_rg") is True:
             return True
         return all(verify_single_rowgroup(self.fs, d, root=self.path)
@@ -630,60 +645,70 @@ class Searcher:
                predicate: str | None = None,
                require_all_terms: bool = False,
                min_should_match: int = 1) -> list[tuple[int, float]]:
-        df = self.search_batch([(0, query_text, k)], exact=exact,
-                               predicate=predicate,
-                               require_all_terms=require_all_terms,
-                               min_should_match=min_should_match)
-        rows = df.orderBy(F.desc("score"), F.asc("doc_id")).collect()
-        return [(r["doc_id"], r["score"]) for r in rows]
+        """One query -> [(doc_id, score)], sorted (score desc, doc_id
+        asc) in the driver from the rows execute() holds there."""
+        pdf = self.execute(self.plan(
+            [(0, query_text, k)], exact=exact, predicate=predicate,
+            require_all_terms=require_all_terms,
+            min_should_match=min_should_match))
+        if pdf is None:
+            return []
+        pdf = pdf.sort_values(["score", "doc_id"], ascending=[False, True])
+        return list(zip(pdf["doc_id"].tolist(), pdf["score"].tolist()))
 
     def search_batch(self, queries: list[tuple[int, str, int]], *,
                      exact: bool = False, predicate: str | None = None,
-                     seed_shards: int = 2,
-                     two_phase_min_shards: int = 64,
+                     seed_shards: int = 2, two_phase_min_shards: int = 64,
                      force_two_phase: bool = False,
                      require_all_terms: bool = False,
                      min_should_match: int = 1) -> DataFrame:
         """-> DataFrame(query_id, doc_id, score), per-query top-k
-        (materialized — result sets are tiny, <= Σ k).
+        (materialized — result sets are tiny, <= Σ k): plan() with these
+        options, then execute(); the plan's record becomes last_plan."""
+        plan = self.plan(queries, exact=exact, predicate=predicate,
+                         seed_shards=seed_shards,
+                         two_phase_min_shards=two_phase_min_shards,
+                         force_two_phase=force_two_phase,
+                         require_all_terms=require_all_terms,
+                         min_should_match=min_should_match)
+        pdf = self.execute(plan)
+        self.last_plan = plan.record
+        return self._results_df(pdf)
 
-        exact=True forces the exhaustive blocked scan (nprobe=0 analog,
-        searcher.hpp:614-616). Otherwise, when the index has enough
-        shards for shard-skipping to pay for a second job, the θ-seeded
-        two-phase scan runs: the driver plans it from the directory
-        slice of the query terms (_upper_bounds), a seed scan yields θ
-        (the k-th seed score per query), and a main scan covers the
-        (query, shard) pairs whose bound can still beat θ. A batch whose
-        plan exceeds _PLAN_SLICE_CAP runs exhaustive and last_plan
-        records the cap and the observed count. Results are
-        rank-identical either way; only the work differs. The adaptive
-        choice mirrors the reference's selectivity-adaptive scan
-        branches (searcher.hpp:321-345). Each scan runs in the driver
-        when its byte slice fits _ROUTED_TASK_BYTES (Snapshot.site; the
-        whole index's for exhaustive and unrouted scans), else on Spark;
-        last_plan has each scan's site record (_scan_topk)."""
+    def plan(self, queries: list[tuple[int, str, int]], *,
+             exact: bool = False, predicate: str | None = None,
+             seed_shards: int = 2, two_phase_min_shards: int = 64,
+             force_two_phase: bool = False, require_all_terms: bool = False,
+             min_should_match: int = 1) -> QueryPlan:
+        """Everything a batch decides before it scores -> QueryPlan: the
+        live queries with the batch's own idf, the scoring spec, the
+        predicate's filter mode, pass fraction and masks, and the
+        strategy with its reason. exact=True forces the exhaustive scan
+        (nprobe=0 analog, searcher.hpp:614-616). Otherwise, when the
+        index has enough shards for skipping to pay, the θ-seeded
+        two-phase scan is planned from the directory slice of the query
+        terms (_upper_bounds): per-(query, shard) bounds and each
+        query's `seed_shards` seed pairs; a plan over _PLAN_SLICE_CAP
+        runs exhaustive, its record naming the cap and the observed
+        count. Results are rank-identical either way (the reference's
+        adaptive branches, searcher.hpp:321-345). Writes no Searcher
+        state but the per-term caches."""
         tm: dict[str, float] = {}
+        rec = {"mode": "empty", "timings": tm}
         _t0 = time.time()
-        parsed = []
-        for qid, qtext, k in queries:
-            terms = sorted(set(tokenize_py(qtext)))
-            parsed.append((int(qid), terms, int(k)))
+        parsed = [(int(qid), sorted(set(tokenize_py(qtext))), int(k))
+                  for qid, qtext, k in queries]
         all_terms = sorted({t for _, ts, _ in parsed for t in ts})
         if not all_terms:
-            self.last_plan = {"mode": "empty"}
-            return self._results_df()
-
+            return QueryPlan([], rec)
         idf = self._idf_lookup(all_terms)
         tm["idf"] = round(time.time() - _t0, 3)
-        # conjunctive (AND) semantics: every query term must match. A
-        # query with an OOV/dead term can match nothing — drop it HERE
-        # (the per-shard absent-term check below only sees terms that
-        # exist somewhere). Exact per shard because doc-range sharding
-        # puts all of a doc's postings in one shard; θ pruning stays
-        # admissible because the OR upper bound >= the AND score.
-        # min_should_match generalizes both: OR is m=1, AND is m=n. m
-        # counts matched distinct query terms; a query whose
-        # corpus-present term count falls below m can match nothing.
+        # min_should_match m counts matched distinct query terms (OR is
+        # m=1, require_all_terms AND is m=n): a query with an OOV/dead
+        # term under AND, or fewer live terms than m, matches nothing —
+        # dropped HERE, as the scorer's per-shard check (exact: a doc's
+        # postings share one shard) only sees terms that exist. θ stays
+        # admissible: the OR upper bound >= the AND score.
         min_match = max(int(min_should_match), 1)
         if require_all_terms:
             live = [(q, ts, k) for q, ts, k in parsed
@@ -694,135 +719,121 @@ class Searcher:
         live = [(q, ts, k) for q, ts, k in live
                 if len(ts) >= min_match and ts]
         if not live:
-            self.last_plan = {"mode": "empty"}  # every term OOV/dead
-            return self._results_df()
+            return QueryPlan([], rec)  # every term OOV/dead
         all_terms = sorted({t for _, ts, _ in live for t in ts})
-        # per-batch scoring options travel in the scan spec, never on the
-        # (possibly shared) Searcher
         spec = {"idf": idf, "avgdl": self.avgdl, "k1": self.params.k1,
                 "b": self.params.b,
                 "docs_per_shard": self.cfg.docs_per_shard,
                 "require_all": bool(require_all_terms),
                 "min_match": min_match}
+        pred_mode, sel_frac = (None, None) if predicate is None \
+            else self._filter_mode(predicate)
+        mask, mask_df = self._masks(predicate, pred_mode, sel_frac)
 
-        # a small mask rides the scorer closure, so every branch below
-        # keeps the closure map scan; only a large one comes as mask_df
-        closure_mask, mask_df, pred_mode = self._masks(predicate)
-
-        n_shards_total = self.snap.n_shards()
-        # exhaustive when pruning cannot pay: too few shards for skipping
-        # to matter, or the BATCH is so large that the seed phase alone
-        # would touch ~every shard (Q x seed_shards >= shards means the
-        # seed scan is already one full pass of I/O; the main scan would
-        # be a second). Work-based, not corpus-based — the same batch
-        # size picks two-phase on a bigger index. force_two_phase
+        n_shards = self.snap.n_shards()
+        # exhaustive when pruning cannot pay: too few shards, or a batch
+        # so large that its seed scan alone (Q x seed_shards >= shards)
+        # is a full pass of I/O. Work-based, not corpus-based: the same
+        # batch picks two-phase on a bigger index. force_two_phase
         # overrides (tests/bench exercise the pruned path explicitly).
-        big_batch = len(live) * seed_shards >= n_shards_total
+        big_batch = len(live) * seed_shards >= n_shards
         q_ub = plan_cap = None
         if not exact and (force_two_phase or not (
-                n_shards_total < max(two_phase_min_shards, 4 * seed_shards)
+                n_shards < max(two_phase_min_shards, 4 * seed_shards)
                 or big_batch)):
             _t0 = time.time()
             q_ub, plan_cap = self._upper_bounds(live, all_terms, idf,
                                                 require_all_terms)
             tm["plan_ub"] = round(time.time() - _t0, 3)
-        qspec0 = dict(spec, queries=[(q, ts, k, None)
-                                     for q, ts, k in live])
-        if q_ub is None:
-            site = self.snap.site(n_shards_total, mask_df is None)
-            self.last_plan = {"mode": "exhaustive",
-                              "n_shards": n_shards_total,
-                              "big_batch": big_batch,
-                              "mask_in_closure": closure_mask is not None,
-                              "scan": site, "timings": tm}
-            if plan_cap is not None:
-                self.last_plan["plan_cap"] = plan_cap
-            return self._results_df(self._scan_topk(
-                site, qspec0, live, all_terms, mask=closure_mask,
-                cogroup=None if mask_df is None else (mask_df, pred_mode,
-                                                      None)))
-
-        seed_set = set()
-        for q, (ush, ub) in q_ub.items():
+        seed = set()
+        for q, (ush, ub) in (q_ub or {}).items():
             order = np.lexsort((ush, -ub))[:seed_shards]
-            seed_set.update((q, int(ush[i])) for i in order)
-        seed_routing = _route(seed_set)
-        seed_site = self.snap.site(len(seed_routing), mask_df is None)
+            seed.update((q, int(ush[i])) for i in order)
+        rec.update(mode="exhaustive" if q_ub is None else "two_phase",
+                   n_shards=n_shards, n_queries=len(live),
+                   big_batch=big_batch, mask_in_closure=mask is not None,
+                   filter_mode=pred_mode, sel_frac=sel_frac)
+        if plan_cap is not None:
+            rec["plan_cap"] = plan_cap
+        return QueryPlan(live, rec, all_terms, spec, mask, mask_df,
+                         pred_mode, q_ub, seed)
 
-        # ---- seed top-k + θ: the per-query top-k over the seed shards
-        # (bounded: <= Σk rows) lands on the driver, from the driver scan
-        # or ONE Spark job. θ (the k-th seed score, searcher.hpp:82-91's
-        # threshold role) falls out driver-side, and the rows themselves
-        # are REUSED as the seed contribution to the final merge — the
-        # seed scan is never thrown away or re-run.
+    def execute(self, plan: QueryPlan) -> pd.DataFrame | None:
+        """Run a plan's scans -> its per-query top-k rows (query_id,
+        doc_id, score) as pandas, None for an empty plan: one exhaustive
+        scan, or seed scan -> θ -> the unrouted, routed or cogroup main
+        scan, each through _scan_topk. Writes each scan's site record,
+        the two-phase mode and pair counts into plan.record, and no
+        Searcher state."""
+        if not plan.live:
+            return None
+        rec, live, terms, mask = plan.record, plan.live, plan.terms, plan.mask
+        n_shards, closure = rec["n_shards"], plan.mask_df is None
+        cg = None if closure else (plan.mask_df, plan.pred_mode)
+        qspec0 = dict(plan.spec, queries=[(q, ts, k, None)
+                                          for q, ts, k in live])
+        if plan.q_ub is None:
+            rec["scan"] = self.snap.site(n_shards, closure)
+            return self._scan_topk(rec["scan"], qspec0, live, terms,
+                                   mask=mask, cogroup=cg and (*cg, None))
+
+        # seed top-k + θ: the per-query top-k over the seed shards (<= Σk
+        # rows) lands on the driver; θ (the k-th seed score,
+        # searcher.hpp:82-91) falls out of it, and the rows are REUSED
+        # as the seed shards' part of the final merge, never re-run.
+        seed_routing = _route(plan.seed)
+        rec["seed_scan"] = self.snap.site(len(seed_routing), closure)
         _t0 = time.time()
-        seed_pdf = self._scan_topk(seed_site, qspec0, live, all_terms,
-                                   routing=seed_routing, mask=closure_mask,
-                                   cogroup=None if mask_df is None else
-                                   (mask_df, pred_mode, seed_set))
-        tm["seed_scan"] = round(time.time() - _t0, 3)
+        seed_pdf = self._scan_topk(rec["seed_scan"], qspec0, live, terms,
+                                   routing=seed_routing, mask=mask,
+                                   cogroup=cg and (*cg, plan.seed))
+        rec["timings"]["seed_scan"] = round(time.time() - _t0, 3)
         seed = seed_pdf.groupby("query_id")["score"].agg(["size", "min"])
         theta = {q: float(seed.at[q, "min"]) for q, _, k in live
                  if q in seed.index and seed.at[q, "size"] >= k}
 
-        # ---- main scan over the (query, shard) pairs that can still
-        # beat θ: they fall out of the in-memory ub vectors (zero jobs)
+        # main scan over the (query, shard) pairs that can still beat θ,
+        # from the in-memory ub vectors (zero jobs)
         pairs = []
-        for q, (ush, ub) in q_ub.items():
+        for q, (ush, ub) in plan.q_ub.items():
             th = theta.get(q)
             keep = ush if th is None else \
                 ush[ub >= th - _THETA_GUARD * abs(th)]
             pairs.extend((q, int(x)) for x in keep)
-        n_main = len(pairs)
-        qspec1 = dict(spec, queries=[(q, ts, k, theta.get(q))
-                                     for q, ts, k in live])
+        n_main = rec["n_main"] = len(pairs)
+        qspec1 = dict(plan.spec, queries=[(q, ts, k, theta.get(q))
+                                          for q, ts, k in live])
+        if closure and n_main > 0.5 * len(live) * n_shards:
+            # θ cannot prune (uniform shards): per-pair routing would
+            # ship ~Q x shards pairs to save nothing. ONE unrouted pass
+            # with per-query θ (WAND with a warmed heap) SKIPS the seed
+            # pairs in the scorer (anti-routing, <= seed_shards x Q
+            # closure entries): the seed top-k supplies those shards, so
+            # no (query, doc) is scored twice.
+            rec.update(mode="unrouted",
+                       main_scan=self.snap.site(n_shards, True))
+            return self._scan_topk(rec["main_scan"], qspec1, live, terms,
+                                   anti=seed_routing, mask=mask,
+                                   extra=seed_pdf)
 
-        if mask_df is None and n_main > 0.5 * len(live) * n_shards_total:
-            # Pruning is ineffective (uniform shards: bounds beat θ
-            # almost everywhere) — per-pair routing would ship ~Q x
-            # shards pairs to save nothing. Run ONE unrouted pass with
-            # per-query θ (classic WAND with a warmed heap), SKIPPING
-            # the seed pairs in the scorer (anti-routing, <= seed_shards
-            # x Q entries in the closure): the collected seed top-k
-            # supplies those shards' contribution, so no (query, doc)
-            # is scored twice and the seed work is reused, not
-            # discarded.
-            main_site = self.snap.site(n_shards_total, True)
-            self.last_plan = {"mode": "unrouted", "n_main": n_main,
-                              "n_shards": n_shards_total,
-                              "n_queries": len(live),
-                              "mask_in_closure": closure_mask is not None,
-                              "seed_scan": seed_site,
-                              "main_scan": main_site,
-                              "timings": tm}
-            return self._results_df(self._scan_topk(
-                main_site, qspec1, live, all_terms, anti=seed_routing,
-                mask=closure_mask, extra=seed_pdf))
-
-        main_pairs = [p for p in pairs if p not in seed_set]
+        main_pairs = [p for p in pairs if p not in plan.seed]
         routing = _route(main_pairs)
         # a large mask, or routing too large for the closure, rides the
         # cogroup channel as aux rows built from the driver's pair list
-        cogroup = mask_df is not None or n_main > _ROUTING_CAP
-        main_site = self.snap.site(len(routing), not cogroup) \
-            if routing else None
-        self.last_plan = {"mode": "cogroup" if cogroup else "routed",
-                          "n_main": n_main,
-                          "n_main_shards": len(routing),
-                          "n_shards": n_shards_total,
-                          "n_queries": len(live),
-                          "mask_in_closure": closure_mask is not None,
-                          "seed_scan": seed_site,
-                          "main_scan": main_site,
-                          "timings": tm}
+        cogroup = not closure or n_main > _ROUTING_CAP
+        rec.update(mode="cogroup" if cogroup else "routed",
+                   n_main_shards=len(routing),
+                   main_scan=self.snap.site(len(routing), not cogroup)
+                   if routing else None)
         if not routing:
             # every surviving pair was a seed pair: the collected seed
             # top-k IS the answer — zero further jobs
-            return self._results_df(seed_pdf)
-        return self._results_df(self._scan_topk(
-            main_site, qspec1, live, all_terms, routing=routing,
-            mask=closure_mask, extra=seed_pdf,
-            cogroup=(mask_df, pred_mode, main_pairs) if cogroup else None))
+            return seed_pdf
+        return self._scan_topk(
+            rec["main_scan"], qspec1, live, terms, routing=routing,
+            mask=mask, extra=seed_pdf,
+            cogroup=(plan.mask_df, plan.pred_mode, main_pairs)
+            if cogroup else None)
 
     def _upper_bounds(self, live, terms: list[str], idf: dict,
                       require_all: bool):
@@ -924,16 +935,15 @@ class Searcher:
         (manifest["dir_quant"]); ceil/floor quantization keeps them
         admissible.
 
-        The directory is metadata, orders of magnitude smaller than the
-        index, so the plan is ranked in-process as in the reference
-        (searcher.hpp:181-215). Cached per term on the warm Searcher,
-        like idf. The slice counts the cached rows of the batch's terms
-        plus the rows read for the rest; above _PLAN_SLICE_CAP the plan
-        is None and nothing new is cached."""
+        Cached per term on the warm Searcher (_TermCache), like idf.
+        The slice counts the cached rows of the batch's terms plus the
+        rows read for the rest; above _PLAN_SLICE_CAP the plan is None
+        and nothing new is cached."""
         from pdx_spark.functions.quantize import ZERO_PARAMS, dequantize_np
-        missing = [t for t in terms if t not in self._plan_cache]
-        n_slice = sum(len(self._plan_cache[t][0]) for t in terms
-                      if t in self._plan_cache)
+        got = {t: v for t in terms
+               if (v := self._plan_cache.get(t)) is not None}
+        missing = [t for t in terms if t not in got]
+        n_slice = sum(len(v[0]) for v in got.values())
         dirs = self.snap.directory_dirs()
         tab = self.snap.meta_rows(
             dirs, schemas.DIRECTORY, ["term", "shard", "max_tf_q", "min_dl_q"],
@@ -957,16 +967,16 @@ class Searcher:
                 # one admissible bound so ub isn't inflated
                 pdf = pdf.groupby(["term", "shard"], as_index=False) \
                     .agg(max_tf=("max_tf", "max"), min_dl=("min_dl", "min"))
+            empty = (np.empty(0, dtype=np.int64), np.empty(0))
+            new = dict.fromkeys(missing, empty)  # absent terms: no shards
             for t, grp in pdf.groupby("term", sort=False):
-                g = tfnorm_np(grp["max_tf"].to_numpy(),
-                              grp["min_dl"].to_numpy(),
-                              self.avgdl, self.params)
-                self._plan_cache[str(t)] = (
-                    grp["shard"].to_numpy(dtype=np.int64), g)
-            for t in missing:  # absent terms cache as empty
-                self._plan_cache.setdefault(
-                    t, (np.empty(0, dtype=np.int64), np.empty(0)))
-        return {t: self._plan_cache[t] for t in terms}, n_slice
+                new[str(t)] = (grp["shard"].to_numpy(dtype=np.int64),
+                               tfnorm_np(grp["max_tf"].to_numpy(),
+                                         grp["min_dl"].to_numpy(),
+                                         self.avgdl, self.params))
+            self._plan_cache.admit(new)
+            got.update(new)
+        return {t: got[t] for t in terms}, n_slice
 
     def _live_df(self, **where) -> dict[str, int]:
         """term -> df summed over term_stats base + deltas (delete
@@ -1004,16 +1014,19 @@ class Searcher:
     def _idf_lookup(self, terms: list[str]) -> dict[str, float]:
         """term -> idf for the query terms, from term_stats (base +
         deltas) through Snapshot.meta_rows. Driver-cached per Searcher
-        (N is load-time fixed, so idf is too). OOV and dead terms are cached
-        as absent (df<=0) so repeats skip the lookup too."""
-        missing = [t for t in terms if t not in self._idf_cache]
+        (N is load-time fixed, so idf is too). OOV and dead terms are
+        cached as NaN (df<=0) so repeats skip the lookup too."""
+        got = {t: v for t in terms
+               if (v := self._idf_cache.get(t)) is not None}
+        missing = [t for t in terms if t not in got]
         if missing:
             df_by_term = self._live_df(terms=missing)
-            for t in missing:
-                d = df_by_term.get(t, 0)
-                self._idf_cache[t] = (
-                    float(idf_np(d, self.n_docs)) if d > 0 else float("nan"))
-        return {t: v for t in terms if not np.isnan(v := self._idf_cache[t])}
+            new = {t: float(idf_np(d, self.n_docs)) if (
+                d := df_by_term.get(t, 0)) > 0 else float("nan")
+                for t in missing}
+            self._idf_cache.admit(new)
+            got.update(new)
+        return {t: v for t in terms if not np.isnan(v := got[t])}
 
     def _pairs_df(self, pairs) -> DataFrame:
         """Driver (query, shard) pairs -> the asg_df frame of _scan."""
@@ -1031,47 +1044,44 @@ class Searcher:
         return self.spark.createDataFrame(pdf, schema=schemas.RESULTS)
 
     # -- internals -----------------------------------------------------------
-    def _filter_mode(self, predicate: str) -> str:
-        """allow/deny from a CACHED docs sample — never a per-batch
-        full-table count (the scale-killer flagged in round 1). The mode
-        only affects which side of the predicate ships to the scorer;
-        results are identical either way, so sampling error is benign."""
+    def _filter_mode(self, predicate: str) -> tuple[str, float]:
+        """-> (allow/deny, pass fraction) from a CACHED docs sample —
+        never a per-batch full-table count (the scale-killer flagged in
+        round 1). The mode only affects which side of the predicate
+        ships to the scorer; results are identical either way, so
+        sampling error is benign."""
         from pdx_spark.plans.planner import SELECTIVITY_THRESHOLD
-        if self._sel_sample is None:
+        sample = self._sel_sample
+        if sample is None:
             frac = min(1.0, 200_000.0 / max(self.n_docs, 1))
             s = self.docs() if frac >= 1.0 else self.docs().sample(
                 fraction=frac, seed=SEED)
             s = s.persist()
-            self._sel_sample = (s, s.count())
-        sample, n = self._sel_sample
+            self._sel_sample = sample = (s, s.count())
+        sample, n = sample
         n_pass = sample.filter(F.expr(predicate)).count()
-        self._last_sel_frac = n_pass / max(n, 1)
-        return "deny" if n_pass >= SELECTIVITY_THRESHOLD * max(n, 1) else "allow"
+        mode = "deny" if n_pass >= SELECTIVITY_THRESHOLD * max(n, 1) \
+            else "allow"
+        return mode, n_pass / max(n, 1)
 
-    def _masks(self, predicate: str | None) -> tuple:
-        """-> (closure mask | None, cogroup mask frame | None, mode) of a
-        batch's predicate and tombstones. Small masks ride the scorer
-        CLOSURE instead of the cogroup channel: the reference fuses
-        selection vectors into the scan (searcher.hpp:284-372) rather
-        than running a separate routing pass, and a selective predicate
-        or a short tombstone list is exactly that case — forcing it
-        through cogroup forfeits the shuffle-free map-scan and the
-        unrouted pass (both need the mask in the closure). This cap only
-        picks the channel: {mode, ids sorted int64[], p int8[]} when the
-        mask has at most _ROUTING_CAP rows, else the frame (_mask_df).
-        Tombstones alone are read in the driver (doc_ids), so only a
-        predicate's bounded peek or the cogroup channel builds a frame.
-        The sample-based selectivity estimate skips the peek when the
-        mask is obviously huge."""
-        pred_mode = None if predicate is None \
-            else self._filter_mode(predicate)
+    def _masks(self, predicate: str | None, pred_mode: str | None,
+               sel_frac: float | None) -> tuple:
+        """-> (closure mask | None, cogroup mask frame | None) of a
+        batch's predicate (with its _filter_mode and pass fraction) and
+        tombstones. A mask of at most _ROUTING_CAP rows rides the scorer
+        CLOSURE as {mode, ids sorted int64[], p int8[]}, as the
+        reference fuses selection vectors into the scan
+        (searcher.hpp:284-372), keeping the map scan and the unrouted
+        pass; a larger one is the cogroup frame (_mask_df). Tombstones
+        alone are read in the driver (doc_ids); a predicate's mask is
+        peeked, unless the sample's pass fraction shows it is huge."""
         if pred_mode is None and self.snap.tomb_dir() is None:
-            return None, None, None
+            return None, None
         est = self.manifest.get("tombstones", 0)
         mask_df = None
-        if pred_mode is not None:  # _filter_mode set _last_sel_frac
-            est += self.n_docs * (self._last_sel_frac if pred_mode == "allow"
-                                  else 1.0 - self._last_sel_frac)
+        if pred_mode is not None:
+            est += self.n_docs * (sel_frac if pred_mode == "allow"
+                                  else 1.0 - sel_frac)
             mask_df = self._mask_df(predicate, pred_mode)
         if est <= 2 * _ROUTING_CAP:
             if mask_df is None:  # a driver read, no job on a local fs
@@ -1084,11 +1094,11 @@ class Searcher:
                 p = pdf["p"].to_numpy(np.int8)
             if len(ids) <= _ROUTING_CAP:
                 order = np.argsort(ids, kind="stable")
-                return ({"mode": pred_mode, "ids": ids[order],
-                         "p": p[order]}, None, pred_mode)
+                return {"mode": pred_mode, "ids": ids[order],
+                        "p": p[order]}, None
         if mask_df is None:
             mask_df = self._mask_df(None, None)
-        return None, mask_df, pred_mode
+        return None, mask_df
 
     def _mask_df(self, predicate: str | None, mode: str | None) -> DataFrame:
         """The mask as aux-format (shard, kind=0, id, p) rows: p=1
@@ -1124,21 +1134,13 @@ class Searcher:
                   anti_routing: dict[int, set] | None = None,
                   mask: dict | None = None) -> DataFrame:
         """Closure scan on Spark: routing, anti-routing and a SMALL
-        predicate/tombstone mask (`mask`, from _masks — the
-        scan-fused selection vector) ride the scorer closure; large masks
-        go through the cogroup channel instead (search_batch keeps
-        mask_df non-None in that case). A scan of any strategy comes
-        here only when its byte slice is larger than one routed-scan
-        task (Snapshot.site; a smaller one is scored in the driver by
-        _scan_topk). A routed `seg` arrives
-        filtered to the batch's term and routed shard sets only
-        (_id_set); the scorer drops the rows of terms no query routed to
-        their shard needs before it decodes anything. The scorer runs as
-        mapInArrow directly on the parquet scan partitions, shuffle-free
-        (see _map_scorer for why this is exact). Exactness requires the
-        one-row-group-per-file invariant (_verify_scan_granularity); when
-        it is unproven, the same closure scorer runs per shard under
-        groupBy("shard")."""
+        predicate/tombstone mask (`mask`, from _masks — the scan-fused
+        selection vector) ride the scorer closure, run as mapInArrow on
+        the parquet scan partitions, shuffle-free (see _map_scorer). A
+        routed `seg` arrives filtered to the batch's term and routed
+        shard sets (_id_set). When the one-row-group-per-file invariant
+        is unproven (_verify_scan_granularity), the same scorer runs per
+        shard under groupBy("shard")."""
         if not self._map_scan_ok:
             # one shard's rows per call: exact under any file layout
             score = _arrow_scorer(spec)
@@ -1179,14 +1181,11 @@ class Searcher:
                 .applyInArrow(fn, schema=schemas.RESULTS))
 
     def _merge_bound_ok(self, live) -> bool:
-        """May the global top-k merge run driver-side? The map-scan
-        scorer emits at most Σk rows per SCAN PARTITION (per-partition
-        per-query top-k), so the collect is bounded by
-        n_segment_files x Σk rows (coalesced scans only shrink it).
-        Driver work stays bounded-with-distributed-fallback: above the
-        cap, when the file count is unknown, or when the scan runs per
-        shard (map scan unproven: one top-k per SHARD, not per file) the
-        window merge runs Spark-side, unchanged."""
+        """May the global top-k merge run driver-side? The map scan
+        emits at most Σk rows per scan partition, so the collect is
+        bounded by n_segment_files x Σk rows. Above _MERGE_LOCAL_CAP,
+        with an unknown file count, or when the scan runs per shard, the
+        window merge runs Spark-side."""
         if not self._map_scan_ok:
             return False
         n_files = self.snap.segment_file_count()

@@ -45,14 +45,37 @@ def test_choose_filter_mode(spark, searcher):
     """The F3 selectivity branch, Searcher._filter_mode: a rare predicate
     ships its passing ids ("allow"), an all-pass one its failing ids
     ("deny"). The tiny index's docs sample is the whole docs table, so
-    _last_sel_frac times n_docs is the exact pass count."""
-    mode_rare = searcher._filter_mode("role = 'system'")
+    the returned pass fraction times n_docs is the exact pass count."""
+    mode_rare, frac_rare = searcher._filter_mode("role = 'system'")
     assert searcher._sel_sample[1] == searcher.n_docs
-    n_rare = round(searcher._last_sel_frac * searcher.n_docs)
+    n_rare = round(frac_rare * searcher.n_docs)
     assert mode_rare == "allow" and n_rare < 0.5 * searcher.n_docs
-    mode_all = searcher._filter_mode("doc_id >= 0")
-    n_all = round(searcher._last_sel_frac * searcher.n_docs)
+    mode_all, frac_all = searcher._filter_mode("doc_id >= 0")
+    n_all = round(frac_all * searcher.n_docs)
     assert mode_all == "deny" and n_all == searcher.n_docs
+
+
+def test_search_sorts_the_driver_top_k(spark, tiny_index, spark_jobs):
+    """search() sorts the top-k rows execute() holds in the driver, in
+    pandas on (score desc, doc_id asc): a warm search() runs no Spark
+    job beyond its batch's own (none without a predicate; the
+    orderBy().collect() over the batch frame ran 3), and returns the
+    list that sorting the search_batch frame on Spark returns."""
+    s = Searcher.load(spark, tiny_index)
+    q = "w0000 w0003"
+    for kw in ({}, {"exact": True}, {"predicate": "role = 'assistant'"},
+               {"require_all_terms": True}):
+        rows = s.search_batch([(0, q, 10)], **kw) \
+            .orderBy(F.desc("score"), F.asc("doc_id")).collect()
+        want = [(r["doc_id"], r["score"]) for r in rows]
+        assert want, kw
+        n0 = spark_jobs()
+        s.search_batch([(0, q, 10)], **kw)
+        batch_jobs = spark_jobs() - n0
+        assert batch_jobs == 0 or "predicate" in kw, (kw, batch_jobs)
+        n1 = spark_jobs()
+        assert s.search(q, k=10, **kw) == want, kw
+        assert spark_jobs() - n1 == batch_jobs, kw
 
 
 def test_pruning_routes_selective_queries_at_high_shard_count(

@@ -15,6 +15,9 @@ from pdx_spark.operators.searcher import Searcher
 QUERIES = [(i, f"w{(7 * i) % 40:04d} w{(13 * i + 3) % 60:04d} "
                f"w{(5 * i + 1) % 25:04d}", 10) for i in range(30)]
 OPTIONS = [{"require_all_terms": True}, {}, {"min_should_match": 2}]
+# closure-mask predicates: a rare one ships its passing ids ("allow"),
+# an all-pass one its (empty) failing set ("deny")
+PREDICATES = [{"predicate": "role = 'system'"}, {"predicate": "doc_id >= 0"}]
 PRUNED = {"force_two_phase": True, "two_phase_min_shards": 2}
 
 
@@ -24,23 +27,92 @@ def _rows(df):
 
 
 def test_concurrent_batches_keep_their_options(spark, tiny_index):
-    """8 threads run search_batch with mixed require_all_terms /
-    min_should_match on ONE Searcher; every batch equals the serial
-    answer for its own options."""
+    """8 threads run plan() and execute() with mixed require_all_terms /
+    min_should_match and closure-mask predicates on ONE Searcher; every
+    batch equals the serial answer for its own options, and its own
+    plan record has the serial record's mode and mask channel."""
     s = Searcher.load(spark, tiny_index)
     want = [_rows(s.search_batch(QUERIES, **PRUNED, **o)) for o in OPTIONS]
     assert len({tuple(w) for w in want}) == len(OPTIONS)  # options matter
+    kinds = OPTIONS + PREDICATES
+    records = []
+    for o in kinds:
+        if o in PREDICATES:
+            want.append(_rows(s.search_batch(QUERIES, **PRUNED, **o)))
+        else:
+            s.search_batch(QUERIES, **PRUNED, **o)
+        records.append(dict(s.last_plan))
+    assert [r["filter_mode"] for r in records[len(OPTIONS):]] == \
+        ["allow", "deny"], records
+    assert all(r["mask_in_closure"] for r in records[len(OPTIONS):])
 
     def run(i):
-        o = i % len(OPTIONS)
-        return o, _rows(s.search_batch(QUERIES, **PRUNED, **OPTIONS[o]))
+        o = i % len(kinds)
+        plan = s.plan(QUERIES, **PRUNED, **kinds[o])
+        rows = _rows(s._results_df(s.execute(plan)))
+        return o, rows, plan.record
 
     with ThreadPoolExecutor(max_workers=8) as pool:
         futures = [pool.submit(run, i) for i in range(24)]
         got = [f.result(timeout=600) for f in futures]
-    bad = [i for i, (o, rows) in enumerate(got) if rows != want[o]]
+    bad = [i for i, (o, rows, _) in enumerate(got) if rows != want[o]]
     assert not bad, f"{len(bad)} of {len(got)} batches differ: {bad}"
+    for o, _, rec in got:
+        for key in ("mode", "mask_in_closure"):
+            assert rec[key] == records[o][key], (kinds[o], rec, records[o])
 
+
+def test_term_caches_stay_within_the_plan_slice_cap(spark, tiny_index,
+                                                    monkeypatch):
+    """A long-lived Searcher's idf and plan caches are dropped whole
+    when a batch would push them past _PLAN_SLICE_CAP (idf counted in
+    terms, the plan in shard rows): over batches with more distinct
+    terms than the cap, both stay within it and both drop, and every
+    batch equals the answer of a Searcher at the default cap. Then 8
+    threads run the same batches on one fresh Searcher: every batch
+    still equals its answer, and each cache's count still equals the
+    weight of what it holds (a lost or doubled update would break it)."""
+    batches = [[(q, f"w{300 + 3 * b + q:04d}", 10) for q in range(3)]
+               for b in range(12)]
+    ref = Searcher.load(spark, tiny_index)
+    want = [_rows(ref.search_batch(qs, **PRUNED)) for qs in batches]
+    cap = 20
+    monkeypatch.setattr(S, "_PLAN_SLICE_CAP", cap)
+
+    def check_caches(s):
+        idf, plan = s._idf_cache, s._plan_cache
+        assert len(idf) == idf.size <= cap
+        assert sum(max(1, len(v[0])) for v in plan.values()) \
+            == plan.size <= cap
+        return idf.size, plan.size
+
+    s = Searcher.load(spark, tiny_index)
+    sizes, modes = [], set()
+    for qs, rows in zip(batches, want):
+        assert _rows(s.search_batch(qs, **PRUNED)) == rows, qs
+        modes.add(s.last_plan["mode"])
+        sizes.append(check_caches(s))
+    assert modes - {"exhaustive"}, modes  # the plan cache was used
+    for c in (0, 1):  # each cache was dropped at least once
+        assert any(b[c] < a[c] for a, b in zip(sizes, sizes[1:])), sizes
+
+    s = Searcher.load(spark, tiny_index)
+
+    def run(j):  # 8 threads at a time on one batch: they miss together
+        b = j // 8
+        return b, _rows(s._results_df(s.execute(s.plan(batches[b],
+                                                       **PRUNED))))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads more often
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            got = list(pool.map(run, range(8 * len(batches)), timeout=600))
+    finally:
+        sys.setswitchinterval(switch)
+    bad = [j for j, (b, rows) in enumerate(got) if rows != want[b]]
+    assert not bad, f"{len(bad)} of {len(got)} batches differ: {bad}"
+    check_caches(s)
 
 
 def test_concurrent_driver_scored_batches(spark, topic, many_shards_index,
