@@ -79,6 +79,7 @@ from __future__ import annotations
 import threading
 import time
 from dataclasses import dataclass, field
+from types import MappingProxyType
 
 import numpy as np
 import pandas as pd
@@ -547,7 +548,7 @@ class Searcher:
 
     # the record of the last finished search_batch (QueryPlan.record):
     # which strategy ran and why — the hook ops dashboards and tests read
-    last_plan: dict = {}
+    last_plan = MappingProxyType({})  # read-only until a batch finishes
 
     def __init__(self, spark, path: str):
         self.spark = spark
@@ -656,21 +657,15 @@ class Searcher:
         pdf = pdf.sort_values(["score", "doc_id"], ascending=[False, True])
         return list(zip(pdf["doc_id"].tolist(), pdf["score"].tolist()))
 
-    def search_batch(self, queries: list[tuple[int, str, int]], *,
-                     exact: bool = False, predicate: str | None = None,
-                     seed_shards: int = 2, two_phase_min_shards: int = 64,
-                     force_two_phase: bool = False,
-                     require_all_terms: bool = False,
-                     min_should_match: int = 1) -> DataFrame:
+    def search_batch(self, queries: list[tuple[int, str, int]],
+                     **options) -> DataFrame:
         """-> DataFrame(query_id, doc_id, score), per-query top-k
-        (materialized — result sets are tiny, <= Σ k): plan() with these
-        options, then execute(); the plan's record becomes last_plan."""
-        plan = self.plan(queries, exact=exact, predicate=predicate,
-                         seed_shards=seed_shards,
-                         two_phase_min_shards=two_phase_min_shards,
-                         force_two_phase=force_two_phase,
-                         require_all_terms=require_all_terms,
-                         min_should_match=min_should_match)
+        (materialized — result sets are tiny, <= Σ k): plan() with the
+        keyword options plan() takes (exact, predicate, seed_shards,
+        two_phase_min_shards, force_two_phase, require_all_terms,
+        min_should_match), then execute(); the plan's record becomes
+        last_plan."""
+        plan = self.plan(queries, **options)
         pdf = self.execute(plan)
         self.last_plan = plan.record
         return self._results_df(pdf)
