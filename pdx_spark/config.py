@@ -130,6 +130,8 @@ def get_spark(cores: int | None = None, app: str = "pdx_spark",
         .config("spark.io.compression.zstd.level", "1")
         .config("spark.sql.parquet.compression.codec",
                 os.environ.get("PDX_PARQUET_CODEC", "snappy"))
+        # docs `ts` as the driver writer's INT64 micros, not 12-byte INT96
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled",
                 "true" if os.environ.get("PDX_SPARK_UI") else "false")
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")

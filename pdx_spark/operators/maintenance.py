@@ -24,7 +24,9 @@ Reference analogs (only PDXTreeIndex supports maintenance there,
      larger input, or a remote fs, assigns ids and tokenizes as Spark
      jobs. Only that front differs: the docs delta, the per-shard
      encoder, the segment write and stat_artifacts are written once, over
-     the Snapshot's steps.
+     the Snapshot's steps. That body (_ingest) is also a one-chunk
+     build's: Indexer.build runs it into an empty manifest under the
+     base dir names, on the same site, and commits once.
   M2 Delete  -> tombstones + EXACT stats: the keys resolve against the
      live docs in one join, so only ids the index holds are tombstoned;
      their doc_ids land in a tombstone parquet (the scorer masks them
@@ -143,13 +145,11 @@ class Maintainer:
         The input picks the site (_append_site): an input that fits one
         routed-scan task by Spark's size estimate of its plan, on a local
         fs without positional artifacts, runs in the driver (one Arrow
-        collect, no other Spark job); any other runs on Spark. Only the
-        id and tokenize front (_doc_postings) and the positional delta
-        differ by site: the docs delta, the per-shard encode, the delta
-        segment, its verify and stat_artifacts are the Snapshot's steps.
-        The lineage entry records the site with the input estimate next
-        to _ROUTED_TASK_BYTES. An input whose estimate is unknown is
-        checked for rows first (one 1-task job): an empty one returns the
+        collect, no other Spark job); any other runs on Spark. _ingest
+        writes the delta artifacts on that site. The lineage entry
+        records the site with the input estimate next to
+        _ROUTED_TASK_BYTES. An input whose estimate is unknown is checked
+        for rows first (one 1-task job): an empty one returns the
         manifest unchanged and commits nothing, so its batch_id is not
         recorded and a later batch may carry it."""
         m = self.manifest
@@ -159,66 +159,16 @@ class Maintainer:
         site = self._append_site(transcripts)
         if site is None:
             return m  # an empty input: nothing to commit
-        timings: dict[str, float] = {}
         # monotone artifact generation counter — list lengths would reuse
         # names after compact_targeted() resets `deltas`
         gen = int(m.get("gen", 0))
         m["gen"] = gen + 1
-        next_id = self._next_doc_id()  # O(1) manifest read, never a scan
-        n_old, sum_old = self._stats()
-
         # the artifacts land under generation names, unreferenced until
         # the manifest commit below
         d = {"docs": f"docs_delta-{gen}", "seg": f"deltas/delta-{gen}",
              "ts": f"term_stats_delta-{gen}",
-             "dir": f"directory_delta-{gen}",
-             "pos": f"positions_delta-{gen}"}
-        # every frame cached below is released on every path, a failed
-        # step included
-        with ExitStack() as cached:
-            tt = time.time()
-            dp, n_new, dl_new, with_ids = self._doc_postings(
-                site, transcripts, next_id, cached, timings)
-            n_docs, sum_dl = n_old + n_new, sum_old + dl_new
-            avgdl = sum_dl / n_docs if n_docs else 0.0
-            timings["tokenize+stats"] = round(time.time() - tt, 2)
-
-            tt = time.time()
-            self.snap.write(site, dp.select([f.name for f in
-                                             schemas.DOCS.fields]), d["docs"])
-            timings["docs"] = round(time.time() - tt, 2)
-            # delta segment: blocks store (tf, dl); pruning bounds are
-            # recomputed from (max_tf, min_dl) at query time, so avgdl
-            # drift cannot over-prune (see searcher._arrow_scorer)
-            tt = time.time()
-            seg = self.snap.group_apply(
-                site, dp.select(["doc_id", "dl", "terms", "tfs", "shard"]),
-                _segment_encoder_docs(self.cfg, avgdl, self.params),
-                schemas.SEGMENTS)
-            self.snap.write(site, seg, d["seg"], ["term", "shard", "block_id"],
-                            segments=True)
-            single_rg = verify_single_rowgroup(self.fs, d["seg"],
-                                               root=self.path)
-            timings["segments"] = round(time.time() - tt, 2)
-            # the term_stats and directory deltas derive from the written
-            # delta segment's metadata, as for a build; the directory
-            # delta is quantized with its OWN affine params — delta values
-            # can exceed the base range
-            tt = time.time()
-            dq = stat_artifacts(self.spark, self.fs, [self._p(d["seg"])],
-                                self._p(d["ts"]), self._p(d["dir"]))
-            timings["stat_artifacts"] = round(time.time() - tt, 2)
-
-            # positional delta (positions-enabled indexes, which only the
-            # Spark site takes): same O(delta) discipline, merged at read
-            # by phrase_topk
-            pos_delta = None
-            if self.snap.positions_dirs():
-                tt = time.time()
-                from pdx_spark.operators.phrase import write_positions
-                pos_delta = d["pos"]
-                write_positions(with_ids, self._p(pos_delta))
-                timings["positions"] = round(time.time() - tt, 2)
+             "dir": f"directory_delta-{gen}", "pos": f"positions_delta-{gen}"}
+        stats, dq, timings = self._ingest(site, transcripts, d)
 
         # manifest commit — the single atomic visibility point
         m.setdefault("deltas", []).append(d["seg"])
@@ -226,19 +176,90 @@ class Maintainer:
         m.setdefault("ts_deltas", []).append(d["ts"])
         m.setdefault("dir_deltas", []).append(d["dir"])
         m.setdefault("dir_quant", {})[d["dir"]] = dq
-        if pos_delta is not None:
-            m["positions_dirs"].append(pos_delta)
-        m["n_docs"], m["sum_dl"], m["avgdl"] = n_docs, sum_dl, avgdl
-        m["next_doc_id"] = next_id + n_new
-        m["seg_single_rg"] = bool(m.get("seg_single_rg", False) and single_rg)
+        if self.snap.positions_dirs():
+            m["positions_dirs"].append(d["pos"])
+        new_docs = stats["n_docs"] - m["n_docs"]
+        m.update(stats)
         if batch_id is not None:
             m["last_batch_id"] = int(batch_id)
-        m["lineage"].append({"stage": "append", "new_docs": n_new,
+        m["lineage"].append({"stage": "append", "new_docs": new_docs,
                              "batch_id": batch_id, **site,
                              "timings": timings,
                              "sec": round(time.time() - t0, 2)})
         _write_manifest(self.path, m, fs=self.fs)
         return m
+
+    def _ingest(self, site: dict, transcripts: DataFrame, d: dict,
+                cache_input: bool = True) -> tuple:
+        """The body of append and of a one-chunk build (an empty manifest,
+        the base dir names): the batch's postings with dense doc ids from
+        the manifest's next_doc_id (_doc_postings, the one step that
+        differs by site), written on `site` as the docs dir d["docs"],
+        the segment dir d["seg"] (group_apply of the per-shard encoder,
+        verified single-row-group), its term_stats d["ts"] and directory
+        d["dir"] (stat_artifacts), and, on an index with positional
+        artifacts (Spark site only), d["pos"]. Commits nothing -> (the
+        manifest fields the commit sets, dir_quant params, timings)."""
+        timings: dict[str, float] = {}
+        # every frame cached below is released on every path, a failed
+        # step included
+        with ExitStack() as cached:
+            if cache_input and site["ran"] == "spark":
+                # an append's input is delta-sized, so caching it is
+                # bounded — and assign_doc_ids otherwise reads the
+                # caller's frame at least twice (a key aggregate or range
+                # sample, then the id join-back): repeated passes over the
+                # SOURCE of a filtered view. A build never caches its
+                # corpus-sized input.
+                transcripts = transcripts.persist()
+                cached.callback(transcripts.unpersist)
+            next_id = self._next_doc_id()  # O(1) manifest read, no scan
+            n_old, sum_old = self._stats()
+            tt = time.time()
+            dp, n_new, dl_new, with_ids = self._doc_postings(
+                site, transcripts, next_id, cached, timings)
+            n_docs, sum_dl = n_old + n_new, sum_old + dl_new
+            avgdl = sum_dl / n_docs if n_docs else 0.0
+            # the shards the index spans after this batch, for the
+            # fgroup layout (an empty manifest's n_shards() reads 1)
+            n_shards = -(-(next_id + n_new) // self.cfg.docs_per_shard)
+            timings["tokenize+stats"] = round(time.time() - tt, 2)
+
+            tt = time.time()
+            self.snap.write(site, dp.select(
+                [f.name for f in schemas.DOCS.fields]), d["docs"])
+            timings["docs"] = round(time.time() - tt, 2)
+            # blocks store (tf, dl); pruning bounds are recomputed from
+            # (max_tf, min_dl) at query time, so avgdl drift across
+            # appends cannot over-prune (see searcher._arrow_scorer)
+            tt = time.time()
+            seg = self.snap.group_apply(
+                site, dp.select(["doc_id", "dl", "terms", "tfs", "shard"]),
+                _segment_encoder_docs(self.cfg, avgdl, self.params),
+                schemas.SEGMENTS, n_shards)
+            # unsorted: the files keep the encoder's per-shard group order
+            # (smaller than term order on topic corpora)
+            self.snap.write(site, seg, d["seg"], segments=True,
+                            n_shards=n_shards)
+            single_rg = verify_single_rowgroup(self.fs, d["seg"],
+                                               root=self.path)
+            timings["segments"] = round(time.time() - tt, 2)
+            # term_stats and directory derive from the written segment's
+            # metadata; an append's directory delta is quantized with its
+            # OWN affine params — delta values can exceed the base range
+            tt = time.time()
+            dq = stat_artifacts(self.spark, self.fs, [self._p(d["seg"])],
+                                self._p(d["ts"]), self._p(d["dir"]))
+            timings["stat_artifacts"] = round(time.time() - tt, 2)
+            if self.snap.positions_dirs():  # merged at read by phrase_topk
+                tt = time.time()
+                from pdx_spark.operators.phrase import write_positions
+                write_positions(with_ids, self._p(d["pos"]))
+                timings["positions"] = round(time.time() - tt, 2)
+            return ({"n_docs": n_docs, "sum_dl": sum_dl, "avgdl": avgdl,
+                     "next_doc_id": next_id + n_new, "seg_single_rg": bool(
+                         self.manifest.get("seg_single_rg") and single_rg)},
+                    dq, timings)
 
     def _append_site(self, transcripts: DataFrame) -> dict | None:
         """append's site (one_task_site): the driver when the index is on
@@ -290,18 +311,7 @@ class Maintainer:
                 "shard", pa.array(ids // self.cfg.docs_per_shard))
             return (dp, dp.num_rows, int(dp.column("dl").to_numpy().sum()),
                     None)
-        # appends are delta-sized by design, so caching the input batch is
-        # bounded by the delta — and assign_doc_ids otherwise reads the
-        # caller's frame at least twice (a key aggregate or range sample,
-        # then the id join-back), which for the common filtered-view input
-        # means repeated passes over the SOURCE. One materialization, then
-        # cache reads. (The full build never caches its input —
-        # corpus-sized; this is the delta exception.)
-        transcripts = transcripts.persist()
-        cached.callback(transcripts.unpersist)
-        with_ids = C.assign_doc_ids(
-            transcripts, num_partitions=max(
-                self.spark.sparkContext.defaultParallelism, 8))
+        with_ids = C.assign_doc_ids(transcripts)
         with_ids = with_ids.withColumn(
             "doc_id", F.col("doc_id") + F.lit(int(next_id)))
         # same single-text-pass shape as Indexer.build: metadata rides

@@ -17,8 +17,9 @@ the segment dirs (and excludes), so both follow every commit.
 It also runs a one-task op's work where one_task_site put it: the
 read / group_apply / write steps take and return a pyarrow Table in the
 driver and a DataFrame on Spark, with the same Arrow body per shard
-group on both, so a maintenance op is written once over them. On
-Spark they give every segment dir the build's fgroup file layout.
+group on both, so a maintenance op and a one-chunk build are written
+once over them. Both sites give every segment dir the fgroup file
+layout (one file per contiguous shard range).
 """
 
 from __future__ import annotations
@@ -399,9 +400,10 @@ class Snapshot:
         excl = self.manifest.get("seg_excludes", {})
         if self.fs.is_local:
             import pyarrow.dataset as ds
-            # each dir's columns cast to the schema's types: Spark writes
-            # TimestampType as INT96 (read as naive ns), the driver
-            # writer as timestamp[us, tz=UTC]
+            # each dir's columns cast to the schema's types: a Spark
+            # session without get_spark's outputTimestampType writes
+            # TimestampType as INT96 (read as naive ns), get_spark's and
+            # the driver writer as timestamp[us, tz=UTC]
             want = to_arrow_schema(schema)
             want = pa.schema([want.field(c) for c in columns])
             t, sh = ds.field("term"), ds.field("shard")
@@ -457,15 +459,18 @@ class Snapshot:
             df = df.filter(_id_set("shard", shards))
         return df.select(*columns)
 
-    def group_apply(self, site: dict, x, fn, schema):
+    def group_apply(self, site: dict, x, fn, schema,
+                    n_shards: int | None = None):
         """`fn` (pyarrow Table -> Table of `schema`) run once per shard
         group of `x`, each group with its shard column (a gapply: the
         caller never sees how the groups form). On Spark the build's
-        encode shuffle (by encode_layout's fgroup) and applyInArrow; in
-        the driver a stable sort by shard and one call per run."""
+        encode shuffle (by encode_layout's fgroup over `n_shards`, the
+        manifest's by default) and applyInArrow; in the driver a stable
+        sort by shard and one call per run."""
         if site["ran"] == "spark":
-            n_encode, fgroup = encode_layout(self.spark, self.n_shards())
-            return (x.withColumn("fgroup", fgroup)
+            n_encode, spg = encode_layout(self.spark,
+                                          n_shards or self.n_shards())
+            return (x.withColumn("fgroup", F.expr(f"shard div {spg}"))
                     .repartition(n_encode, "fgroup")
                     .groupBy("fgroup", "shard")
                     .applyInArrow(fn, schema=schema))
@@ -479,19 +484,25 @@ class Snapshot:
             else to_arrow_schema(schema).empty_table()
 
     def write(self, site: dict, x, final: str, sort: list[str] | None = None,
-              segments: bool = False) -> None:
+              segments: bool = False, n_shards: int | None = None) -> None:
         """`x` as index dir `final`, through tmp dir -> rename, its rows
-        ordered by `sort` when given; segments=True keeps one row group
-        per file. In the driver one pyarrow file (write_table_local); on
-        Spark _atomic_write, segments in encode_layout's fgroup files."""
+        ordered by `sort` when given; segments=True writes a file of one
+        row group per fgroup of encode_layout over `n_shards` (the
+        manifest's by default). In the driver pyarrow files
+        (write_table_local); on Spark _atomic_write."""
         final = self.fs.join(self.path, final)
+        spg = encode_layout(self.spark, n_shards or self.n_shards())[1] \
+            if segments else None
         if site["ran"] == "spark":
             if segments:
-                x = x.withColumn("fgroup", encode_layout(
-                    self.spark, self.n_shards())[1])
+                x = x.withColumn("fgroup", F.expr(f"shard div {spg}"))
             _atomic_write(x, final, sort, fs=self.fs, segments=segments)
             return
         if sort:
             x = x.sort_by([(c, "ascending") for c in sort])
-        write_table_local(self.fs, x, final, **(
+        parts = [x]
+        if segments:
+            fg = x.column("shard").to_numpy() // spg
+            parts = [x.filter(pa.array(fg == g)) for g in np.unique(fg)]
+        write_table_local(self.fs, parts or [x], final, **(
             {"row_group_size": max(1, x.num_rows)} if segments else {}))

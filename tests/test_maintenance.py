@@ -31,30 +31,55 @@ def corpus_pdfs():
 
 
 def test_driver_reads_every_docs_column_across_sites(spark, tmp_path,
-                                                     corpus_pdfs):
-    """A Spark build writes the docs' ts as parquet INT96 (pyarrow reads
-    naive ns) and a driver append writes timestamp[us, tz=UTC]: the
-    driver reader (Snapshot.meta_rows) casts each dir to the DOCS
-    types, so every docs column reads across both kinds of dir, with
-    the rows, ts values included, of a Spark read."""
+                                                     corpus_pdfs,
+                                                     monkeypatch):
+    """A Spark build in a session that writes parquet timestamps as
+    INT96 (Spark's default; get_spark sets TIMESTAMP_MICROS, so the conf
+    is set back for that one build) leaves docs whose ts pyarrow reads
+    as naive ns; a driver append and a Spark append (bound at 0) then
+    write timestamp[us, tz=UTC]. The driver reader (Snapshot.meta_rows)
+    casts each dir to the DOCS types, so every docs column reads across
+    all three dirs, with the rows, ts values included, of a Spark
+    read."""
     import pyarrow as pa
     import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
 
+    import pdx_spark.operators.snapshot as SN
     from pdx_spark import schemas
     full, head, tail = corpus_pdfs
     path = str(tmp_path / "idx_ts")
-    Indexer(spark, cfg=CFG).build(
-        spark.createDataFrame(head, schema=TRANSCRIPTS), path)
-    m = Maintainer(spark, path).append(
-        spark.createDataFrame(tail, schema=TRANSCRIPTS))
-    assert m["lineage"][-1]["ran"] == "driver", m["lineage"][-1]
+    conf = "spark.sql.parquet.outputTimestampType"
+    assert spark.conf.get(conf) == "TIMESTAMP_MICROS"
+    spark.conf.set(conf, "INT96")
+    try:
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", 0)
+            Indexer(spark, cfg=CFG).build(
+                spark.createDataFrame(head, schema=TRANSCRIPTS), path)
+    finally:
+        spark.conf.set(conf, "TIMESTAMP_MICROS")
+    half = len(tail) // 2
+    for rows, bound in ((tail.iloc[:half], SN._ROUTED_TASK_BYTES),
+                        (tail.iloc[half:], 0)):
+        with monkeypatch.context() as mp:
+            mp.setattr(SN, "_ROUTED_TASK_BYTES", bound)
+            m = Maintainer(spark, path).append(
+                spark.createDataFrame(rows, schema=TRANSCRIPTS))
+    assert [e["ran"] for e in m["lineage"][-2:]] == ["driver", "spark"]
     s = Searcher.load(spark, path)
     dirs = s.snap.docs_dirs()
-    assert len({str(ds.dataset(f"{path}/{d}").schema.field("ts").type)
-                for d in dirs}) == 2, dirs
+
+    def ts_type(d):
+        f = ds.dataset(f"{path}/{d}").files[0]
+        md = pq.ParquetFile(f).metadata.schema
+        return (md.column(md.names.index("ts")).physical_type,
+                str(ds.dataset(f"{path}/{d}").schema.field("ts").type))
+    assert [ts_type(d) for d in dirs] == [
+        ("INT96", "timestamp[ns]"), *[("INT64", "timestamp[us, tz=UTC]")] * 2]
     cols = schemas.DOCS.fieldNames()
     tab = s.snap.meta_rows(dirs, schemas.DOCS, cols)
-    assert sorted(set(tab["dir"].to_pylist())) == [0, 1]
+    assert sorted(set(tab["dir"].to_pylist())) == [0, 1, 2]
     assert tab.schema.field("ts").type == pa.timestamp("us", tz="UTC")
     tab = tab.set_column(cols.index("ts"), "ts",
                          tab["ts"].cast(pa.int64()))

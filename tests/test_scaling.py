@@ -80,8 +80,14 @@ def test_build_never_persists_text(spark, tmp_path, monkeypatch):
     pdf = make_transcripts_pdf(30)
     df = spark.createDataFrame(pdf, schema=TRANSCRIPTS)
 
-    # driver-side id fast path (default): only the postings frame may
-    # be persisted, never the text
+    # a build that fits one task runs in the driver and persists nothing
+    Indexer(spark, cfg=CFG).build(df, str(tmp_path / "notext_driver"))
+    assert not cached_schemas, cached_schemas
+
+    # the Spark build (bound at 0), driver-side id fast path (default):
+    # only the postings frame may be persisted, never the text
+    import pdx_spark.operators.snapshot as SN
+    monkeypatch.setattr(SN, "_ROUTED_TASK_BYTES", 0)
     path = str(tmp_path / "notext")
     Indexer(spark, cfg=CFG).build(df, path)
     assert cached_schemas, "expected at least the postings persist"

@@ -5,10 +5,11 @@
         [--seconds 1] [--ops append,compact_targeted] [--spark-site] \\
         [--json out.json]
 
-Runs perfbench/run.py in this process, with `Run.op` wrapped at run time
-(as perfbench/spans.py wraps the engine), so perfbench itself is not
-edited. For each operation (load, batch, append, delete, compact,
-compact_targeted, ...) it prints:
+Runs perfbench/run.py in this process, with `Run.op` and
+`Indexer.build` wrapped at run time (as perfbench/spans.py wraps the
+engine), so perfbench itself is not edited. For each operation (build,
+once per set-up; load, batch, append, delete, compact, compact_targeted,
+...) it prints:
 
   - wall seconds;
   - process-tree CPU seconds, split into the driver (this process), the
@@ -22,8 +23,8 @@ compact_targeted, ...) it prints:
 
 --spark-site sets pdx_spark.operators.snapshot._ROUTED_TASK_BYTES to 0
 before the run, so every one-task op (exhaustive, unrouted and routed
-scans, append, delete, compact_targeted, compact) runs its Spark site,
-with perfbench's correctness check on as usual.
+scans, build, append, delete, compact_targeted, compact) runs its Spark
+site, with perfbench's correctness check on as usual.
 
 Run from the repository root. The workload's own last line (its JSON
 result) is printed by perfbench as usual; the probe table follows it.
@@ -144,31 +145,48 @@ class SparkCounters:
 
 
 def install(records: list[dict], only: set[str] | None) -> None:
-    """Wrap perfbench's Run.op to record one probe row per operation."""
+    """Wrap perfbench's Run.op, and Indexer.build (each set-up's build,
+    the `build` row), to record one probe row per operation."""
     import workloads
-    op = workloads.Run.op
+
+    from pdx_spark.operators.indexer import Indexer
+    counters: list[SparkCounters] = []
+
+    def probed(kind, sc, call):
+        if only and kind not in only:
+            return call()
+        if not counters:
+            counters.append(SparkCounters(sc))
+        cnt = counters[0]
+        c0, s0, t0 = cnt.read(), sample(), time.perf_counter()
+        ok = False
+        try:
+            out = call()
+            ok = out[0] if kind != "build" else True
+            return out
+        finally:
+            wall, s1, c1 = time.perf_counter() - t0, sample(), cnt.read()
+            row = {"op": kind, "ok": ok, "wall_s": wall, **split(s0, s1),
+                   "jobs": c1["jobs"] - c0["jobs"],
+                   "tasks": cnt.tasks(c0["jobs"], c1["jobs"]),
+                   "compiles": c1["compiles"] - c0["compiles"]}
+            row["cpu_s"] = sum(row[p] for p in PARTS)
+            records.append(row)
+
+    op, build = workloads.Run.op, Indexer.build
 
     @functools.wraps(op)
-    def probed(self, kind, fn, *a, **kw):
-        if only and kind not in only:
-            return op(self, kind, fn, *a, **kw)
-        counters = getattr(self, "_probe_counters", None)
-        if counters is None:
-            counters = self._probe_counters = SparkCounters(
-                self.spark.sparkContext)
-        c0, s0, t0 = counters.read(), sample(), time.perf_counter()
-        out = op(self, kind, fn, *a, **kw)
-        wall, s1, c1 = time.perf_counter() - t0, sample(), counters.read()
-        row = {"op": kind, "ok": out[0], "wall_s": wall,
-               **split(s0, s1),
-               "jobs": c1["jobs"] - c0["jobs"],
-               "tasks": counters.tasks(c0["jobs"], c1["jobs"]),
-               "compiles": c1["compiles"] - c0["compiles"]}
-        row["cpu_s"] = sum(row[p] for p in PARTS)
-        records.append(row)
-        return out
+    def probed_op(self, kind, fn, *a, **kw):
+        return probed(kind, self.spark.sparkContext,
+                      lambda: op(self, kind, fn, *a, **kw))
 
-    workloads.Run.op = probed
+    @functools.wraps(build)
+    def probed_build(self, *a, **kw):
+        return probed("build", self.spark.sparkContext,
+                      lambda: build(self, *a, **kw))
+
+    workloads.Run.op = probed_op
+    Indexer.build = probed_build
 
 
 def table(records: list[dict]) -> str:
